@@ -6,20 +6,17 @@ Serves the engine's query registry (mediawiki_to_notion_spark.operators):
 DuckDB oracle for the t2 correctness gate.
 
 The driver's correctness gate checks ~50 queries in dict order, so
-``queries()`` fronts everything not yet gate-confirmed and rotates the
-confirmed rest behind them — over rounds every registered query sweeps
-through the gate.  Confirmation state is read DYNAMICALLY from the
-``CORRECTNESS_r*.json`` files the driver leaves in the repo root, so the
-rotation maintains itself round over round:
+``queries()`` orders the registry by one rule, read from the
+``CORRECTNESS_r*.json`` files the driver leaves in the repo root:
 
-- confirmed = hash_match true in any round, or a completed rows-only
-  check (``no_oracle`` with a row count) for sketch/nondeterministic ops;
-- ``_RECHECK`` lists confirmed queries REWRITTEN since their last green
-  row (manual, per rewrite) — they re-enter the window until the latest
-  correctness file confirms them again, then drop out automatically;
-- ``_DEFER`` holds queries added after the current round's window filled,
-  kept just behind the rechecks so they don't displace them; once any
-  round confirms them the ordering is moot.
+1. never-confirmed queries, in registry order;
+2. live ``_RECHECK`` entries — confirmed queries rewritten since their
+   last green row;
+3. every other confirmed query, oldest latest-confirming round first
+   (ties in registry order).
+
+Each round's window therefore re-gates the queries whose confirmation
+is oldest, and over rounds every registered query sweeps through it.
 """
 
 from __future__ import annotations
@@ -69,347 +66,16 @@ def _confirmed() -> tuple[set[str], dict[str, int]]:
 
 # Confirmed earlier but rewritten since — need a fresh driver row.  The
 # value is the round the rewrite happened in: the entry expires on its
-# own once a correctness file from that round or later re-confirms it.
-# (The r2 rewrites — dedup_simhash, dedup_embedding_cosine,
-# dedup_connected_components — re-confirmed in CORRECTNESS_r02 and
-# expired out; pack_sequences_greedy re-confirmed in CORRECTNESS_r03.)
-# markdown_blocks_golden: r4 — the GFM delimiter-row table fix
-# (VERDICT r3 item 3) changed the parser AND added the
-# pipe_without_delimiter_is_text golden case, so its r1 green row is
-# stale.
-_RECHECK = {"pack_sequences_greedy": 3, "markdown_blocks_golden": 4,
-            # r6: survivor key rewritten from doc_id*1M+p composite to a
-            # struct min in BOTH engines (VERDICT r5 "What's wrong" #1)
-            "dedup_substring_cut": 6, "dedup_paragraph_chunks": 6,
-            # r6: mu-law encode aligned bit-exactly with the canonical
-            # g711.c/audioop tables (VERDICT r5 "What's wrong" #2)
-            "multimodal_audio_g711_roundtrip": 6,
-            # r6: pHash widened 16->48 bits (scaling-soak finding) with
-            # planted Hamming-1 pairs -> full-recall certificate
-            "multimodal_image_phash_dedup": 6,
-            # r7 (VERDICT r6 "What's wrong" #1): the primary LSH names
-            # re-pointed at the scale-safe logic — dedup_simhash now
-            # runs the 48-bit fingerprint, dedup_embedding_cosine_lsh
-            # the corpus-derived plane count (both previously green
-            # under the retired _wide/_scaled names, but the PRIMARY
-            # names need fresh hash-green rows)
-            "dedup_simhash": 7,
-            "dedup_embedding_cosine_lsh": 7,
-            # r7 (VERDICT r6 brief #6): rows-only -> hash-gated digest
-            # (doc_id, md5(markdown), err_flag) against the
-            # sequential-reference VALUES oracle
-            "pipeline_prepare_convert": 7,
-            # r7 sf10-soak root-cause fix: the SRP hyperplane generator
-            # was a Weyl translate (|plane cosine| up to 0.82 -> skewed
-            # buckets); now quadratic-mixed in BOTH engines, so every
-            # SRP-bucketed result changed (vectors.py:hyperplane)
-            "similarity_lsh_bucketed": 7,
-            "similarity_lsh_recall": 7,
-            "dedup_cosine_lsh_recall": 7,
-            # r8 (VERDICT r7 "What's wrong" #3): the Holt-Winters fold
-            # moved from the compile-bound Catalyst F.aggregate to an
-            # Arrow-batched pandas UDF replaying the same IEEE op order
-            # — bit-identical locally (compare green sf0.001+sf0.01)
-            # but the physical path changed, so re-gate hard
-            "orders_forecast_holt_winters": 8,
-            # r8 (VERDICT r7 brief #6): the 5 unrolled greedy MMR level
-            # plans folded into one cogrouped applyInPandas (pure-int64
-            # selection; compare green sf0.001+sf0.01) — same reason
-            "similarity_mmr_rerank": 8,
-            # r8 (VERDICT r7 brief #5): the fuzzy primary re-pointed at
-            # sorted-neighborhood pairing (output-linear; the r7
-            # exhaustive enumeration measured output exponent 1.75 at
-            # sf10 and survives as .._exhaustive) — semantics changed
-            # at the primary name, fresh hash-green row required
-            "dedup_fuzzy_levenshtein": 8,
-            # r8 sf100-soak catch #2: multitable LSH buckets moved to
-            # the Arrow kernel (bit-identical numpy replay) and the
-            # verify path to a pipelined SHUFFLE_HASH join — compare
-            # green at sf0.001+sf0.01, but the physical path changed
-            # end to end, so both it and its recall gate re-gate hard
-            "dedup_embedding_cosine_lsh_multitable": 8,
-            "dedup_cosine_lsh_recall_multitable": 8,
-            # r9 (VERDICT r8 brief #2): the three tokenizer trainers
-            # gained a scale cutover — distinct-word tables under
-            # DRIVER_VOCAB_CAP replay the merge/EM rounds driver-side
-            # in exact integer arithmetic (family total 19.3 -> 6.5 s
-            # at sf0.1); the distributed loop survives as the at-scale
-            # fallback and both paths are pinned bit-identical in
-            # tests/test_tokenizer_driver_cutover.py.  Physical path
-            # changed end-to-end at every tested SF, so re-gate hard.
-            # r10 optimization: every tokenizer corpus pass (train
-            # word-freq agg + fertility encode join) now spreads the
-            # single-split scan first (ensure_parallelism), wordpiece/
-            # unigram fertility reuse the trainer's collected word
-            # table (ADVICE r9) — values identical (compare green at
-            # sf0.001+sf0.01), physical paths changed, re-gate hard.
-            "bpe_train_merges": 10,
-            "bpe_tokenize_fertility": 10,
-            "wordpiece_train_merges": 10,
-            "wordpiece_tokenize_fertility": 10,
-            "unigram_lm_train": 10,
-            "unigram_lm_fertility": 10,
-            # r10 (VERDICT r9 brief #1): the iterative-loop cutover
-            # extended to CC / PageRank / Lloyd k-means
-            # (operators/iter_local.py) — under the cap the rounds
-            # replay driver-side (union-find min-labels, all-integer
-            # rank updates, order-exact float folds), distributed loops
-            # verbatim past it; both paths pinned bit-identical in
-            # tests/test_iter_driver_cutover.py.  Physical path changed
-            # at every tested SF for these names (survivorship /
-            # histogram / prepare compose the CC cutover; the
-            # certificate runs _min_label_components twice), plus the
-            # wordpiece fertility apply side now reuses the trainer's
-            # collected word table (ADVICE r9) — re-gate hard.
-            "dedup_connected_components": 10,
-            "dedup_survivorship": 10,
-            "dedup_cluster_size_histogram": 10,
-            "dedup_fuzzy_connectivity_certificate": 10,
-            "corpus_prepare_pipeline": 10,
-            "pagerank_word_graph": 10,
-            "kmeans_lloyd_refine": 10,
-            # r10 optimization round: the span-cut rebuild moved from a
-            # token-stream explode + token-level anti-membership join +
-            # corpus-wide collect_list to per-doc cut-span merging with
-            # array folds (dedup_ext._rebuild_excising_spans), and the
-            # dup/survivor aggregates folded into one shuffle — values
-            # re-verified bit-identical vs the unchanged DuckDB oracles
-            # at sf0.001+sf0.01, but the physical path changed end to
-            # end, so re-gate hard.
-            "dedup_substring_cut": 10,
-            "dedup_substring_cut_exact": 10,
-            "decontaminate_span_cut": 10,
-            "dedup_duplicate_ngram_spans": 10,
-            # r10 batch 2: single-pass reformulations — market_basket's
-            # lines self-join became per-order packed-array pair
-            # generation, mixture_anneal/dsir collapsed their repeated
-            # corpus bigram passes into one conditional/fold aggregate,
-            # and the two ngram LMs materialize the vocabulary²-bounded
-            # type table (localCheckpoint) instead of re-running the
-            # corpus explode per consumer.  All five re-verified
-            # bit-identical vs unchanged oracles at sf0.001+sf0.01;
-            # physical paths changed end to end — re-gate hard.
-            "market_basket_part_pairs": 10,
-            "mixture_anneal_schedule": 10,
-            "dsir_importance_select": 10,
-            "ngram_lm_kneser_ney": 10,
-            # r10 batch 3: fan-out-point materialization of bounded
-            # intermediates — eval_win_rate's per-pair sufficient
-            # stats (lazy cache), matryoshka's ranked top-k and the
-            # minhash-calibration / winnowing sketch tables (eager
-            # localCheckpoint) — each previously re-ran its expensive
-            # upstream once per consumer subtree.  Values re-verified
-            # bit-identical at sf0.001+sf0.01; physical paths changed
-            # — re-gate hard.
-            "eval_win_rate_bootstrap": 10,
-            "embedding_matryoshka_recall": 10,
-            "dedup_minhash_estimate_quality": 10,
-            "dedup_minhash_b_bit": 10,
-            "dedup_winnowing_fingerprint": 10,
-            # r10 batch 4: the minhash/simhash signature tables are now
-            # materialized once (ReuseExchange was measured NOT to fire
-            # across their 3-4 consumer subtrees), and the single-table
-            # SRP bucket ids moved from npl interpreted ArrayAggregate
-            # folds per row to the multitable op's bit-identical numpy
-            # kernel (n_tables=1).  Values re-verified at
-            # sf0.001+sf0.01 incl. all composing queries; physical
-            # paths changed — re-gate hard.
-            "dedup_minhash_lsh": 10,
-            "dedup_minhash_incremental": 10,
-            "dedup_simhash": 10,
-            "dedup_simhash_fixedwidth_demo": 10,
-            "dedup_embedding_cosine_lsh": 10,
-            "dedup_embedding_cosine_lsh_fixedwidth_demo": 10,
-            "dedup_cosine_lsh_recall": 10,
-            "dedup_cosine_lsh_recall_adaptive": 10,
-            # r10 batch 5 (optimization session 2): the minhash/simhash
-            # substrates moved to narrow Arrow kernels (_tri_hashes —
-            # no explode/groupBy/Exchange; decontaminate_fuzzy also
-            # checkpoints its stats once), CC edge lists symmetrize
-            # with a 2-way explode instead of union(pairs, swap), the
-            # token-exact span queries checkpoint their duplicated-
-            # window sequence, epoch shuffle ranks all epochs in ONE
-            # _dense_ranks pass, the classifier's closed-form weight
-            # table is inlined (join removed), and the repetition
-            # battery / decimal moments spread their single-split
-            # scans.  Values re-verified bit-identical vs unchanged
-            # oracles at sf0.001+sf0.01; physical paths changed —
-            # re-gate hard.
-            "decontaminate_fuzzy_minhash": 10,
-            "dedup_substring_spans_token_exact": 10,
-            "training_epoch_shuffle": 10,
-            "quality_classifier_score": 10,
-            "stats_moments_lineitem": 10,
-            "text_gopher_repetition_rules": 10,
-            # r11 optimization round: the per-doc filter signals moved
-            # from a corpus-token-scale (doc_id, token) groupBy + keyed
-            # re-aggregation to ONE row-local Arrow kernel (integer
-            # outputs only; reject booleans and divisions unchanged
-            # JVM-side).  Values re-verified bit-identical vs the
-            # unchanged DuckDB oracle at sf0.001+sf0.01; physical path
-            # changed end to end — re-gate hard.
-            "corpus_filter_agreement": 11,
-            # r11: the exact block-GEMM's tile count now derives from
-            # the corpus size (parquet-footer row count; 2048-row clamp)
-            # instead of the static 16 — the pair set and fold order are
-            # block-count-invariant (pinned in
-            # tests/test_cosine_block_invariance.py) and all four
-            # dependent queries re-verified vs unchanged oracles at
-            # sf0.001+sf0.01, but the physical path (tile fan-out,
-            # per-group kernel batches) changed — re-gate hard.
-            "dedup_embedding_cosine": 11,
-            "dedup_cosine_lsh_recall": 11,
-            "dedup_cosine_lsh_recall_adaptive": 11,
-            "dedup_cosine_lsh_recall_multitable": 11,
-            # r11 (VERDICT r10 #3): the packed per-order parts table is
-            # now materialized (lazy localCheckpoint) so its three
-            # consumers share ONE corpus groupBy instead of re-planning
-            # it 3x.  Values re-verified bit-identical vs the unchanged
-            # oracle at sf0.001+sf0.01; physical path changed — re-gate.
-            "market_basket_part_pairs": 11}
+# own once a correctness file from that round or later re-confirms it,
+# so delete entries whose round has confirmed them.
+_RECHECK: dict[str, int] = {}
 
-# SOFT rechecks: confirmed queries EDITED since their green row where
-# the edit is a verified semantic no-op on the driver's data (the r3
-# NULL-hardening: vector hygiene filters, to_json-parity oracle, media
-# NULL guards — each re-verified bit-identical via oracle.compare at
-# sf0.01).  Hard-fronting them would displace never-checked backlog
-# queries for zero new information, but pure rotation could leave the
-# stale status standing for several rounds — so they slot BEHIND the
-# unconfirmed backlog and AHEAD of the confirmed tail: re-gated the
-# moment the window has room.  Same expiry rule as _RECHECK.
-_RECHECK_SOFT = {n: 3 for n in (
-    "similarity_topk_bruteforce", "similarity_lsh_bucketed",
-    "embedding_norm_stats", "similarity_lsh_recall",
-    "similarity_ivf_probe", "dedup_embedding_cosine",
-    "dedup_embedding_cosine_lsh", "dedup_cosine_lsh_recall",
-    "json_encode_struct",
-    "multimodal_binary_stats", "multimodal_resize",
-    "multimodal_frame_sample",
-)}
-# markdown_block_explode: r4 parser edit (GFM table lookahead) — a
-# verified no-op on the synth-markdown input (no pipe lines reach it;
-# oracle.compare green at sf0.01) but semantics-adjacent, so re-gate.
-_RECHECK_SOFT["markdown_block_explode"] = 4
-# r6 ADVICE edits, verified bit-identical via oracle.compare at
-# sf0.001+sf0.01: funnel conversion now rounds half-away (matching
-# DuckDB; a no-op on the driver's ratios), video roundtrip now passes
-# strict_frame_count=True (our own encoder always agrees).
-_RECHECK_SOFT["events_conversion_funnel"] = 7  # r7: localCheckpoint
-# stages + single summary action (was 6: half-away rounding)
-_RECHECK_SOFT["multimodal_video_roundtrip"] = 6
-# r6: repetition battery extracted into apply_repetition_rules for
-# stream parity — pure refactor, compare re-verified green at sf0.01
-_RECHECK_SOFT["text_gopher_repetition_rules"] = 6
-# r6: Expand-path removal (two-level agg instead of count+count_distinct
-# in one groupBy) — values identical, compare green at sf0.001+0.01
-_RECHECK_SOFT["text_repetition_ratio"] = 6
-_RECHECK_SOFT["approx_distinct_within_band"] = 6
-# r8 ADVICE fixes, verified bit-identical via oracle.compare at
-# sf0.001+sf0.01: CUPED oracle bounds CTE now NULL-filters like the
-# Spark side (no-op on driver data — no NULL-value extremes); bigram
-# entropy oracle restructured to a global agg (one-row shape on empty
-# corpora — no-op on driver data, which always has bigrams).
-_RECHECK_SOFT["events_ab_cuped"] = 8
-_RECHECK_SOFT["text_bigram_entropy_rate"] = 8
-# r6: rank machinery extracted into _dense_ranks (shared with
-# training_epoch_shuffle) — pure refactor, compare green at 2 SFs
-_RECHECK_SOFT["dense_global_ids"] = 6
-# late-r6: decode_image gained the VP8L WebP branch — additive (new
-# magic dispatch; PNG/JPEG/GIF/BMP paths untouched), compare
-# re-verified green at sf0.01
-_RECHECK_SOFT["multimodal_codec_roundtrip"] = 6
-# r7 ADVICE fixes, each re-verified bit-identical via oracle.compare at
-# sf0.01: WordPiece score_scaled now computed in wide exact arithmetic
-# (DECIMAL(38,0) div on Spark / HUGEINT // on DuckDB — same quotient,
-# no int64 overflow headroom lie); Bradley-Terry expected-wins masks
-# zero-game/zero-strength pairs (a no-op on driver data where every
-# contender wins something); WebP encoder splits LZ77 runs at 4096
-# (sf0.01 images have no >4096 run through the encoder's op stream, so
-# bit-identical there — the 70x70 ADVICE repro is pytest-pinned).
-_RECHECK_SOFT["wordpiece_train_merges"] = 7
-# r7: recall gate's callee renamed (fixed-plane logic unchanged,
-# compare re-verified green at sf0.01)
-_RECHECK_SOFT["dedup_cosine_lsh_recall"] = 7
-# r7 (VERDICT r6 brief #4): tier cosines now columns of one Arrow pass
-# (prefix-snapshot accumulation) + per-tier WindowGroupLimit — same
-# values (compare green at sf0.01), 3.29s -> ~1.5s at sf0.1
-_RECHECK_SOFT["embedding_matryoshka_recall"] = 7
-_RECHECK_SOFT["wordpiece_tokenize_fertility"] = 7
-_RECHECK_SOFT["eval_bradley_terry_fit"] = 7
-_RECHECK_SOFT["multimodal_image_webp_roundtrip"] = 7
-# late-r7: both minhash CALIBRATION ops now run on the deterministic
-# ~2^11-doc sample (second-decade soak caught the unsampled pair set
-# at exponent 1.27); at gate SFs the sample is the whole corpus and
-# results were verified bit-identical, so these are soft re-gates.
-_RECHECK_SOFT["dedup_minhash_estimate_quality"] = 7
-# r9 plan-only edits, each verified bit-identical via oracle.compare at
-# sf0.01 before registering: multitable cross-table dedup re-keyed from
-# distinct() over (vec_a, vec_b, cosine_r) to dropDuplicates on the
-# PAIR key (ADVICE r8 — no float bit-equality dependence; recall gate
-# shares the candidate CTE so it re-gates too), and both forecast
-# queries dropped the unconditional F.broadcast hint on the customer
-# projection (VERDICT r8 item 7 — Catalyst auto-broadcasts at tested
-# SFs, plan-asserted; degrades to shuffle past the threshold).
-_RECHECK_SOFT["dedup_embedding_cosine_lsh_multitable"] = 9
-_RECHECK_SOFT["dedup_cosine_lsh_recall_multitable"] = 9
-_RECHECK_SOFT["orders_demand_forecast_holt"] = 9
-_RECHECK_SOFT["orders_forecast_holt_winters"] = 9
-# Added after the current round's ~50-query window filled; placed right
-# behind the fresh backlog (locally oracle-checked already).  All
-# round-2 additions queue here so the r1-era never-driver-checked
-# queries (chiefly the wikitext family) get the window first.
-_DEFER = ["multimodal_feature_extract",  # upgraded rows-only -> oracled
-          # r3 rewrites without a prior driver row — fronted so the
-          # fixed versions (HUGEINT oracle cast / integer micro-unit
-          # reformulation) are gated THIS round, not next:
-          "span_corruption_t5", "embedding_centroid_drift",
-          "corpus_filter_funnel", "lang_temperature_resample",
-          "doc_length_histogram", "zorder_cluster_events",
-          "dedup_minhash_incremental", "context_window_chunks",
-          "text_unigram_logprob",
-          # round-2 wave 2
-          "keyword_search_bm25", "dedup_duplicate_ngram_spans",
-          "semantic_dedup_clustered", "training_shard_assignment",
-          "dedup_survivorship", "pagerank_word_graph", "text_bigram_pmi",
-          "event_funnel_conversion", "similarity_pq_encode",
-          "similarity_pq_adc", "kmeans_lloyd_refine", "hybrid_search_rrf",
-          "stratified_sample_exact", "corpus_prepare_pipeline",
-          "dedup_containment", "events_anomaly_zscore", "tokenize_to_ids",
-          "dedup_minhash_estimate_quality", "doc_length_equal_freq_bins",
-          "multimodal_audio_energy", "source_drift_detect",
-          # round-2 wave 3
-          "dedup_paragraph_chunks", "text_pii_redaction",
-          "ngram_novelty_rate", "embedding_int8_quantize",
-          "score_robust_calibrate", "join_key_skew_profile",
-          "dense_global_ids", "graph_triangle_count", "bpe_pair_counts",
-          "time_gapfill_interpolate", "sliding_distinct_users",
-          "events_mad_outliers", "source_overlap_matrix",
-          "user_retention_cohorts", "market_basket_part_pairs",
-          "graph_clustering_coefficient", "event_transition_matrix",
-          "contrastive_triplet_mining", "filename_collision_detect",
-          "dedup_normalized_exact", "orders_rfm_segmentation",
-          "quality_signal_ensemble",
-          "events_cusum_changepoint", "lineitem_pareto_abc",
-          "dedup_cluster_size_histogram", "lang_confusion_matrix",
-          "event_hourly_seasonality", "trade_volume_nation_pairs",
-          "text_kwic_concordance",
-          "returned_item_customers", "knn_label_predict",
-          "embedding_label_outliers", "multimodal_image_phash_dedup",
-          "doc_keyword_extraction", "dashboard_status_widget"]
-
-# Slot accounting (VERDICT r2 item 8): _RECHECK/_DEFER are hand-kept —
-# a typo'd or stale name would silently starve a query of its window
-# slot (the `n in QUERIES` filters below would just drop it).  Fail
-# loudly at import instead; the driver imports this module, so a broken
-# rotation can never reach the gate unnoticed.  Real raises, not
-# `assert` — asserts are stripped under `python -O` (ADVICE r3), which
-# would silently re-open the exact hole this check closes.
-_unknown = [n for n in (*_RECHECK, *_RECHECK_SOFT, *_DEFER)
-            if n not in QUERIES]
+# A typo'd or stale name would silently starve a query of its slot; the
+# driver imports this module, so fail loudly here.  A real raise, not
+# `assert` — asserts are stripped under `python -O`.
+_unknown = [n for n in _RECHECK if n not in QUERIES]
 if _unknown:
-    raise ValueError(f"rotation names not in registry: {_unknown}")
-if len(_DEFER) != len(set(_DEFER)):
-    raise ValueError("duplicate names in _DEFER")
+    raise ValueError(f"_RECHECK names not in registry: {_unknown}")
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -418,29 +84,18 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2, ordered so
-    queries without a green driver correctness row come first."""
+    """One entry per implemented operator from SURVEY.md §2, in gate
+    order: never confirmed, then live rechecks, then the confirmed rest
+    by oldest latest-confirming round."""
     confirmed, last_round = _confirmed()
-    recheck = [
-        n for n, rewritten_in in _RECHECK.items()
-        if n in QUERIES and last_round.get(n, 0) < rewritten_in
-    ]
-    soft = [
-        n for n, rewritten_in in _RECHECK_SOFT.items()
-        if n in QUERIES and last_round.get(n, 0) < rewritten_in
-        and n not in recheck
-    ]
-    defer = [n for n in _DEFER
-             if n in QUERIES and n not in confirmed and n not in recheck]
-    front = set(recheck) | set(defer) | set(soft)
-    fresh = [n for n in QUERIES if n not in confirmed and n not in front]
-    rest = [n for n in QUERIES
-            if n in confirmed and n not in front]
-    # rechecks lead (rewritten since their last green row — stale status
-    # is worse than no status), then the fresh backlog, then deferred
-    # newcomers, then soft rechecks (no-op edits, re-gated as soon as
-    # the window has room), then the confirmed remainder
-    return {n: QUERIES[n] for n in (*recheck, *fresh, *defer, *soft, *rest)}
+    fresh = [n for n in QUERIES if n not in confirmed]
+    recheck = [n for n, rewritten_in in _RECHECK.items()
+               if n in confirmed and last_round[n] < rewritten_in]
+    front = set(fresh) | set(recheck)
+    order = {n: i for i, n in enumerate(QUERIES)}
+    rest = sorted((n for n in confirmed if n in QUERIES and n not in front),
+                  key=lambda n: (last_round[n], order[n]))
+    return {n: QUERIES[n] for n in (*fresh, *recheck, *rest)}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -13,10 +13,10 @@ import json
 import os
 import re
 import sys
-import time
 
 from mediawiki_to_notion_spark.operators import QUERIES, load_all
-from mediawiki_to_notion_spark.session import get_spark
+from mediawiki_to_notion_spark.session import get_spark, host_cpus
+from tools._harness import idle_gate, loadavg, timed_noop
 
 HEADLINE = [
     "agg_pricing_summary",
@@ -72,8 +72,7 @@ HEADLINE = [
     "source_overlap_matrix",
     "market_basket_part_pairs",
     "user_retention_cohorts",
-    # --- r4 additions (cross-round totals compare on value_r3_subset,
-    # the 53-query set above, exactly as value_r1_subset pins the r1 set)
+    # r4 additions
     "sliding_distinct_users_hll",
     "text_gopher_quality_rules",
     "corpus_mixture_weights",
@@ -111,11 +110,9 @@ HEADLINE = [
     "approx_distinct_within_band",
     "dedup_substring_spans_token_exact",
     # r7 re-point (VERDICT r6 "What's wrong" #1): the primary names
-    # dedup_simhash / dedup_embedding_cosine_lsh (r3-subset slots above)
-    # now RUN the scale-safe 48-bit / adaptive-plane code that these two
-    # r6-subset slots measured, and the fixed-width originals run here
-    # under explicit demo names — a name<->cost swap between the two
-    # subsets, net-zero on the headline total.
+    # dedup_simhash / dedup_embedding_cosine_lsh (above) now RUN the
+    # scale-safe 48-bit / adaptive-plane code, and the fixed-width
+    # originals run here under explicit demo names.
     "dedup_simhash_fixedwidth_demo",
     "dedup_embedding_cosine_lsh_fixedwidth_demo",
     "ngram_lm_doc_perplexity",
@@ -143,8 +140,7 @@ HEADLINE = [
     "dedup_embedding_cosine_lsh_multitable",
     "chunk_documents_overlap",
     "decontaminate_fuzzy_minhash",
-    # late-r7 wave 2 (beyond the N_R7_SET marker: cross-round subset
-    # totals stay comparable)
+    # late-r7 wave 2
     "dedup_winnowing_fingerprint",
     "training_length_bucket_batching",
     "text_zipf_fit",
@@ -174,13 +170,6 @@ HEADLINE = [
     "pca_power_certificate",
     "dedup_fuzzy_levenshtein_exhaustive",
 ]
-N_R3_SET = 53  # the first 53 entries are the r2/r3 headline set
-N_R4_SET = 61  # ... the first 61 are the r4 headline set
-N_R5_SET = 81  # ... the first 81 are the r5 headline set
-N_R6_SET = 97  # ... the first 97 are the r6 headline set (with the r7
-# fixedwidth_demo renames occupying the retired _wide/_scaled slots;
-# cost-comparable modulo the r7 primary/demo name<->code swap)
-N_R7_SET = 102  # ... the first 102 are the r7 headline set
 
 
 def main() -> None:
@@ -188,45 +177,17 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
-    # Sample load BEFORE the session spins up: a non-idle box straggles
-    # the 32-thread stages and fabricates 1.2-1.35x phantom regressions
-    # (two rounds of forensics — VERDICT r5 item 7).  r8 (VERDICT r7
-    # "What's wrong" #1): don't EMIT a load-warned artifact — wait for
-    # the box to go idle first (1-min load decays in minutes once the
-    # contending process exits; budget below covers >10 decay
-    # half-lives), so the warn path survives only as a last resort.
-    # r9 (VERDICT r8 brief #1): the r8 capture started at load 3.14 vs
-    # the 0.1*cpus=3.2 warn line — "passed by a hair" and a dozen
-    # unchanged queries looked 1.3-1.8x slower.  The gate now blocks
-    # until 1-min load < 1.0 ABSOLUTE (not a cores fraction; stragglers
-    # come from ANY competing runnable thread on the timed 32-thread
-    # stages), with a budget long enough for >20 decay half-lives.
-    idle_gate_load = float(os.environ.get("SPARK_GRAFT_BENCH_IDLE_LOAD",
-                                          "1.0"))
-    idle_budget_s = float(os.environ.get("SPARK_GRAFT_BENCH_IDLE_WAIT",
-                                         "1800"))
-    waited_s = 0.0
-    last_load = os.getloadavg()[0]
-    while last_load >= idle_gate_load and waited_s < idle_budget_s:
-        time.sleep(15.0)
-        waited_s += 15.0
-        last_load = os.getloadavg()[0]
-    # Explicit timeout marker (ADVICE r8): a waited_s == budget run that
-    # proceeded on a still-busy box must be distinguishable from one
-    # that went idle on the last poll.  Derived from the FINAL in-loop
-    # observation (ADVICE r9): re-sampling after the loop could label a
-    # budget-exhausted run not-timed-out if load dipped between the last
-    # poll and the recheck.
-    idle_gate_timed_out = (waited_s >= idle_budget_s
-                           and last_load >= idle_gate_load)
-    loadavg_start = list(os.getloadavg())
-    # effective core count of this capture (r11, VERDICT r10 wart #5):
-    # the driver ALSO benches at a lower $SPARK_GRAFT_CPUS, and the
-    # machine fingerprint hashes /proc/cpuinfo (physical cores), so an
-    # 8-cpu capture pooled into the same BENCH_HISTORY best-dict as
-    # 32-cpu runs — the pooling key below now includes this value
-    cpus_effective = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    cpus_effective = int(cpus_effective) if cpus_effective.isdigit() else 32
+    # Wait for an idle box BEFORE the session spins up: a non-idle box
+    # straggles the timed stages and fabricates 1.2-1.8x phantom
+    # regressions (VERDICT r5 item 7, r7, r8) — don't emit a load-warned
+    # artifact, wait it out (the budget covers >20 decay half-lives).
+    gate = idle_gate("SPARK_GRAFT_BENCH_IDLE_LOAD", "SPARK_GRAFT_BENCH_IDLE_WAIT")
+    loadavg_start = loadavg()
+    # effective core count of this capture: the driver ALSO benches at a
+    # lower $SPARK_GRAFT_CPUS, and the machine fingerprint hashes
+    # /proc/cpuinfo (physical cores), so the pooling key below includes
+    # this value (same derivation as the session's local[N])
+    cpus_effective = host_cpus()
     spark = get_spark("bench")
 
     # Warm-up pass: run every headline query once at the smallest SF so
@@ -235,53 +196,23 @@ def main() -> None:
     # long-lived cluster job looks like, not first-query cold start.
     names = [n for n in HEADLINE if n in QUERIES]
     for name in names:
-        QUERIES[name](spark, "/root/testdata/sf0.001") \
-            .write.mode("overwrite").format("noop").save()
-        spark.catalog.clearCache()
-    # five timed runs per query, report median AND min (VERDICT r2 item
-    # 4: the r1→r2 total moved 1.40x on identical queries — VM variance
-    # — so single/best-of-2 numbers aren't a gradeable signal).  The
-    # median is the headline (robust to one GC/scheduler outlier); the
-    # min approximates the steady state a cluster job sustains.  Every
-    # run executes the full plan — noop sink, nothing cached between.
+        timed_noop(spark, QUERIES[name], "/root/testdata/sf0.001")
+    # n timed runs per query, report median AND min (VERDICT r2 item 4:
+    # single/best-of-2 numbers aren't a gradeable signal under VM
+    # variance).  The median is the headline (robust to one GC/scheduler
+    # outlier); the min approximates the steady state a cluster job
+    # sustains.  Every run executes the full plan, nothing cached
+    # between runs.
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
     timings: dict[str, float] = {}
     timings_min: dict[str, float] = {}
     for name in names:
-        fn = QUERIES[name]
-        runs = []
-        for _ in range(n_runs):
-            t0 = time.time()
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            runs.append(time.time() - t0)
-        runs.sort()
+        runs = sorted(timed_noop(spark, QUERIES[name], sf_dir)
+                      for _ in range(n_runs))
         timings[name] = round(runs[len(runs) // 2], 3)   # median
         timings_min[name] = round(runs[0], 3)
-        # isolate queries like independent jobs: clearCache() drops
-        # .cache()/persist()'d plans; localCheckpoint RDD blocks (the CC
-        # / PageRank / k-means rounds) are only reaped by the
-        # ContextCleaner after their RDD objects are garbage-collected,
-        # so nudge both GCs — otherwise 40+ queries x 3 executions of
-        # abandoned blocks pile up in the block manager
-        spark.catalog.clearCache()
-        import gc as _gc
-        _gc.collect()
-        spark.sparkContext._jvm.System.gc()
 
-    # the r1 headline set (31 queries): cross-round totals are only
-    # comparable on a fixed query set, so emit its subtotal alongside
-    # the full (growing) total
-    r1_set = set(HEADLINE[:31])
-    r3_set = set(HEADLINE[:N_R3_SET])
-    r4_set = set(HEADLINE[:N_R4_SET])
-    r5_set = set(HEADLINE[:N_R5_SET])
-    r6_set = set(HEADLINE[:N_R6_SET])
-    r7_set = set(HEADLINE[:N_R7_SET])
-
-    def _subtotal(t, names):
-        return round(sum(v for k, v in t.items() if k in names), 3)
-
-    loadavg_end = list(os.getloadavg())
+    loadavg_end = loadavg()
     n_cpus = os.cpu_count() or 1
     # anything already running when the bench started contends with the
     # timed stages for the whole run; 1-min load > 10% of the cores is
@@ -297,21 +228,6 @@ def main() -> None:
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "n_queries": len(timings),
-        "value_r1_subset": _subtotal(timings, r1_set),
-        "value_r3_subset": _subtotal(timings, r3_set),
-        "value_r4_subset": _subtotal(timings, r4_set),
-        "value_r5_subset": _subtotal(timings, r5_set),
-        "value_r6_subset": _subtotal(timings, r6_set),
-        "value_r7_subset": _subtotal(timings, r7_set),
-        # min-of-n subtotals: r4 proved median-of-5 drifts ~11% under
-        # driver-host load while min-of-5 reproduced r3 exactly —
-        # cross-round comparisons should quote these (VERDICT r4 #5)
-        "value_r1_subset_min": _subtotal(timings_min, r1_set),
-        "value_r3_subset_min": _subtotal(timings_min, r3_set),
-        "value_r4_subset_min": _subtotal(timings_min, r4_set),
-        "value_r5_subset_min": _subtotal(timings_min, r5_set),
-        "value_r6_subset_min": _subtotal(timings_min, r6_set),
-        "value_r7_subset_min": _subtotal(timings_min, r7_set),
         "value_min_total": round(sum(timings_min.values()), 3),
         "queries": timings,
         "queries_min": timings_min,
@@ -320,17 +236,14 @@ def main() -> None:
         # averages sampled before the session started and after the
         # last timed run; loadavg_warn means the numbers were taken
         # under external CPU contention and are NOT gradeable
-        "loadavg_start": [round(x, 2) for x in loadavg_start],
-        "loadavg_end": [round(x, 2) for x in loadavg_end],
+        "loadavg_start": loadavg_start,
+        "loadavg_end": loadavg_end,
         "loadavg_warn": loadavg_warn,
-        # seconds the idle-gate waited before starting (r8): >0 means
-        # the box was busy and the bench deferred rather than emitting
-        # a load-warned artifact; timed_out=true means the budget ran
-        # out with load still above the gate (ADVICE r8) — such a
-        # capture is NOT gradeable even if loadavg_warn stayed false
-        "idle_gate_waited_s": waited_s,
-        "idle_gate_load_threshold": idle_gate_load,
-        "idle_gate_timed_out": idle_gate_timed_out,
+        # idle_gate_waited_s > 0 means the box was busy and the bench
+        # deferred; idle_gate_timed_out means the budget ran out with
+        # load still above the gate — NOT gradeable even if
+        # loadavg_warn stayed false
+        **gate,
         "code_md5": code_md5,
         # end-to-end 3-stage document-pipeline throughput (VERDICT r6
         # brief #2), measured by tools/pipeline_bench.py (process-dump
@@ -348,28 +261,19 @@ def main() -> None:
         # (row counts + file md5s) so a silent regeneration can't shift
         # cross-round ratios unnoticed (VERDICT r3 item 8)
         "data": fp_data,
-        # methodology marker: totals are comparable only across rounds
-        # that used the same scheme (r1/r2: warmup + best-of-2 best;
-        # r3+: warmup + median of n_runs, min reported alongside)
         "methodology": f"sf0.001 warmup, median of {n_runs} timed runs "
-                       "(min in queries_min), noop sink; value_rN_subset "
-                       "= median total over that round's fixed query set "
-                       "(r1=31, r3=53, r4=61, r5=81 queries), value_rN_subset_min "
-                       "= min-of-n total over the same set (the "
-                       "load-robust cross-round currency)",
+                       "(min in queries_min), noop sink, clearCache + GC "
+                       "after every run",
     }
     # Same-code capture history (VERDICT r5 item 7): every run appends
-    # its per-query mins keyed by (code, machine, data, sf) fingerprints
-    # to BENCH_HISTORY.jsonl; when earlier captures of IDENTICAL code on
-    # the same box+data exist, report the per-query best across ALL of
-    # them — the cross-round number that needs no jitter forensics.
+    # its per-query mins keyed by (code, machine, data, sf, cpus)
+    # fingerprints to BENCH_HISTORY.jsonl; when earlier captures of
+    # IDENTICAL code on the same box+data+core count exist, report the
+    # per-query best across ALL of them — the cross-round number that
+    # needs no jitter forensics.  Old history lines without the cpus
+    # field never match (cpus=None).
     hist_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                              "BENCH_HISTORY.jsonl")
-    # cpus is part of the key (r11, VERDICT r10 wart #5): captures at a
-    # different effective core count are a different experiment — r10's
-    # 8-cpu scaling run polluted the 32-cpu pooled best.  Old history
-    # lines without the field simply never match (cpus=None), which
-    # retires the contaminated pools cleanly.
     key = (code_md5, machine_md5, data_md5, sf, cpus_effective)
     prior: list[dict] = []
     try:
@@ -398,10 +302,6 @@ def main() -> None:
     detail["n_same_code_captures"] = len(captures)
     detail["queries_best_same_code"] = best
     detail["value_best_total"] = round(sum(best.values()), 3)
-    detail["value_r1_subset_best"] = _subtotal(best, r1_set)
-    detail["value_r3_subset_best"] = _subtotal(best, r3_set)
-    detail["value_r4_subset_best"] = _subtotal(best, r4_set)
-    detail["value_r5_subset_best"] = _subtotal(best, r5_set)
 
     # Emission contract (VERDICT r3 item 4: BENCH_r03 parsed:null — the
     # single fat JSON line outgrew the driver's tail-capture window):
@@ -411,14 +311,10 @@ def main() -> None:
                            "BENCH_DETAIL.json"), "w") as f:
         json.dump(detail, f, indent=1)
     print(json.dumps(detail))
-    # Per-query compact line (r11, VERDICT r10 wart #6): PERF_r10's
-    # per_query/scaling accounting came up empty because the final
-    # compact line carries only totals and the fat detail line outgrows
-    # the driver's tail window.  Emit the per-query MINS (the
-    # load-robust currency) as their own compact line — ~4 KB for 124
-    # queries — right before the totals line, so a tail window that
-    # holds both gives the driver full per-query accounting while the
-    # final line stays small enough to parse under any window.
+    # Per-query compact line (r11, VERDICT r10 wart #6): the per-query
+    # MINS (the load-robust currency) as their own line right before
+    # the totals line, so a tail window that holds both gives the driver
+    # full per-query accounting while the final line stays small.
     print(json.dumps({
         "metric": "headline_query_mins", "unit": "sec", "sf": sf,
         "cpus": cpus_effective, "code_md5": code_md5,
@@ -429,22 +325,12 @@ def main() -> None:
         "value": detail["value"],
         "unit": "sec",
         "n_queries": detail["n_queries"],
-        "value_r1_subset": detail["value_r1_subset"],
-        "value_r3_subset": detail["value_r3_subset"],
-        "value_r4_subset": detail["value_r4_subset"],
-        "value_r5_subset": detail["value_r5_subset"],
-        "value_r1_subset_min": detail["value_r1_subset_min"],
-        "value_r3_subset_min": detail["value_r3_subset_min"],
-        "value_r4_subset_min": detail["value_r4_subset_min"],
-        "value_r5_subset_min": detail["value_r5_subset_min"],
         "value_min_total": detail["value_min_total"],
         "value_best_total": detail["value_best_total"],
-        "value_r4_subset_best": detail["value_r4_subset_best"],
-        "value_r5_subset_best": detail["value_r5_subset_best"],
         "n_same_code_captures": detail["n_same_code_captures"],
-        "loadavg_start_1m": detail["loadavg_start"][0],
+        "loadavg_start_1m": loadavg_start[0],
         "loadavg_warn": loadavg_warn,
-        "idle_gate_timed_out": idle_gate_timed_out,
+        "idle_gate_timed_out": gate["idle_gate_timed_out"],
         "sf": sf,
         "cpus": cpus_effective,
         "machine_md5": machine_md5,

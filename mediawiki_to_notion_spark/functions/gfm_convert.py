@@ -50,6 +50,7 @@ _TABLE_CELL_SPLIT = re.compile(r"\s*\|\|\s*")
 _HEADER_CELL_SPLIT = re.compile(r"\s*!!\s*")
 _HRULE = re.compile(r"^-{4,}\s*$")
 _BR = re.compile(r"\s*<br\s*/?>\s*", re.IGNORECASE)
+_PRE_TAG = re.compile(r"(</?pre>)")
 
 
 def _inline(line: str) -> str:
@@ -125,13 +126,16 @@ def wikitext_to_gfm(text: str) -> str:
             indent_pre.append(line[1:])
             continue
         flush_indent_pre()
-        if "<pre>" in line:
-            in_pre = True
-            out.append(line.replace("<pre>", "```"))
-            continue
-        if "</pre>" in line:
-            in_pre = False
-            out.append(line.replace("</pre>", "```"))
+        if "<pre>" in line or "</pre>" in line:
+            # a fence must stand on its own line: the fencer keeps the
+            # reference's rstrip, so an indented run ends as
+            # " last line</pre>" — split text and fence apart
+            for part in _PRE_TAG.split(line):
+                if part in ("<pre>", "</pre>"):
+                    in_pre = part == "<pre>"
+                    out.append("```")
+                elif part.strip():
+                    out.append(part)
             continue
         if in_pre:
             out.append(line)

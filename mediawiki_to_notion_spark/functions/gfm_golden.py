@@ -114,6 +114,14 @@ GOLDEN_CASES: list[tuple[str, str, str]] = [
         "```\nPlain text resumes.",
     ),
     (
+        # the code fencer keeps the reference's rstrip, so an indented
+        # run followed by a column-0 line closes on the last code line;
+        # the fence still goes on its own line
+        "pre_close_on_code_line",
+        "Intro\n<pre>\n code one\n code two</pre>\n\nAfter\n\n== H ==\nx",
+        "Intro\n```\n code one\n code two\n```\n\nAfter\n\n## H\n\nx",
+    ),
+    (
         "horizontal_rule",
         "Section one.\n----\nSection two.",
         "Section one.\n\n---\n\nSection two.",

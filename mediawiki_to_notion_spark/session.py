@@ -12,7 +12,29 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def host_cpus() -> int:
+    """Local cores: ``$SPARK_GRAFT_CPUS`` when set, else the host's."""
+    env = os.environ.get("SPARK_GRAFT_CPUS", "")
+    return int(env) if env.isdigit() else (os.cpu_count() or 1)
+
+
+def host_driver_memory() -> str:
+    """Driver heap: ``$SPARK_DRIVER_MEMORY`` when set, else 60% of the
+    host's MemTotal (the rest stays for Python workers and the OS)."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    try:
+        with open("/proc/meminfo") as f:
+            total_kb = next(int(ln.split()[1]) for ln in f
+                            if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "4g"
+    return f"{max(1024, int(total_kb * 0.6) // 1024)}m"
+
+
+DEFAULT_SHUFFLE_PARTITIONS = host_cpus()
 
 # Bytes of on-disk parquet per INITIAL AQE shuffle partition.  4 MiB of
 # compressed parquet expands to ~30-60 MB in-flight, a healthy shuffle
@@ -61,7 +83,7 @@ def get_spark(app_name: str = "mediawiki_to_notion_spark",
     and convert sort-merge joins to broadcast when a filtered side
     turns out small.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = host_cpus()
     sp = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
     builder = (
         SparkSession.builder
@@ -75,7 +97,7 @@ def get_spark(app_name: str = "mediawiki_to_notion_spark",
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", host_driver_memory())
         .config("spark.ui.enabled", "false")
         # no console progress bars: they interleave carriage-return
         # frames into stdout, which corrupts line-oriented captures
@@ -84,35 +106,15 @@ def get_spark(app_name: str = "mediawiki_to_notion_spark",
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
     )
     # AQE initial shuffle-partition count (shuffles start wide, AQE
-    # coalesces down).  A/B-able via SPARK_GRAFT_AQE_INITIAL: an
-    # integer sets it, "unset"/"0" leaves Spark's default (= shuffle
-    # partitions); by default it derives from the input size (see
+    # coalesces down), derived from the input size (see
     # _aqe_initial_partitions — r7's constant 8x cores taxed small
     # inputs +0.5-1.1 s/query, measured, SCALING.md "wide-AQE A/B").
-    # Strict parse (ADVICE r8): a mistyped value ('none', '-1',
-    # '256 ') must be an ERROR, not a silent fall-through to the
-    # derived heuristic — an A/B arm running the wrong config while
-    # tools/aqe_ab.py labels it by intent would corrupt the experiment.
-    aqe_init = os.environ.get("SPARK_GRAFT_AQE_INITIAL", "")
-    if aqe_init not in ("", "unset", "0") and not aqe_init.isdigit():
-        raise ValueError(
-            f"SPARK_GRAFT_AQE_INITIAL={aqe_init!r}: expected an integer, "
-            "'unset', '0', or empty (derived heuristic)")
-    if aqe_init in ("unset", "0"):
-        pass
-    elif aqe_init.isdigit():
+    derived = _aqe_initial_partitions(
+        sp, cpus, os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    if derived > sp:
         builder = builder.config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            aqe_init)
-    else:
-        ncpu = int(cpus) if str(cpus).isdigit() else 32
-        derived = _aqe_initial_partitions(
-            sp, ncpu, os.environ.get("SPARK_GRAFT_SF_DIR",
-                                     "/root/testdata/sf0.1"))
-        if derived > sp:
-            builder = builder.config(
-                "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-                str(derived))
+            str(derived))
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

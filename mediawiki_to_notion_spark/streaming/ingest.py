@@ -52,11 +52,13 @@ def ingest_batch(spark: SparkSession, staged: DataFrame, tables_dir: str) -> Non
 
 def _md_source(spark: SparkSession, input_dir: str) -> DataFrame:
     """File-arrival stream over ``*.md`` (pathGlobFilter replaces the S3
-    suffix filter)."""
+    suffix filter), at any depth: ``process-dump`` writes one directory
+    per namespace, and its output root must ingest as a whole."""
     return (
         spark.readStream.format("text")
         .option("wholetext", "true")
         .option("pathGlobFilter", "*.md")
+        .option("recursiveFileLookup", "true")
         .load(input_dir)
         .select(
             F.col("_metadata.file_path").alias("s3_object_key"),

@@ -284,8 +284,11 @@ def drain(spark: SparkSession, tables_dir: str, cfg: UploadConfig,
     while rounds < max_rounds:
         results = run_upload(spark, tables_dir, cfg, parent_urls)
         # run_upload forced count() already; isEmpty on the cached
-        # frame re-reads no state tables
-        if results.isEmpty():
+        # frame re-reads no state tables.  The round's transitions are
+        # applied, so drop its cached frame: N rounds must not pin N.
+        empty = results.isEmpty()
+        results.unpersist()
+        if empty:
             break
         rounds += 1
     return rounds

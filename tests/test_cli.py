@@ -56,6 +56,29 @@ def test_cli_full_workflow(spark, tmp_path, capsys):
     assert any("SUCCESS" in ln and "Notes.md" in ln for ln in lines[2:])
 
 
+def test_cli_ingest_descends_into_namespace_dirs(spark, tmp_path, capsys):
+    """`ingest --input <outdir>` picks up the per-namespace directories
+    `process-dump` writes: same pages as ingesting each one."""
+    dump = tmp_path / "dump.xml"
+    dump.write_text(_dump_xml())
+    outdir = tmp_path / "out"
+    assert cli.main(["process-dump", "-outdir", str(outdir), str(dump)]) == 0
+
+    from mediawiki_to_notion_spark.streaming import ingest as ING
+
+    def ingest_pages(input_dir, name) -> int:
+        tables = str(tmp_path / name)
+        assert cli.main(["ingest", "--input", str(input_dir),
+                         "--tables", tables]) == 0
+        return ING.pages_table(spark, tables).read().count()
+
+    n_whole = ingest_pages(outdir, "tables_whole")
+    n_per_ns = sum(ingest_pages(outdir / ns, f"tables_{ns}")
+                   for ns in ("Main", "Category"))
+    capsys.readouterr()
+    assert n_whole == n_per_ns >= 2
+
+
 def test_cli_crawl_to_shards(spark, tmp_path, capsys):
     """The `crawl` command: WARC in, funnel report + shard manifest out,
     shard-partitioned parquet + drop side-output on disk."""

@@ -1,7 +1,7 @@
-"""The driver-gate rotation in __spark_entry__: unconfirmed queries
-front the ~50-query window, recheck entries expire when a round at or
-after their rewrite round re-confirms them, deferred queries rotate in
-once confirmed."""
+"""The driver-gate ordering in __spark_entry__: never-confirmed queries
+front the ~50-query window, then live recheck entries (which expire
+when a round at or after their rewrite round re-confirms them), then
+the confirmed rest by oldest latest-confirming round."""
 
 from __future__ import annotations
 
@@ -11,115 +11,110 @@ import __spark_entry__ as ent
 
 
 def _fake_rounds(tmp_path, monkeypatch, rounds: dict[int, dict]) -> None:
+    for p in tmp_path.glob("CORRECTNESS_r*.json"):
+        p.unlink()
     for n, rows in rounds.items():
         (tmp_path / f"CORRECTNESS_r{n:02d}.json").write_text(json.dumps(rows))
     monkeypatch.setattr(ent, "_HERE", str(tmp_path))
 
 
-def test_unconfirmed_queries_front_the_window(tmp_path, monkeypatch):
-    some = list(ent.QUERIES)[:10]
+def _ok(names) -> dict:
+    return {n: {"hash_match": True} for n in names}
+
+
+def test_queries_is_a_permutation_in_rule_order(tmp_path, monkeypatch):
+    reg = list(ent.QUERIES)
+    old, mid, new, rewritten = reg[:5], reg[5:10], reg[10:15], reg[15]
+    monkeypatch.setattr(ent, "_RECHECK", {rewritten: 3})
     _fake_rounds(tmp_path, monkeypatch, {
-        1: {n: {"hash_match": True} for n in some},
+        1: _ok(new + mid + [rewritten]),
+        2: _ok(old[::-1] + new),
+        3: _ok(new),
     })
     names = list(ent.queries())
-    pinned = set(ent._RECHECK) | set(ent._RECHECK_SOFT) | set(ent._DEFER)
-    assert set(names[-len(some):]) >= set(some) - pinned
-    assert all(n not in some or n in pinned for n in names[:5])
+    assert sorted(names) == sorted(reg)
+    confirmed = set(old + mid + new + [rewritten])
+    fresh = [n for n in reg if n not in confirmed]
+    # never confirmed (registry order), live recheck, then by latest
+    # confirming round (ties in registry order)
+    assert names == fresh + [rewritten] + mid + old + new
+
+
+def test_unconfirmed_queries_front_the_window(tmp_path, monkeypatch):
+    some = list(ent.QUERIES)[:10]
+    _fake_rounds(tmp_path, monkeypatch, {1: _ok(some)})
+    names = list(ent.queries())
+    assert names[-len(some):] == some
+    assert not set(names[:5]) & set(some)
 
 
 def test_recheck_expires_at_or_after_rewrite_round(tmp_path, monkeypatch):
-    target = next(iter(ent._RECHECK))
-    rewrite_round = ent._RECHECK[target]
-    first_defer = ent._DEFER[0]
+    reg = list(ent.QUERIES)
+    target, older = reg[-1], reg[:3]
+    monkeypatch.setattr(ent, "_RECHECK", {target: 5})
     # confirmation BEFORE the rewrite round does not expire the entry:
-    # the recheck slot sits AHEAD of the deferred queries
+    # it sits ahead of every confirmed query, even older ones
     _fake_rounds(tmp_path, monkeypatch, {
-        rewrite_round - 1: {target: {"hash_match": True}},
+        1: _ok(older),
+        4: _ok([target]),
     })
     names = list(ent.queries())
-    assert names.index(target) < names.index(first_defer)
-    # ... but a confirmation AT the rewrite round moves it to the
-    # confirmed tail, behind the defers
+    assert names.index(target) < min(names.index(n) for n in older)
+    # ... but a confirmation AT the rewrite round drops it to the
+    # confirmed tail, by its latest round
     _fake_rounds(tmp_path, monkeypatch, {
-        rewrite_round - 1: {target: {"hash_match": True}},
-        rewrite_round: {target: {"hash_match": True}},
+        1: _ok(older),
+        4: _ok([target]),
+        5: _ok([target]),
     })
     names = list(ent.queries())
-    assert names.index(target) > names.index(first_defer)
+    assert names[-1] == target
 
 
 def test_rows_only_counts_as_confirmed(tmp_path, monkeypatch):
     name = "approx_percentile_sketch"  # rows-only by design
+    assert name not in ent.ORACLES
     _fake_rounds(tmp_path, monkeypatch, {
         1: {name: {"err": "no_oracle", "spark_rows": 5,
                    "hash_match": None}},
     })
-    names = list(ent.queries())
-    assert names.index(name) > len(names) // 2
+    assert list(ent.queries())[-1] == name
 
 
 def test_rows_only_confirmation_expires_when_oracle_added(tmp_path,
                                                           monkeypatch):
     """A query confirmed rows-only in an old round but oracled SINCE
     must re-front: the weak row no longer reflects what the gate would
-    check (r2 VERDICT item 6 — multimodal_feature_extract was
-    rows-only in r1, upgraded to a SQL oracle in r2, and needs a real
-    hash row)."""
+    check (multimodal_feature_extract was rows-only in r1, upgraded to a
+    SQL oracle in r2, and needs a real hash row)."""
     name = "multimodal_feature_extract"
     assert name in ent.ORACLES  # the upgrade this test is about
     others = [n for n in list(ent.QUERIES)[:20] if n != name]
     _fake_rounds(tmp_path, monkeypatch, {
         1: {name: {"err": "no_oracle", "spark_rows": 500,
                    "hash_match": None},
-            **{n: {"hash_match": True} for n in others}},
+            **_ok(others)},
     })
     confirmed, _ = ent._confirmed()
     assert name not in confirmed
-    # fronted ahead of every hash-confirmed query
     names = list(ent.queries())
-    assert names.index(name) < min(
-        names.index(n) for n in others
-        if n not in ent._RECHECK and n not in ent._DEFER
-    )
-
-
-def test_soft_recheck_sits_between_backlog_and_confirmed(tmp_path,
-                                                         monkeypatch):
-    """Soft rechecks (no-op edits of confirmed queries) must come AFTER
-    every unconfirmed query but BEFORE the confirmed tail, and expire
-    once re-confirmed at/after their rewrite round."""
-    soft = next(iter(ent._RECHECK_SOFT))
-    rewrite_round = ent._RECHECK_SOFT[soft]
-    plain = [n for n in list(ent.QUERIES)
-             if n not in ent._RECHECK and n not in ent._RECHECK_SOFT
-             and n not in ent._DEFER][:5]
-    # soft confirmed BEFORE its rewrite round, plain queries confirmed
-    _fake_rounds(tmp_path, monkeypatch, {
-        rewrite_round - 1: {soft: {"hash_match": True},
-                            **{n: {"hash_match": True} for n in plain}},
-    })
-    names = list(ent.queries())
-    confirmed, _ = ent._confirmed()
-    i_soft = names.index(soft)
-    # behind every unconfirmed query (other soft members are themselves
-    # in the soft band, so exclude the band)...
-    assert all(names.index(n) < i_soft
-               for n in names
-               if n not in confirmed and n not in ent._RECHECK_SOFT)
-    # ...but ahead of every plain confirmed query
-    assert all(i_soft < names.index(n) for n in plain)
-    # re-confirmation at the rewrite round expires it behind the plains
-    _fake_rounds(tmp_path, monkeypatch, {
-        rewrite_round - 1: {n: {"hash_match": True} for n in plain},
-        rewrite_round: {soft: {"hash_match": True}},
-    })
-    names = list(ent.queries())
-    assert names.index(soft) > min(names.index(n) for n in plain)
+    assert names.index(name) < min(names.index(n) for n in others)
 
 
 def test_no_correctness_files_means_everything_fresh(tmp_path, monkeypatch):
     monkeypatch.setattr(ent, "_HERE", str(tmp_path))
+    assert list(ent.queries()) == list(ent.QUERIES)
+
+
+def test_repo_window_is_the_oldest_confirmed():
+    """On the committed CORRECTNESS files, the driver's first 50 names
+    are the 50 whose latest confirming round is oldest."""
+    confirmed, last_round = ent._confirmed()
     names = list(ent.queries())
-    assert len(names) == len(ent.QUERIES)
-    # rechecks and defers keep their relative position even with no files
-    assert set(ent._RECHECK) | set(ent._DEFER) <= set(names)
+    fresh = [n for n in ent.QUERIES if n not in confirmed]
+    window = names[len(fresh):50]
+    tail = names[50:]
+    if window and tail:
+        assert max(last_round[n] for n in window) <= min(
+            last_round[n] for n in tail)
+    assert names[:len(fresh)] == fresh

@@ -140,6 +140,17 @@ def test_upload_chunked_drain(spark, staged_tables):
         .filter(F.col("uploaded_at").isNull()).count() == 0
 
 
+def test_drain_does_not_pin_cached_rounds(spark, staged_tables):
+    """Each round's cached result frame is released once the round's
+    transitions are applied: the persistent-RDD count is flat across a
+    multi-round drain."""
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    cfg = UploadConfig(transport=ScriptedTransport(), max_blocks=1)
+    assert drain(spark, staged_tables, cfg) >= 3
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_upload_missing_parent_url(spark, staged_tables):
     """Missing parenturl.txt → page creation fails → FAIL + DLQ
     (upload_notion_blocks.py:217-225 error path)."""

@@ -1,0 +1,62 @@
+"""Tier-1 smoke for the measurement tools: bench.py and every
+tools/*.py import cleanly (without running ``main``), and the shared
+idle gate reports waits and timeouts from its final in-loop sample."""
+
+from __future__ import annotations
+
+import importlib.util
+import pathlib
+
+import pytest
+
+from tools import _harness
+
+ROOT = pathlib.Path(__file__).resolve().parents[1]
+SCRIPTS = [ROOT / "bench.py", *sorted((ROOT / "tools").glob("*.py"))]
+
+
+@pytest.mark.parametrize("path", SCRIPTS, ids=lambda p: p.name)
+def test_script_imports_without_running_main(path):
+    spec = importlib.util.spec_from_file_location(f"_smoke_{path.stem}", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    if not path.name.startswith("_"):
+        assert callable(mod.main)
+
+
+def _fake_box(monkeypatch, loads: list[float], budget_s: int) -> list[float]:
+    monkeypatch.setenv("SOAK_IDLE_LOAD", "1.0")
+    monkeypatch.setenv("SOAK_IDLE_WAIT", str(budget_s))
+    samples = iter(loads)
+    monkeypatch.setattr(_harness.os, "getloadavg",
+                        lambda: (next(samples), 0.0, 0.0))
+    slept: list[float] = []
+    monkeypatch.setattr(_harness.time, "sleep", slept.append)
+    return slept
+
+
+def test_idle_gate_passes_an_idle_box_without_waiting(monkeypatch):
+    slept = _fake_box(monkeypatch, [0.2], budget_s=30)
+    gate = _harness.idle_gate()
+    assert slept == []
+    assert gate == {"idle_gate_waited_s": 0.0,
+                    "idle_gate_load_threshold": 1.0,
+                    "idle_gate_timed_out": False}
+
+
+def test_idle_gate_times_out_on_a_busy_box(monkeypatch):
+    # the load would dip right after the loop; the flag must come from
+    # the last sample the loop saw, not a re-sample
+    slept = _fake_box(monkeypatch, [5.0, 5.0, 5.0, 0.1], budget_s=30)
+    gate = _harness.idle_gate()
+    assert slept == [15.0, 15.0]
+    assert gate["idle_gate_waited_s"] == 30.0
+    assert gate["idle_gate_timed_out"] is True
+
+
+def test_idle_gate_went_idle_on_the_last_poll(monkeypatch):
+    slept = _fake_box(monkeypatch, [5.0, 5.0, 0.5], budget_s=30)
+    gate = _harness.idle_gate()
+    assert slept == [15.0, 15.0]
+    assert gate["idle_gate_waited_s"] == 30.0
+    assert gate["idle_gate_timed_out"] is False

@@ -35,9 +35,12 @@ import json
 import os
 import subprocess
 import sys
-import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+from tools._harness import idle_gate, loadavg  # noqa: E402
+
 PIN_REF = os.environ.get("BENCH_AB_REF", "4c041cd")
 N_CAPTURES = int(os.environ.get("BENCH_AB_CAPTURES", "3"))
 SF_DIR = os.environ.get("BENCH_AB_SF_DIR", "/root/testdata/sf0.1")
@@ -143,7 +146,6 @@ def _source_flags(names: list[str], pin_root: str) -> dict:
     """Per-query: is the registered function's source identical between
     HEAD and the pin?  (Shared helpers may still differ — this flags
     the function body only, the strongest cheap signal.)"""
-    sys.path.insert(0, ROOT)
     from mediawiki_to_notion_spark.operators import QUERIES, load_all
     load_all()
     flags = {}
@@ -183,16 +185,7 @@ def main() -> None:
     names = [n for n in os.environ.get(
         "BENCH_AB_NAMES", ",".join(DEFAULT_NAMES)).split(",") if n]
 
-    idle_gate_load = float(os.environ.get("SOAK_IDLE_LOAD", "1.0"))
-    idle_budget_s = float(os.environ.get("SOAK_IDLE_WAIT", "1800"))
-    waited_s = 0.0
-    last_load = os.getloadavg()[0]
-    while last_load >= idle_gate_load and waited_s < idle_budget_s:
-        time.sleep(15.0)
-        waited_s += 15.0
-        last_load = os.getloadavg()[0]
-    idle_gate_timed_out = (waited_s >= idle_budget_s
-                           and last_load >= idle_gate_load)
+    gate = idle_gate()
 
     pin_root = _ensure_worktree(PIN_REF)
     os.makedirs(os.path.join(ROOT, ".bench_ab"), exist_ok=True)
@@ -203,7 +196,7 @@ def main() -> None:
     captures: list[dict] = []
     for k in range(N_CAPTURES):
         for side, root in (("head", ROOT), ("pin", pin_root)):
-            la = round(os.getloadavg()[0], 2)
+            la = loadavg()[0]
             t = _run_side(root, names)
             if t is None:
                 raise SystemExit(f"capture {k} side {side} failed")
@@ -235,8 +228,7 @@ def main() -> None:
         "head_ref": _git("rev-parse", "HEAD"),
         "sf_dir": SF_DIR,
         "n_captures_per_side": N_CAPTURES,
-        "idle_gate_waited_s": waited_s,
-        "idle_gate_timed_out": idle_gate_timed_out,
+        **gate,
         "queries": queries,
         "total_head_min_s": round(sum(v for v in mins["head"].values()), 2),
         "total_pin_min_s": round(sum(v for v in mins["pin"].values()), 2),

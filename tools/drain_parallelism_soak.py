@@ -33,6 +33,11 @@ import threading
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+from tools._harness import idle_gate, loadavg  # noqa: E402
+from tools.pipeline_bench import _make_server  # noqa: E402
+
 N_PAGES = int(os.environ.get("DRAIN_SOAK_PAGES", "50000"))
 LATENCY_S = float(os.environ.get("DRAIN_SOAK_LATENCY_MS", "20")) / 1000.0
 PARALLELISMS = [int(p) for p in os.environ.get(
@@ -40,10 +45,6 @@ PARALLELISMS = [int(p) for p in os.environ.get(
 
 
 def main() -> None:
-    sys.path.insert(0, ROOT)
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from pipeline_bench import _make_server
-
     from pyspark.sql import functions as F
 
     from mediawiki_to_notion_spark.session import get_spark
@@ -56,17 +57,8 @@ def main() -> None:
         run_upload,
     )
 
-    idle_gate_load = float(os.environ.get("SOAK_IDLE_LOAD", "1.0"))
-    idle_budget_s = float(os.environ.get("SOAK_IDLE_WAIT", "1800"))
-    waited_s = 0.0
-    last_load = os.getloadavg()[0]
-    while last_load >= idle_gate_load and waited_s < idle_budget_s:
-        time.sleep(15.0)
-        waited_s += 15.0
-        last_load = os.getloadavg()[0]
-    idle_gate_timed_out = (waited_s >= idle_budget_s
-                           and last_load >= idle_gate_load)
-    loadavg = list(os.getloadavg())
+    gate = idle_gate()
+    loadavg_start = loadavg()
 
     spark = get_spark("drain_parallelism_soak")
     scratch = tempfile.mkdtemp(prefix="drain_soak_")
@@ -75,9 +67,8 @@ def main() -> None:
         "n_pages": N_PAGES,
         "latency_ms": round(LATENCY_S * 1000, 1),
         "parallelisms": PARALLELISMS,
-        "loadavg_start": [round(x, 2) for x in loadavg],
-        "idle_gate_waited_s": waited_s,
-        "idle_gate_timed_out": idle_gate_timed_out,
+        "loadavg_start": loadavg_start,
+        **gate,
         "rows": [],
     }
     try:
@@ -122,7 +113,7 @@ def main() -> None:
             srv = _make_server(LATENCY_S)
             threading.Thread(target=srv.serve_forever, daemon=True).start()
             base = f"http://127.0.0.1:{srv.server_address[1]}"
-            la = round(os.getloadavg()[0], 2)
+            la = loadavg()[0]
             try:
                 cfg = UploadConfig(transport=HttpTransport(base),
                                    max_blocks=n_blocks + 1,

@@ -1,10 +1,21 @@
-"""Regenerate PLANS.md — formatted physical plans for the
+"""Dump formatted physical plans.
+
+With no arguments, regenerate PLANS.md — the plans of the
 scale-sensitive queries, so the plan properties SCALING.md claims
 (pushdown, broadcast, partial aggregation, no cartesian products) can
-be read directly without running Spark.
+be read directly without running Spark.  With a round, a suffix and
+query names, write plans/r<round>/<query>_<suffix>.txt — the
+before/after plans an optimization round's claims (Exchange counts,
+join strategies, pushed filters) are checked against.
 
-Usage:  python tools/dump_plans.py   (writes PLANS.md at the repo root;
-        sf dir via SPARK_GRAFT_SF_DIR, default /root/testdata/sf0.01)
+Usage:  python tools/dump_plans.py
+        python tools/dump_plans.py <round> <suffix> <query> [<query> ...]
+        python tools/dump_plans.py 11 before market_basket_part_pairs
+
+SF dir via SPARK_GRAFT_SF_DIR; default /root/testdata/sf0.01 for
+PLANS.md and the bench scale /root/testdata/sf0.1 for round dumps, so
+plan literals (AQE initial partitions, derived plane counts) match what
+the bench runs.
 
 The dump is the ANALYZED-and-OPTIMIZED physical plan as Spark prints it
 (`df.explain("formatted")` equivalent via queryExecution); AQE replans
@@ -18,7 +29,8 @@ import io
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from mediawiki_to_notion_spark.operators import QUERIES, load_all  # noqa: E402
 from mediawiki_to_notion_spark.session import get_spark  # noqa: E402
@@ -156,8 +168,30 @@ SHOWCASE: list[tuple[str, str]] = [
 ]
 
 
-def main() -> None:
-    load_all()
+def _plan(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
+        df._jdf.queryExecution(), "formatted"
+    ).rstrip("\n")
+
+
+def dump_round(rnd: int, suffix: str, names: list[str]) -> None:
+    unknown = [n for n in names if n not in QUERIES]
+    if unknown:
+        raise SystemExit(f"unknown queries: {unknown}")
+    spark = get_spark(f"plans-r{rnd}")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    out_dir = os.path.join(ROOT, "plans", f"r{rnd}")
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        with open(path, "w") as f:
+            f.write(f"# {name} — {suffix} (sf dir: {sf_dir})\n\n")
+            f.write(_plan(QUERIES[name](spark, sf_dir)) + "\n")
+        print(f"wrote {os.path.relpath(path, ROOT)}")
+        spark.catalog.clearCache()
+
+
+def dump_showcase() -> None:
     spark = get_spark("plans")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     out = io.StringIO()
@@ -171,18 +205,22 @@ def main() -> None:
         "the plan as Spark prints it.\n"
     )
     for name, check in SHOWCASE:
-        df = QUERIES[name](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
-            df._jdf.queryExecution(), "formatted"
-        )
         out.write(f"\n## {name}\n\n**Verify:** {check}\n\n")
-        out.write("```\n")
-        out.write(plan.rstrip("\n"))
-        out.write("\n```\n")
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(root, "PLANS.md"), "w") as f:
+        out.write(f"```\n{_plan(QUERIES[name](spark, sf_dir))}\n```\n")
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write(out.getvalue())
     print(f"wrote PLANS.md ({len(SHOWCASE)} plans)")
+
+
+def main() -> None:
+    args = sys.argv[1:]
+    if args and (len(args) < 3 or not args[0].isdigit()):
+        raise SystemExit(__doc__)
+    load_all()
+    if args:
+        dump_round(int(args[0]), args[1], args[2:])
+    else:
+        dump_showcase()
 
 
 if __name__ == "__main__":

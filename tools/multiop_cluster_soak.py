@@ -1,19 +1,20 @@
 """Multi-executor soak for the scale-critical dedup families (VERDICT
-r9 brief #3): generalizes tools/multitable_cluster_soak.py — which
-settled the multitable LSH's shuffle-regime question with a
-`local-cluster` data point — to the remaining families whose 100 TB
-claims rest on single-JVM soaks:
+r9 brief #3): a `local-cluster` data point for the families whose
+100 TB claims rest on single-JVM soaks:
 
     dedup_substring_cut, dedup_fuzzy_levenshtein,
     dedup_winnowing_fingerprint, dedup_minhash_lsh,
     dedup_connected_components
+
+The r8 multitable-LSH shuffle-regime run (MULTITABLE_CLUSTER_SOAK.json)
+is this tool with MO_SOAK_QUERIES=dedup_embedding_cosine_lsh_multitable.
 
 Each family runs at the sf10 and sf100 soak corpora on
 ``local-cluster[E,C,memMB]`` (separate executor JVMs, their own shuffle
 trees and block managers) and the tool records wall times, the decade
 exponent, and the per-decade shuffle/spill deltas scraped from the
 status REST API (scoped to this run's applicationId, failed stages
-counted and flagged — see multitable_cluster_soak._stage_totals).
+counted and flagged — see _harness.stage_totals).
 
 Note on dedup_connected_components: the r10 driver cutover collects
 the duplicate-pair edge list when it is under
@@ -36,9 +37,17 @@ import json
 import math
 import os
 import sys
-import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+from tools._harness import (  # noqa: E402
+    idle_gate,
+    loadavg,
+    stage_totals,
+    timed_noop,
+)
+
 N_EXEC = int(os.environ.get("MT_SOAK_EXECUTORS", "4"))
 N_CORES = int(os.environ.get("MT_SOAK_CORES", "8"))
 MEM_MB = int(os.environ.get("MT_SOAK_MEM_MB", "20480"))
@@ -54,10 +63,6 @@ LBL_B = os.path.basename(SF100.rstrip("/"))
 
 
 def main() -> None:
-    sys.path.insert(0, ROOT)
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from multitable_cluster_soak import _stage_totals
-
     from pyspark.sql import SparkSession
 
     from mediawiki_to_notion_spark.operators import QUERIES, load_all
@@ -65,17 +70,8 @@ def main() -> None:
     names = [n for n in os.environ.get(
         "MO_SOAK_QUERIES", DEFAULT_QUERIES).split(",") if n]
 
-    idle_gate_load = float(os.environ.get("SOAK_IDLE_LOAD", "1.0"))
-    idle_budget_s = float(os.environ.get("SOAK_IDLE_WAIT", "1800"))
-    waited_s = 0.0
-    last_load = os.getloadavg()[0]
-    while last_load >= idle_gate_load and waited_s < idle_budget_s:
-        time.sleep(15.0)
-        waited_s += 15.0
-        last_load = os.getloadavg()[0]
-    idle_gate_timed_out = (waited_s >= idle_budget_s
-                           and last_load >= idle_gate_load)
-    loadavg = list(os.getloadavg())
+    gate = idle_gate()
+    loadavg_start = loadavg()
 
     # the larger corpus drives the session's input-size-derived AQE
     # width (session.py) — same setting discipline as scaling_soak
@@ -86,6 +82,8 @@ def main() -> None:
         .master(f"local-cluster[{N_EXEC},{N_CORES},{MEM_MB}]")
         .appName("multiop_cluster_soak")
         .config("spark.executor.memory", f"{MEM_MB - 2048}m")
+        # local-cluster mode ships no code: executor python workers need
+        # the repo importable (the Arrow kernels close over repo modules)
         .config("spark.executorEnv.PYTHONPATH", ROOT)
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.adaptive.enabled", "true")
@@ -113,23 +111,16 @@ def main() -> None:
     app_id = spark.sparkContext.applicationId
 
     results = {}
-    prev_tot = _stage_totals(ui_base, app_id) if ui_base else {}
     for name in names:
         fn = QUERIES[name]
         # warmup (codegen + Arrow workers on every executor)
-        fn(spark, "/root/testdata/sf0.01").write.mode("overwrite") \
-            .format("noop").save()
-        spark.catalog.clearCache()
-        if ui_base:
-            prev_tot = _stage_totals(ui_base, app_id)
+        timed_noop(spark, fn, "/root/testdata/sf0.01")
+        prev_tot = stage_totals(ui_base, app_id) if ui_base else {}
         rows = {}
         for label, sf_dir in ((LBL_A, SF10), (LBL_B, SF100)):
-            la = round(os.getloadavg()[0], 2)
-            t0 = time.time()
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            wall = time.time() - t0
-            spark.catalog.clearCache()
-            tot = _stage_totals(ui_base, app_id) if ui_base else {}
+            la = loadavg()[0]
+            wall = timed_noop(spark, fn, sf_dir)
+            tot = stage_totals(ui_base, app_id) if ui_base else {}
             delta = {k: tot[k] - prev_tot.get(k, 0) for k in tot}
             prev_tot = tot
             rows[label] = {"wall_s": round(wall, 3),
@@ -150,9 +141,8 @@ def main() -> None:
         "data_dirs": {LBL_A: SF10, LBL_B: SF100},
         "iter_driver_cap": int(os.environ.get(
             "SPARK_GRAFT_ITER_DRIVER_CAP", str(1 << 16))),
-        "loadavg_start": [round(x, 2) for x in loadavg],
-        "idle_gate_waited_s": waited_s,
-        "idle_gate_timed_out": idle_gate_timed_out,
+        "loadavg_start": loadavg_start,
+        **gate,
         "queries": results,
     }
     with open(os.path.join(ROOT, "MULTIOP_CLUSTER_SOAK.json"), "w") as f:

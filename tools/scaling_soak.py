@@ -22,9 +22,12 @@ import json
 import math
 import os
 import sys
-import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+from tools._harness import idle_gate, loadavg, timed_noop  # noqa: E402
+
 # Defaults measure sf0.1 -> sf1; the r7 heavy-tail decade re-points the
 # pair at sf1 -> sf10 via env (SOAK_SRC/SOAK_DST/SOAK_ONLY/SOAK_OUT).
 SF01 = os.environ.get("SOAK_SRC", "/root/testdata/sf0.1")
@@ -95,7 +98,6 @@ SOAK = [
 
 
 def main() -> None:
-    sys.path.insert(0, ROOT)
     from mediawiki_to_notion_spark.operators import QUERIES, load_all
     from mediawiki_to_notion_spark.session import get_spark
 
@@ -105,20 +107,8 @@ def main() -> None:
     extra = ([n for n in only.split(",") if n not in SOAK] if only else [])
     soak += extra
     n_runs = int(os.environ.get("SOAK_RUNS", "3"))
-    # idle gate (r9, VERDICT r8 brief #3: the SOAK100 multitable row was
-    # captured under decaying load 7.4 with the idle number hand-timed —
-    # never again): block until 1-min load < 1.0, same policy as bench.py
-    idle_gate_load = float(os.environ.get("SOAK_IDLE_LOAD", "1.0"))
-    idle_budget_s = float(os.environ.get("SOAK_IDLE_WAIT", "1800"))
-    waited_s = 0.0
-    last_load = os.getloadavg()[0]
-    while last_load >= idle_gate_load and waited_s < idle_budget_s:
-        time.sleep(15.0)
-        waited_s += 15.0
-        last_load = os.getloadavg()[0]
-    idle_gate_timed_out = (waited_s >= idle_budget_s
-                           and last_load >= idle_gate_load)
-    loadavg = list(os.getloadavg())
+    gate = idle_gate()
+    loadavg_start = loadavg()
     # the session's input-size-derived AQE width (session.py) must fit
     # the LARGER side of the soak pair — that's where wide initial
     # shuffles pay (r7: substring cut exp 1.25 -> 1.03 at sf10)
@@ -126,23 +116,12 @@ def main() -> None:
     spark = get_spark("scaling_soak")
 
     def timed(name: str, sf_dir: str) -> float:
-        fn = QUERIES[name]
-        best = math.inf
-        for _ in range(n_runs):
-            t0 = time.time()
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            best = min(best, time.time() - t0)
-            spark.catalog.clearCache()
-            import gc
-            gc.collect()
-            spark.sparkContext._jvm.System.gc()
-        return best
+        return min(timed_noop(spark, QUERIES[name], sf_dir)
+                   for _ in range(n_runs))
 
     # warmup both datasets once (footers, codegen, Arrow workers)
     for name in soak:
-        QUERIES[name](spark, "/root/testdata/sf0.01") \
-            .write.mode("overwrite").format("noop").save()
-    spark.catalog.clearCache()
+        timed_noop(spark, QUERIES[name], "/root/testdata/sf0.01")
 
     # r9 fix (VERDICT r8 brief #3): key the per-SF timings by the
     # ACTUAL soak pair (the r8 third-decade artifact said t_sf0.1/t_sf1
@@ -151,7 +130,7 @@ def main() -> None:
     k_dst = f"t_{os.path.basename(SF1)}"
     rows = {}
     for name in soak:
-        la_q = round(os.getloadavg()[0], 2)
+        la_q = loadavg()[0]
         t01 = timed(name, SF01)
         t1 = timed(name, SF1)
         exp = math.log(t1 / t01) / math.log(10.0)
@@ -165,10 +144,8 @@ def main() -> None:
         "metric": f"scaling_exponents_{os.path.basename(SF01)}_to_"
                   f"{os.path.basename(SF1)}",
         "n_runs_min_of": n_runs,
-        "loadavg_start": [round(x, 2) for x in loadavg],
-        "idle_gate_waited_s": waited_s,
-        "idle_gate_load_threshold": idle_gate_load,
-        "idle_gate_timed_out": idle_gate_timed_out,
+        "loadavg_start": loadavg_start,
+        **gate,
         "queries": rows,
         "max_exponent": max(r["exponent"] for r in rows.values()),
         "median_exponent": sorted(

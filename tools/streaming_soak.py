@@ -34,6 +34,10 @@ import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+from tools._harness import idle_gate, loadavg  # noqa: E402
+
 SF_DIR = "/root/testdata/sf0.1"
 N_FILES = int(os.environ.get("STREAM_SOAK_N", "500"))
 PARALLELISM = int(os.environ.get("STREAM_SOAK_PARALLELISM", "8"))
@@ -169,25 +173,14 @@ def _run_pass(spark, inbox: str, scratch: str, label: str,
 
 
 def main() -> None:
-    sys.path.insert(0, ROOT)
     from pyspark.sql import functions as F
 
     from mediawiki_to_notion_spark.session import get_spark
     from mediawiki_to_notion_spark.streaming import ingest
     from mediawiki_to_notion_spark.streaming.upload import UploadConfig
 
-    # idle gate (same policy as bench.py / scaling_soak.py, r9)
-    idle_gate_load = float(os.environ.get("SOAK_IDLE_LOAD", "1.0"))
-    idle_budget_s = float(os.environ.get("SOAK_IDLE_WAIT", "1800"))
-    waited_s = 0.0
-    last_load = os.getloadavg()[0]
-    while last_load >= idle_gate_load and waited_s < idle_budget_s:
-        time.sleep(15.0)
-        waited_s += 15.0
-        last_load = os.getloadavg()[0]
-    idle_gate_timed_out = (waited_s >= idle_budget_s
-                           and last_load >= idle_gate_load)
-    loadavg = list(os.getloadavg())
+    gate = idle_gate()
+    loadavg_start = loadavg()
     spark = get_spark("streaming_soak")
     scratch = tempfile.mkdtemp(prefix="streaming_soak_")
     srv = ThreadingHTTPServer(("127.0.0.1", 0), _OkHandler)
@@ -195,10 +188,8 @@ def main() -> None:
     base = f"http://127.0.0.1:{srv.server_address[1]}"
     out: dict = {
         "metric": "streaming_pipeline_soak",
-        "loadavg_start": [round(x, 2) for x in loadavg],
-        "idle_gate_waited_s": waited_s,
-        "idle_gate_load_threshold": idle_gate_load,
-        "idle_gate_timed_out": idle_gate_timed_out,
+        "loadavg_start": loadavg_start,
+        **gate,
         "n_files": N_FILES,
         "scales": SCALES,
         "upload_parallelism": PARALLELISM,

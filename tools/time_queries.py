@@ -10,16 +10,15 @@ GC between runs.  Prints one line per query: min / median / all runs.
 
 from __future__ import annotations
 
-import gc
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mediawiki_to_notion_spark.operators import QUERIES, load_all  # noqa: E402
 from mediawiki_to_notion_spark.session import get_spark  # noqa: E402
+from tools._harness import timed_noop  # noqa: E402
 
 
 def main() -> None:
@@ -34,26 +33,14 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("time-queries")
 
-    def _force(name: str, d: str) -> None:
-        QUERIES[name](spark, d).write.mode("overwrite").format("noop").save()
-
-    def _reset() -> None:
-        spark.catalog.clearCache()
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
-
     out = {}
     for name in names:
         spark.sparkContext.setJobDescription(f"warmup {name}")
-        _force(name, "/root/testdata/sf0.001")
-        _reset()
+        timed_noop(spark, QUERIES[name], "/root/testdata/sf0.001")
         runs = []
         for i in range(n_runs):
             spark.sparkContext.setJobDescription(f"timed {name} #{i}")
-            t0 = time.time()
-            _force(name, sf_dir)
-            runs.append(round(time.time() - t0, 3))
-            _reset()
+            runs.append(round(timed_noop(spark, QUERIES[name], sf_dir), 3))
         runs_sorted = sorted(runs)
         out[name] = runs_sorted[0]
         print(json.dumps({
