@@ -1,7 +1,8 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints one
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+JSON line of full detail (also written to BENCH_DETAIL.json), then the
+per-query mins as integer ms in HEADLINE order, then a compact
+{"metric": ..., "value": total_sec, "unit": "sec", ...} headline.
 
 Execution is forced with the `noop` sink (full pipeline runs, nothing is
 collected to the driver), which is what a cluster job would look like.
@@ -244,7 +245,10 @@ def main() -> None:
         # load still above the gate — NOT gradeable even if
         # loadavg_warn stayed false
         **gate,
+        "cpus": cpus_effective,
         "code_md5": code_md5,
+        "machine_md5": machine_md5,
+        "data_md5": data_md5,
         # end-to-end 3-stage document-pipeline throughput (VERDICT r6
         # brief #2), measured by tools/pipeline_bench.py (process-dump
         # docs/s, ingest blocks/s, upload-drain blocks/s over the real
@@ -311,15 +315,26 @@ def main() -> None:
                            "BENCH_DETAIL.json"), "w") as f:
         json.dump(detail, f, indent=1)
     print(json.dumps(detail))
-    # Per-query compact line (r11, VERDICT r10 wart #6): the per-query
-    # MINS (the load-robust currency) as their own line right before
-    # the totals line, so a tail window that holds both gives the driver
-    # full per-query accounting while the final line stays small.
-    print(json.dumps({
-        "metric": "headline_query_mins", "unit": "sec", "sf": sf,
-        "cpus": cpus_effective, "code_md5": code_md5,
-        "queries": timings_min,
-    }, separators=(",", ":")))
+    per_query, headline = stdout_lines(detail, names)
+    print(per_query)
+    print(headline)
+
+
+def stdout_lines(detail: dict, names: list[str]) -> tuple[str, str]:
+    """The last two stdout lines: per-query mins, then the compact
+    totals.  Together they fit the 2,000-character stdout tail a
+    reader keeps.
+
+    The per-query line carries each query's min as integer ms, in
+    `names` (HEADLINE) order, plus the md5 of the comma-joined names so
+    a reader can check it holds the same list before zipping."""
+    per_query = json.dumps({
+        "metric": "headline_query_mins", "unit": "ms",
+        "sf": detail["sf"], "cpus": detail["cpus"],
+        "code_md5": detail["code_md5"],
+        "names_md5": _md5_str(",".join(names)),
+        "ms": [round(detail["queries_min"][n] * 1000) for n in names],
+    }, separators=(",", ":"))
     compact = {
         "metric": detail["metric"],
         "value": detail["value"],
@@ -328,23 +343,24 @@ def main() -> None:
         "value_min_total": detail["value_min_total"],
         "value_best_total": detail["value_best_total"],
         "n_same_code_captures": detail["n_same_code_captures"],
-        "loadavg_start_1m": loadavg_start[0],
-        "loadavg_warn": loadavg_warn,
-        "idle_gate_timed_out": gate["idle_gate_timed_out"],
-        "sf": sf,
-        "cpus": cpus_effective,
-        "machine_md5": machine_md5,
-        "data_md5": data_md5,
-        "code_md5": code_md5,
+        "loadavg_start_1m": detail["loadavg_start"][0],
+        "loadavg_warn": detail["loadavg_warn"],
+        "idle_gate_timed_out": detail["idle_gate_timed_out"],
+        "sf": detail["sf"],
+        "cpus": detail["cpus"],
+        "machine_md5": detail["machine_md5"],
+        "data_md5": detail["data_md5"],
+        "code_md5": detail["code_md5"],
         "detail": "BENCH_DETAIL.json",
         "per_query_line": "headline_query_mins",
     }
-    if loadavg_warn:
+    if detail["loadavg_warn"]:
         compact["WARN"] = (
             "box not idle at bench start "
-            f"(1m load {loadavg_start[0]:.1f} on {n_cpus} cpus); "
+            f"(1m load {detail['loadavg_start'][0]:.1f} on "
+            f"{os.cpu_count() or 1} cpus); "
             "timings not gradeable — rerun idle")
-    print(json.dumps(compact))
+    return per_query, json.dumps(compact)
 
 
 def _load_pipeline_bench() -> dict | None:

@@ -48,16 +48,18 @@ def _report_side_output(df, outdir: str, name: str, fmt,
     write — never collected), print only the first `limit` rows to stderr.
     The reference streams every warning to stderr
     (process-mw-dump.py:210-214), which at 100 TB is a driver OOM; the
-    full set lives in <outdir>/_warnings/<name> instead."""
+    full set lives in <outdir>/_warnings/<name> instead.  One row past
+    the limit tells whether anything overflows, so the full count (two
+    more Spark jobs) runs only when it does."""
     path = os.path.join(outdir, "_warnings", name)
     df.write.mode("overwrite").parquet(path)
     persisted = df.sparkSession.read.parquet(path)
-    shown = persisted.limit(limit).collect()
-    for r in shown:
+    head = persisted.limit(limit + 1).collect()
+    for r in head[:limit]:
         print(fmt(r), file=sys.stderr)
-    total = persisted.count()  # metadata-cheap: counts the written files
-    if total > len(shown):
-        print(f"\t... {total - len(shown)} more in {path}", file=sys.stderr)
+    if len(head) > limit:
+        more = persisted.count() - limit
+        print(f"\t... {more} more in {path}", file=sys.stderr)
 
 
 def cmd_process_dump(args: argparse.Namespace) -> int:

@@ -30,21 +30,40 @@ from mediawiki_to_notion_spark.functions.markdown_blocks import (
 WIKITEXT_NS = (0, 14)   # Main, Category → WikitextParser route
 FILE_NS = (6,)          # File → FileParser route
 
+# Estimated input bytes per Arrow/Python task.  Below this, another
+# task costs an Arrow round trip (worker handoff, batch framing) that
+# outweighs the work it would take over.  The densest stage sets it:
+# corpus_filter_agreement's per-row Python battery runs 1.46x slower
+# on its 21 KB sf0.01 input as 1 task than as 4, while the SRP-LSH
+# numpy kernels gain from 16 -> 6 tasks on 158 KB.  4 KiB keeps every
+# sf0.01 and sf0.1 call at its floor on 4 cores, and still runs the
+# few-KB inputs (a 20-vector table) as one or two tasks.
+ARROW_TASK_BYTES = 4 * 1024
+
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Repartition ahead of an Arrow/Python stage when the input arrives
-    in fewer splits than the cluster has cores (a single small parquet
-    file otherwise serializes the whole UDF stage through one worker).
-    No-op at real scale, where the source already has many splits."""
+    in fewer splits than its size can keep busy (a single parquet file
+    otherwise serializes the whole UDF stage through one worker).
+
+    The target is one task per ``ARROW_TASK_BYTES`` of Catalyst's size
+    estimate, capped at the floor — ``min_partitions``, else
+    ``min(8, defaultParallelism)`` — and at least 1.  A frame whose size
+    is unknown (an RDD leaf estimates ``spark.sql.defaultSizeInBytes``)
+    gets the floor.  The estimate comes from the optimized plan's
+    statistics and runs no Spark job.  The frame is only ever widened:
+    a source that already has the target's splits is returned as is."""
     if df.isStreaming:
         # a streaming frame has no static partition count to probe
         # (df.rdd raises); micro-batch parallelism comes from the
         # source, and the shared batch/stream cores stay usable either
         # way (r10)
         return df
-    target = min_partitions or min(
+    floor = min_partitions or min(
         8, df.sparkSession.sparkContext.defaultParallelism
     )
+    est = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    target = max(1, min(floor, est // ARROW_TASK_BYTES))
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

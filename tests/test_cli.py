@@ -79,6 +79,38 @@ def test_cli_ingest_descends_into_namespace_dirs(spark, tmp_path, capsys):
     assert n_whole == n_per_ns >= 2
 
 
+def _user_pages_dump(n: int) -> str:
+    pages = "".join(
+        f"<page><title>User:U{i}</title><ns>2</ns>"
+        f"<revision><text>user {i}</text></revision></page>"
+        for i in range(n))
+    return ('<mediawiki xmlns="http://www.mediawiki.org/xml/export-0.11/">'
+            '<siteinfo><namespaces><namespace key="0" />'
+            '<namespace key="2">User</namespace></namespaces></siteinfo>'
+            f"{pages}</mediawiki>")
+
+
+@pytest.mark.parametrize("n_skipped", [20, 27])
+def test_cli_side_output_overflow_line(spark, tmp_path, capsys, n_skipped):
+    """stderr shows at most SIDE_OUTPUT_PRINT_LIMIT warnings per side
+    output; the `... N more in` line appears only past the limit, with
+    the exact remainder."""
+    dump = tmp_path / "dump.xml"
+    dump.write_text(_user_pages_dump(n_skipped))
+    outdir = tmp_path / "out"
+    assert cli.main(["process-dump", "-outdir", str(outdir), str(dump)]) == 0
+    err = capsys.readouterr().err.splitlines()
+    limit = cli.SIDE_OUTPUT_PRINT_LIMIT
+    shown = [ln for ln in err if "WARNING: ignoring namespace 2: User:U" in ln]
+    assert len(shown) == min(n_skipped, limit)
+    more = [ln for ln in err if " more in " in ln]
+    if n_skipped > limit:
+        path = os.path.join(str(outdir), "_warnings", "skipped_pages")
+        assert more == [f"\t... {n_skipped - limit} more in {path}"]
+    else:
+        assert more == []
+
+
 def test_cli_crawl_to_shards(spark, tmp_path, capsys):
     """The `crawl` command: WARC in, funnel report + shard manifest out,
     shard-partitioned parquet + drop side-output on disk."""

@@ -60,3 +60,32 @@ def test_idle_gate_went_idle_on_the_last_poll(monkeypatch):
     assert slept == [15.0, 15.0]
     assert gate["idle_gate_waited_s"] == 30.0
     assert gate["idle_gate_timed_out"] is False
+
+
+def test_bench_stdout_lines_fit_the_tail_window():
+    """bench.py's last two stdout lines, for all 124 headline queries at
+    their widest (5-digit ms, a load warning), fit in 2,000 characters
+    together, and the per-query line decodes back to the mins."""
+    import json
+
+    import bench
+    names = list(bench.HEADLINE)
+    assert len(names) == 124
+    mins = {n: 12.345 + i / 1000 for i, n in enumerate(names)}
+    md5 = "0123456789abcdef0123456789abcdef"
+    detail = {
+        "metric": "headline_query_wall_total", "value": 2345.678,
+        "n_queries": len(names), "value_min_total": 2001.234,
+        "value_best_total": 1999.999, "n_same_code_captures": 12,
+        "loadavg_start": [13.37, 9.5, 4.2], "loadavg_warn": True,
+        "idle_gate_timed_out": True, "sf": 0.1, "cpus": 32,
+        "code_md5": md5, "machine_md5": md5, "data_md5": md5,
+        "queries_min": mins,
+    }
+    per_query, headline = bench.stdout_lines(detail, names)
+    assert len(per_query) + len(headline) + 2 < 2000
+    pq = json.loads(per_query)
+    assert pq["names_md5"] == bench._md5_str(",".join(names))
+    assert dict(zip(names, pq["ms"])) == {n: round(v * 1000)
+                                          for n, v in mins.items()}
+    assert json.loads(headline)["per_query_line"] == pq["metric"]
