@@ -20,6 +20,7 @@ arithmetic shared verbatim with the oracle (functions/hashing.py).
 from __future__ import annotations
 
 import os
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -727,19 +728,6 @@ def _cosine_pairs_blocked(spark: SparkSession, sf_dir: str,
     # the rounded value is the only semantic threshold
     prefilter = COSINE_DUP_THRESHOLD - 1e-6
 
-    def _fold_dots(A: "np.ndarray", B: "np.ndarray") -> "np.ndarray":
-        # dimension-sequential accumulation == the engines' left fold
-        acc = np.zeros((A.shape[0], B.shape[0]))
-        for k in range(A.shape[1]):
-            acc += np.multiply.outer(A[:, k], B[:, k])
-        return acc
-
-    def _fold_sq(A: "np.ndarray") -> "np.ndarray":
-        acc = np.zeros(A.shape[0])
-        for k in range(A.shape[1]):
-            acc += A[:, k] * A[:, k]
-        return acc
-
     def compare_tile(pdf: "pd.DataFrame") -> "pd.DataFrame":
         empty = pd.DataFrame({"vec_a": [], "vec_b": [], "cosine": []})
         lhs = pdf[pdf["side"] == 0]
@@ -749,8 +737,8 @@ def _cosine_pairs_blocked(spark: SparkSession, sf_dir: str,
         la = np.stack(lhs["embedding"].to_numpy()).astype(np.float64)
         lid = lhs["vec_id"].to_numpy()
         if int(pdf["bi"].iloc[0]) == int(pdf["bj"].iloc[0]):
-            cos = _fold_dots(la, la)
-            nrm = np.sqrt(_fold_sq(la))
+            cos = V.np_fold_dots(la, la)
+            nrm = np.sqrt(V.np_fold_sq(la))
             cos /= np.multiply.outer(nrm, nrm)
             ia, ib = np.nonzero((lid[:, None] < lid[None, :]) & (cos >= prefilter))
             va, vb = lid[ia], lid[ib]
@@ -759,8 +747,9 @@ def _cosine_pairs_blocked(spark: SparkSession, sf_dir: str,
                 return empty
             ra = np.stack(rhs["embedding"].to_numpy()).astype(np.float64)
             rid = rhs["vec_id"].to_numpy()
-            cos = _fold_dots(la, ra)
-            cos /= np.multiply.outer(np.sqrt(_fold_sq(la)), np.sqrt(_fold_sq(ra)))
+            cos = V.np_fold_dots(la, ra)
+            cos /= np.multiply.outer(np.sqrt(V.np_fold_sq(la)),
+                                     np.sqrt(V.np_fold_sq(ra)))
             ia, ib = np.nonzero(cos >= prefilter)
             va = np.minimum(lid[ia], rid[ib])
             vb = np.maximum(lid[ia], rid[ib])
@@ -781,132 +770,57 @@ def _cosine_pairs_blocked(spark: SparkSession, sf_dir: str,
 # facing scale path for cosine dedup reuses the exact same hyperplanes)
 from mediawiki_to_notion_spark.operators.similarity import (  # noqa: E402
     N_PLANES,
-    _bucket_col,
     _bucket_sql,
 )
 
 LSH_PROBE_HAMMING = 1
-
-
+LSH_N_TABLES = 2            # independent hash tables (recall compensation)
+LSH_TABLE_STRIDE = 100      # disjoint hyperplane family per table
 SCALED_LSH_TARGET = 32      # candidate budget: ~TARGET/2 pairs per vector
 SCALED_LSH_MAX_PLANES = 24  # SQL term cap: covers ~10^9 vectors
 
-# The shared adaptive plane-count CTE (two-step fixpoint, see
-# _adaptive_plane_count): p0 from the bare count, then p including the
-# multi-probe factor (p0 + 1).  bit_length(m) == floor(log2(m)) + 1
-# exactly for 1 <= m < 2^53.
-_NPL_CTE_SQL = f"""npl AS (
-      SELECT LEAST({SCALED_LSH_MAX_PLANES}, GREATEST(4,
-        CASE WHEN m1 < 1 THEN 0
-             ELSE CAST(floor(log2(CAST(m1 AS DOUBLE))) AS INT) + 1
-        END)) AS p
-      FROM (
-        SELECT (c * (p0 + 1) - 1) // {SCALED_LSH_TARGET} AS m1
-        FROM (
-          SELECT c, GREATEST(4,
-            CASE WHEN (c - 1) // {SCALED_LSH_TARGET} < 1 THEN 0
-                 ELSE CAST(floor(log2(CAST((c - 1) // {SCALED_LSH_TARGET}
-                                           AS DOUBLE))) AS INT) + 1
-            END) AS p0
-          FROM n
-        )
-      )
-    )"""
+
+def _adaptive_plane_count(e: DataFrame) -> int:
+    """Probe-aware plane count (two-step fixpoint) from ONE bounded
+    scalar count().
+
+    Multi-probe at Hamming <= 1 emits p + 1 probe keys per vector, so
+    expected candidates are n * (p+1) * n / 2^(p+1).  Sizing p for
+    that product, not for bucket occupancy alone:
+
+        p0 = max(4, bit_length((n - 1) // T))
+        p  = clamp(4, bit_length((n*(p0 + 1) - 1) // T), MAX_PLANES)
+
+    gives 2^p >= n*(p0+1)/T, i.e. candidates <= ~T/2 per vector at any
+    corpus size.  ``_NPL_SQL`` is the DuckDB twin."""
+    n = e.count()  # bounded: one scalar, the LSH sizing input
+    p0 = max(4, ((n - 1) // SCALED_LSH_TARGET).bit_length())
+    m1 = (n * (p0 + 1) - 1) // SCALED_LSH_TARGET
+    return min(SCALED_LSH_MAX_PLANES, max(4, m1.bit_length()))
 
 
-def _scaled_bucket_sql(plane_base: int = 0) -> str:
-    """Bucket expression whose active plane count is the scalar ``npl.p``
-    (derived from the corpus size in a CTE) — planes beyond p contribute
-    nothing, so the SAME static SQL adapts to any input size.
-    ``plane_base`` selects a disjoint hyperplane family (one per LSH
-    table)."""
-    terms = [
-        f"(CASE WHEN {j} < npl.p AND list_dot_product("
-        f"embedding::DOUBLE[], {V.hyperplane_sql(plane_base + j)}) > 0 "
-        f"THEN {1 << j} ELSE 0 END)"
-        for j in range(SCALED_LSH_MAX_PLANES)
-    ]
-    return " + ".join(terms)
+def _make_srp_bucket_kernel(npl: int, n_tables: int):
+    """Arrow kernel computing ``n_tables`` tables' SRP bucket ids
+    (``b0``, ``b1``, ...) in one pass.  numpy replays the SQL twin's
+    arithmetic (integer-exact plane formula, dimension-sequential fold,
+    ``functions.vectors.np_srp_buckets``), so every bucket id is
+    bit-identical to the oracle's."""
+    import numpy as np
+    import pandas as pd
 
+    def kernel(batches):
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            X = np.stack([np.asarray(v, dtype=np.float64)
+                          for v in pdf["embedding"]])
+            out = {"vec_id": pdf["vec_id"], "embedding": pdf["embedding"]}
+            for t in range(n_tables):
+                out[f"b{t}"] = V.np_srp_buckets(
+                    X, t * LSH_TABLE_STRIDE, npl)
+            yield pd.DataFrame(out)
 
-# Shared CTE: adaptive plane count + bucketed vectors, used by the
-# primary dedup oracle AND its recall gate.
-_ADAPTIVE_BUCKETED_SQL = f"""n AS (SELECT count(*) AS c FROM embeddings),
-    {_NPL_CTE_SQL},
-    bucketed AS (
-      SELECT vec_id, embedding, {{bucket_expr}} AS bucket
-      FROM embeddings, npl
-    )"""
-
-
-def _srp_lsh_pairs(spark: SparkSession, e: DataFrame,
-                   npl: int) -> DataFrame:
-    """Shared SRP-LSH cosine-dedup body: multi-probe bucket blocking
-    with ``npl`` sign planes, then exact cosine verification of the
-    candidates in the dimension-sequential Arrow kernel.
-
-    Blocking: each vector hashes to an npl-bit sign bucket
-    (similarity.py hyperplanes).  The probe side additionally emits
-    each one-bit-flipped bucket, so an equi-join on the probe key
-    captures every pair within bucket Hamming distance
-    {LSH_PROBE_HAMMING} — multi-probe LSH (Lv et al., VLDB'07) as a
-    key-expansion equi-join, never a distance predicate in the join
-    condition.  Each unordered pair matches exactly one probe key
-    under the ``vec_a < vec_b`` orientation, so no dedup pass is
-    needed.
-
-    Candidate verification runs in the same dimension-sequential Arrow
-    kernel as the exact block product: the interpreted higher-order
-    fold (``F.aggregate``) costs ~20x more per candidate pair, which
-    dominates once candidates number in the 10^5s.
-
-    Physical shape: the build side is one row per vector (id,
-    embedding, bucket) and broadcasts while the table is
-    dimension-scale; the probe side is pre-split so candidate
-    generation AND verification run as one parallel map stage — a
-    plain bucket equi-join lands on only 2^npl distinct keys, which
-    AQE coalesces to near-serial at small sizes (measured 3.6x
-    slower).  At corpus scale where the build side outgrows broadcast,
-    swap the hint for the salted bucket equi-join
-    (operators.physical.salted_join).
-
-    r10 (guide §4 — same fix the multitable op got from the r8 sf100
-    soak): the bucket ids come from ONE Arrow pass
-    (``_make_srp_bucket_kernel`` with n_tables=1, the bit-identical
-    numpy replay of the table-0 plane family) instead of npl
-    interpreted ArrayAggregate folds per row — higher-order functions
-    neither codegen nor CSE, so the old column-expression bucket was
-    O(n·npl·d) interpreted Catalyst eval on BOTH join sides.  The
-    pre-kernel split also moves ensure_parallelism ahead of the
-    explode, so the probe side stays narrow end to end."""
-    from mediawiki_to_notion_spark.plans.pipeline import ensure_parallelism
-
-    bucketed = ensure_parallelism(
-        e.select("vec_id", "embedding"), 16
-    ).mapInPandas(
-        _make_srp_bucket_kernel(npl, n_tables=1),
-        "vec_id long, embedding array<float>, b0 long",
-    ).withColumnRenamed("b0", "bucket")
-    probe_keys = F.array(
-        F.col("bucket"),
-        *[F.col("bucket").bitwiseXOR(F.lit(1 << j)) for j in range(npl)],
-    )
-    a = bucketed.select(
-        "vec_id", "embedding", F.explode(probe_keys).alias("probe")
-    ).alias("a")
-    b = bucketed.alias("b")
-    cand = a.join(
-        F.broadcast(b),
-        (F.col("a.probe") == F.col("b.bucket"))
-        & (F.col("a.vec_id") < F.col("b.vec_id")),
-    ).select(
-        F.col("a.vec_id").alias("vec_a"),
-        F.col("b.vec_id").alias("vec_b"),
-        F.col("a.embedding").alias("emb_a"),
-        F.col("b.embedding").alias("emb_b"),
-    )
-
-    return _cosine_verify(cand)
+    return kernel
 
 
 def _cosine_verify(cand: DataFrame) -> DataFrame:
@@ -947,348 +861,45 @@ def _cosine_verify(cand: DataFrame) -> DataFrame:
     )
 
 
-def _adaptive_plane_count(e: DataFrame) -> int:
-    """Probe-aware LSH sizing (two-step fixpoint) from ONE bounded
-    scalar count().
+def _srp_pairs(e: DataFrame, npl: int, n_tables: int) -> DataFrame:
+    """The one SRP-LSH cosine-dedup body: ``n_tables`` multi-probe
+    bucket blockings with ``npl`` sign planes each, then exact cosine
+    verification of the candidates.
 
-    Multi-probe at Hamming <= {LSH_PROBE_HAMMING} emits p + 1 probe
-    keys per vector, so expected candidates are n * (p+1) * n / 2^(p+1)
-    — sizing p only for bucket occupancy (p = bit_length((n-1)//T), the
-    r6 rule) leaves the (p+1) probe factor growing with log n, which
-    the r7 sf1->sf10 soak measured as exponent 1.47 on this query.
-    Including the factor in the sized quantity:
+    Blocking: table t hashes each vector to an npl-bit sign bucket over
+    its own hyperplane family (plane base t*LSH_TABLE_STRIDE).  The
+    probe side also emits every one-bit-flipped bucket, so an equi-join
+    on the probe key captures each pair within bucket Hamming distance
+    1 (multi-probe LSH, Lv et al., VLDB'07): a key-expansion equi-join,
+    never a distance predicate in the join condition.  Within one table
+    each unordered pair matches exactly one probe key; only a union of
+    tables can repeat a pair, so the dedup runs only then, keyed on
+    (vec_a, vec_b) rather than on float equality of cosine_r.
 
-        p0 = max(4, bit_length((n - 1) // T))
-        p  = clamp(4, bit_length((n*(p0 + 1) - 1) // T),
-                   {SCALED_LSH_MAX_PLANES})
-
-    gives 2^p >= n*(p0+1)/T, i.e. candidates <= ~T/2 per vector at ANY
-    corpus size (soak-verified ~1.0).  The recall cost of the extra
-    planes is measured by dedup_cosine_lsh_recall_adaptive and bought
-    back by dedup_embedding_cosine_lsh_multitable."""
-    n = e.count()  # bounded: one scalar, the LSH sizing input
-    p0 = max(4, ((n - 1) // SCALED_LSH_TARGET).bit_length())
-    m1 = (n * (p0 + 1) - 1) // SCALED_LSH_TARGET
-    return min(SCALED_LSH_MAX_PLANES, max(4, m1.bit_length()))
-
-
-@register(
-    "dedup_embedding_cosine_lsh",
-    oracle=V.hygiene_oracle(f"""
-    WITH {_ADAPTIVE_BUCKETED_SQL.format(bucket_expr=_scaled_bucket_sql())}
-    SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-           round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6)
-             AS cosine_r
-    FROM bucketed a JOIN bucketed b ON a.vec_id < b.vec_id
-    WHERE bit_count(xor(a.bucket, b.bucket)) <= {LSH_PROBE_HAMMING}
-      AND round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6)
-          >= {COSINE_DUP_THRESHOLD}
-    """),
-)
-def dedup_embedding_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate cosine dedup: SRP-LSH multi-probe bucket blocking
-    with a CORPUS-DERIVED, PROBE-AWARE hyperplane count (the two-step
-    fixpoint in ``_adaptive_plane_count``: 2^p tracks n*(p+1)/T, so
-    expected candidates stay ~T/2 per vector at any corpus size), then
-    exact cosine verification of candidates only — the probabilistic
-    100 TB path.
-
-    History (VERDICT r6 "What's wrong" #1 + r7 sf10 soak): this
-    primary name ran a FIXED {N_PLANES}-plane bucket (16 buckets
-    forever) through r6, measured at soak exponent 1.29 over a real
-    10x — quadratic candidates from fixed bucket counts.  r7 made the
-    occupancy-sized adaptive rule (bits ~ log2(n)) the primary
-    behavior; pushing the soak another decade (sf1->sf10) then
-    measured THAT rule at exponent 1.47, because multi-probe emits
-    p+1 probe keys per vector and the probe factor grows with log n —
-    hence the probe-aware fixpoint, soak-verified near-linear.  The
-    fixed-plane original survives only as
-    ``dedup_embedding_cosine_lsh_fixedwidth_demo`` for the
-    band-collision demo regime.  Recall per pair drops as planes grow
-    — production deployments compensate with multiple tables
-    (``dedup_embedding_cosine_lsh_multitable``) — and is measured
-    per-corpus by ``dedup_cosine_lsh_recall_adaptive``.
-
-    Both engines derive the plane count from the SAME hygiene-filtered
-    count with integer arithmetic (bit_length == floor(log2)+1 exactly
-    for m >= 1), so the blocking — and therefore the result set — is
-    deterministic and hash-checked.  Blocking/verify mechanics and the
-    physical plan shape: see ``_srp_lsh_pairs``."""
-    e = V.hygiene(load_table(spark, "embeddings", sf_dir))
-    return _srp_lsh_pairs(spark, e, _adaptive_plane_count(e))
-
-
-@register(
-    "dedup_embedding_cosine_lsh_fixedwidth_demo",
-    oracle=V.hygiene_oracle(f"""
-    WITH bucketed AS (
-      SELECT vec_id, embedding, {_bucket_sql()} AS bucket FROM embeddings
-    )
-    SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-           round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6)
-             AS cosine_r
-    FROM bucketed a JOIN bucketed b ON a.vec_id < b.vec_id
-    WHERE bit_count(xor(a.bucket, b.bucket)) <= {LSH_PROBE_HAMMING}
-      AND round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6)
-          >= {COSINE_DUP_THRESHOLD}
-    """),
-)
-def dedup_embedding_cosine_lsh_fixedwidth_demo(
-        spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DEMO-ONLY fixed-{N_PLANES}-plane SRP-LSH cosine dedup — the
-    dense-bucket regime (2^{N_PLANES} = 16 buckets forever) kept
-    because ``dedup_cosine_lsh_recall``'s gate pins the multi-probe
-    recall guarantee against the exact dedup at a plane count where
-    collisions are plentiful at test SFs.
-
-    NOT a scale path: the r6 scaling soak measured this fixed width at
-    exponent 1.29 over a 10x scale-up (quadratic candidate growth from
-    fixed bucket counts, SCALING.md §r6) — at corpus scale use
-    ``dedup_embedding_cosine_lsh``, whose corpus-derived plane count
-    keeps bucket occupancy flat."""
-    e = V.hygiene(load_table(spark, "embeddings", sf_dir))
-    return _srp_lsh_pairs(spark, e, N_PLANES)
-
-
-@register(
-    "dedup_cosine_lsh_recall",
-    oracle=V.hygiene_oracle(f"""
-    WITH bucketed AS (
-      SELECT vec_id, embedding, {_bucket_sql()} AS bucket FROM embeddings
-    ),
-    exact AS (
-      SELECT a.vec_id va, b.vec_id vb
-      FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-      WHERE round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6)
-            >= {COSINE_DUP_THRESHOLD}
-    ),
-    lshp AS (
-      SELECT a.vec_id va, b.vec_id vb
-      FROM bucketed a JOIN bucketed b ON a.vec_id < b.vec_id
-      WHERE bit_count(xor(a.bucket, b.bucket)) <= {LSH_PROBE_HAMMING}
-        AND round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6)
-            >= {COSINE_DUP_THRESHOLD}
-    )
-    SELECT (SELECT count(*) FROM exact) AS n_exact,
-           (SELECT count(*) FROM lshp) AS n_lsh,
-           (SELECT count(*) FROM lshp)::DOUBLE
-             / nullif((SELECT count(*) FROM exact), 0) AS recall
-    """),
-)
-def dedup_cosine_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall of the fixed-{N_PLANES}-plane SRP multi-probe dedup
-    against the exact block-GEMM dedup — the quality gate for the
-    dense-bucket demo regime (LSH verification uses the same
-    threshold, so LSH pairs ⊆ exact pairs and recall = |lsh| /
-    |exact|).  The primary adaptive-plane dedup has its own gate,
-    ``dedup_cosine_lsh_recall_adaptive``."""
-    ex = dedup_embedding_cosine(spark, sf_dir).agg(
-        F.count(F.lit(1)).alias("n_exact")
-    )
-    ls = dedup_embedding_cosine_lsh_fixedwidth_demo(spark, sf_dir).agg(
-        F.count(F.lit(1)).alias("n_lsh")
-    )
-    return ex.crossJoin(ls).select(
-        "n_exact",
-        "n_lsh",
-        (
-            F.col("n_lsh").cast("double")
-            / F.nullif(F.col("n_exact"), F.lit(0))
-        ).alias("recall"),
-    )
-
-
-@register(
-    "dedup_cosine_lsh_recall_adaptive",
-    oracle=V.hygiene_oracle(f"""
-    WITH {_ADAPTIVE_BUCKETED_SQL.format(bucket_expr=_scaled_bucket_sql())},
-    exact AS (
-      SELECT a.vec_id va, b.vec_id vb
-      FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-      WHERE round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6)
-            >= {COSINE_DUP_THRESHOLD}
-    ),
-    lshp AS (
-      SELECT a.vec_id va, b.vec_id vb
-      FROM bucketed a JOIN bucketed b ON a.vec_id < b.vec_id
-      WHERE bit_count(xor(a.bucket, b.bucket)) <= {LSH_PROBE_HAMMING}
-        AND round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6)
-            >= {COSINE_DUP_THRESHOLD}
-    )
-    SELECT (SELECT count(*) FROM exact) AS n_exact,
-           (SELECT count(*) FROM lshp) AS n_lsh,
-           (SELECT count(*) FROM lshp)::DOUBLE
-             / nullif((SELECT count(*) FROM exact), 0) AS recall
-    """),
-)
-def dedup_cosine_lsh_recall_adaptive(spark: SparkSession,
-                                     sf_dir: str) -> DataFrame:
-    """Recall of the PRIMARY (adaptive-plane) SRP multi-probe dedup
-    against the exact block-GEMM dedup.  Raising the plane count with
-    the corpus is what keeps candidate generation near-linear
-    (``dedup_embedding_cosine_lsh``), but each extra plane lowers
-    per-pair collision probability — so the scale path must ship with
-    its own recall gate, not inherit the demo regime's.  Production
-    deployments hold recall up with multiple hash tables; this
-    single-table gate measures what that compensation must buy.
-
-    Reading the number: at the synthetic corpus's {COSINE_DUP_THRESHOLD}
-    threshold the angle is ~63 deg, so per-plane collision is only
-    ~0.65 and recall decays geometrically with planes (~7% at 8
-    planes) — in the actual near-dup regime (cosine >= 0.9, angle
-    <= 26 deg, per-plane >= 0.85) the same plane counts retain most
-    pairs.  The gate MEASURES the corpus it is given; it is not a
-    recall floor."""
-    ex = dedup_embedding_cosine(spark, sf_dir).agg(
-        F.count(F.lit(1)).alias("n_exact")
-    )
-    ls = dedup_embedding_cosine_lsh(spark, sf_dir).agg(
-        F.count(F.lit(1)).alias("n_lsh")
-    )
-    return ex.crossJoin(ls).select(
-        "n_exact",
-        "n_lsh",
-        (
-            F.col("n_lsh").cast("double")
-            / F.nullif(F.col("n_exact"), F.lit(0))
-        ).alias("recall"),
-    )
-
-
-LSH_N_TABLES = 2        # independent hash tables (recall compensation)
-LSH_TABLE_STRIDE = 100  # disjoint hyperplane family per table
-
-
-def _make_srp_bucket_kernel(npl: int, n_tables: int = LSH_N_TABLES):
-    """Arrow kernel computing ``n_tables`` tables' SRP buckets in
-    one pass (r8 sf100 soak catch #2): the column-expression bucket —
-    npl interpreted ArrayAggregate folds per row, re-evaluated for
-    every probe-array slot because higher-order functions neither
-    codegen nor CSE — cost O(n·npl²·d) of interpreted Catalyst eval
-    and dominated the multitable wall at sf100.  numpy replays the
-    identical arithmetic (integer-exact plane formula, dimension-
-    sequential fold — functions.vectors.np_srp_buckets), so every
-    sign bit and therefore every bucket id is bit-identical to the
-    SQL twin's.  (r10: also used with n_tables=1 by the single-table
-    ``_srp_lsh_pairs`` body, whose plane family is table 0's.)"""
-    import numpy as np
-    import pandas as pd
-
-    def kernel(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            X = np.stack([np.asarray(v, dtype=np.float64)
-                          for v in pdf["embedding"]])
-            out = {"vec_id": pdf["vec_id"], "embedding": pdf["embedding"]}
-            for t in range(n_tables):
-                out[f"b{t}"] = V.np_srp_buckets(
-                    X, t * LSH_TABLE_STRIDE, npl)
-            yield pd.DataFrame(out)
-
-    return kernel
-
-
-def _multitable_cand_sql() -> str:
-    tables = []
-    for t in range(LSH_N_TABLES):
-        tables.append(f"""bt{t} AS (
-      SELECT vec_id, embedding,
-             {_scaled_bucket_sql(t * LSH_TABLE_STRIDE)} AS bucket
-      FROM embeddings, npl
-    )""")
-    unions = "\n      UNION ".join(
-        f"""SELECT a.vec_id AS va, b.vec_id AS vb
-      FROM bt{t} a JOIN bt{t} b
-        ON a.vec_id < b.vec_id
-       AND bit_count(xor(a.bucket, b.bucket)) <= {LSH_PROBE_HAMMING}"""
-        for t in range(LSH_N_TABLES)
-    )
-    return ",\n    ".join(tables) + f""",
-    cand AS (
-      {unions}
-    )"""
-
-
-@register(
-    "dedup_embedding_cosine_lsh_multitable",
-    oracle=V.hygiene_oracle(f"""
-    WITH n AS (SELECT count(*) AS c FROM embeddings),
-    {_NPL_CTE_SQL},
-    {_multitable_cand_sql()}
-    SELECT c.va AS vec_a, c.vb AS vec_b,
-           round(list_cosine_similarity(x.embedding::DOUBLE[], y.embedding::DOUBLE[]), 6)
-             AS cosine_r
-    FROM cand c
-    JOIN embeddings x ON x.vec_id = c.va
-    JOIN embeddings y ON y.vec_id = c.vb
-    WHERE round(list_cosine_similarity(x.embedding::DOUBLE[], y.embedding::DOUBLE[]), 6)
-          >= {COSINE_DUP_THRESHOLD}
-    """),
-)
-def dedup_embedding_cosine_lsh_multitable(spark: SparkSession,
-                                          sf_dir: str) -> DataFrame:
-    """MULTI-TABLE SRP-LSH cosine dedup — the production answer to the
-    recall-vs-planes tradeoff that adaptive sizing creates (Indyk &
-    Motwani's amplification: OR across {LSH_N_TABLES} independent hash
-    tables).  Each table hashes with its own disjoint hyperplane
-    family (plane base t*{LSH_TABLE_STRIDE}) at the SAME
-    corpus-derived plane count as the primary
-    ``dedup_embedding_cosine_lsh``; a pair is a candidate if ANY table
-    buckets it together (multi-probe included), so per-pair recall
-    rises from r to 1-(1-r)^{LSH_N_TABLES} while candidate volume —
-    and therefore verification cost — stays a union of two near-linear
-    streams, never quadratic.
-
-    Physical shape (rebuilt twice by the r8 sf10→sf100 soak, which
-    measured the r7 formulation at wall exponent 1.20 / 586 s at
-    sf100).  What the decade actually measured: candidate pairs are
-    LINEAR (8.9M → 94.4M for 10x corpus, ~45 per vector at both
-    decades) — generation was never quadratic; the costs were (a) the
-    bucket ids computed as npl interpreted ArrayAggregate folds per
-    row, re-evaluated per probe-array slot because higher-order
-    functions neither codegen nor CSE — an O(n·npl²·d) interpreted-
-    eval bomb, now ONE Arrow pass (``_make_srp_bucket_kernel``,
-    bit-identical numpy replay) — and (b) materializing the 94M-row
-    candidate-id set through a distinct() plus TWO id→embedding
-    rejoins (~50 GB shuffle), now ONE probe-key SHUFFLE_HASH equi-join
-    per table that carries the vectors, verification pipelined in the
-    join stage, dedup on the post-threshold VERIFIED output keyed by
-    (vec_a, vec_b) — never by float equality across tables (ADVICE
-    r8), though the deterministic kernel does emit identical cosine_r
-    wherever a pair verifies in both tables.
-    Re-measured: sf10 37.3 → 9.5 s, sf100 586 → 177 s.  The wall
-    exponent, captured CLEAN in r9 (VERDICT r8 brief #3): 1.183 on
-    ``local[32]`` and 1.179 on ``local-cluster[4,8,20g]`` (separate
-    executor JVMs, own shuffle trees — MULTITABLE_CLUSTER_SOAK.json),
-    with ZERO memory/disk spill at both decades and shuffle bytes
-    measured 2.0 GB → 24.1 GB (12.0x per 10x — exactly the n·(npl+1)
-    probe-byte model, npl 17→21, whose floor is exponent ~1.08).  The
-    r8 "shuffle-regime transition" hypothesis is therefore RETIRED:
-    the clean exponent is the measured probe-byte growth plus a
-    residual from per-partition SHUFFLE_HASH build tables growing 10x
-    on a FIXED 32-core box (weak-scaling artifact — a cluster that
-    grows executors with data holds per-task builds constant).
-    ``dedup_cosine_lsh_recall_multitable`` measures the recall lift
-    against the same exact ground truth as the other gates."""
+    Join shape: ``shuffle_hash`` on every table at every size.  The
+    probe side is n·(npl+1) exploded vector rows; hashing the
+    corpus-sized build side keeps it streaming, unsorted, into the
+    verify kernel (a sort-merge join sorts it; the sf100 soak validated
+    this shape, SCALING.md r8/r9).  A broadcast build side was slower
+    on local[4] (median of 5 interleaved runs, identical rows,
+    BENCH_SRP_JOIN_SHAPE.json): adaptive single table 4.2 vs 3.4 s at
+    sf0.01 and 4.9 vs 3.7 s at sf0.1, two tables 8.0 vs 5.6 s and 9.2
+    vs 6.6 s, the fixed 4-plane table 4.0 vs 3.3 s and 6.4 vs 6.3 s;
+    and it has no size bound at corpus scale."""
     from mediawiki_to_notion_spark.plans.pipeline import ensure_parallelism
 
-    e = V.hygiene(load_table(spark, "embeddings", sf_dir))
-    npl = _adaptive_plane_count(e)
     bucketed = ensure_parallelism(
         e.select("vec_id", "embedding"), 16
     ).mapInPandas(
-        _make_srp_bucket_kernel(npl),
+        _make_srp_bucket_kernel(npl, n_tables),
         "vec_id long, embedding array<float>, "
-        + ", ".join(f"b{t} long" for t in range(LSH_N_TABLES)),
+        + ", ".join(f"b{t} long" for t in range(n_tables)),
     )
-    verified = None
-    for t in range(LSH_N_TABLES):
+    verified = []
+    for t in range(n_tables):
         bucket = F.col(f"b{t}")
         probe_keys = F.array(
-            bucket,
-            *[bucket.bitwiseXOR(F.lit(1 << j)) for j in range(npl)],
-        )
+            bucket, *[bucket.bitwiseXOR(F.lit(1 << j)) for j in range(npl)])
         a = bucketed.select(
             F.col("vec_id").alias("vec_a"),
             F.col("embedding").alias("emb_a"),
@@ -1299,67 +910,23 @@ def dedup_embedding_cosine_lsh_multitable(spark: SparkSession,
             F.col("embedding").alias("emb_b"),
             bucket.alias("probe"),
         )
-        pairs_t = (
-            # SHUFFLE_HASH: the probe side is n·(npl+1) exploded
-            # VECTOR rows (~12 GB at sf100) — a sort-merge join would
-            # sort-spill exactly that; hashing the corpus-sized build
-            # side (per-partition slices) keeps the probe side
-            # streaming, unsorted, straight into the verify kernel
+        verified.append(_cosine_verify(
             a.join(b.hint("shuffle_hash"), ["probe"])
             .filter(F.col("vec_a") < F.col("vec_b"))
             .select("vec_a", "vec_b", "emb_a", "emb_b")
-        )
-        v_t = _cosine_verify(pairs_t)
-        verified = v_t if verified is None else verified.unionByName(v_t)
-    # Cross-table dedup on the PAIR KEY, not distinct() over all three
-    # columns: distinct() would require cosine_r to be bit-identical
-    # between the tables' verify passes — true today because
-    # _cosine_verify is deterministic left-fold, but any future change
-    # to the kernel's accumulation order would silently duplicate pairs
-    # instead of failing (ADVICE r8).  The key-based form is robust;
-    # tests/test_multitable_pair_dedup.py pins one-row-per-pair on a multi-table hit.
-    return verified.dropDuplicates(["vec_a", "vec_b"])
+        ))
+    pairs = reduce(DataFrame.unionByName, verified)
+    return pairs.dropDuplicates(["vec_a", "vec_b"]) if n_tables > 1 else pairs
 
 
-@register(
-    "dedup_cosine_lsh_recall_multitable",
-    oracle=V.hygiene_oracle(f"""
-    WITH n AS (SELECT count(*) AS c FROM embeddings),
-    {_NPL_CTE_SQL},
-    {_multitable_cand_sql()},
-    exact AS (
-      SELECT a.vec_id va, b.vec_id vb
-      FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-      WHERE round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6)
-            >= {COSINE_DUP_THRESHOLD}
-    ),
-    lshp AS (
-      SELECT c.va, c.vb
-      FROM cand c
-      JOIN embeddings x ON x.vec_id = c.va
-      JOIN embeddings y ON y.vec_id = c.vb
-      WHERE round(list_cosine_similarity(x.embedding::DOUBLE[], y.embedding::DOUBLE[]), 6)
-            >= {COSINE_DUP_THRESHOLD}
-    )
-    SELECT (SELECT count(*) FROM exact) AS n_exact,
-           (SELECT count(*) FROM lshp) AS n_lsh,
-           (SELECT count(*) FROM lshp)::DOUBLE
-             / nullif((SELECT count(*) FROM exact), 0) AS recall
-    """),
-)
-def dedup_cosine_lsh_recall_multitable(spark: SparkSession,
-                                       sf_dir: str) -> DataFrame:
-    """Recall of the {LSH_N_TABLES}-table SRP dedup against the exact
-    block-GEMM dedup — the gate that shows what table amplification
-    buys back of the recall that adaptive plane growth spends
-    (compare against ``dedup_cosine_lsh_recall_adaptive``'s
-    single-table number on the same corpus)."""
+def _recall_gate(spark: SparkSession, sf_dir: str, lsh_query) -> DataFrame:
+    """Recall of one LSH pair query against the exact block-GEMM dedup.
+    Both verify at the same threshold, so LSH pairs ⊆ exact pairs and
+    recall = |lsh| / |exact|.  The gate measures the corpus it is
+    given; it is not a recall floor."""
     ex = dedup_embedding_cosine(spark, sf_dir).agg(
-        F.count(F.lit(1)).alias("n_exact")
-    )
-    ls = dedup_embedding_cosine_lsh_multitable(spark, sf_dir).agg(
-        F.count(F.lit(1)).alias("n_lsh")
-    )
+        F.count(F.lit(1)).alias("n_exact"))
+    ls = lsh_query(spark, sf_dir).agg(F.count(F.lit(1)).alias("n_lsh"))
     return ex.crossJoin(ls).select(
         "n_exact",
         "n_lsh",
@@ -1368,6 +935,189 @@ def dedup_cosine_lsh_recall_multitable(spark: SparkSession,
             / F.nullif(F.col("n_exact"), F.lit(0))
         ).alias("recall"),
     )
+
+
+# DuckDB twins.  Adaptive plane count (_adaptive_plane_count's two
+# steps); bit_length(m) == floor(log2(m)) + 1 exactly for 1 <= m < 2^53.
+_NPL_SQL = f"""n AS (SELECT count(*) AS c FROM embeddings),
+    npl AS (
+      SELECT LEAST({SCALED_LSH_MAX_PLANES}, GREATEST(4,
+        CASE WHEN m1 < 1 THEN 0
+             ELSE CAST(floor(log2(CAST(m1 AS DOUBLE))) AS INT) + 1
+        END)) AS p
+      FROM (
+        SELECT (c * (p0 + 1) - 1) // {SCALED_LSH_TARGET} AS m1
+        FROM (
+          SELECT c, GREATEST(4,
+            CASE WHEN (c - 1) // {SCALED_LSH_TARGET} < 1 THEN 0
+                 ELSE CAST(floor(log2(CAST((c - 1) // {SCALED_LSH_TARGET}
+                                           AS DOUBLE))) AS INT) + 1
+            END) AS p0
+          FROM n
+        )
+      )
+    )"""
+
+
+def _bucketed_cte(name: str, plane_base: int = 0) -> str:
+    """One table's bucketed vectors at the adaptive plane count: planes
+    at or beyond ``npl.p`` contribute nothing, so the same static SQL
+    adapts to any input size."""
+    terms = " + ".join(
+        f"(CASE WHEN {j} < npl.p AND list_dot_product("
+        f"embedding::DOUBLE[], {V.hyperplane_sql(plane_base + j)}) > 0 "
+        f"THEN {1 << j} ELSE 0 END)"
+        for j in range(SCALED_LSH_MAX_PLANES)
+    )
+    return f"""{name} AS (
+      SELECT vec_id, embedding, {terms} AS bucket
+      FROM embeddings, npl
+    )"""
+
+
+def _cos_sql(x: str, y: str) -> str:
+    return (f"round(list_cosine_similarity({x}.embedding::DOUBLE[], "
+            f"{y}.embedding::DOUBLE[]), 6)")
+
+
+def _bucket_pairs_sql(out: bool) -> str:
+    """Single-table LSH pairs: the bucketed self-join within the probe
+    radius, verified at the threshold.  ``out`` selects the query's
+    output columns, else the recall gate's (va, vb)."""
+    cols = (f"a.vec_id AS vec_a, b.vec_id AS vec_b, {_cos_sql('a', 'b')}"
+            " AS cosine_r" if out else "a.vec_id va, b.vec_id vb")
+    return f"""SELECT {cols}
+    FROM bucketed a JOIN bucketed b ON a.vec_id < b.vec_id
+    WHERE bit_count(xor(a.bucket, b.bucket)) <= {LSH_PROBE_HAMMING}
+      AND {_cos_sql("a", "b")} >= {COSINE_DUP_THRESHOLD}"""
+
+
+def _cand_pairs_sql(out: bool) -> str:
+    """Multi-table LSH pairs: the union of the tables' candidates,
+    verified at the threshold."""
+    cols = (f"c.va AS vec_a, c.vb AS vec_b, {_cos_sql('x', 'y')}"
+            " AS cosine_r" if out else "c.va, c.vb")
+    return f"""SELECT {cols}
+    FROM cand c
+    JOIN embeddings x ON x.vec_id = c.va
+    JOIN embeddings y ON y.vec_id = c.vb
+    WHERE {_cos_sql("x", "y")} >= {COSINE_DUP_THRESHOLD}"""
+
+
+def _lsh_oracles(ctes: str, pairs) -> tuple[str, str]:
+    """(pair query, recall gate) DuckDB oracles of one LSH
+    configuration: ``ctes`` define what ``pairs`` joins."""
+    recall = f"""WITH {ctes},
+    exact AS (
+      SELECT a.vec_id va, b.vec_id vb
+      FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
+      WHERE {_cos_sql("a", "b")} >= {COSINE_DUP_THRESHOLD}
+    ),
+    lshp AS (
+      {pairs(False)}
+    )
+    SELECT (SELECT count(*) FROM exact) AS n_exact,
+           (SELECT count(*) FROM lshp) AS n_lsh,
+           (SELECT count(*) FROM lshp)::DOUBLE
+             / nullif((SELECT count(*) FROM exact), 0) AS recall"""
+    return (V.hygiene_oracle(f"WITH {ctes}\n    {pairs(True)}"),
+            V.hygiene_oracle(recall))
+
+
+_FIXED_ORACLES = _lsh_oracles(f"""bucketed AS (
+      SELECT vec_id, embedding, {_bucket_sql()} AS bucket FROM embeddings
+    )""", _bucket_pairs_sql)
+_ADAPTIVE_ORACLES = _lsh_oracles(
+    f"{_NPL_SQL},\n    {_bucketed_cte('bucketed')}", _bucket_pairs_sql)
+# n, npl, one bucketed CTE per table, and the tables' candidate union
+_MULTITABLE_ORACLES = _lsh_oracles(
+    f"{_NPL_SQL},\n    "
+    + ",\n    ".join(_bucketed_cte(f"bt{t}", t * LSH_TABLE_STRIDE)
+                     for t in range(LSH_N_TABLES))
+    + ",\n    cand AS (\n      "
+    + "\n      UNION ".join(
+        f"""SELECT a.vec_id AS va, b.vec_id AS vb
+      FROM bt{t} a JOIN bt{t} b
+        ON a.vec_id < b.vec_id
+       AND bit_count(xor(a.bucket, b.bucket)) <= {LSH_PROBE_HAMMING}"""
+        for t in range(LSH_N_TABLES))
+    + "\n    )",
+    _cand_pairs_sql)
+
+
+@register("dedup_embedding_cosine_lsh", oracle=_ADAPTIVE_ORACLES[0])
+def dedup_embedding_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Approximate cosine dedup, the probabilistic scale path: one SRP
+    table at the corpus-derived, probe-aware plane count
+    (``_adaptive_plane_count``), so candidates stay ~T/2 per vector at
+    any corpus size; candidates only are verified exactly
+    (``_srp_pairs``).  Both engines derive the plane count from the same
+    hygiene-filtered count with integer arithmetic, so the result set is
+    deterministic and hash-checked.  Recall per pair drops as planes
+    grow; ``dedup_cosine_lsh_recall_adaptive`` measures it and
+    ``dedup_embedding_cosine_lsh_multitable`` buys it back.  The soak
+    history of the sizing rule is in SCALING.md (r6, r7)."""
+    e = V.hygiene(load_table(spark, "embeddings", sf_dir))
+    return _srp_pairs(e, _adaptive_plane_count(e), 1)
+
+
+@register("dedup_embedding_cosine_lsh_fixedwidth_demo",
+          oracle=_FIXED_ORACLES[0])
+def dedup_embedding_cosine_lsh_fixedwidth_demo(
+        spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DEMO-ONLY fixed-width SRP-LSH cosine dedup: N_PLANES planes, so
+    2^N_PLANES buckets forever, where collisions are plentiful at test
+    SFs (the regime ``dedup_cosine_lsh_recall`` gates).  NOT a scale
+    path: fixed bucket counts grow candidates quadratically (SCALING.md
+    r6); use ``dedup_embedding_cosine_lsh``."""
+    e = V.hygiene(load_table(spark, "embeddings", sf_dir))
+    return _srp_pairs(e, N_PLANES, 1)
+
+
+@register("dedup_embedding_cosine_lsh_multitable",
+          oracle=_MULTITABLE_ORACLES[0])
+def dedup_embedding_cosine_lsh_multitable(spark: SparkSession,
+                                          sf_dir: str) -> DataFrame:
+    """Multi-table SRP-LSH cosine dedup, the answer to the
+    recall-vs-planes tradeoff adaptive sizing creates (Indyk & Motwani
+    amplification): LSH_N_TABLES independent tables at the primary's
+    plane count, and a pair is a candidate if ANY table buckets it
+    together, so per-pair recall rises from r to 1-(1-r)^LSH_N_TABLES
+    while candidates stay a union of near-linear streams.  The r8/r9
+    sf10→sf100 soaks of this shape are in SCALING.md and
+    MULTITABLE_CLUSTER_SOAK.json."""
+    e = V.hygiene(load_table(spark, "embeddings", sf_dir))
+    return _srp_pairs(e, _adaptive_plane_count(e), LSH_N_TABLES)
+
+
+@register("dedup_cosine_lsh_recall", oracle=_FIXED_ORACLES[1])
+def dedup_cosine_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recall gate of the fixed-width demo regime."""
+    return _recall_gate(
+        spark, sf_dir, dedup_embedding_cosine_lsh_fixedwidth_demo)
+
+
+@register("dedup_cosine_lsh_recall_adaptive", oracle=_ADAPTIVE_ORACLES[1])
+def dedup_cosine_lsh_recall_adaptive(spark: SparkSession,
+                                     sf_dir: str) -> DataFrame:
+    """Recall gate of the primary adaptive-plane dedup.  At the
+    synthetic corpus's COSINE_DUP_THRESHOLD the pair angle is ~63 deg,
+    so per-plane collision is only ~0.65 and recall decays
+    geometrically with planes (~7% at 8 planes); in the real near-dup
+    regime (cosine >= 0.9, per-plane >= 0.85) the same plane counts
+    retain most pairs."""
+    return _recall_gate(spark, sf_dir, dedup_embedding_cosine_lsh)
+
+
+@register("dedup_cosine_lsh_recall_multitable",
+          oracle=_MULTITABLE_ORACLES[1])
+def dedup_cosine_lsh_recall_multitable(spark: SparkSession,
+                                       sf_dir: str) -> DataFrame:
+    """Recall gate of the multi-table dedup: what table amplification
+    buys back of the recall adaptive plane growth spends (compare with
+    ``dedup_cosine_lsh_recall_adaptive`` on the same corpus)."""
+    return _recall_gate(
+        spark, sf_dir, dedup_embedding_cosine_lsh_multitable)
 
 
 FUZZY_BLOCK_CHARS = 8

@@ -97,14 +97,26 @@ def test_simhash_bands_are_equi_join(spark):
     assert "CartesianProduct" not in plan
 
 
+LSH_PAIR_QUERIES = (
+    "dedup_embedding_cosine_lsh",
+    "dedup_embedding_cosine_lsh_fixedwidth_demo",
+    "dedup_embedding_cosine_lsh_multitable",
+)
+
+
 def test_cosine_dedup_is_blocked_not_nested_loop(spark):
     """Exact cosine dedup must run as the tiled block product (equi-join
-    routing + Arrow tiles), and the LSH variant as a probe-key equi-join;
-    neither may plan a nested loop over the corpus."""
-    for name in ("dedup_embedding_cosine", "dedup_embedding_cosine_lsh"):
+    routing + Arrow tiles), and the LSH variants as a probe-key equi-join;
+    none may plan a nested loop over the corpus.  Every LSH pair query
+    joins with the one measured shape, a shuffled hash join: a broadcast
+    build side was slower at sf0.01 and sf0.1 and has no size bound."""
+    for name in ("dedup_embedding_cosine",) + LSH_PAIR_QUERIES:
         plan = plan_of(spark, name)
         assert "BroadcastNestedLoopJoin" not in plan, name
         assert "CartesianProduct" not in plan, name
+        if name in LSH_PAIR_QUERIES:
+            assert "ShuffledHashJoin" in plan, name
+            assert "BroadcastHashJoin" not in plan, name
 
 
 def test_broadcast_query_side_in_similarity(spark):

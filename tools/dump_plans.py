@@ -102,7 +102,8 @@ SHOWCASE: list[tuple[str, str]] = [
     ("dedup_embedding_cosine_lsh",
      "The corpus-size-derived, probe-aware plane count only changes "
      "literals: the plan stays probe-key explode → bucket equi-join "
-     "(`BroadcastHashJoin`) → Arrow `MapInPandas` verification — "
+     "(`ShuffledHashJoin`, the one join shape of the SRP family) → "
+     "Arrow `MapInPandas` verification — "
      "2^planes tracks n·(p+1)/32 (SCALING.md r7) over decorrelated "
      "hyperplanes."),
     ("dedup_embedding_cosine_lsh_multitable",
