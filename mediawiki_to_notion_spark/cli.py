@@ -53,7 +53,7 @@ def _report_side_output(df, outdir: str, name: str, fmt,
     more Spark jobs) runs only when it does."""
     path = os.path.join(outdir, "_warnings", name)
     df.write.mode("overwrite").parquet(path)
-    persisted = df.sparkSession.read.parquet(path)
+    persisted = df.sparkSession.read.schema(df.schema).parquet(path)
     head = persisted.limit(limit + 1).collect()
     for r in head[:limit]:
         print(fmt(r), file=sys.stderr)

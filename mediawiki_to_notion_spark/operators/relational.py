@@ -149,10 +149,11 @@ def time_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (notion_pages_custom_widget.py:63-66) — pushed straight into the
     parquet scan; no 1 MB truncation bug by construction.
 
-    The range predicate goes on the raw nanos column (`ts_ns`): the
-    human-readable `ts` is computed from it, and computed columns defeat
-    parquet predicate pushdown — at 100 TB this is the difference
-    between scanning two days and scanning the table."""
+    The range predicate reaches the parquet scan: on `ts` for the
+    declared TIMESTAMP_NTZ column, or on the raw `ts_ns` of a nanos
+    source read as a long, whose `ts` is computed and so cannot push
+    down — at 100 TB this is the difference between scanning two days
+    and scanning the table."""
     import datetime as dt
 
     e = load_table(spark, "events", sf_dir)

@@ -151,6 +151,14 @@ class ParquetTable:
             for c in segs
         ]
 
+    def _scan(self, *paths: str) -> DataFrame:
+        """Read segment files with the declared schema, so no footer-
+        inference job runs; only a table built without one infers."""
+        reader = self.spark.read
+        if self.schema is not None:
+            reader = reader.schema(self.schema)
+        return reader.parquet(*paths)
+
     def _empty(self) -> DataFrame:
         if self.schema is None:
             raise FileNotFoundError(f"empty table {self.path} and no schema")
@@ -166,7 +174,7 @@ class ParquetTable:
             paths = self._segments(mapping)
             if not paths:
                 return self._empty()
-            return self.spark.read.parquet(*paths)
+            return self._scan(*paths)
         vs = self._versions()
         if at not in vs:
             # commit ids are sequential from 1, so ids below 1 (or past
@@ -185,14 +193,14 @@ class ParquetTable:
         # pin the historical rows NOW: a later commit's GC may delete
         # the segment files this mapping references before the caller
         # runs an action (changes_since guards the same hazard)
-        return self.spark.read.parquet(*paths).localCheckpoint(eager=True)
+        return self._scan(*paths).localCheckpoint(eager=True)
 
     def _read_buckets(self, mapping: dict[int, list[int]],
                       buckets: list[int]) -> DataFrame | None:
         paths = self._segments(mapping, buckets)
         if not paths:
             return None
-        return self.spark.read.parquet(*paths)
+        return self._scan(*paths)
 
     # -- mutations ------------------------------------------------------------
 
@@ -324,10 +332,10 @@ class ParquetTable:
         ]
         if not changed:
             return self.read().limit(0)
-        cur = self.spark.read.parquet(*self._segments(cur_mapping, changed))
+        cur = self._scan(*self._segments(cur_mapping, changed))
         old_paths = self._segments(old_mapping, changed)
         if old_paths:
-            old = self.spark.read.parquet(*old_paths)
+            old = self._scan(*old_paths)
             cur = cur.exceptAll(old.select(cur.columns))
         return cur.localCheckpoint(eager=True)
 
@@ -341,7 +349,7 @@ class ParquetTable:
         frag = [k for k, segs in mapping.items() if len(segs) >= min_segments]
         if not frag:
             return 0
-        data = self.spark.read.parquet(*self._segments(mapping, frag))
+        data = self._scan(*self._segments(mapping, frag))
         n = n_prev + 1
         written = self._write_segments(data, n)
         for k in frag:

@@ -37,8 +37,8 @@ def test_filter_and_projection_pushdown(spark):
 
 
 def test_time_range_pushdown(spark):
-    """The range predicate must hit the parquet scan via the raw nanos
-    column (a filter on the *computed* ts column would not push down)."""
+    """The range predicate must hit the parquet scan on the stored `ts`
+    column (a filter on a *computed* ts column would not push down)."""
     plan = formatted(spark, "time_range_scan")
     assert "GreaterThanOrEqual(ts," in plan and "LessThanOrEqual(ts," in plan
 

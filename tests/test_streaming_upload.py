@@ -16,20 +16,7 @@ from mediawiki_to_notion_spark.streaming.notion_client import (
     TransportError,
 )
 from mediawiki_to_notion_spark.streaming.upload import UploadConfig, drain, run_upload
-
-MD_A = "# Page A\n\npara one\n\n- item\n"
-MD_B = "# Page B\n\n## sub\n\ntext\n"
-
-
-@pytest.fixture()
-def staged_tables(spark, tmp_path):
-    staged = spark.createDataFrame(
-        [("wiki/A.md", MD_A), ("wiki/B.md", MD_B)],
-        "s3_object_key string, markdown string",
-    )
-    tables_dir = str(tmp_path / "tables")
-    ingest.ingest_batch(spark, staged, tables_dir)
-    return tables_dir
+from tests.conftest import MD_A, MD_B
 
 
 # --- client-level retry policy (FIXTURES A7) --------------------------------

@@ -3,8 +3,9 @@ soak (VERDICT r5 item 1): converts the engine's "scales ~linearly"
 claim from plan-gated to observed.
 
 Construction (deterministic, one Spark job, raw reads so the physical
-schema — events.ts as INT64 nanos, NTZ micro timestamps — is preserved
-byte-compatible with what load_table expects):
+schema — every timestamp, events.ts included, as INT64
+TIMESTAMP(MICROS, isAdjustedToUTC=false) — is preserved byte-compatible
+with the schemas load_table declares):
 
 - region/nation: fixed dimensions at every TPC-H scale factor — copied
   once, NOT multiplied.
