@@ -112,19 +112,223 @@ def _rebuild_excising_spans(toks: DataFrame, spans: DataFrame) -> DataFrame:
     )
 
 
-@register(
-    "dedup_duplicate_ngram_spans",
-    oracle=f"""
+# --- Exact-substring spans (Lee et al. 2021) -------------------------------
+#
+# Five queries here and decontaminate_span_cut share one pipeline:
+# hash every W-token window (_token_windows), keep the windows whose
+# hash occurs in >= 2 documents (_dup_windows), chain them into spans
+# (_span_islands), then report the spans (_span_extents) or cut them
+# (_rebuild_excising_spans).  The DuckDB templates below mirror each
+# step CTE for CTE.
+
+
+def _token_windows(spark: SparkSession, sf_dir: str,
+                   w: int) -> tuple[DataFrame, DataFrame]:
+    """The ``documents`` token arrays and their ``w``-token windows:
+    ``toks`` is (doc_id, t: array<string>) for documents of >= ``w``
+    space-separated tokens, ``win`` is (doc_id, p, h) with one row per
+    window start ``p`` and ``h`` the window's 60-bit hash.
+
+    Scale shape: the window expansion is a narrow per-row transform
+    (array slices hashed to 60-bit ids), so every later shuffle keyed
+    on a window is keyed on 8 bytes; nothing here shuffles."""
+    from mediawiki_to_notion_spark.plans.pipeline import ensure_parallelism
+
+    d = ensure_parallelism(load_table(spark, "documents", sf_dir))
+    toks = d.select("doc_id", F.split("text", " ").alias("t")).filter(
+        F.size("t") >= w
+    )
+    win = toks.select(
+        "doc_id",
+        F.posexplode(
+            F.transform(
+                F.sequence(F.lit(0), F.size("t") - w),
+                lambda i: H.token_hash60(
+                    F.concat_ws(" ", F.slice("t", i + 1, w))
+                ),
+            )
+        ).alias("p", "h"),
+    )
+    return toks, win
+
+
+def _dup_windows(win: DataFrame) -> DataFrame:
+    """The rows of ``win`` whose hash occurs in >= 2 documents, as
+    (h, doc_id, p).
+
+    Scale shape: the duplicated-hash set is one partial-aggregate
+    shuffle keyed by the 8-byte hash, and the match is a hash
+    equi-join on it; nothing is quadratic and nothing is collected."""
+    dup = (
+        win.groupBy("h")
+        .agg(F.count_distinct("doc_id").alias("nd"))
+        .filter(F.col("nd") >= 2)
+        .select("h")
+    )
+    return win.join(dup, "h")
+
+
+def _span_islands(win: DataFrame, token_exact: bool) -> DataFrame:
+    """Chain each document's duplicated windows into spans:
+    (doc_id, p, h, span_id), span ids counting from 1 in position order.
+
+    ``token_exact=False`` is the gap rule: a duplicated window within
+    SPAN_W of the previous one continues its span (gaps-and-islands
+    lag/cumsum).  A token is then covered iff it sits in some
+    duplicated window, Lee et al.'s cut criterion, and distinct runs
+    that abut or overlap by chance merge into one span.
+
+    ``token_exact=True`` is the edge rule.  Inside one shared run every
+    window position is duplicated, so the run's windows are consecutive.
+    A chain continues from p-1 to p only when the pair (hash@p-1,
+    hash@p) itself occurs in >= 2 documents, i.e. some partner document
+    continues the run through the same junction.  Every span is then a
+    maximal co-moving window chain: one duplicated substring with
+    token-exact start and end.  (Two runs overlapping by >= SPAN_W+1
+    tokens inside one document still chain, as in every windowed
+    method.)
+
+    Scale shape: the lag/cumsum windows run only over the duplicated
+    windows (a small fraction of the corpus) partitioned by doc_id,
+    never over the full window stream.  The edge rule adds one hash
+    aggregate keyed on the 8-byte hash pair and an equi-join back.  Its
+    duplicated-window sequence is checkpointed eagerly because both the
+    edge set and the flags read it; it holds only duplicated windows
+    (output-bounded), so the checkpoint is small at any scale, unlike
+    ``win`` itself, which is token-scale and left re-evaluated."""
+    from pyspark.sql import Window as W
+
+    byp = W.partitionBy("doc_id").orderBy("p")
+    dw = _dup_windows(win)
+    if token_exact:
+        seq = dw.select(
+            "doc_id", "p", "h",
+            F.lag("p").over(byp).alias("pp"),
+            F.lag("h").over(byp).alias("ph"),
+        ).localCheckpoint()
+        dup_edges = (
+            seq.filter(F.col("pp") == F.col("p") - 1)
+            .groupBy(F.col("ph").alias("ha"), F.col("h").alias("hb"))
+            .agg(F.count_distinct("doc_id").alias("nd"))
+            .filter(F.col("nd") >= 2)
+            .select("ha", "hb")
+        )
+        flagged = seq.join(
+            dup_edges,
+            (F.col("ph") == F.col("ha")) & (F.col("h") == F.col("hb")),
+            "left",
+        ).select(
+            "doc_id", "p", "h",
+            F.when(
+                (F.col("pp") == F.col("p") - 1) & F.col("ha").isNotNull(),
+                F.lit(0),
+            ).otherwise(F.lit(1)).alias("new_span"),
+        )
+    else:
+        flagged = dw.select(
+            "doc_id", "p", "h",
+            F.when(
+                F.col("p") - F.lag("p").over(byp) <= SPAN_W, F.lit(0)
+            ).otherwise(F.lit(1)).alias("new_span"),
+        )
+    return flagged.select(
+        "doc_id", "p", "h",
+        F.sum("new_span").over(
+            byp.rowsBetween(W.unboundedPreceding, 0)
+        ).alias("span_id"),
+    )
+
+
+def _span_extents(islands: DataFrame) -> DataFrame:
+    """One row per span of ``islands``: (doc_id, span_id, start_tok,
+    end_tok, span_len, n_windows), token bounds inclusive."""
+    return islands.groupBy(
+        "doc_id", F.col("span_id").cast("int").alias("span_id")
+    ).agg(
+        F.min("p").alias("start_tok"),
+        (F.max("p") + SPAN_W - 1).alias("end_tok"),
+        (F.max("p") - F.min("p") + SPAN_W).alias("span_len"),
+        F.count(F.lit(1)).alias("n_windows"),
+    )
+
+
+def _windows_sql(w: int) -> str:
+    """DuckDB twin of :func:`_token_windows`: opens a WITH clause with
+    the ``toks`` and ``win`` CTEs."""
+    return f"""
     WITH toks AS (
       SELECT doc_id, string_split(text, ' ') AS t
-      FROM documents WHERE len(string_split(text, ' ')) >= {SPAN_W}
+      FROM documents WHERE len(string_split(text, ' ')) >= {w}
     ), win AS (
       SELECT doc_id, u.i AS p,
-             {H.token_hash60_sql(f"array_to_string(t[u.i+1 : u.i+{SPAN_W}], ' ')")} AS h
-      FROM toks, LATERAL (SELECT unnest(range(0, len(t) - {SPAN_W} + 1)) AS i) u
-    ), dup AS (
+             {H.token_hash60_sql(f"array_to_string(t[u.i+1 : u.i+{w}], ' ')")} AS h
+      FROM toks, LATERAL (SELECT unnest(range(0, len(t) - {w} + 1)) AS i) u
+    )"""
+
+
+# the SPAN_W windows plus the duplicated-hash set (_dup_windows)
+_DUP_WIN_SQL = _windows_sql(SPAN_W) + """, dup AS (
       SELECT h FROM win GROUP BY h HAVING count(DISTINCT doc_id) >= 2
-    ), dw AS (
+    )"""
+
+# _span_islands(win, token_exact=True)
+_TOKEN_EXACT_ISLANDS_SQL = """, seq AS (
+      SELECT w.doc_id, w.p, w.h,
+             lag(w.p) OVER (PARTITION BY w.doc_id ORDER BY w.p) AS pp,
+             lag(w.h) OVER (PARTITION BY w.doc_id ORDER BY w.p) AS ph
+      FROM win w JOIN dup USING (h)
+    ), dup_edges AS (
+      SELECT ph AS ha, h AS hb FROM seq WHERE pp = p - 1
+      GROUP BY ph, h HAVING count(DISTINCT doc_id) >= 2
+    ), flagged AS (
+      SELECT s.doc_id, s.p, s.h,
+             CASE WHEN s.pp = s.p - 1 AND d.ha IS NOT NULL
+                  THEN 0 ELSE 1 END AS new_span
+      FROM seq s LEFT JOIN dup_edges d ON d.ha = s.ph AND d.hb = s.h
+    ), islands AS (
+      SELECT doc_id, p, h,
+             SUM(new_span) OVER (
+               PARTITION BY doc_id ORDER BY p
+               ROWS UNBOUNDED PRECEDING) AS span_id
+      FROM flagged
+    )"""
+
+# _span_extents
+_SPAN_EXTENTS_SQL = f"""
+    SELECT doc_id, CAST(span_id AS INT) AS span_id,
+           CAST(min(p) AS BIGINT) AS start_tok,
+           CAST(max(p) + {SPAN_W} - 1 AS BIGINT) AS end_tok,
+           CAST(max(p) - min(p) + {SPAN_W} AS BIGINT) AS span_len,
+           CAST(count(*) AS BIGINT) AS n_windows
+    FROM islands GROUP BY doc_id, span_id
+    """
+
+# _rebuild_excising_spans over a ``cut_toks`` (doc_id, tok_i) CTE
+_REBUILD_SQL = """, stream AS (
+      SELECT t.doc_id, len(t.t) AS n_tokens, u.i AS tok_i,
+             t.t[u.i + 1] AS tok
+      FROM toks t, LATERAL (SELECT unnest(range(0, len(t.t))) AS i) u
+    ), rebuilt AS (
+      SELECT s.doc_id, s.n_tokens,
+             count(c.tok_i) AS n_cut_tokens,
+             coalesce(string_agg(
+               CASE WHEN c.tok_i IS NULL THEN s.tok END, ' '
+               ORDER BY s.tok_i), '') AS clean_text
+      FROM stream s
+      LEFT JOIN cut_toks c ON c.doc_id = s.doc_id AND c.tok_i = s.tok_i
+      GROUP BY s.doc_id, s.n_tokens
+    )
+    SELECT doc_id, n_tokens,
+           CAST(n_cut_tokens AS BIGINT) AS n_cut_tokens,
+           CAST(n_tokens - n_cut_tokens AS BIGINT) AS n_kept_tokens,
+           clean_text
+    FROM rebuilt
+    """
+
+
+@register(
+    "dedup_duplicate_ngram_spans",
+    oracle=f"""{_DUP_WIN_SQL}, dw AS (
       SELECT w.doc_id, w.p FROM win w JOIN dup USING (h)
     ), cov AS (
       SELECT DISTINCT doc_id, u.tok_i
@@ -149,38 +353,9 @@ def dedup_duplicate_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     is covered by {SPAN_W}-token windows that also occur verbatim in
     another document (suffix-array dedup's relational twin; reference
     corpus-prep parity: the hot duplicated wiki boilerplate of
-    FAQ.md:68 is exactly what this flags for span removal).
-
-    Scale shape: the window expansion is a narrow per-row transform
-    (array slices hashed to 60-bit ids — 8-byte shuffle keys); the
-    duplicated-hash set is one partial-agg shuffle keyed by h; the match
-    join is hash-equi on h; coverage re-expands only *duplicated*
-    windows (a small fraction of the corpus) before the final per-doc
-    agg.  Nothing is quadratic and no driver collection occurs."""
-    from mediawiki_to_notion_spark.plans.pipeline import ensure_parallelism
-
-    d = ensure_parallelism(load_table(spark, "documents", sf_dir))
-    toks = d.select("doc_id", F.split("text", " ").alias("t")).filter(
-        F.size("t") >= SPAN_W
-    )
-    win = toks.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("t") - SPAN_W),
-                lambda i: H.token_hash60(
-                    F.concat_ws(" ", F.slice("t", i + 1, SPAN_W))
-                ),
-            )
-        ).alias("p", "h"),
-    )
-    dup = (
-        win.groupBy("h")
-        .agg(F.count_distinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= 2)
-        .select("h")
-    )
-    dw = win.join(dup, "h").select("doc_id", "p")
+    FAQ.md:68 is exactly what this flags for span removal)."""
+    toks, win = _token_windows(spark, sf_dir, SPAN_W)
+    dw = _dup_windows(win).select("doc_id", "p")
     # r10: count covered tokens by folding the SORTED window starts per
     # doc (fixed width W ⇒ interval union length in one pass) instead of
     # exploding every dup window W ways and distinct-counting token ids —
@@ -478,17 +653,7 @@ def dedup_normalized_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_substring_spans_exact",
-    oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, string_split(text, ' ') AS t
-      FROM documents WHERE len(string_split(text, ' ')) >= {SPAN_W}
-    ), win AS (
-      SELECT doc_id, u.i AS p,
-             {H.token_hash60_sql(f"array_to_string(t[u.i+1 : u.i+{SPAN_W}], ' ')")} AS h
-      FROM toks, LATERAL (SELECT unnest(range(0, len(t) - {SPAN_W} + 1)) AS i) u
-    ), dup AS (
-      SELECT h FROM win GROUP BY h HAVING count(DISTINCT doc_id) >= 2
-    ), dw AS (
+    oracle=f"""{_DUP_WIN_SQL}, dw AS (
       SELECT w.doc_id, w.p FROM win w JOIN dup USING (h)
     ), flagged AS (
       SELECT doc_id, p,
@@ -501,231 +666,41 @@ def dedup_normalized_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                PARTITION BY doc_id ORDER BY p
                ROWS UNBOUNDED PRECEDING) AS span_id
       FROM flagged
-    )
-    SELECT doc_id, CAST(span_id AS INT) AS span_id,
-           CAST(min(p) AS BIGINT) AS start_tok,
-           CAST(max(p) + {SPAN_W} - 1 AS BIGINT) AS end_tok,
-           CAST(max(p) - min(p) + {SPAN_W} AS BIGINT) AS span_len,
-           CAST(count(*) AS BIGINT) AS n_windows
-    FROM islands GROUP BY doc_id, span_id
-    """,
+    ){_SPAN_EXTENTS_SQL}""",
 )
 def dedup_substring_spans_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal EXACT duplicated-substring spans (Lee et al. 2021 §4's
     deliverable, one step past ``dedup_duplicate_ngram_spans``'s
     coverage ratios): overlapping-or-adjacent duplicated {SPAN_W}-token
-    windows chain into maximal spans via the classic gaps-and-islands
-    lag/cumsum, yielding exact span extents (start/end token, length)
-    per document — the spans an exact-substring dedup pass would cut.
-    Extents are exact for the duplicated-TOKEN-SET semantics (a token
-    is covered iff it sits in some duplicated window, exactly Lee et
-    al.'s cut criterion); distinct runs that abut or overlap by chance
-    merge into one reported span — the per-RUN variant that splits
-    those is ``dedup_substring_spans_token_exact``.
-
-    Scale shape: identical to the ngram-spans query up through the
-    duplicated-window join (8-byte hash keys, partial-agg dup set);
-    the ONLY window function runs over the duplicated windows — a
-    small fraction of the corpus — partitioned by doc_id, never over
-    the full window stream."""
-    from mediawiki_to_notion_spark.plans.pipeline import ensure_parallelism
-    from pyspark.sql import Window as W
-
-    d = ensure_parallelism(load_table(spark, "documents", sf_dir))
-    toks = d.select("doc_id", F.split("text", " ").alias("t")).filter(
-        F.size("t") >= SPAN_W
-    )
-    win = toks.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("t") - SPAN_W),
-                lambda i: H.token_hash60(
-                    F.concat_ws(" ", F.slice("t", i + 1, SPAN_W))
-                ),
-            )
-        ).alias("p", "h"),
-    )
-    dup = (
-        win.groupBy("h")
-        .agg(F.count_distinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= 2)
-        .select("h")
-    )
-    dw = win.join(dup, "h").select("doc_id", "p")
-    byp = W.partitionBy("doc_id").orderBy("p")
-    flagged = dw.select(
-        "doc_id", "p",
-        F.when(
-            F.col("p") - F.lag("p").over(byp) <= SPAN_W, F.lit(0)
-        ).otherwise(F.lit(1)).alias("new_span"),
-    )
-    islands = flagged.select(
-        "doc_id", "p",
-        F.sum("new_span").over(
-            byp.rowsBetween(W.unboundedPreceding, 0)
-        ).alias("span_id"),
-    )
-    return islands.groupBy("doc_id", F.col("span_id").cast("int").alias("span_id")).agg(
-        F.min("p").alias("start_tok"),
-        (F.max("p") + SPAN_W - 1).alias("end_tok"),
-        (F.max("p") - F.min("p") + SPAN_W).alias("span_len"),
-        F.count(F.lit(1)).alias("n_windows"),
-    )
+    windows chain into maximal spans (the gap rule of
+    ``_span_islands``), yielding exact span extents (start/end token,
+    length) per document — the spans an exact-substring dedup pass
+    would cut.  The per-RUN variant that splits runs abutting by
+    chance is ``dedup_substring_spans_token_exact``."""
+    _, win = _token_windows(spark, sf_dir, SPAN_W)
+    return _span_extents(_span_islands(win, token_exact=False))
 
 
 @register(
     "dedup_substring_spans_token_exact",
-    oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, string_split(text, ' ') AS t
-      FROM documents WHERE len(string_split(text, ' ')) >= {{SPAN_W}}
-    ), win AS (
-      SELECT doc_id, u.i AS p,
-             {{HASH}} AS h
-      FROM toks, LATERAL (SELECT unnest(range(0, len(t) - {{SPAN_W}} + 1)) AS i) u
-    ), dup AS (
-      SELECT h FROM win GROUP BY h HAVING count(DISTINCT doc_id) >= 2
-    ), seq AS (
-      SELECT w.doc_id, w.p, w.h,
-             lag(w.p) OVER (PARTITION BY w.doc_id ORDER BY w.p) AS pp,
-             lag(w.h) OVER (PARTITION BY w.doc_id ORDER BY w.p) AS ph
-      FROM win w JOIN dup USING (h)
-    ), dup_edges AS (
-      -- an adjacent window PAIR is itself duplicated iff the same
-      -- (hash, next-hash) edge occurs in >= 2 documents: the chain
-      -- only continues where some partner document continues too
-      SELECT ph AS ha, h AS hb FROM seq WHERE pp = p - 1
-      GROUP BY ph, h HAVING count(DISTINCT doc_id) >= 2
-    ), flagged AS (
-      SELECT s.doc_id, s.p,
-             CASE WHEN s.pp = s.p - 1 AND d.ha IS NOT NULL
-                  THEN 0 ELSE 1 END AS new_span
-      FROM seq s LEFT JOIN dup_edges d ON d.ha = s.ph AND d.hb = s.h
-    ), islands AS (
-      SELECT doc_id, p,
-             SUM(new_span) OVER (
-               PARTITION BY doc_id ORDER BY p
-               ROWS UNBOUNDED PRECEDING) AS span_id
-      FROM flagged
-    )
-    SELECT doc_id, CAST(span_id AS INT) AS span_id,
-           CAST(min(p) AS BIGINT) AS start_tok,
-           CAST(max(p) + {{SPAN_W}} - 1 AS BIGINT) AS end_tok,
-           CAST(max(p) - min(p) + {{SPAN_W}} AS BIGINT) AS span_len,
-           CAST(count(*) AS BIGINT) AS n_windows
-    FROM islands GROUP BY doc_id, span_id
-    """.format(
-        SPAN_W=SPAN_W,
-        HASH=H.token_hash60_sql(
-            f"array_to_string(t[u.i+1 : u.i+{SPAN_W}], ' ')"
-        ),
-    ),
+    oracle=f"{_DUP_WIN_SQL}{_TOKEN_EXACT_ISLANDS_SQL}{_SPAN_EXTENTS_SQL}",
 )
 def dedup_substring_spans_token_exact(spark: SparkSession,
                                       sf_dir: str) -> DataFrame:
     """TOKEN-EXACT duplicated-substring spans (VERDICT r5 item 4 — the
-    Lee et al. 2021 per-run deliverable).  Key fact: inside a single
-    shared run of length L >= {SPAN_W}, EVERY window position is
-    duplicated, so the run's windows are position-consecutive (δ=1).
-    ``dedup_substring_spans_exact`` chains any windows within SPAN_W
-    of each other, which (a) bridges runs separated by a small gap and
-    (b) splices distinct adjacent runs that merely abut by chance.
-    Here a chain only continues when the adjacent window PAIR
-    (hash@p, hash@p+1) itself occurs in >= 2 documents — i.e. some
-    partner document continues the run through the same junction — so
-    every reported span is a maximal co-moving window chain: a genuine
-    single duplicated substring with token-exact start/end, not a
-    window-granular union.  (Two runs overlapping by >= SPAN_W+1
-    tokens inside one doc still chain — the standard pairwise-overlap
-    guarantee every windowed method shares.)
-
-    Scale shape: identical to the spans query up through the dup-set
-    join; the pair check is ONE more hash aggregation keyed on the
-    8-byte hash pair of adjacent duplicated windows plus a broadcast-
-    able equi-join back — no new corpus-sized shuffle, and the lag/
-    cumsum windows still run only over duplicated windows partitioned
-    by doc_id."""
-    from mediawiki_to_notion_spark.plans.pipeline import ensure_parallelism
-    from pyspark.sql import Window as W
-
-    d = ensure_parallelism(load_table(spark, "documents", sf_dir))
-    toks = d.select("doc_id", F.split("text", " ").alias("t")).filter(
-        F.size("t") >= SPAN_W
-    )
-    win = toks.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("t") - SPAN_W),
-                lambda i: H.token_hash60(
-                    F.concat_ws(" ", F.slice("t", i + 1, SPAN_W))
-                ),
-            )
-        ).alias("p", "h"),
-    )
-    dup = (
-        win.groupBy("h")
-        .agg(F.count_distinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= 2)
-        .select("h")
-    )
-    byp = W.partitionBy("doc_id").orderBy("p")
-    # duplicated-window sequence materialized once (r10, guide §2.4 —
-    # same two-consumer cascade as dedup_substring_cut_exact: seq feeds
-    # dup_edges AND flagged; output-bounded, so the checkpoint is small)
-    seq = win.join(dup, "h").select(
-        "doc_id", "p", "h",
-        F.lag("p").over(byp).alias("pp"),
-        F.lag("h").over(byp).alias("ph"),
-    ).localCheckpoint()
-    dup_edges = (
-        seq.filter(F.col("pp") == F.col("p") - 1)
-        .groupBy(F.col("ph").alias("ha"), F.col("h").alias("hb"))
-        .agg(F.count_distinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= 2)
-        .select("ha", "hb")
-    )
-    flagged = seq.join(
-        dup_edges,
-        (F.col("ph") == F.col("ha")) & (F.col("h") == F.col("hb")),
-        "left",
-    ).select(
-        "doc_id", "p",
-        F.when(
-            (F.col("pp") == F.col("p") - 1) & F.col("ha").isNotNull(),
-            F.lit(0),
-        ).otherwise(F.lit(1)).alias("new_span"),
-    )
-    islands = flagged.select(
-        "doc_id", "p",
-        F.sum("new_span").over(
-            byp.rowsBetween(W.unboundedPreceding, 0)
-        ).alias("span_id"),
-    )
-    return islands.groupBy(
-        "doc_id", F.col("span_id").cast("int").alias("span_id")
-    ).agg(
-        F.min("p").alias("start_tok"),
-        (F.max("p") + SPAN_W - 1).alias("end_tok"),
-        (F.max("p") - F.min("p") + SPAN_W).alias("span_len"),
-        F.count(F.lit(1)).alias("n_windows"),
-    )
+    Lee et al. 2021 per-run deliverable): the edge rule of
+    ``_span_islands``, so every reported span is one maximal co-moving
+    window chain, a genuine single duplicated substring with
+    token-exact start/end, not ``dedup_substring_spans_exact``'s
+    window-granular union (which bridges runs separated by a gap of up
+    to {SPAN_W} and splices runs that merely abut)."""
+    _, win = _token_windows(spark, sf_dir, SPAN_W)
+    return _span_extents(_span_islands(win, token_exact=True))
 
 
 @register(
     "dedup_substring_cut",
-    oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, string_split(text, ' ') AS t
-      FROM documents WHERE len(string_split(text, ' ')) >= {SPAN_W}
-    ), win AS (
-      SELECT doc_id, u.i AS p,
-             {H.token_hash60_sql(f"array_to_string(t[u.i+1 : u.i+{SPAN_W}], ' ')")} AS h
-      FROM toks, LATERAL (SELECT unnest(range(0, len(t) - {SPAN_W} + 1)) AS i) u
-    ), dup AS (
-      SELECT h FROM win GROUP BY h HAVING count(DISTINCT doc_id) >= 2
-    ), firsts AS (
+    oracle=f"""{_DUP_WIN_SQL}, firsts AS (
       -- survivor copy: the globally FIRST occurrence of each
       -- duplicated window (doc_id, then position) is NOT cut.
       -- Lexicographic struct min, NOT a composite integer key: a
@@ -742,26 +717,7 @@ def dedup_substring_spans_token_exact(spark: SparkSession,
       SELECT DISTINCT doc_id, u.tok_i
       FROM cut_wins, LATERAL (
         SELECT unnest(range(p, p + {SPAN_W})) AS tok_i) u
-    ), stream AS (
-      SELECT t.doc_id, len(t.t) AS n_tokens, u.i AS tok_i,
-             t.t[u.i + 1] AS tok
-      FROM toks t, LATERAL (SELECT unnest(range(0, len(t.t))) AS i) u
-    ), rebuilt AS (
-      SELECT s.doc_id, s.n_tokens,
-             count(c.tok_i) AS n_cut_tokens,
-             coalesce(string_agg(
-               CASE WHEN c.tok_i IS NULL THEN s.tok END, ' '
-               ORDER BY s.tok_i), '') AS clean_text
-      FROM stream s
-      LEFT JOIN cut_toks c ON c.doc_id = s.doc_id AND c.tok_i = s.tok_i
-      GROUP BY s.doc_id, s.n_tokens
-    )
-    SELECT doc_id, n_tokens,
-           CAST(n_cut_tokens AS BIGINT) AS n_cut_tokens,
-           CAST(n_tokens - n_cut_tokens AS BIGINT) AS n_kept_tokens,
-           clean_text
-    FROM rebuilt
-    """,
+    ){_REBUILD_SQL}""",
 )
 def dedup_substring_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring dedup END TO END (the actual Lee et al. 2021
@@ -772,29 +728,10 @@ def dedup_substring_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuilt from its surviving tokens.
 
     Scale shape: the duplicated-window set and survivor choice ride ONE
-    hash-keyed partial aggregate (8-byte keys; min(struct) shares the
-    count's shuffle) whose filtered output joins back small; the rebuild
-    collects the few cut spans per doc and excises them from the packed
-    token arrays with array folds (_rebuild_excising_spans) — no
-    token-level shuffle, never a window over the corpus, nothing
-    quadratic."""
-    from mediawiki_to_notion_spark.plans.pipeline import ensure_parallelism
-
-    d = ensure_parallelism(load_table(spark, "documents", sf_dir))
-    toks = d.select("doc_id", F.split("text", " ").alias("t")).filter(
-        F.size("t") >= SPAN_W
-    )
-    win = toks.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("t") - SPAN_W),
-                lambda i: H.token_hash60(
-                    F.concat_ws(" ", F.slice("t", i + 1, SPAN_W))
-                ),
-            )
-        ).alias("p", "h"),
-    )
+    hash-keyed partial aggregate (min(struct) shares the count's
+    shuffle) whose filtered output joins back small; the rebuild is
+    ``_rebuild_excising_spans``."""
+    toks, win = _token_windows(spark, sf_dir, SPAN_W)
     # ONE aggregate computes the duplicated-hash set AND its survivor
     # (r10): min(struct(doc_id, p)) rides the same partial-agg shuffle
     # as the distinct-doc count, so the old dup→join→firsts→join chain
@@ -816,9 +753,6 @@ def dedup_substring_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut_wins = win.join(firsts, "h").filter(
         F.struct("doc_id", "p") != F.col("first_pos")
     )
-    # r10 rebuild: cut windows become (start, end) spans merged per doc
-    # with array folds — no token-stream explode, no token-level join,
-    # no corpus-wide collect_list (see _rebuild_excising_spans)
     spans = cut_wins.select(
         "doc_id",
         F.col("p").alias("s"),
@@ -827,42 +761,9 @@ def dedup_substring_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _rebuild_excising_spans(toks, spans)
 
 
-_WIN_HASH_SQL = H.token_hash60_sql(
-    f"array_to_string(t[u.i+1 : u.i+{SPAN_W}], ' ')"
-)
-
-
 @register(
     "dedup_substring_cut_exact",
-    oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, string_split(text, ' ') AS t
-      FROM documents WHERE len(string_split(text, ' ')) >= {SPAN_W}
-    ), win AS (
-      SELECT doc_id, u.i AS p, {_WIN_HASH_SQL} AS h
-      FROM toks, LATERAL (SELECT unnest(range(0, len(t) - {SPAN_W} + 1)) AS i) u
-    ), dup AS (
-      SELECT h FROM win GROUP BY h HAVING count(DISTINCT doc_id) >= 2
-    ), seq AS (
-      SELECT w.doc_id, w.p, w.h,
-             lag(w.p) OVER (PARTITION BY w.doc_id ORDER BY w.p) AS pp,
-             lag(w.h) OVER (PARTITION BY w.doc_id ORDER BY w.p) AS ph
-      FROM win w JOIN dup USING (h)
-    ), dup_edges AS (
-      SELECT ph AS ha, h AS hb FROM seq WHERE pp = p - 1
-      GROUP BY ph, h HAVING count(DISTINCT doc_id) >= 2
-    ), flagged AS (
-      SELECT s.doc_id, s.p, s.h,
-             CASE WHEN s.pp = s.p - 1 AND d.ha IS NOT NULL
-                  THEN 0 ELSE 1 END AS new_span
-      FROM seq s LEFT JOIN dup_edges d ON d.ha = s.ph AND d.hb = s.h
-    ), islands AS (
-      SELECT doc_id, p, h,
-             SUM(new_span) OVER (
-               PARTITION BY doc_id ORDER BY p
-               ROWS UNBOUNDED PRECEDING) AS span_id
-      FROM flagged
-    ), spans AS (
+    oracle=f"""{_DUP_WIN_SQL}{_TOKEN_EXACT_ISLANDS_SQL}, spans AS (
       -- chain_sig identifies the span's CONTENT: the hash of its
       -- ordered window-hash sequence (two spans share a sig iff they
       -- are the same duplicated substring, window for window)
@@ -886,26 +787,7 @@ _WIN_HASH_SQL = H.token_hash60_sql(
       SELECT DISTINCT doc_id, u.tok_i
       FROM cut_spans, LATERAL (
         SELECT unnest(range(start_tok, end_tok + 1)) AS tok_i) u
-    ), stream AS (
-      SELECT t.doc_id, len(t.t) AS n_tokens, u.i AS tok_i,
-             t.t[u.i + 1] AS tok
-      FROM toks t, LATERAL (SELECT unnest(range(0, len(t.t))) AS i) u
-    ), rebuilt AS (
-      SELECT s.doc_id, s.n_tokens,
-             count(c.tok_i) AS n_cut_tokens,
-             coalesce(string_agg(
-               CASE WHEN c.tok_i IS NULL THEN s.tok END, ' '
-               ORDER BY s.tok_i), '') AS clean_text
-      FROM stream s
-      LEFT JOIN cut_toks c ON c.doc_id = s.doc_id AND c.tok_i = s.tok_i
-      GROUP BY s.doc_id, s.n_tokens
-    )
-    SELECT doc_id, n_tokens,
-           CAST(n_cut_tokens AS BIGINT) AS n_cut_tokens,
-           CAST(n_tokens - n_cut_tokens AS BIGINT) AS n_kept_tokens,
-           clean_text
-    FROM rebuilt
-    """,
+    ){_REBUILD_SQL}""",
 )
 def dedup_substring_cut_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL Lee et al. 2021 pipeline as one operator (VERDICT r6
@@ -913,87 +795,19 @@ def dedup_substring_cut_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     end-to-end cut.  ``dedup_substring_cut`` decides survivorship per
     WINDOW, so one chain's windows can split survivorship across
     documents and the kept extent is window-granular; here the unit
-    of survivorship is the TOKEN-EXACT SPAN — the maximal co-moving
-    window chain of ``dedup_substring_spans_token_exact`` — and every
-    occurrence of a duplicated substring except the globally first
-    (lexicographic (doc_id, start_tok) struct min) is cut in full,
-    token for token.
+    of survivorship is the TOKEN-EXACT SPAN (the edge rule of
+    ``_span_islands``), and every occurrence of a duplicated substring
+    except the globally first (lexicographic (doc_id, start_tok)
+    struct min) is cut in full, token for token.
 
     A span's identity is its chain signature: the 60-bit hash of its
     ordered window-hash sequence, so two spans match iff they are the
     same substring window-for-window (superstring occurrences form
     their own chains and survive independently — the standard
-    windowed-method granularity).
-
-    Scale shape: everything up to the islands is the token-exact span
-    query (8-byte hash partial aggs; the lag/cumsum windows run ONLY
-    over duplicated windows partitioned by doc_id); span signatures
-    and survivor choice are two more hash-keyed partial aggregates;
-    the rebuild collects the few cut spans per doc and excises them
-    from the packed token arrays with array folds
-    (_rebuild_excising_spans) — no token-level shuffle, nothing
-    quadratic."""
-    from mediawiki_to_notion_spark.plans.pipeline import ensure_parallelism
-    from pyspark.sql import Window as W
-
-    d = ensure_parallelism(load_table(spark, "documents", sf_dir))
-    toks = d.select("doc_id", F.split("text", " ").alias("t")).filter(
-        F.size("t") >= SPAN_W
-    )
-    win = toks.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("t") - SPAN_W),
-                lambda i: H.token_hash60(
-                    F.concat_ws(" ", F.slice("t", i + 1, SPAN_W))
-                ),
-            )
-        ).alias("p", "h"),
-    )
-    dup = (
-        win.groupBy("h")
-        .agg(F.count_distinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= 2)
-        .select("h")
-    )
-    byp = W.partitionBy("doc_id").orderBy("p")
-    # materialize the duplicated-window sequence ONCE (r10, guide
-    # §2.4): seq is consumed by BOTH dup_edges and flagged, so without
-    # this the token-scale win expansion and the lag window each ran
-    # twice (and win three times counting dup).  seq holds only
-    # duplicated windows — output-bounded (idle soak exp 0.69), so the
-    # checkpoint is small at any scale, unlike win itself (token-scale,
-    # measured only ~3% more and left re-evaluated).
-    seq = win.join(dup, "h").select(
-        "doc_id", "p", "h",
-        F.lag("p").over(byp).alias("pp"),
-        F.lag("h").over(byp).alias("ph"),
-    ).localCheckpoint()
-    dup_edges = (
-        seq.filter(F.col("pp") == F.col("p") - 1)
-        .groupBy(F.col("ph").alias("ha"), F.col("h").alias("hb"))
-        .agg(F.count_distinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= 2)
-        .select("ha", "hb")
-    )
-    flagged = seq.join(
-        dup_edges,
-        (F.col("ph") == F.col("ha")) & (F.col("h") == F.col("hb")),
-        "left",
-    ).select(
-        "doc_id", "p", "h",
-        F.when(
-            (F.col("pp") == F.col("p") - 1) & F.col("ha").isNotNull(),
-            F.lit(0),
-        ).otherwise(F.lit(1)).alias("new_span"),
-    )
-    islands = flagged.select(
-        "doc_id", "p", "h",
-        F.sum("new_span").over(
-            byp.rowsBetween(W.unboundedPreceding, 0)
-        ).alias("span_id"),
-    )
+    windowed-method granularity).  Span signatures and survivor choice
+    are two more hash-keyed partial aggregates over span-level rows."""
+    toks, win = _token_windows(spark, sf_dir, SPAN_W)
+    islands = _span_islands(win, token_exact=True)
     # span-level rows (tiny): keepers and cut_spans both read it —
     # one checkpoint stops the islands window + chain-sig aggregation
     # running twice (r10, guide §2.4)
@@ -1016,9 +830,6 @@ def dedup_substring_cut_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut_spans = spans.join(keepers, "chain_sig").filter(
         F.struct("doc_id", "start_tok") != F.col("keep")
     )
-    # r10 rebuild: the non-surviving spans feed the shared span-merge
-    # excision directly — no token-stream explode, no token-level join,
-    # no corpus-wide collect_list (see _rebuild_excising_spans)
     return _rebuild_excising_spans(
         toks,
         cut_spans.select(

@@ -149,28 +149,16 @@ def time_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (notion_pages_custom_widget.py:63-66) — pushed straight into the
     parquet scan; no 1 MB truncation bug by construction.
 
-    The range predicate reaches the parquet scan: on `ts` for the
-    declared TIMESTAMP_NTZ column, or on the raw `ts_ns` of a nanos
-    source read as a long, whose `ts` is computed and so cannot push
-    down — at 100 TB this is the difference between scanning two days
-    and scanning the table."""
-    import datetime as dt
-
+    The range predicate is on the stored `ts` column, so it reaches the
+    parquet scan — at 100 TB this is the difference between scanning two
+    days and scanning the table."""
     e = load_table(spark, "events", sf_dir)
-    to_ns = lambda s: int(  # noqa: E731
-        dt.datetime.fromisoformat(s).replace(tzinfo=dt.timezone.utc).timestamp()
-    ) * 1_000_000_000
-    lo, hi = to_ns("2024-01-03 00:00:00"), to_ns("2024-01-05 00:00:00")
-    if "ts_ns" in e.columns:
-        filtered = e.filter(F.col("ts_ns").between(F.lit(lo), F.lit(hi)))
-    else:  # pre-normalized/native-timestamp source
-        filtered = e.filter(
-            F.col("ts").between(
-                F.lit("2024-01-03 00:00:00").cast("timestamp"),
-                F.lit("2024-01-05 00:00:00").cast("timestamp"),
-            )
+    return e.filter(
+        F.col("ts").between(
+            F.lit("2024-01-03 00:00:00").cast("timestamp"),
+            F.lit("2024-01-05 00:00:00").cast("timestamp"),
         )
-    return filtered.select(
+    ).select(
         "event_id", ts_ms("ts").alias("ts_ms"), "user_id", "event_type", "value"
     )
 

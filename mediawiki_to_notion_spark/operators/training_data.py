@@ -10,6 +10,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from mediawiki_to_notion_spark.operators.dedup_ext import (
+    _rebuild_excising_spans,
+    _token_windows,
+    _windows_sql,
+)
 from mediawiki_to_notion_spark.operators.registry import register
 from mediawiki_to_notion_spark.sources.tables import load_table
 
@@ -741,20 +746,7 @@ DECON_CUT_W = 3   # tokens per cut window (the eval-overlap trigram unit)
 
 
 def _decon_cut_oracle() -> str:
-    from mediawiki_to_notion_spark.functions import hashing as H
-
-    win_hash = H.token_hash60_sql(
-        f"array_to_string(t[u.i+1 : u.i+{DECON_CUT_W}], ' ')")
-    return f"""
-    WITH toks AS (
-      SELECT doc_id, string_split(text, ' ') AS t
-      FROM documents
-      WHERE len(string_split(text, ' ')) >= {DECON_CUT_W}
-    ), win AS (
-      SELECT doc_id, u.i AS p, {win_hash} AS h
-      FROM toks,
-           LATERAL (SELECT unnest(range(0, len(t) - {DECON_CUT_W} + 1)) AS i) u
-    ), bench AS (
+    return f"""{_windows_sql(DECON_CUT_W)}, bench AS (
       SELECT DISTINCT h FROM win WHERE doc_id < {DECON_BENCHMARK_DOCS}
     ), hits AS (
       SELECT w.doc_id, w.p
@@ -793,29 +785,13 @@ def decontaminate_span_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     preserves the rest of an otherwise-clean page — the surgical
     variant Lee et al. 2021 argue for, applied to eval overlap.
 
-    100 TB shape: the benchmark window-hash set is eval-suite-sized
-    and BROADCASTS; corpus windows join it on the 60-bit hash (8-byte
-    keys, no all-pairs anything); matched windows become per-doc cut
-    spans excised from the packed token arrays with array folds
-    (dedup_ext._rebuild_excising_spans) — no token-level shuffle."""
-    from mediawiki_to_notion_spark.functions import hashing as H
-    from mediawiki_to_notion_spark.plans.pipeline import ensure_parallelism
-
-    d = ensure_parallelism(load_table(spark, "documents", sf_dir))
-    toks = d.select("doc_id", F.split("text", " ").alias("t")).filter(
-        F.size("t") >= DECON_CUT_W
-    )
-    win = toks.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("t") - DECON_CUT_W),
-                lambda i: H.token_hash60(
-                    F.concat_ws(" ", F.slice("t", i + 1, DECON_CUT_W))
-                ),
-            )
-        ).alias("p", "h"),
-    )
+    100 TB shape: the windows come from the exact-span family's
+    ``dedup_ext._token_windows``; the benchmark window-hash set is
+    eval-suite-sized and BROADCASTS; corpus windows join it on the
+    60-bit hash (8-byte keys, no all-pairs anything); matched windows
+    become per-doc cut spans for ``dedup_ext._rebuild_excising_spans``
+    — no token-level shuffle."""
+    toks, win = _token_windows(spark, sf_dir, DECON_CUT_W)
     bench = (
         win.filter(F.col("doc_id") < DECON_BENCHMARK_DOCS)
         .select("h").distinct()
@@ -824,13 +800,6 @@ def decontaminate_span_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
         win.filter(F.col("doc_id") >= DECON_BENCHMARK_DOCS)
         .join(F.broadcast(bench), "h")
     )
-    # r10 rebuild: matched windows become (start, end) spans merged per
-    # doc with array folds — no token-stream explode, no token-level
-    # join, no corpus-wide collect_list (dedup_ext._rebuild_excising_spans)
-    from mediawiki_to_notion_spark.operators.dedup_ext import (
-        _rebuild_excising_spans,
-    )
-
     spans = hits.select(
         "doc_id",
         F.col("p").alias("s"),

@@ -14,7 +14,10 @@ Delta/Parquet tables and the code below is unchanged.
 Caveat: a declared read does not check the file against the
 declaration.  A column the file lacks reads as all-null instead of
 failing, and an extra file column is silently dropped; a type the
-reader cannot convert fails only when the scan runs.
+reader cannot convert fails only when the scan runs.  One such type is
+a parquet TIMESTAMP(NANOS) `events.ts`: Spark has no nanosecond
+timestamp, so it fails against the declared TIMESTAMP_NTZ instead of
+reading as a long (the test data is TIMESTAMP(MICROS) at every scale).
 ``tests/test_declared_schemas.py`` pins every declaration to the
 footers at sf0.001, sf0.01 and sf0.1, so drift fails there first.
 """
@@ -57,22 +60,11 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def _ensure_confs(spark: SparkSession) -> None:
     """Session settings the engine depends on, applied defensively because
-    the driver harness may hand us a session it built itself.
-
-    - nanosAsLong: Spark has no nanosecond timestamp type, so a parquet
-      TIMESTAMP(NANOS) column reads as a long, which ``_normalize_times``
-      converts.  The testdata `events.ts` is not nanos: at every scale
-      factor it is INT64 TIMESTAMP(MICROS, isAdjustedToUTC=false), read
-      as TIMESTAMP_NTZ, which is what ``TABLE_SCHEMAS`` declares.  A nanos
-      `events.ts` fails against that declaration with a type mismatch
-      when the scan runs, so the conf and the long branch only serve a
-      nanos frame read without the declaration.
-    - UTC session timezone: keeps TIMESTAMP_NTZ → TIMESTAMP casts and
-      epoch-millis math identical to the DuckDB oracle (which treats naive
-      timestamps as UTC).
-    """
+    a caller may hand us a session it built itself: the UTC
+    session timezone keeps TIMESTAMP_NTZ → TIMESTAMP casts and
+    epoch-millis math identical to the DuckDB oracle (which treats naive
+    timestamps as UTC)."""
     try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     except Exception:
         pass
@@ -83,21 +75,6 @@ def _normalize_times(df: DataFrame) -> DataFrame:
     for f in df.schema.fields:
         if isinstance(f.dataType, T.TimestampNTZType):
             df = df.withColumn(f.name, F.col(f.name).cast("timestamp"))
-        elif f.name == "ts" and isinstance(f.dataType, T.LongType):
-            # nanos-as-long → truncate to microseconds (what DuckDB's
-            # TIMESTAMP does with parquet nanos as well).  The raw nanos
-            # column is kept as ts_ns: filters on the *computed* ts can't
-            # reach the parquet scan, so range predicates go on ts_ns
-            # (see relational.time_range_scan) and prune at the source.
-            # integer division, NOT floor(x / 1000): the double division
-            # rounds at ~1.7e15 µs magnitudes and lands a microsecond off
-            df = (
-                df.withColumn("ts_ns", F.col(f.name))
-                .withColumn(
-                    f.name,
-                    F.timestamp_micros(F.expr(f"{f.name} div 1000")),
-                )
-            )
     return df
 
 

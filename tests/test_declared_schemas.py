@@ -85,3 +85,31 @@ def test_declared_reads_start_no_spark_job(spark, staged_tables):
         sc.setLocalProperty("spark.job.description", None)
     assert after == before
     assert len(control) > len(after)
+
+
+@pytest.mark.parametrize("nanos_as_long", ["false", "true"])
+def test_nanos_events_ts_fails_loudly(spark, tmp_path, nanos_as_long):
+    """Spark has no nanosecond timestamp, and `events.ts` is declared
+    TIMESTAMP_NTZ: a parquet TIMESTAMP(NANOS) `ts` must fail the scan,
+    never read as a long or as a wrong time, whatever the session's
+    legacy nanos-as-long setting."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table({
+        "event_id": pa.array([1], pa.int64()),
+        "ts": pa.array([dt.datetime(2024, 1, 3, 12)], pa.timestamp("ns")),
+        "user_id": pa.array([7], pa.int64()),
+        "event_type": pa.array(["click"]),
+        "value": pa.array([1.0]),
+        "props": pa.array(["{}"]),
+    }), str(tmp_path / "events.parquet"))
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.set(conf, nanos_as_long)
+    try:
+        with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+            load_table(spark, "events", str(tmp_path)).collect()
+    finally:
+        spark.conf.unset(conf)

@@ -17,10 +17,9 @@ import os
 import pytest
 
 from mediawiki_to_notion_spark.operators import QUERIES, load_all
+from mediawiki_to_notion_spark.operators.dedup_ext import SPAN_W
 
 load_all()
-
-SPAN_W = 8  # must match operators.dedup_ext.SPAN_W
 
 # Enough tokens that doc 1's duplicated window sits at p >= 1_000_000:
 # under the old composite key, doc1's key (1*1M + 1_000_050) exceeds

@@ -203,11 +203,15 @@ def test_bm25_probes_before_shuffle_and_takes_ordered(spark):
 
 
 def test_span_dedup_is_equi_join_only(spark):
-    """The duplicated-window match must be a hash equi-join on the
-    window hash — never a nested-loop pair comparison."""
-    plan = plan_of(spark, "dedup_duplicate_ngram_spans")
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
+    """Every exact-span query matches windows (and, for the token-exact
+    chain, window pairs) by a hash equi-join on the window hash —
+    never a nested-loop pair comparison."""
+    for name in ("dedup_duplicate_ngram_spans", "dedup_substring_spans_exact",
+                 "dedup_substring_spans_token_exact", "dedup_substring_cut",
+                 "dedup_substring_cut_exact", "decontaminate_span_cut"):
+        plan = plan_of(spark, name)
+        assert "BroadcastNestedLoopJoin" not in plan, name
+        assert "CartesianProduct" not in plan, name
 
 
 def test_semantic_dedup_broadcasts_codebook_and_blocks_pairs(spark):

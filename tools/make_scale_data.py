@@ -83,7 +83,6 @@ def main() -> None:
     from mediawiki_to_notion_spark.session import get_spark
 
     spark = get_spark("make_scale_data")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     os.makedirs(DST, exist_ok=True)
 
     # SCALE_TABLES=documents,embeddings restricts the build (the r8
