@@ -25,6 +25,7 @@ import argparse
 import os
 import sys
 
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from mediawiki_to_notion_spark.functions.gfm_convert import (
@@ -48,18 +49,22 @@ def _report_side_output(df, outdir: str, name: str, fmt,
     write — never collected), print only the first `limit` rows to stderr.
     The reference streams every warning to stderr
     (process-mw-dump.py:210-214), which at 100 TB is a driver OOM; the
-    full set lives in <outdir>/_warnings/<name> instead.  One row past
-    the limit tells whether anything overflows, so the full count (two
-    more Spark jobs) runs only when it does."""
+    full set lives in <outdir>/_warnings/<name> instead.  The write
+    itself counts the rows (an observed metric, no extra job), so the
+    first `limit` rows are read back only when there are any, and the
+    overflow line needs no count of its own."""
     path = os.path.join(outdir, "_warnings", name)
-    df.write.mode("overwrite").parquet(path)
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("n")) \
+        .write.mode("overwrite").parquet(path)
+    n = obs.get["n"]
+    if n == 0:
+        return
     persisted = df.sparkSession.read.schema(df.schema).parquet(path)
-    head = persisted.limit(limit + 1).collect()
-    for r in head[:limit]:
+    for r in persisted.limit(limit).collect():
         print(fmt(r), file=sys.stderr)
-    if len(head) > limit:
-        more = persisted.count() - limit
-        print(f"\t... {more} more in {path}", file=sys.stderr)
+    if n > limit:
+        print(f"\t... {n - limit} more in {path}", file=sys.stderr)
 
 
 def cmd_process_dump(args: argparse.Namespace) -> int:

@@ -111,7 +111,9 @@ class ParquetTable:
 
     # -- layout ---------------------------------------------------------------
 
-    def _bucket_expr(self) -> F.Column:
+    def bucket_expr(self) -> F.Column:
+        """Each row's bucket id, from its key columns.  A caller that
+        passes ``buckets=`` to ``upsert`` computes them with this."""
         # xxhash64 is total (nulls hash to the seed), so null keys land
         # deterministically; pmod keeps the id in [0, n_buckets)
         return F.pmod(F.xxhash64(*self.key_cols), F.lit(self.n_buckets))
@@ -120,7 +122,7 @@ class ParquetTable:
         """One Spark job: write df partitioned by bucket under commit n.
         Returns the bucket ids that received rows."""
         staging = os.path.join(self.path, "_staging", f"c{n}")
-        df.withColumn("_b", self._bucket_expr()) \
+        df.withColumn("_b", self.bucket_expr()) \
             .write.mode("overwrite").partitionBy("_b").parquet(staging)
         written: list[int] = []
         for name in os.listdir(staging):
@@ -237,11 +239,20 @@ class ParquetTable:
 
     def upsert(self, source: DataFrame,
                insert_only: bool = False,
-               update_cols: list[str] | None = None) -> None:
+               update_cols: list[str] | None = None,
+               buckets: list[int] | None = None) -> None:
         """MERGE: matched rows take source values (or are kept untouched
         when ``insert_only`` — the conditional-put idempotency of
         store_notion_blocks.py:136), unmatched source rows insert.  One
-        Spark job over ONLY the buckets the source's keys hash to."""
+        Spark job over ONLY the buckets the source's keys hash to.
+
+        ``buckets`` is for a caller that already knows those bucket ids
+        (``bucket_expr`` over the source, e.g. observed while an earlier
+        action forced it): the merge then skips the pass over the source
+        that finds them.  They must cover every source key; an empty
+        list means an empty source, and nothing is committed."""
+        if buckets is not None and not buckets:
+            return
         n_prev, mapping = self._latest()
         if not mapping:
             self.overwrite(self._align_to_schema(source))
@@ -249,8 +260,9 @@ class ParquetTable:
         # which buckets does this merge touch?  (bounded driver fetch:
         # at most n_buckets small ints)
         touched = sorted(
-            r[0] for r in
-            source.select(self._bucket_expr().alias("_b")).distinct().collect()
+            buckets if buckets is not None else
+            (r[0] for r in
+             source.select(self.bucket_expr().alias("_b")).distinct().collect())
         )
         target = self._read_buckets(mapping, touched)
         if target is None:

@@ -10,7 +10,7 @@ chunking artifact) and surface through `Observation` (batch) or
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 # counter names mirroring the reference's EMF metrics
@@ -19,6 +19,11 @@ PAGE_CONVERSIONS_OK = "SuccessfulPageConversions"
 PAGE_CONVERSIONS_FAIL = "UnsuccessfulPageConversions"
 BLOCK_UPLOADS_OK = "SuccessfulBlockUploads"
 BLOCK_UPLOADS_FAIL = "UnsuccessfulBlockUploads"
+# what one upload round's state transitions read off its forcing action
+PAGE_FAILURES = "PageFailures"
+BLOCK_BUCKETS = "BlockBuckets"
+PAGE_BUCKETS = "PageBuckets"
+PAGES_UPLOADING = "PagesUploading"
 
 
 def observe_store(blocks: DataFrame) -> tuple[DataFrame, Observation]:
@@ -39,12 +44,23 @@ def observe_conversion(converted: DataFrame,
     return out, obs
 
 
-def observe_upload(results: DataFrame) -> tuple[DataFrame, Observation]:
-    """Successful/Unsuccessful block-upload counters on the sink output."""
+def observe_upload(results: DataFrame, block_bucket: Column,
+                   page_bucket: Column) -> tuple[DataFrame, Observation]:
+    """Successful/Unsuccessful block-upload counters on the sink output,
+    plus what the round's state transitions need from the same pass:
+    the failures bound for the DLQ (a block whose own call failed, not
+    one skipped after it: one per failed page) and the bucket ids the
+    blocks upsert (successful blocks) and the pages upsert (every
+    page) touch, from each table's ``bucket_expr``."""
+    ok = F.col("ok")
     obs = Observation("upload_metrics")
     out = results.observe(
         obs,
-        F.count(F.when(F.col("ok"), 1)).alias(BLOCK_UPLOADS_OK),
-        F.count(F.when(~F.col("ok"), 1)).alias(BLOCK_UPLOADS_FAIL),
+        F.count(F.when(ok, 1)).alias(BLOCK_UPLOADS_OK),
+        F.count(F.when(~ok, 1)).alias(BLOCK_UPLOADS_FAIL),
+        F.count(F.when(~ok & ~F.col("error").startswith("skipped:"), 1))
+        .alias(PAGE_FAILURES),
+        F.collect_set(F.when(ok, block_bucket)).alias(BLOCK_BUCKETS),
+        F.collect_set(page_bucket).alias(PAGE_BUCKETS),
     )
     return out, obs

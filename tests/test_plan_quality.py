@@ -918,3 +918,19 @@ def test_replay_tables_broadcast_at_consumer_joins(spark):
         assert "SortMergeJoin" not in plan, name
         assert "BuildLeft" not in plan, name
         assert "BroadcastHashJoin" in plan, name
+
+
+@pytest.mark.parametrize("shards", [1, 2])
+def test_upload_arrangement_is_one_shuffle(spark, staged_tables, shards):
+    """The sink's input (pending blocks sharded and sorted for the upload
+    worker) plans one shuffle: the shard exchange also clusters each
+    batch for the n_pending/row_number window, whose sort is the shard
+    sort.  The only other exchange broadcasts the pages table."""
+    from mediawiki_to_notion_spark.streaming.upload import pending_blocks
+
+    df = pending_blocks(spark, staged_tables, max_blocks=50, shards=shards)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "REPARTITION_BY_NUM" in plan and "Window [" in plan
+    assert plan.count("BroadcastExchange ") == 1
+    assert plan.count("Exchange ") == 2
+    assert plan.count("Sort [") == 1
