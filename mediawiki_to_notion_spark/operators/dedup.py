@@ -22,7 +22,7 @@ from __future__ import annotations
 import os
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from mediawiki_to_notion_spark.functions import hashing as H
@@ -305,62 +305,24 @@ _CALIB_SQL = f"""
 
 _SHINGLES_CALIB_SQL = _SHINGLES_SQL_TMPL.format(src="calib")
 
-_MINHASH_SQL = f"""
-    sigs AS (
-      SELECT doc_id, {', '.join(H.minhash_agg_sql('h'))}
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      {' UNION ALL '.join(
-        f"SELECT doc_id, {b} AS band, {H.band_signature_sql(b)} AS sig FROM sigs"
-        for b in range(H.N_BANDS)
-      )}
-    ),
-    cands AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-    )
-"""
+def _minhash_pairs(d: DataFrame, pair: Column,
+                   threshold: float = JACCARD_THRESHOLD) -> DataFrame:
+    """(doc_a, doc_b, jaccard): the document pairs admitted by ``pair``
+    that collide on at least one MinHash(16) LSH band (4 bands × 4
+    rows) and whose exact shingle Jaccard reaches ``threshold``.
+    ``pair`` is a Column over ``a.doc_id`` and ``b.doc_id``, ANDed into
+    the candidate join: it orders the pair (``a < b``) and restricts it
+    to the caller's pair population (an arriving batch, eval × corpus).
 
-
-@register(
-    "dedup_minhash_lsh",
-    oracle=f"""
-    WITH {_SHINGLES_SQL},
-    {_MINHASH_SQL},
-    verified AS (
-      SELECT c.doc_a, c.doc_b, count(*) AS n_common
-      FROM cands c
-      JOIN sh a ON a.doc_id = c.doc_a
-      JOIN sh b ON b.doc_id = c.doc_b AND b.h = a.h
-      GROUP BY c.doc_a, c.doc_b
-    )
-    SELECT v.doc_a, v.doc_b,
-           n_common::DOUBLE / (x.n + y.n - n_common) AS jaccard
-    FROM verified v
-    JOIN sizes x ON v.doc_a = x.doc_id JOIN sizes y ON v.doc_b = y.doc_id
-    WHERE n_common::DOUBLE / (x.n + y.n - n_common) >= {JACCARD_THRESHOLD}
-    """,
-)
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash(16) + LSH(4 bands × 4 rows) candidate generation, then
-    exact-Jaccard verification of candidates only.
-
-    The scale path: ONE shuffle (groupBy doc_id) yields the minhash
-    signature, the shingle count, and the shingle-hash set per document;
-    banding is a narrow posexplode, candidates come from an equi-join on
-    (band, sig), and verification is `array_intersect` over the carried
-    hash sets — the exploded shingle table is never shuffled again and
-    no all-pairs comparison ever materializes."""
-    d = load_table(spark, "documents", sf_dir)
-    # narrow per-doc stats (r10, guide §2.4 — see _doc_minhash_stats:
-    # the explode + groupBy(doc_id) re-aggregation and its corpus-scale
-    # Exchange are gone), MATERIALIZED once: the three consumers (bands
-    # — itself self-joined — plus the x/y verify sides) are separate
-    # plan subtrees and ReuseExchange does NOT fire across them; one
-    # row per doc (count, hash set, 16 minhash values), so the
-    # checkpoint is corpus-cardinality but narrow
+    Scale shape: the per-doc stats are narrow (no shuffle, see
+    _doc_minhash_stats) and MATERIALIZED once — their three consumers
+    (the bands, themselves self-joined, and the x/y verify sides) are
+    separate plan subtrees and ReuseExchange does not fire across them;
+    one row per doc, so the checkpoint is corpus-cardinality but
+    narrow.  Banding is a narrow posexplode, candidates come from an
+    equi-join on (band, sig), and verification is ``array_intersect``
+    over the carried hash sets — the exploded shingle table is never
+    shuffled and no all-pairs comparison ever materializes."""
     stats = _doc_minhash_stats(d).localCheckpoint()
     bands = stats.select(
         "doc_id",
@@ -370,8 +332,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = bands.alias("a")
     b = bands.alias("b")
     cands = (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.sig") == F.col("b.sig"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
+        a.join(b, (F.col("a.band") == F.col("b.band"))
+               & (F.col("a.sig") == F.col("b.sig")) & pair)
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
@@ -383,8 +345,63 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         cands.join(x, F.col("doc_a") == F.col("x.doc_id"))
         .join(y, F.col("doc_b") == F.col("y.doc_id"))
         .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+        .filter(F.col("jaccard") >= threshold)
     )
+
+
+_SIGS_SQL = f"""
+    sigs AS (
+      SELECT doc_id, {', '.join(H.minhash_agg_sql('h'))}
+      FROM sh GROUP BY doc_id
+    )
+"""
+
+
+def _minhash_pairs_sql(pair: str, threshold: float = JACCARD_THRESHOLD) -> str:
+    """The DuckDB twin of :func:`_minhash_pairs`: CTEs over
+    ``_SHINGLES_SQL``'s ``sh``/``sizes`` ending in ``dup(doc_a, doc_b,
+    jaccard)``; ``pair`` is SQL over ``a.doc_id``/``b.doc_id``."""
+    bands = " UNION ALL ".join(
+        f"SELECT doc_id, {b} AS band, {H.band_signature_sql(b)} AS sig FROM sigs"
+        for b in range(H.N_BANDS)
+    )
+    return f"""{_SIGS_SQL},
+    bands AS ({bands}),
+    cands AS (
+      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+      FROM bands a JOIN bands b ON a.band = b.band AND a.sig = b.sig AND {pair}
+    ),
+    verified AS (
+      SELECT c.doc_a, c.doc_b, count(*) AS n_common
+      FROM cands c
+      JOIN sh a ON a.doc_id = c.doc_a
+      JOIN sh b ON b.doc_id = c.doc_b AND b.h = a.h
+      GROUP BY c.doc_a, c.doc_b
+    ),
+    dup AS (
+      SELECT v.doc_a, v.doc_b,
+             n_common::DOUBLE / (x.n + y.n - n_common) AS jaccard
+      FROM verified v
+      JOIN sizes x ON v.doc_a = x.doc_id JOIN sizes y ON v.doc_b = y.doc_id
+      WHERE n_common::DOUBLE / (x.n + y.n - n_common) >= {threshold}
+    )
+"""
+
+
+_LSH_PAIRS_SQL = f"""{_SHINGLES_SQL},
+    {_minhash_pairs_sql("a.doc_id < b.doc_id")}"""
+
+
+@register(
+    "dedup_minhash_lsh",
+    oracle=f"WITH {_LSH_PAIRS_SQL} SELECT doc_a, doc_b, jaccard FROM dup",
+)
+def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash(16) + LSH(4 bands × 4 rows) candidate generation, then
+    exact-Jaccard verification of candidates only: every pair over the
+    threshold (see :func:`_minhash_pairs` for the scale shape)."""
+    d = load_table(spark, "documents", sf_dir)
+    return _minhash_pairs(d, F.col("a.doc_id") < F.col("b.doc_id"))
 
 
 INCR_NEW_MOD = 4   # doc_id % 5 == 4 plays the "newly arrived batch" (~20%)
@@ -394,25 +411,12 @@ INCR_NEW_MOD = 4   # doc_id % 5 == 4 plays the "newly arrived batch" (~20%)
     "dedup_minhash_incremental",
     oracle=f"""
     WITH {_SHINGLES_SQL},
-    {_MINHASH_SQL},
-    cands_inc AS (
-      SELECT doc_a, doc_b FROM cands
-      WHERE doc_a % 5 = {INCR_NEW_MOD} OR doc_b % 5 = {INCR_NEW_MOD}
-    ),
-    verified AS (
-      SELECT c.doc_a, c.doc_b, count(*) AS n_common
-      FROM cands_inc c
-      JOIN sh a ON a.doc_id = c.doc_a
-      JOIN sh b ON b.doc_id = c.doc_b AND b.h = a.h
-      GROUP BY c.doc_a, c.doc_b
-    )
-    SELECT v.doc_a, v.doc_b,
-           n_common::DOUBLE / (x.n + y.n - n_common) AS jaccard,
-           v.doc_a % 5 = {INCR_NEW_MOD} AND v.doc_b % 5 = {INCR_NEW_MOD}
-             AS both_new
-    FROM verified v
-    JOIN sizes x ON v.doc_a = x.doc_id JOIN sizes y ON v.doc_b = y.doc_id
-    WHERE n_common::DOUBLE / (x.n + y.n - n_common) >= {JACCARD_THRESHOLD}
+    {_minhash_pairs_sql(
+        f"a.doc_id < b.doc_id AND (a.doc_id % 5 = {INCR_NEW_MOD}"
+        f" OR b.doc_id % 5 = {INCR_NEW_MOD})")}
+    SELECT doc_a, doc_b, jaccard,
+           doc_a % 5 = {INCR_NEW_MOD} AND doc_b % 5 = {INCR_NEW_MOD} AS both_new
+    FROM dup
     """,
 )
 def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -420,7 +424,7 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``doc_id % 5 == {INCR_NEW_MOD}``, ~20% of the corpus) is deduped
     against the already-indexed corpus AND within itself, while
     old-vs-old pairs — the quadratic bulk a nightly full dedup would
-    redo — are excluded BEFORE verification, at the candidate stage.
+    redo — are excluded BEFORE verification, in the candidate join.
 
     This is the production dedup shape: the corpus's band signatures are
     an *index* (here recomputed from the static table; in a pipeline
@@ -430,39 +434,11 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     hits against the index — the two take different actions (drop vs
     skip-ingest)."""
     d = load_table(spark, "documents", sf_dir)
-    # narrow, shuffle-free stats materialized once — same
-    # non-firing-ReuseExchange finding as dedup_minhash_lsh (r10,
-    # guide §2.4; see _doc_minhash_stats)
-    stats = _doc_minhash_stats(d).localCheckpoint()
-    bands = stats.select(
-        "doc_id",
-        F.posexplode(F.array(*[H.band_signature(b) for b in range(H.N_BANDS)]))
-        .alias("band", "sig"),
-    )
-    a = bands.alias("a")
-    b = bands.alias("b")
     is_new = lambda c: F.col(c) % 5 == INCR_NEW_MOD  # noqa: E731
-    cands = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.sig") == F.col("b.sig"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .filter(is_new("a.doc_id") | is_new("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    x = stats.select("doc_id", "n", "hs").alias("x")
-    y = stats.select("doc_id", "n", "hs").alias("y")
-    n_common = F.size(F.array_intersect(F.col("x.hs"), F.col("y.hs")))
-    jac = n_common.cast("double") / (F.col("x.n") + F.col("y.n") - n_common)
-    return (
-        cands.join(x, F.col("doc_a") == F.col("x.doc_id"))
-        .join(y, F.col("doc_b") == F.col("y.doc_id"))
-        .select(
-            "doc_a", "doc_b", jac.alias("jaccard"),
-            (is_new("doc_a") & is_new("doc_b")).alias("both_new"),
-        )
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-    )
+    pairs = _minhash_pairs(d, (F.col("a.doc_id") < F.col("b.doc_id"))
+                           & (is_new("a.doc_id") | is_new("b.doc_id")))
+    return pairs.select("doc_a", "doc_b", "jaccard",
+                        (is_new("doc_a") & is_new("doc_b")).alias("both_new"))
 
 
 SIMHASH_WIDE_BITS = 48   # Manku-grade fingerprint width (fits token_hash60)
@@ -1453,36 +1429,32 @@ def dedup_fuzzy_connectivity_certificate(spark: SparkSession,
     )
 
 
-@register(
-    "dedup_connected_components",
-    oracle=f"""
-    WITH RECURSIVE {_SHINGLES_SQL},
-    {_MINHASH_SQL},
-    verified AS (
-      SELECT c.doc_a, c.doc_b, count(*) AS n_common
-      FROM cands c
-      JOIN sh a ON a.doc_id = c.doc_a
-      JOIN sh b ON b.doc_id = c.doc_b AND b.h = a.h
-      GROUP BY c.doc_a, c.doc_b
-    ),
-    dup_pairs AS (
-      SELECT v.doc_a, v.doc_b
-      FROM verified v
-      JOIN sizes x ON v.doc_a = x.doc_id JOIN sizes y ON v.doc_b = y.doc_id
-      WHERE n_common::DOUBLE / (x.n + y.n - n_common) >= {JACCARD_THRESHOLD}
-    ),
+# the DuckDB connected-components labelling over the ``dup`` pairs of
+# _minhash_pairs_sql: WITH RECURSIVE closure from every document, so
+# isolated documents label themselves
+_CC_LABELS_SQL = """
     edges AS (
-      SELECT doc_a AS a, doc_b AS b FROM dup_pairs
-      UNION ALL SELECT doc_b, doc_a FROM dup_pairs
+      SELECT doc_a AS a, doc_b AS b FROM dup
+      UNION ALL SELECT doc_b, doc_a FROM dup
     ),
     reach(src, node) AS (
       SELECT doc_id, doc_id FROM documents
       UNION
       SELECT r.src, e.b FROM reach r JOIN edges e ON e.a = r.node
+    ),
+    labels AS (
+      SELECT src AS doc_id, min(node) AS component FROM reach GROUP BY src
     )
-    SELECT src AS doc_id, min(node) AS component,
-           src = min(node) AS is_representative
-    FROM reach GROUP BY src
+"""
+
+
+@register(
+    "dedup_connected_components",
+    oracle=f"""
+    WITH RECURSIVE {_LSH_PAIRS_SQL},
+    {_CC_LABELS_SQL}
+    SELECT doc_id, component, doc_id = component AS is_representative
+    FROM labels
     """,
 )
 def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1613,33 +1585,8 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_survivorship",
     oracle=f"""
-    WITH RECURSIVE {_SHINGLES_SQL},
-    {_MINHASH_SQL},
-    verified AS (
-      SELECT c.doc_a, c.doc_b, count(*) AS n_common
-      FROM cands c
-      JOIN sh a ON a.doc_id = c.doc_a
-      JOIN sh b ON b.doc_id = c.doc_b AND b.h = a.h
-      GROUP BY c.doc_a, c.doc_b
-    ),
-    dup_pairs AS (
-      SELECT v.doc_a, v.doc_b
-      FROM verified v
-      JOIN sizes x ON v.doc_a = x.doc_id JOIN sizes y ON v.doc_b = y.doc_id
-      WHERE n_common::DOUBLE / (x.n + y.n - n_common) >= {JACCARD_THRESHOLD}
-    ),
-    edges AS (
-      SELECT doc_a AS a, doc_b AS b FROM dup_pairs
-      UNION ALL SELECT doc_b, doc_a FROM dup_pairs
-    ),
-    reach(src, node) AS (
-      SELECT doc_id, doc_id FROM documents
-      UNION
-      SELECT r.src, e.b FROM reach r JOIN edges e ON e.a = r.node
-    ),
-    labels AS (
-      SELECT src AS doc_id, min(node) AS component FROM reach GROUP BY src
-    )
+    WITH RECURSIVE {_LSH_PAIRS_SQL},
+    {_CC_LABELS_SQL}
     SELECT l.doc_id, l.component,
            first_value(l.doc_id) OVER (
              PARTITION BY l.component
@@ -1685,23 +1632,100 @@ def dedup_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "dedup_minhash_estimate_quality",
-    oracle=f"""
+# --- MinHash estimator calibration (the approximation audits) ----------
+
+def _calibration_pairs(spark: SparkSession,
+                       sf_dir: str) -> tuple[DataFrame, Column]:
+    """Every pair of calibration-sample documents sharing ≥ 1 shingle,
+    joined with both documents' MinHash stats (``sa``/``sb``: ``n`` and
+    ``mh0``..``mh15``), and the Column of the pair's exact shingle
+    Jaccard.  It is an expression, not a projected column, so each
+    error expression inlines it and the plan gets no extra Project
+    (b-bit reads it twice).
+
+    Scale shape: the ~2^11-doc deterministic calibration sample
+    (:func:`_calibration_sample`; the whole corpus below ~4k docs, so
+    every gate-SF row is unsampled) — a mean-error audit needs a
+    large stable pair population, not the quadratic pair set (the r7
+    second-decade soak measured the unsampled all-co-shingled-pairs
+    shape at exponent 1.27, 246 s at sf10).  The hashed shingles are
+    materialized once (r10): the stats groupBy and BOTH
+    sides of the pair self-join are separate plan subtrees, so the
+    CPU-heavy shingle expansion otherwise ran 3x; the checkpoint is
+    sample-bounded.  One shingle-keyed equi-join generates the pairs
+    (∝ co-occurrence, not |sample|²); the stats join in from the single
+    groupBy(doc_id) shuffle."""
+    d = _calibration_sample(load_table(spark, "documents", sf_dir))
+    sh = _hashed_shingles(d).localCheckpoint()
+    stats = sh.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n"),
+        *H.minhash_agg_columns(F.col("h")),
+    )
+    sa, sb = stats.alias("sa"), stats.alias("sb")
+    exact = F.col("n_common").cast("double") / (
+        F.col("sa.n") + F.col("sb.n") - F.col("n_common")
+    )
+    pairs = (
+        _shingle_pairs(sh)
+        .join(sa, F.col("doc_a") == F.col("sa.doc_id"))
+        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
+    )
+    return pairs, exact
+
+
+def _signature_match(bits: int | None = None) -> Column:
+    """The MinHash Jaccard estimate of a ``_calibration_pairs`` row: the
+    share of the 16 permutations on which ``sa`` and ``sb`` agree — on
+    their lowest ``bits`` bits only, when given (b-bit minwise hashing:
+    ``mh % 2^bits`` of the already-computed signatures, free in both
+    engines)."""
+    low = (lambda c: c) if bits is None else (lambda c: c % (1 << bits))
+    matching = sum(
+        F.when(low(F.col(f"sa.mh{i}")) == low(F.col(f"sb.mh{i}")), 1).otherwise(0)
+        for i in range(H.N_MINHASH)
+    )
+    return matching / float(H.N_MINHASH)
+
+
+def _mean_abs_err(err: str) -> Column:
+    """Mean of the per-pair errors ``err`` (each rounded to 6 dp),
+    DECIMAL-summed so the mean does not depend on accumulation order,
+    rounded to 6 dp."""
+    return F.round(
+        F.sum(F.col(err).cast("decimal(18,6)")).cast("double")
+        / F.count(F.lit(1)), 6,
+    )
+
+
+def _signature_match_sql(bits: int | None = None) -> str:
+    low = "" if bits is None else f" % {1 << bits}"
+    terms = " + ".join(
+        f"(CASE WHEN sa.mh{i}{low} = sb.mh{i}{low} THEN 1 ELSE 0 END)"
+        for i in range(H.N_MINHASH)
+    )
+    return f"({terms}) / {float(H.N_MINHASH)}"
+
+
+def _mean_abs_err_sql(err: str) -> str:
+    return (f"round(CAST(SUM(CAST(round(abs({err}), 6) AS DECIMAL(18,6)))"
+            " AS DOUBLE) / count(*), 6)")
+
+
+def _calibration_oracle(estimates: str, select: str) -> str:
+    """The DuckDB twin of the audits: ``estimates`` are ``scored``
+    columns over ``sa``/``sb`` (beside ``exact``), ``select`` the
+    aggregates that follow ``n_pairs``."""
+    return f"""
     WITH {_CALIB_SQL},
     {_SHINGLES_CALIB_SQL},
-    {_MINHASH_SQL},
+    {_SIGS_SQL},
     pairs AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
       FROM sh a JOIN sh b ON a.h = b.h AND a.doc_id < b.doc_id
       GROUP BY a.doc_id, b.doc_id
     ),
     scored AS (
-      SELECT p.doc_a, p.doc_b,
-             ({' + '.join(
-                 f'(CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END)'
-                 for i in range(H.N_MINHASH))}) / {float(H.N_MINHASH)}
-               AS est,
+      SELECT {estimates},
              p.n_common::DOUBLE / (x.n + y.n - p.n_common) AS exact
       FROM pairs p
       JOIN sigs sa ON p.doc_a = sa.doc_id
@@ -1709,66 +1733,33 @@ def dedup_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
       JOIN sizes x ON p.doc_a = x.doc_id
       JOIN sizes y ON p.doc_b = y.doc_id
     )
-    SELECT count(*) AS n_pairs,
-           round(CAST(SUM(CAST(round(abs(est - exact), 6) AS DECIMAL(18,6)))
-                      AS DOUBLE) / count(*), 6) AS mean_abs_err,
-           max(round(abs(est - exact), 6)) AS max_abs_err
+    SELECT count(*) AS n_pairs, {select}
     FROM scored
-    """,
+    """
+
+
+@register(
+    "dedup_minhash_estimate_quality",
+    oracle=_calibration_oracle(
+        f"{_signature_match_sql()} AS est",
+        f"""{_mean_abs_err_sql("est - exact")} AS mean_abs_err,
+           max(round(abs(est - exact), 6)) AS max_abs_err""",
+    ),
 )
 def dedup_minhash_estimate_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Estimator-quality measurement for MinHash: over every document
     pair sharing ≥1 shingle, compare the signature Jaccard estimate
-    (matching permutations / {H.N_MINHASH}) against the exact Jaccard —
-    the calibration check that tells you whether {H.N_MINHASH}
-    permutations and the LSH band layout are adequate for the corpus's
-    similarity distribution (completes the approximation-audit trio
-    with similarity_lsh_recall and dedup_cosine_lsh_recall).  Runs on
-    the ~2^11-doc deterministic calibration sample
-    (:func:`_calibration_sample` — identical to unsampled below ~4k
-    docs, so every driver gate row is unchanged): a mean-error audit
-    needs a large stable pair population, not the full quadratic
-    pair set (second-decade soak finding, exponent 1.27 unsampled).
-
-    Scale shape: one shingle-keyed equi-join generates the evaluated
-    pairs (∝ co-occurrence, not |corpus|²); signatures and sizes join
-    in from the single groupBy(doc_id) shuffle; per-pair errors are
-    6-dp rounded then decimal-summed, so the mean is
-    accumulation-order exact."""
-    d = _calibration_sample(load_table(spark, "documents", sf_dir))
-    # r10 (guide §2.4): materialize the hashed shingles once — the
-    # stats groupBy and BOTH sides of the pair self-join are separate
-    # plan subtrees, so the shingle expansion (the CPU-heavy narrow
-    # stage) previously ran 3x per query; calibration-sample-bounded,
-    # so the checkpoint is small by construction.
-    sh = _hashed_shingles(d).localCheckpoint()
-    stats = sh.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n"),
-        *H.minhash_agg_columns(F.col("h")),
-    )
-    pairs = _shingle_pairs(sh)
-    sa = stats.alias("sa")
-    sb = stats.alias("sb")
-    matching = sum(
-        F.when(F.col(f"sa.mh{i}") == F.col(f"sb.mh{i}"), 1).otherwise(0)
-        for i in range(H.N_MINHASH)
-    )
-    est = matching / float(H.N_MINHASH)
-    exact = F.col("n_common").cast("double") / (
-        F.col("sa.n") + F.col("sb.n") - F.col("n_common")
-    )
-    err = F.round(F.abs(est - exact), 6)
-    scored = (
-        pairs.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .select(err.alias("err"))
-    )
-    return scored.agg(
+    (matching permutations / 16) against the exact Jaccard — the
+    calibration check that tells you whether 16 permutations and the
+    LSH band layout are adequate for the corpus's similarity
+    distribution (completes the approximation-audit trio with
+    similarity_lsh_recall and dedup_cosine_lsh_recall).  Pairs, sample
+    and scale shape: :func:`_calibration_pairs`."""
+    pairs, exact = _calibration_pairs(spark, sf_dir)
+    err = F.round(F.abs(_signature_match() - exact), 6)
+    return pairs.select(err.alias("err")).agg(
         F.count(F.lit(1)).alias("n_pairs"),
-        F.round(
-            F.sum(F.col("err").cast("decimal(18,6)")).cast("double")
-            / F.count(F.lit(1)), 6,
-        ).alias("mean_abs_err"),
+        _mean_abs_err("err").alias("mean_abs_err"),
         F.max("err").alias("max_abs_err"),
     )
 
@@ -1822,120 +1813,41 @@ BBIT_C = 1.0 / BBIT_MOD          # accidental-collision rate (r->0 form)
 
 @register(
     "dedup_minhash_b_bit",
-    oracle=f"""
-    WITH {_CALIB_SQL},
-    {_SHINGLES_CALIB_SQL},
-    sigs AS (
-      SELECT doc_id, {', '.join(H.minhash_agg_sql('h'))}
-      FROM sh GROUP BY doc_id
-    ),
-    pairs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-      FROM sh a JOIN sh b ON a.h = b.h AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    ),
-    scored AS (
-      SELECT
-        ({' + '.join(f'(CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END)'
-                     for i in range(H.N_MINHASH))}) / {float(H.N_MINHASH)}
-          AS est_full,
-        (({' + '.join(
-            f'(CASE WHEN sa.mh{i} % {BBIT_MOD} = sb.mh{i} % {BBIT_MOD} '
-            'THEN 1 ELSE 0 END)' for i in range(H.N_MINHASH))})
-         / {float(H.N_MINHASH)} - {BBIT_C}) / {1.0 - BBIT_C} AS est_b,
-        p.n_common::DOUBLE / (x.n + y.n - p.n_common) AS exact
-      FROM pairs p
-      JOIN sigs sa ON p.doc_a = sa.doc_id
-      JOIN sigs sb ON p.doc_b = sb.doc_id
-      JOIN sizes x ON p.doc_a = x.doc_id
-      JOIN sizes y ON p.doc_b = y.doc_id
-    )
-    SELECT count(*) AS n_pairs,
-           round(CAST(SUM(CAST(round(abs(est_full - exact), 6)
-                               AS DECIMAL(18,6))) AS DOUBLE)
-                 / count(*), 6) AS mean_abs_err_full,
-           round(CAST(SUM(CAST(round(abs(est_b - exact), 6)
-                               AS DECIMAL(18,6))) AS DOUBLE)
-                 / count(*), 6) AS mean_abs_err_bbit,
+    oracle=_calibration_oracle(
+        f"""{_signature_match_sql()} AS est_full,
+        ({_signature_match_sql(BBIT_B)} - {BBIT_C}) / {1.0 - BBIT_C} AS est_b""",
+        f"""{_mean_abs_err_sql("est_full - exact")} AS mean_abs_err_full,
+           {_mean_abs_err_sql("est_b - exact")} AS mean_abs_err_bbit,
            CAST({BBIT_B} AS BIGINT) AS b_bits,
            CAST(31 * {H.N_MINHASH} AS BIGINT) AS sig_bits_full,
-           CAST({BBIT_B} * {H.N_MINHASH} AS BIGINT) AS sig_bits_bbit
-    FROM scored
-    """,
+           CAST({BBIT_B} * {H.N_MINHASH} AS BIGINT) AS sig_bits_bbit""",
+    ),
 )
 def dedup_minhash_b_bit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """b-bit minwise hashing (Li & Koenig, WWW 2010): store only the
-    lowest {BBIT_B} bits of each of the {H.N_MINHASH} minhash values —
-    a {31 // BBIT_B}x signature compression — and recover Jaccard with
-    the bias-corrected estimator J = (P_b - C) / (1 - C), C = 2^-b the
-    accidental low-bit collision rate (the paper's r->0 simplification;
-    exact C depends on the set-size ratios, a documented approximation).
-    The query measures what the compression costs: mean |estimate -
-    exact Jaccard| for the full 31-bit signatures vs the {BBIT_B}-bit
-    ones over every co-shingled pair, plus the stored-bits accounting.
+    lowest 4 bits of each of the 16 minhash values — a 7x signature
+    compression — and recover Jaccard with the bias-corrected estimator
+    J = (P_b - C) / (1 - C), C = 2^-b the accidental low-bit collision
+    rate (the paper's r->0 simplification; exact C depends on the
+    set-size ratios, a documented approximation).  The query measures
+    what the compression costs: mean |estimate - exact Jaccard| for the
+    full 31-bit signatures vs the 4-bit ones over every co-shingled
+    pair of :func:`_calibration_pairs`, plus the stored-bits
+    accounting.
 
     At 100 TB the signature table IS the working set of incremental
     dedup (dedup_minhash_incremental keeps it resident) — shrinking it
-    {31 // BBIT_B}x changes what fits in executor memory, and this
-    calibration row is the evidence the shrink keeps the banding
-    threshold usable.
-
-    Scale shape: identical to dedup_minhash_estimate_quality, incl.
-    the ~2^11-doc deterministic calibration sample (the r7
-    second-decade soak measured the UNSAMPLED all-co-shingled-pairs
-    shape at exponent 1.27 / 246 s at sf10 — a calibration mean needs
-    a stable pair population, not the quadratic pair set; below ~4k
-    docs the sample is the whole corpus, so gate rows are unchanged).
-    Pairs come from the shingle equi-join, signatures from the single
-    groupBy(doc_id), per-pair errors 6-dp rounded then DECIMAL-summed;
-    low-bit extraction is `mh % {BBIT_MOD}` on already-computed
-    signatures, free in both engines."""
-    d = _calibration_sample(load_table(spark, "documents", sf_dir))
-    # r10 (guide §2.4): materialize the hashed shingles once — the
-    # stats groupBy and BOTH sides of the pair self-join are separate
-    # plan subtrees, so the shingle expansion (the CPU-heavy narrow
-    # stage) previously ran 3x per query; calibration-sample-bounded,
-    # so the checkpoint is small by construction.
-    sh = _hashed_shingles(d).localCheckpoint()
-    stats = sh.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n"),
-        *H.minhash_agg_columns(F.col("h")),
-    )
-    pairs = _shingle_pairs(sh)
-    sa, sb = stats.alias("sa"), stats.alias("sb")
-    match_full = sum(
-        F.when(F.col(f"sa.mh{i}") == F.col(f"sb.mh{i}"), 1).otherwise(0)
-        for i in range(H.N_MINHASH)
-    )
-    match_b = sum(
-        F.when(
-            F.col(f"sa.mh{i}") % BBIT_MOD == F.col(f"sb.mh{i}") % BBIT_MOD, 1
-        ).otherwise(0)
-        for i in range(H.N_MINHASH)
-    )
-    est_full = match_full / float(H.N_MINHASH)
-    est_b = (match_b / float(H.N_MINHASH) - BBIT_C) / (1.0 - BBIT_C)
-    exact = F.col("n_common").cast("double") / (
-        F.col("sa.n") + F.col("sb.n") - F.col("n_common")
-    )
-    scored = (
-        pairs.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .select(
-            F.round(F.abs(est_full - exact), 6).alias("err_full"),
-            F.round(F.abs(est_b - exact), 6).alias("err_b"),
-        )
-    )
-    return scored.agg(
+    7x changes what fits in executor memory, and this calibration row
+    is the evidence the shrink keeps the banding threshold usable."""
+    pairs, exact = _calibration_pairs(spark, sf_dir)
+    est_b = (_signature_match(BBIT_B) - BBIT_C) / (1.0 - BBIT_C)
+    return pairs.select(
+        F.round(F.abs(_signature_match() - exact), 6).alias("err_full"),
+        F.round(F.abs(est_b - exact), 6).alias("err_b"),
+    ).agg(
         F.count(F.lit(1)).alias("n_pairs"),
-        F.round(
-            F.sum(F.col("err_full").cast("decimal(18,6)")).cast("double")
-            / F.count(F.lit(1)), 6,
-        ).alias("mean_abs_err_full"),
-        F.round(
-            F.sum(F.col("err_b").cast("decimal(18,6)")).cast("double")
-            / F.count(F.lit(1)), 6,
-        ).alias("mean_abs_err_bbit"),
+        _mean_abs_err("err_full").alias("mean_abs_err_full"),
+        _mean_abs_err("err_b").alias("mean_abs_err_bbit"),
         F.lit(BBIT_B).cast("long").alias("b_bits"),
         F.lit(31 * H.N_MINHASH).cast("long").alias("sig_bits_full"),
         F.lit(BBIT_B * H.N_MINHASH).cast("long").alias("sig_bits_bbit"),

@@ -10,6 +10,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from mediawiki_to_notion_spark.operators.dedup import (
+    _SHINGLES_SQL,
+    _minhash_pairs,
+    _minhash_pairs_sql,
+)
 from mediawiki_to_notion_spark.operators.dedup_ext import (
     _rebuild_excising_spans,
     _token_windows,
@@ -896,56 +901,19 @@ def chunk_documents_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 DECON_FUZZY_JACCARD = 0.8  # MinHash-band design point (dedup.JACCARD_THRESHOLD)
 
 
-def _decon_fuzzy_oracle() -> str:
-    from mediawiki_to_notion_spark.functions import hashing as H
-    from mediawiki_to_notion_spark.operators.dedup import _SHINGLES_SQL
-
-    bands_union = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, {H.band_signature_sql(b)} AS sig "
-        "FROM sigs"
-        for b in range(H.N_BANDS)
-    )
-    return f"""
+@register(
+    "decontaminate_fuzzy_minhash",
+    oracle=f"""
     WITH {_SHINGLES_SQL},
-    sizes2 AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    sigs AS (
-      SELECT doc_id, {', '.join(H.minhash_agg_sql('h'))}
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      {bands_union}
-    ),
-    cands AS (
-      SELECT DISTINCT a.doc_id AS eval_id, b.doc_id AS doc_id
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.sig = b.sig
-       AND a.doc_id < {DECON_BENCHMARK_DOCS}
-       AND b.doc_id >= {DECON_BENCHMARK_DOCS}
-    ),
-    verified AS (
-      SELECT c.eval_id, c.doc_id, count(*) AS n_common
-      FROM cands c
-      JOIN sh a ON a.doc_id = c.eval_id
-      JOIN sh b ON b.doc_id = c.doc_id AND b.h = a.h
-      GROUP BY c.eval_id, c.doc_id
-    ),
-    flagged AS (
-      SELECT v.doc_id, v.eval_id,
-             round(n_common::DOUBLE / (x.n + y.n - n_common), 6) AS jac
-      FROM verified v
-      JOIN sizes2 x ON v.eval_id = x.doc_id
-      JOIN sizes2 y ON v.doc_id = y.doc_id
-      WHERE n_common::DOUBLE / (x.n + y.n - n_common)
-            >= {DECON_FUZZY_JACCARD}
-    )
-    SELECT doc_id,
+    {_minhash_pairs_sql(f"a.doc_id < {DECON_BENCHMARK_DOCS}"
+                        f" AND b.doc_id >= {DECON_BENCHMARK_DOCS}",
+                        DECON_FUZZY_JACCARD)}
+    SELECT doc_b AS doc_id,
            CAST(count(*) AS BIGINT) AS n_eval_matches,
-           max(jac) AS max_jaccard_r
-    FROM flagged GROUP BY doc_id
-    """
-
-
-@register("decontaminate_fuzzy_minhash", oracle=_decon_fuzzy_oracle())
+           max(round(jaccard, 6)) AS max_jaccard_r
+    FROM dup GROUP BY doc_b
+    """,
+)
 def decontaminate_fuzzy_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FUZZY eval-set decontamination — the near-duplicate member of
     the family (`decontaminate_ngram_overlap` flags exact n-gram hits,
@@ -960,49 +928,16 @@ def decontaminate_fuzzy_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB shape: identical to dedup_minhash_incremental's
     arrival-vs-index discipline with the eval suite as the (tiny)
-    index side — band signatures are one corpus pass, the candidate
-    join keys on 8-byte (band, sig), and the verify join re-touches
-    only candidate documents' shingles.  Output: one row per
+    index side (see dedup._minhash_pairs).  Output: one row per
     CONTAMINATED corpus doc (match count + worst Jaccard), the drop
     list a training run subtracts."""
-    from mediawiki_to_notion_spark.functions import hashing as H
-    from mediawiki_to_notion_spark.operators.dedup import _doc_minhash_stats
-
     d = load_table(spark, "documents", sf_dir)
-    # narrow, shuffle-free per-doc stats (r10, guide §2.4 — see
-    # _doc_minhash_stats), materialized once: bands is consumed twice
-    # (eval + corpus sides) and the x/y verify joins re-read it, so
-    # without the checkpoint the trigram/md5 pass runs 4x
-    stats = _doc_minhash_stats(d).localCheckpoint()
-    bands = stats.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[H.band_signature(b) for b in range(H.N_BANDS)])
-        ).alias("band", "sig"),
-    )
-    ev = bands.filter(F.col("doc_id") < DECON_BENCHMARK_DOCS).alias("a")
-    co = bands.filter(F.col("doc_id") >= DECON_BENCHMARK_DOCS).alias("b")
-    cands = (
-        ev.join(co, (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.sig") == F.col("b.sig")))
-        .select(F.col("a.doc_id").alias("eval_id"),
-                F.col("b.doc_id").alias("doc_id"))
-        .distinct()
-    )
-    x = stats.select(F.col("doc_id").alias("eval_id"),
-                     F.col("n").alias("n_a"), F.col("hs").alias("hs_a"))
-    y = stats.select("doc_id", F.col("n").alias("n_b"),
-                     F.col("hs").alias("hs_b"))
-    n_common = F.size(F.array_intersect(F.col("hs_a"), F.col("hs_b")))
-    jac = n_common.cast("double") / (F.col("n_a") + F.col("n_b") - n_common)
-    flagged = (
-        cands.join(x, "eval_id").join(y, "doc_id")
-        .select("doc_id", "eval_id", jac.alias("jac"))
-        .filter(F.col("jac") >= DECON_FUZZY_JACCARD)
-    )
-    return flagged.groupBy("doc_id").agg(
+    flagged = _minhash_pairs(
+        d, (F.col("a.doc_id") < DECON_BENCHMARK_DOCS)
+        & (F.col("b.doc_id") >= DECON_BENCHMARK_DOCS), DECON_FUZZY_JACCARD)
+    return flagged.groupBy(F.col("doc_b").alias("doc_id")).agg(
         F.count(F.lit(1)).alias("n_eval_matches"),
-        F.max(F.round(F.col("jac"), 6)).alias("max_jaccard_r"),
+        F.max(F.round(F.col("jaccard"), 6)).alias("max_jaccard_r"),
     )
 
 

@@ -94,8 +94,7 @@ def start_md_stream(spark: SparkSession, input_dir: str, tables_dir: str,
 def start_pipeline_stream(spark: SparkSession, input_dir: str, tables_dir: str,
                           checkpoint_dir: str, upload_cfg,
                           parent_urls: DataFrame | None = None,
-                          available_now: bool = True,
-                          auto_recover: bool = True) -> StreamingQuery:
+                          available_now: bool = True) -> StreamingQuery:
     """The WHOLE event-driven pipeline as one checkpointed streaming
     query: each micro-batch ingests the newly staged markdown, then
     drains the upload sink — the reference's S3-event →
@@ -105,28 +104,18 @@ def start_pipeline_stream(spark: SparkSession, input_dir: str, tables_dir: str,
     replay by the idempotent consume flip, and the drain is a no-op
     when a batch stages nothing new.
 
-    Recovery posture: with ``auto_recover`` each batch first requeues
-    ABORTED pages (worker-crash leftovers) so stranded work retries on
-    the next arrival — the state machine's retry loop; a poisoned page
-    then fails the query loudly rather than wedging silently.  A drain
-    that exhausts its round budget with blocks still pending likewise
-    raises, so the batch is NOT committed and replays."""
-    from mediawiki_to_notion_spark.streaming.upload import (
-        drain,
-        pending_blocks,
-        recover_aborted,
-    )
+    Recovery posture: each batch first requeues ABORTED pages
+    (worker-crash leftovers) so stranded work retries on the next
+    arrival — the state machine's retry loop; a poisoned page then
+    fails the query loudly rather than wedging silently.  A drain that
+    exhausts its round budget with blocks still pending raises, so the
+    batch is NOT committed and replays."""
+    from mediawiki_to_notion_spark.streaming.upload import drain, recover_aborted
 
     def _sink(batch_df: DataFrame, _batch_id: int) -> None:
         ingest_batch(spark, batch_df, tables_dir)
-        if auto_recover:
-            recover_aborted(spark, tables_dir)
+        recover_aborted(spark, tables_dir)
         drain(spark, tables_dir, upload_cfg, parent_urls)
-        if not pending_blocks(spark, tables_dir, parent_urls).isEmpty():
-            raise RuntimeError(
-                "upload drain exhausted its round budget with blocks still "
-                "pending; batch not committed, will replay"
-            )
 
     return _start(_md_source(spark, input_dir), _sink, checkpoint_dir,
                   available_now)

@@ -331,7 +331,10 @@ def drain(spark: SparkSession, tables_dir: str, cfg: UploadConfig,
     after a round that found no work, and after a round that left no
     page UPLOADING.  Every pending page is in every round (each has at
     least its first pending block in the chunk), so a round that
-    leaves none UPLOADING has drained everything it could see."""
+    leaves none UPLOADING has drained everything it could see.  The
+    loop runs out of ``max_rounds`` only when its last round left pages
+    UPLOADING, so that raises ``RuntimeError``: blocks are still
+    pending."""
     rounds = 0
     while rounds < max_rounds:
         stats: dict = {}
@@ -344,4 +347,9 @@ def drain(spark: SparkSession, tables_dir: str, cfg: UploadConfig,
         rounds += 1
         if stats[M.PAGES_UPLOADING] == 0:
             break
+    else:
+        raise RuntimeError(
+            f"upload drain exhausted its {max_rounds}-round budget with "
+            "pages still UPLOADING"
+        )
     return rounds

@@ -83,9 +83,15 @@ def test_semi_join_stays_semi(spark):
 
 
 def test_minhash_no_cartesian(spark):
-    """The LSH path must never degenerate into a cartesian product."""
-    plan = plan_of(spark, "dedup_minhash_lsh")
-    assert "CartesianProduct" not in plan
+    """The three band-join queries share one candidate join, an
+    equi-join on (band, sig) with the caller's pair rule as an extra
+    condition: it must never degenerate into a cartesian product or a
+    nested loop."""
+    for name in ("dedup_minhash_lsh", "dedup_minhash_incremental",
+                 "decontaminate_fuzzy_minhash"):
+        plan = plan_of(spark, name)
+        assert "CartesianProduct" not in plan, name
+        assert "BroadcastNestedLoopJoin" not in plan, name
 
 
 def test_simhash_bands_are_equi_join(spark):

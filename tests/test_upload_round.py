@@ -4,7 +4,8 @@ table-scan rule they replaced.
 A round is the upload pass, one blocks upsert, one pages upsert and a
 DLQ append only when something failed; its page state comes from its
 own results (each row's pre-round ``n_pending``), and the drain stops
-after the round that leaves no page UPLOADING."""
+after the round that leaves no page UPLOADING, or raises when its round
+budget runs out first."""
 
 from __future__ import annotations
 
@@ -126,3 +127,17 @@ def test_round_status_parity(spark, staged_tables, monkeypatch,
     # three blocks a page: chunks of 1 take three rounds (a failing A
     # stops after its second), chunks of 2 take two, chunks of 50 one
     assert rounds == {1: 3, 2: 2, 50: 1}[max_blocks]
+
+
+def test_drain_raises_when_round_budget_runs_out(spark, staged_tables):
+    """Both pages need two 2-block chunks.  A one-round budget leaves
+    them UPLOADING, so drain raises (a streaming batch must not commit
+    with blocks pending); a second one-round drain uploads the last
+    chunk, leaves nothing UPLOADING and returns."""
+    cfg = UP.UploadConfig(transport=ScriptedTransport(), max_blocks=2)
+    with pytest.raises(RuntimeError, match="round budget"):
+        UP.drain(spark, staged_tables, cfg, max_rounds=1)
+    pages = ingest.pages_table(spark, staged_tables)
+    assert {p.status for p in pages.read().collect()} == {"UPLOADING"}
+    assert UP.drain(spark, staged_tables, cfg, max_rounds=1) == 1
+    assert {p.status for p in pages.read().collect()} == {"SUCCESS"}
