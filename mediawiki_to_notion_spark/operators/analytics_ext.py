@@ -573,29 +573,67 @@ def zorder_cluster_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+FUNNEL_STAGES = ("view", "click", "purchase")  # ordered conversion path
+
+# t1/t2/t3: per user, the first view, the first click after it, the
+# first purchase after that click (the DuckDB twin of _ordered_funnel).
+_FUNNEL_SQL = """
+    t1 AS (
+      SELECT user_id, min(ts) AS t FROM events
+      WHERE event_type = 'view' GROUP BY user_id
+    ), t2 AS (
+      SELECT e.user_id, min(e.ts) AS t
+      FROM events e JOIN t1 ON e.user_id = t1.user_id AND e.ts > t1.t
+      WHERE e.event_type = 'click' GROUP BY e.user_id
+    ), t3 AS (
+      SELECT e.user_id, min(e.ts) AS t
+      FROM events e JOIN t2 ON e.user_id = t2.user_id AND e.ts > t2.t
+      WHERE e.event_type = 'purchase' GROUP BY e.user_id
+    )"""
+
+
+def _ordered_funnel(e: DataFrame) -> DataFrame:
+    """Per user who viewed: ``(user_id, view_ts, click_ts,
+    purchase_ts)`` — the first event of each ``FUNNEL_STAGES`` stage
+    strictly after the user's entry into the previous stage (NULL once
+    a stage is not reached).
+
+    Scale shape: each stage is a pre-filtered partial-agg (min) keyed
+    by user_id, equi-joined on user_id to the (strictly shrinking)
+    set that reached the previous stage — never a per-user
+    event-sequence sort.  Every exchange shares the user_id hash
+    partitioning, so Spark reuses the shuffle layout between stages.
+    No windows over the raw event stream, no driver state."""
+    first, *rest = FUNNEL_STAGES
+    reached = [
+        e.filter(F.col("event_type") == first)
+        .groupBy("user_id").agg(F.min("ts").alias(f"{first}_ts"))
+    ]
+    for prev, stage in zip(FUNNEL_STAGES, rest):
+        reached.append(
+            e.filter(F.col("event_type") == stage)
+            .join(reached[-1], "user_id")
+            .filter(F.col("ts") > F.col(f"{prev}_ts"))
+            .groupBy("user_id").agg(F.min("ts").alias(f"{stage}_ts"))
+        )
+    out = reached[0]
+    for r in reached[1:]:
+        out = out.join(r, "user_id", "left")
+    return out
+
+
 @register(
     "event_funnel_conversion",
-    oracle="""
-    WITH v AS (
-      SELECT user_id, min(ts) AS view_ts FROM events
-      WHERE event_type = 'view' GROUP BY user_id
-    ), c AS (
-      SELECT e.user_id, min(e.ts) AS click_ts
-      FROM events e JOIN v ON e.user_id = v.user_id AND e.ts > v.view_ts
-      WHERE e.event_type = 'click' GROUP BY e.user_id
-    ), p AS (
-      SELECT e.user_id, min(e.ts) AS purchase_ts
-      FROM events e JOIN c ON e.user_id = c.user_id AND e.ts > c.click_ts
-      WHERE e.event_type = 'purchase' GROUP BY e.user_id
-    )
-    SELECT v.user_id,
-           epoch_ms(v.view_ts) AS view_ms,
-           epoch_ms(c.click_ts) AS click_ms,
-           epoch_ms(p.purchase_ts) AS purchase_ms,
-           1 + CASE WHEN c.user_id IS NULL THEN 0 ELSE 1 END
-             + CASE WHEN p.user_id IS NULL THEN 0 ELSE 1 END AS funnel_stage
-    FROM v LEFT JOIN c ON v.user_id = c.user_id
-           LEFT JOIN p ON v.user_id = p.user_id
+    oracle=f"""
+    WITH {_FUNNEL_SQL}
+    SELECT t1.user_id,
+           epoch_ms(t1.t) AS view_ms,
+           epoch_ms(t2.t) AS click_ms,
+           epoch_ms(t3.t) AS purchase_ms,
+           1 + CASE WHEN t2.user_id IS NULL THEN 0 ELSE 1 END
+             + CASE WHEN t3.user_id IS NULL THEN 0 ELSE 1 END AS funnel_stage
+    FROM t1 LEFT JOIN t2 ON t1.user_id = t2.user_id
+            LEFT JOIN t3 ON t1.user_id = t3.user_id
     """,
 )
 def event_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -604,44 +642,15 @@ def event_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     after that click — the sequential-pattern query behind conversion
     dashboards (and behind multi-step pipeline-progress reporting, the
     reference's page-status dashboard generalized to ordered stages).
-
-    Scale shape: each stage is a pre-filtered partial-agg (min) keyed
-    by user_id, and every join keys on user_id too — the exchanges all
-    share one partitioning, so Spark reuses the shuffle layout instead
-    of re-partitioning between stages.  No windows over the raw event
-    stream, no driver state."""
-    e = load_table(spark, "events", sf_dir)
-    v = (
-        e.filter(F.col("event_type") == "view")
-        .groupBy("user_id").agg(F.min("ts").alias("view_ts"))
-    )
-    c = (
-        e.filter(F.col("event_type") == "click")
-        .join(v, "user_id")
-        .filter(F.col("ts") > F.col("view_ts"))
-        .groupBy("user_id").agg(F.min("ts").alias("click_ts"))
-    )
-    p = (
-        e.filter(F.col("event_type") == "purchase")
-        .join(c, "user_id")
-        .filter(F.col("ts") > F.col("click_ts"))
-        .groupBy("user_id").agg(F.min("ts").alias("purchase_ts"))
-    )
-    stage = (
-        F.lit(1)
-        + F.when(F.col("click_ts").isNull(), 0).otherwise(1)
-        + F.when(F.col("purchase_ts").isNull(), 0).otherwise(1)
-    )
-    return (
-        v.join(c, "user_id", "left")
-        .join(p, "user_id", "left")
-        .select(
-            "user_id",
-            F.unix_millis("view_ts").alias("view_ms"),
-            F.unix_millis("click_ts").alias("click_ms"),
-            F.unix_millis("purchase_ts").alias("purchase_ms"),
-            stage.alias("funnel_stage"),
-        )
+    ``funnel_stage`` is the number of stages reached."""
+    f = _ordered_funnel(load_table(spark, "events", sf_dir))
+    stage = F.lit(1)
+    for s in FUNNEL_STAGES[1:]:
+        stage = stage + F.when(F.col(f"{s}_ts").isNull(), 0).otherwise(1)
+    return f.select(
+        "user_id",
+        *[F.unix_millis(f"{s}_ts").alias(f"{s}_ms") for s in FUNNEL_STAGES],
+        stage.alias("funnel_stage"),
     )
 
 
@@ -800,9 +809,9 @@ def time_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "sliding_distinct_users",
-    oracle="""
+# ev → (window_end_hour, user_id) contributions: the DuckDB twin of
+# _trailing_24h over hourly users.
+_SLIDING_CONTRIB_SQL = """
     WITH ev AS (
       SELECT date_trunc('hour', ts) AS h0, user_id FROM events
     ),
@@ -813,38 +822,24 @@ def time_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
            LATERAL (SELECT unnest(generate_series(
              ev.h0, ev.h0 + INTERVAL 23 HOUR, INTERVAL 1 HOUR)) AS e) g
       WHERE g.e <= bounds.mx
-    )
-    SELECT window_end_hour, count(DISTINCT user_id) AS n_distinct_users
-    FROM contrib GROUP BY window_end_hour
-    """,
-)
-def sliding_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trailing-24h distinct users per hour — sliding-window COUNT
-    DISTINCT, the metric windowed sums cannot express (distinct does
-    not decompose over panes).  The scalable formulation: each event
-    fans out to the 24 window-ends it influences (explode of a
-    generated hour sequence — bounded, constant fan-out), then ONE
-    (window, user) dedup + count.  This is the standard shape; the
-    sketch alternative (per-hour HLL merged over 24 panes,
-    approx_count_distinct) swaps in at the same call-site when exact
-    distinct is not required at 100 TB.
+    )"""
 
-    Windows ending after the last observed hour are clipped (matching
-    dashboards, which do not report future windows).
 
-    r10 examined, deliberately unchanged: an explicit pre-dedup to
-    DISTINCT (hour, user) before the 24x explode was measured SLOWER
-    at sf0.1 (1.19 -> 1.32 s min-of-5) and is redundant at scale —
-    the final countDistinct already partial-aggregates map-side, so
-    the post-fan-out shuffle carries locally-deduped (window, user)
-    pairs either way, and the extra global exchange buys nothing."""
-    e = load_table(spark, "events", sf_dir)
-    ev = e.select(
-        F.date_trunc("hour", F.col("ts")).alias("h0"), "user_id"
-    )
-    mx = ev.agg(F.max("h0").alias("mx"))
-    contrib = (
-        ev.crossJoin(F.broadcast(mx))
+def _trailing_24h(frame: DataFrame, col: str) -> DataFrame:
+    """Fan each ``(h0, col)`` row out to the 24 trailing-window ends it
+    belongs to → ``(window_end_hour, col, mx)``.  Windows ending after
+    the last observed hour ``mx`` are clipped (matching dashboards,
+    which do not report future windows).
+
+    Scale shape: an explode of a generated hour sequence — bounded,
+    constant fan-out — after a broadcast of the one-row max; the
+    caller's one (window, ...) aggregate follows.  Over per-hour
+    sketches the union across the 24 panes is exact (sketches are
+    mergeable), so the same fan-out serves the exact and the
+    approximate distinct count."""
+    mx = frame.agg(F.max("h0").alias("mx"))
+    return (
+        frame.crossJoin(F.broadcast(mx))
         .select(
             F.explode(
                 F.sequence(
@@ -853,12 +848,39 @@ def sliding_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.expr("INTERVAL 1 HOUR"),
                 )
             ).alias("window_end_hour"),
-            "user_id",
+            col,
             "mx",
         )
         .filter(F.col("window_end_hour") <= F.col("mx"))
     )
-    return contrib.groupBy("window_end_hour").agg(
+
+
+@register(
+    "sliding_distinct_users",
+    oracle=f"""{_SLIDING_CONTRIB_SQL}
+    SELECT window_end_hour, count(DISTINCT user_id) AS n_distinct_users
+    FROM contrib GROUP BY window_end_hour
+    """,
+)
+def sliding_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Trailing-24h distinct users per hour — sliding-window COUNT
+    DISTINCT, the metric windowed sums cannot express (distinct does
+    not decompose over panes).  Each event fans out to the 24
+    window-ends it influences (``_trailing_24h``), then ONE (window,
+    user) dedup + count.  The sketch alternative
+    (``sliding_distinct_users_hll``) swaps in at the same call-site
+    when exact distinct is not required at 100 TB.
+
+    r10 examined, deliberately unchanged: an explicit pre-dedup to
+    DISTINCT (hour, user) before the 24x explode was measured SLOWER
+    at sf0.1 (1.19 -> 1.32 s min-of-5) and is redundant at scale —
+    the final countDistinct already partial-aggregates map-side, so
+    the post-fan-out shuffle carries locally-deduped (window, user)
+    pairs either way, and the extra global exchange buys nothing."""
+    ev = load_table(spark, "events", sf_dir).select(
+        F.date_trunc("hour", F.col("ts")).alias("h0"), "user_id"
+    )
+    return _trailing_24h(ev, "user_id").groupBy("window_end_hour").agg(
         F.countDistinct("user_id").alias("n_distinct_users")
     )
 
@@ -869,8 +891,8 @@ def sliding_distinct_users_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule: sketches over exact distinct at scale — now code, not prose;
     VERDICT r3 item 6): ONE pass over events builds a per-hour
     DataSketches HLL of user_id (catalog-sized output — one sketch per
-    hour), then the 24-pane trailing window is an explode + merge over
-    that TINY sketch table.  Events are never fanned out 24× — the row
+    hour), then ``_trailing_24h`` fans out that TINY sketch table and
+    the 24 panes merge.  Events are never fanned out 24× — the row
     explosion the exact formulation pays moves to the ~720-row hourly
     aggregate, so the big-side cost is a single map-side-combinable
     groupBy regardless of window length.
@@ -878,29 +900,13 @@ def sliding_distinct_users_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     No SQL oracle: the estimate is sketch-implementation-defined
     (DataSketches HLL_4), so the driver records rows-only; pytest pins
     row-parity plus a relative-error band against the exact twin."""
-    e = load_table(spark, "events", sf_dir)
     hourly = (
-        e.select(F.date_trunc("hour", F.col("ts")).alias("h0"), "user_id")
+        load_table(spark, "events", sf_dir)
+        .select(F.date_trunc("hour", F.col("ts")).alias("h0"), "user_id")
         .groupBy("h0")
         .agg(F.hll_sketch_agg("user_id", F.lit(14)).alias("sk"))
     )
-    mx = hourly.agg(F.max("h0").alias("mx"))
-    contrib = (
-        hourly.crossJoin(F.broadcast(mx))
-        .select(
-            F.explode(
-                F.sequence(
-                    "h0",
-                    F.col("h0") + F.expr("INTERVAL 23 HOUR"),
-                    F.expr("INTERVAL 1 HOUR"),
-                )
-            ).alias("window_end_hour"),
-            "sk",
-            "mx",
-        )
-        .filter(F.col("window_end_hour") <= F.col("mx"))
-    )
-    return contrib.groupBy("window_end_hour").agg(
+    return _trailing_24h(hourly, "sk").groupBy("window_end_hour").agg(
         F.hll_sketch_estimate(F.hll_union_agg("sk"))
         .alias("n_distinct_users_approx")
     )
@@ -981,52 +987,71 @@ def events_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "user_retention_cohorts",
-    oracle="""
+# The DuckDB twin of _cohort_activity: (cohort_week, week_offset,
+# n_active_users), cohort_week a TIMESTAMP.
+_COHORT_SQL = """
     WITH firsts AS (
-      SELECT user_id, date_trunc('week', min(ts))::DATE AS cohort_week
+      SELECT user_id, date_trunc('week', min(ts)) AS cohort_week
       FROM events GROUP BY user_id
-    ),
-    activity AS (
+    ), activity AS (
       SELECT DISTINCT e.user_id, f.cohort_week,
-             datediff('day', f.cohort_week,
-                      date_trunc('week', e.ts)::DATE) // 7 AS week_offset
+             (epoch_ms(date_trunc('week', e.ts)) - epoch_ms(f.cohort_week))
+               // (7 * 86400000) AS week_offset
       FROM events e JOIN firsts f USING (user_id)
     )
-    SELECT cohort_week, week_offset,
-           count(*) AS n_active_users
+    SELECT cohort_week, week_offset, count(*) AS n_active_users
     FROM activity GROUP BY cohort_week, week_offset
-    """,
-)
-def user_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort retention triangle: users grouped by first-seen week, and
-    for each cohort the distinct users active at each week offset —
-    the standard product-analytics retention matrix.
+    """
 
-    100 TB shape: first-seen is one user_id groupBy (map-side partial
-    min); the join back is on the SAME key, so AQE reuses the hash
-    partitioning; the (user, cohort, offset) dedup and the final count
-    are one more partial-agg shuffle.  Nothing fans out."""
-    e = load_table(spark, "events", sf_dir)
+
+def _cohort_activity(e: DataFrame) -> DataFrame:
+    """Weekly retention cells ``(cohort_week, week_offset,
+    n_active_users)``: users grouped by the week (a TIMESTAMP) of their
+    first event, counted distinct at each later week offset.  Week
+    arithmetic is exact epoch-millis integer division so both engines
+    bucket identically.
+
+    Scale shape: first-seen is one user_id groupBy (map-side partial
+    min); the join back is on the SAME key, so the hash partitioning
+    is reused; the (user, cohort, offset) dedup and the final count
+    are one more partial-agg shuffle into a cohort×offset matrix that
+    is calendar-sized, not event-sized.  Nothing fans out."""
     firsts = e.groupBy("user_id").agg(
-        F.to_date(F.date_trunc("week", F.min("ts"))).alias("cohort_week")
+        F.date_trunc("week", F.min("ts")).alias("cohort_week")
     )
     activity = (
         e.join(firsts, "user_id")
         .select(
             "user_id", "cohort_week",
-            (
-                F.datediff(
-                    F.to_date(F.date_trunc("week", F.col("ts"))),
-                    F.col("cohort_week"),
-                ) / 7
-            ).cast("long").alias("week_offset"),
+            F.floor(
+                (F.unix_millis(F.date_trunc("week", F.col("ts")))
+                 - F.unix_millis(F.col("cohort_week")))
+                / (7 * 86400000)
+            ).alias("week_offset"),
         )
         .distinct()
     )
     return activity.groupBy("cohort_week", "week_offset").agg(
         F.count(F.lit(1)).alias("n_active_users")
+    )
+
+
+@register(
+    "user_retention_cohorts",
+    oracle=f"""
+    SELECT cohort_week::DATE AS cohort_week, week_offset, n_active_users
+    FROM ({_COHORT_SQL})
+    """,
+)
+def user_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cohort retention triangle: users grouped by first-seen week, and
+    for each cohort the distinct users active at each week offset —
+    the standard product-analytics retention matrix, keyed by the
+    cohort's DATE."""
+    return _cohort_activity(load_table(spark, "events", sf_dir)).select(
+        F.to_date("cohort_week").alias("cohort_week"),
+        "week_offset",
+        "n_active_users",
     )
 
 
@@ -1154,27 +1179,65 @@ def market_basket_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The DuckDB twin of _transitions: (cur, nxt, n, p).
+_TRANSITIONS_SQL = """
+    WITH seq AS (
+      SELECT user_id, event_type AS cur,
+             lead(event_type) OVER (
+               PARTITION BY user_id ORDER BY ts, event_id) AS nxt
+      FROM events
+    ), trans AS (
+      SELECT cur, nxt, CAST(count(*) AS BIGINT) AS n
+      FROM seq WHERE nxt IS NOT NULL GROUP BY cur, nxt
+    )
+    SELECT cur, nxt, n,
+           round(n::DOUBLE / CAST(sum(n) OVER (PARTITION BY cur)
+                                  AS BIGINT), 6) AS p
+    FROM trans
+    """
+
+
+def _transitions(e: DataFrame) -> DataFrame:
+    """First-order transition counts ``(cur, nxt, n, p)`` over per-user
+    event sequences, ``p`` = P(nxt | cur) rounded to 6 dp.  Ties in ts
+    break by event_id so the sequence — and therefore the matrix — is
+    unique at any parallelism and in both engines.
+
+    Scale shape: ONE lead window partitioned by user_id — one
+    hash-partitioned shuffle of the events, each user's timeline
+    sorted within its partition (no global sort); the transition
+    matrix is then a |types|² aggregate, and the row totals are a
+    |types|-row aggregate of it, broadcast back onto the matrix."""
+    seq = e.select(
+        F.col("event_type").alias("cur"),
+        F.lead("event_type").over(
+            W.partitionBy("user_id").orderBy("ts", "event_id")
+        ).alias("nxt"),
+    )
+    trans = (
+        seq.filter(F.col("nxt").isNotNull())
+        .groupBy("cur", "nxt")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    totals = trans.groupBy(F.col("cur").alias("row")).agg(
+        F.sum("n").alias("total")
+    )
+    # NULL-safe: a NULL event type is a row of the matrix of its own, as
+    # in the oracle's PARTITION BY cur
+    return trans.join(
+        F.broadcast(totals), F.col("cur").eqNullSafe(F.col("row"))
+    ).select(
+        "cur", "nxt", "n",
+        F.round(F.col("n").cast("double") / F.col("total"), 6).alias("p"),
+    )
+
+
 @register(
     "event_transition_matrix",
-    oracle="""
-    WITH seq AS (
-      SELECT user_id, event_type,
-             lag(event_type) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-             ) AS prev_type
-      FROM events
-    ),
-    trans AS (
-      SELECT prev_type, event_type AS next_type, count(*) AS n
-      FROM seq WHERE prev_type IS NOT NULL
-      GROUP BY prev_type, event_type
-    ),
-    outdeg AS (
-      SELECT prev_type, sum(n) AS total FROM trans GROUP BY prev_type
-    )
-    SELECT t.prev_type, t.next_type, t.n AS n_transitions,
-           round(t.n::DOUBLE / o.total, 6) AS p_transition
-    FROM trans t JOIN outdeg o USING (prev_type)
+    oracle=f"""
+    SELECT cur AS prev_type, nxt AS next_type, n AS n_transitions,
+           p AS p_transition
+    FROM ({_TRANSITIONS_SQL})
     """,
 )
 def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1182,33 +1245,13 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequences: P(next event type | current) — the behavioral-model
     summary behind next-action prediction and anomaly scoring on
     event streams (complements event_funnel_conversion's fixed-path
-    view with the full transition graph).
-
-    100 TB shape: the lag window partitions by user_id — one
-    hash-partitioned shuffle of the events, each user's timeline sorted
-    within its partition (no global sort); the transition and marginal
-    aggregates are tiny (|types|^2 rows).  Ties in ts break by
-    event_id so the sequence — and therefore the matrix — is unique at
-    any parallelism."""
-    from pyspark.sql import Window as W
-
-    e = load_table(spark, "events", sf_dir)
-    seq = e.select(
-        "event_type",
-        F.lag("event_type").over(
-            W.partitionBy("user_id").orderBy("ts", "event_id")
-        ).alias("prev_type"),
-    ).filter(F.col("prev_type").isNotNull())
-    trans = seq.groupBy("prev_type", F.col("event_type").alias("next_type")) \
-        .agg(F.count(F.lit(1)).alias("n_transitions"))
-    outdeg = trans.groupBy("prev_type").agg(
-        F.sum("n_transitions").alias("total")
-    )
-    return trans.join(F.broadcast(outdeg), "prev_type").select(
-        "prev_type", "next_type", "n_transitions",
-        F.round(
-            F.col("n_transitions").cast("double") / F.col("total"), 6
-        ).alias("p_transition"),
+    view with the full transition graph).  ``_transitions`` with the
+    prev/next column names."""
+    return _transitions(load_table(spark, "events", sf_dir)).select(
+        F.col("cur").alias("prev_type"),
+        F.col("nxt").alias("next_type"),
+        F.col("n").alias("n_transitions"),
+        F.col("p").alias("p_transition"),
     )
 
 
@@ -1707,18 +1750,7 @@ HLL_BAND = 0.02  # certified max relative error for lgK=14 at this scale
 
 @register(
     "hll_distinct_within_band",
-    oracle="""
-    WITH ev AS (
-      SELECT date_trunc('hour', ts) AS h0, user_id FROM events
-    ),
-    bounds AS (SELECT max(h0) AS mx FROM ev),
-    contrib AS (
-      SELECT g.e AS window_end_hour, user_id
-      FROM ev, bounds,
-           LATERAL (SELECT unnest(generate_series(
-             ev.h0, ev.h0 + INTERVAL 23 HOUR, INTERVAL 1 HOUR)) AS e) g
-      WHERE g.e <= bounds.mx
-    )
+    oracle=f"""{_SLIDING_CONTRIB_SQL}
     SELECT window_end_hour,
            CAST(count(DISTINCT user_id) AS BIGINT) AS n_distinct_exact,
            TRUE AS within_band
@@ -1753,24 +1785,10 @@ def hll_distinct_within_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-FUNNEL_STAGES = ("view", "click", "purchase")  # ordered conversion path
-
-
 @register(
     "events_conversion_funnel",
-    oracle="""
-    WITH t1 AS (
-      SELECT user_id, min(ts) AS t FROM events
-      WHERE event_type = 'view' GROUP BY user_id
-    ), t2 AS (
-      SELECT e.user_id, min(e.ts) AS t
-      FROM events e JOIN t1 ON e.user_id = t1.user_id AND e.ts > t1.t
-      WHERE e.event_type = 'click' GROUP BY e.user_id
-    ), t3 AS (
-      SELECT e.user_id, min(e.ts) AS t
-      FROM events e JOIN t2 ON e.user_id = t2.user_id AND e.ts > t2.t
-      WHERE e.event_type = 'purchase' GROUP BY e.user_id
-    ), stages AS (
+    oracle=f"""
+    WITH {_FUNNEL_SQL}, stages AS (
       SELECT 1 AS stage, 'view' AS event_type,
              (SELECT count(*) FROM t1) AS n_users
       UNION ALL SELECT 2, 'click', (SELECT count(*) FROM t2)
@@ -1790,165 +1808,53 @@ def events_conversion_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     AFTER that click.  Output: per-stage reached-user counts and
     stage-over-stage conversion.
 
-    100 TB shape: each stage is one user-keyed partial-agg groupBy
-    followed by a user-keyed equi-join against the (strictly
-    shrinking) previous stage — never a per-user event-sequence sort;
-    AQE reuses the user hash partitioning across the chain.  The
-    3-row stage summary is the only thing beyond the joins.  Each
-    stage frame is eagerly localCheckpoint'ed (the
-    join_key_skew_profile discipline) so the events table is scanned
-    exactly once per stage predicate and the final summary — all
-    three counts in ONE cross-joined action — reads only the
-    checkpointed stage outputs; the r6 shape's three .count() jobs
-    let t3's lineage recompute t1 and t2 (VERDICT r6 brief #5)."""
-    e = load_table(spark, "events", sf_dir)
-    t1 = (
-        e.filter(F.col("event_type") == "view")
-        .groupBy("user_id").agg(F.min("ts").alias("t1"))
-        .localCheckpoint()  # eager: cut lineage, one 'view' scan total
+    The stages are ``event_funnel_conversion``'s (``_ordered_funnel``);
+    the summary is one lazy global aggregate over them — a count of
+    each stage's timestamps — exploded to one row per stage, so
+    building the query runs nothing."""
+    n = [F.col(f"n{k}") for k in range(len(FUNNEL_STAGES))]
+    counts = _ordered_funnel(load_table(spark, "events", sf_dir)).agg(
+        *[F.count(f"{s}_ts").alias(f"n{k}") for k, s in enumerate(FUNNEL_STAGES)]
     )
-    t2 = (
-        e.filter(F.col("event_type") == "click")
-        .join(t1, "user_id")
-        .filter(F.col("ts") > F.col("t1"))
-        .groupBy("user_id").agg(F.min("ts").alias("t2"))
-        .localCheckpoint()  # eager: one 'click' scan total
-    )
-    t3 = (
-        e.filter(F.col("event_type") == "purchase")
-        .join(t2, "user_id")
-        .filter(F.col("ts") > F.col("t2"))
-        .groupBy("user_id").agg(F.min("ts").alias("t3"))
-    )
-    summary = (
-        t1.agg(F.count(F.lit(1)).alias("n1"))
-        .crossJoin(t2.agg(F.count(F.lit(1)).alias("n2")))
-        .crossJoin(t3.agg(F.count(F.lit(1)).alias("n3")))
-        .collect()  # bounded: ONE row (the 3 stage scalars)
-    )[0]
-    counts = [summary.n1, summary.n2, summary.n3]
-
-    def _round_half_away(x: float, digits: int = 6) -> float:
-        # DuckDB's round(DOUBLE, n) is std::round(x*10^n)/10^n — half
-        # AWAY from zero — while Python round() is half-even; a ratio
-        # landing exactly on a half at the 6th decimal would hash-
-        # mismatch (ADVICE r5).  y <= 10^6 here so frac(y) is exact.
-        import math
-
-        y = x * 10.0**digits
-        f = math.floor(y)
-        return (f + 1 if y - f >= 0.5 else f) / 10.0**digits
-
-    rows = []
-    prev = None
-    for stage, (name, n) in enumerate(zip(FUNNEL_STAGES, counts), 1):
-        conv = _round_half_away(n / prev) if prev else None
-        rows.append((stage, name, n, conv))
-        prev = n
-    return spark.createDataFrame(
-        rows,
-        "stage int, event_type string, n_users long, "
-        "conversion_from_prev double",
-    )
+    rows = [
+        F.struct(
+            F.lit(k + 1).alias("stage"),
+            F.lit(s).alias("event_type"),
+            n[k].alias("n_users"),
+            (F.round(n[k] / F.nullif(n[k - 1], F.lit(0)), 6) if k
+             else F.lit(None).cast("double")).alias("conversion_from_prev"),
+        )
+        for k, s in enumerate(FUNNEL_STAGES)
+    ]
+    return counts.select(F.inline(F.array(*rows)))
 
 
-@register(
-    "events_markov_transitions",
-    oracle="""
-    WITH seq AS (
-      SELECT user_id, event_type AS cur,
-             lead(event_type) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id) AS nxt
-      FROM events
-    ), trans AS (
-      SELECT cur, nxt, CAST(count(*) AS BIGINT) AS n
-      FROM seq WHERE nxt IS NOT NULL GROUP BY cur, nxt
-    )
-    SELECT cur, nxt, n,
-           round(n::DOUBLE / CAST(sum(n) OVER (PARTITION BY cur)
-                                  AS BIGINT), 6) AS p
-    FROM trans
-    """,
-)
+@register("events_markov_transitions", oracle=_TRANSITIONS_SQL)
 def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order Markov transition matrix over per-user event
     sequences: P(next event type | current) — the navigation-model /
     anomalous-flow screen (a row whose mass shifts toward 'error' is
-    the incident signal).  Ordering ties on identical timestamps break
-    by event_id so both engines see the same sequence.
-
-    100 TB shape: ONE window (lead) partitioned by user_id — the
-    per-user sequence is the natural partition and is small; the
-    transition matrix is then a |types|² aggregate, and the row
-    normalization windows over that TINY matrix, not the events."""
-    from pyspark.sql import Window as W
-
-    e = load_table(spark, "events", sf_dir)
-    seq = e.select(
-        "user_id",
-        F.col("event_type").alias("cur"),
-        F.lead("event_type").over(
-            W.partitionBy("user_id").orderBy("ts", "event_id")
-        ).alias("nxt"),
-    )
-    trans = (
-        seq.filter(F.col("nxt").isNotNull())
-        .groupBy("cur", "nxt")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    return trans.select(
-        "cur", "nxt", "n",
-        F.round(
-            F.col("n").cast("double")
-            / F.sum("n").over(W.partitionBy("cur")), 6
-        ).alias("p"),
-    )
+    the incident signal).  ``_transitions`` as it stands."""
+    return _transitions(load_table(spark, "events", sf_dir))
 
 
 @register(
     "retention_cohort_matrix",
-    oracle="""
-    WITH first_seen AS (
-      SELECT user_id, date_trunc('week', min(ts)) AS cohort_week
-      FROM events GROUP BY user_id
-    ), activity AS (
-      SELECT e.user_id, f.cohort_week,
-             CAST((epoch_ms(date_trunc('week', e.ts))
-                   - epoch_ms(f.cohort_week))
-                  // (7 * 86400000) AS INT) AS weeks_since
-      FROM events e JOIN first_seen f USING (user_id)
-    )
-    SELECT epoch_ms(cohort_week) AS cohort_week_ms, weeks_since,
-           CAST(count(DISTINCT user_id) AS BIGINT) AS n_active_users
-    FROM activity GROUP BY cohort_week, weeks_since
+    oracle=f"""
+    SELECT epoch_ms(cohort_week) AS cohort_week_ms,
+           CAST(week_offset AS INT) AS weeks_since, n_active_users
+    FROM ({_COHORT_SQL})
     """,
 )
 def retention_cohort_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly retention cohort matrix (THE growth-analytics table):
-    users grouped by first-activity week, counted distinct in each
-    subsequent week-offset.  Week arithmetic is exact epoch-millis
-    integer division so both engines bucket identically.
-
-    100 TB shape: first-seen is one user-keyed partial-agg groupBy;
-    the join back is on the same key (partitioning reuse); the final
-    distinct-count aggregates to a cohort×offset matrix that is
-    calendar-sized, not event-sized."""
-    e = load_table(spark, "events", sf_dir)
-    first_seen = e.groupBy("user_id").agg(
-        F.date_trunc("week", F.min("ts")).alias("cohort_week")
+    ``_cohort_activity`` keyed by the cohort week's epoch millis, with
+    an INT week offset."""
+    return _cohort_activity(load_table(spark, "events", sf_dir)).select(
+        F.unix_millis("cohort_week").alias("cohort_week_ms"),
+        F.col("week_offset").cast("int").alias("weeks_since"),
+        "n_active_users",
     )
-    activity = e.join(first_seen, "user_id").select(
-        "user_id",
-        "cohort_week",
-        F.floor(
-            (F.unix_millis(F.date_trunc("week", F.col("ts")))
-             - F.unix_millis(F.col("cohort_week")))
-            / (7 * 86400000)
-        ).cast("int").alias("weeks_since"),
-    )
-    return activity.groupBy(
-        F.unix_millis("cohort_week").alias("cohort_week_ms"), "weeks_since"
-    ).agg(F.count_distinct("user_id").alias("n_active_users"))
 
 
 CMS_DEPTH = 4     # independent hash rows
@@ -3317,71 +3223,18 @@ HOLT_ALPHA = 0.5    # level smoothing — binary-exact so double math is
 HOLT_BETA = 0.25    # reproducible cross-engine; trend smoothing
 
 
-@register(
-    "orders_demand_forecast_holt",
-    oracle=f"""
-    WITH RECURSIVE monthly AS (
-      SELECT n.n_name,
-             CAST(date_part('year', o.o_orderdate) * 12
-                  + date_part('month', o.o_orderdate) AS BIGINT) AS m,
-             CAST(sum(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS x
-      FROM orders o
-      JOIN customer c ON o.o_custkey = c.c_custkey
-      JOIN nation n ON c.c_nationkey = n.n_nationkey
-      GROUP BY n.n_name, m
-    ), series AS (
-      SELECT n_name, CAST(count(*) AS BIGINT) AS n_months,
-             list(x ORDER BY m) AS xs
-      FROM monthly GROUP BY n_name
-      HAVING count(*) >= 2
-    ), holt AS (
-      -- state at step j = about to consume xs[j] (1-based); the base
-      -- has consumed xs[1] via the init (level = x0, trend = x1 - x0)
-      SELECT n_name, n_months, xs, CAST(2 AS BIGINT) AS j,
-             xs[1] AS l, xs[2] - xs[1] AS t
-      FROM series
-      UNION ALL
-      SELECT n_name, n_months, xs, j + 1,
-             {HOLT_ALPHA} * xs[j] + {1 - HOLT_ALPHA} * (l + t),
-             {HOLT_BETA} * ({HOLT_ALPHA} * xs[j]
-                            + {1 - HOLT_ALPHA} * (l + t) - l)
-             + {1 - HOLT_BETA} * t
-      FROM holt WHERE j <= n_months
-    )
-    SELECT n_name, n_months,
-           round(l, 6) AS level,
-           round(t, 6) AS trend,
-           round(l + 1 * t, 6) AS forecast_1,
-           round(l + 2 * t, 6) AS forecast_2,
-           round(l + 3 * t, 6) AS forecast_3
-    FROM holt WHERE j = n_months + 1
-    """,
-)
-def orders_demand_forecast_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Holt linear-trend exponential smoothing (Holt 1957) over monthly
-    revenue per nation — the classic short-horizon demand forecast a
-    warehouse runs on every series: level and trend update recursively
-    (alpha {HOLT_ALPHA}, beta {HOLT_BETA}), h-step forecast =
-    level + h * trend for h = 1..3.
+def _nation_month_series(spark: SparkSession, sf_dir: str,
+                         min_months: int) -> DataFrame:
+    """Monthly revenue per nation as one sorted list per series:
+    ``(n_name, n_months, xs)``, ``xs`` the month sums in month order,
+    for nations with at least ``min_months`` months.  Each month sums
+    exactly as DECIMAL(18,2) and casts to double once, so the folds
+    downstream start from the same doubles in both engines.
 
-    Cross-engine float discipline: the recursion is inherently
-    sequential, so instead of avoiding doubles it makes them
-    REPRODUCIBLE — monthly revenue sums exactly as DECIMAL(18,2) and
-    casts to double once; the smoothing constants are binary-exact
-    (1/2, 1/4) and the update is written operand-for-operand
-    identically in both engines: Spark folds with `aggregate`, the
-    oracle steps with WITH RECURSIVE.  The oracle deliberately does
-    NOT use DuckDB's `list_reduce`: its struct lambda mutates the
-    accumulator field-by-field, so a trend update reading acc.l sees
-    the ALREADY-UPDATED level (reproduced: l=17.0176 vs the correct
-    17.2422 on a 5-point series) — pinned in
-    tests/test_holt_forecast.py.  Init: level = x0, trend = x1 - x0,
-    fold runs from x1.
-
-    100 TB shape: the corpus collapses to the (nation, month) table in
-    one map-side-partial agg behind broadcast dimension joins; each
-    per-nation fold runs over its OWN bounded month list (~84 at any
-    TPC-H scale — series length grows with time, not data volume)."""
+    Scale shape: the corpus collapses to the (nation, month) table in
+    one map-side-partial agg behind the dimension joins; each series
+    is bounded by the calendar (~84 months at any TPC-H scale —
+    series length grows with time, not data volume)."""
     o = load_table(spark, "orders", sf_dir)
     c = load_table(spark, "customer", sf_dir)
     n = load_table(spark, "nation", sf_dir)
@@ -3408,7 +3261,7 @@ def orders_demand_forecast_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double").alias("x")
         )
     )
-    series = (
+    return (
         monthly.groupBy("n_name")
         .agg(
             F.count(F.lit(1)).alias("n_months"),
@@ -3419,36 +3272,101 @@ def orders_demand_forecast_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda s: s["x"],
             ).alias("xs"),
         )
-        .filter(F.col("n_months") >= 2)
+        .filter(F.col("n_months") >= min_months)
     )
+
+
+def _nation_series_sql(min_months: int) -> str:
+    """The ``monthly``/``series`` CTEs: the DuckDB twin of
+    ``_nation_month_series``."""
+    return f"""monthly AS (
+      SELECT n.n_name,
+             CAST(date_part('year', o.o_orderdate) * 12
+                  + date_part('month', o.o_orderdate) AS BIGINT) AS m,
+             CAST(sum(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS x
+      FROM orders o
+      JOIN customer c ON o.o_custkey = c.c_custkey
+      JOIN nation n ON c.c_nationkey = n.n_nationkey
+      GROUP BY n.n_name, m
+    ), series AS (
+      SELECT n_name, CAST(count(*) AS BIGINT) AS n_months,
+             list(x ORDER BY m) AS xs
+      FROM monthly GROUP BY n_name
+      HAVING count(*) >= {min_months}
+    )"""
+
+
+@register(
+    "orders_demand_forecast_holt",
+    oracle=f"""
+    WITH RECURSIVE {_nation_series_sql(2)}, holt AS (
+      -- state at step j = about to consume xs[j] (1-based); the base
+      -- has consumed xs[1] via the init (level = x0, trend = x1 - x0)
+      SELECT n_name, n_months, xs, CAST(2 AS BIGINT) AS j,
+             xs[1] AS l, xs[2] - xs[1] AS t
+      FROM series
+      UNION ALL
+      SELECT n_name, n_months, xs, j + 1,
+             {HOLT_ALPHA} * xs[j] + {1 - HOLT_ALPHA} * (l + t),
+             {HOLT_BETA} * ({HOLT_ALPHA} * xs[j]
+                            + {1 - HOLT_ALPHA} * (l + t) - l)
+             + {1 - HOLT_BETA} * t
+      FROM holt WHERE j <= n_months
+    )
+    SELECT n_name, n_months,
+           round(l, 6) AS level,
+           round(t, 6) AS trend,
+           round(l + 1 * t, 6) AS forecast_1,
+           round(l + 2 * t, 6) AS forecast_2,
+           round(l + 3 * t, 6) AS forecast_3
+    FROM holt WHERE j = n_months + 1
+    """,
+)
+def orders_demand_forecast_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Holt linear-trend exponential smoothing (Holt 1957) over monthly
+    revenue per nation (``_nation_month_series``, 2+ months) — the
+    classic short-horizon demand forecast a warehouse runs on every
+    series: level and trend update recursively (alpha ``HOLT_ALPHA``,
+    beta ``HOLT_BETA``), h-step forecast = level + h * trend for
+    h = 1..3.
+
+    Cross-engine float discipline: the recursion is inherently
+    sequential, so instead of avoiding doubles it makes them
+    REPRODUCIBLE — the series starts from the same doubles in both
+    engines, the smoothing constants are binary-exact (1/2, 1/4) and
+    the update is written operand-for-operand identically in both
+    engines: Spark folds with `aggregate`, the oracle steps with WITH
+    RECURSIVE.  The oracle deliberately does NOT use DuckDB's
+    `list_reduce`: its struct lambda mutates the accumulator
+    field-by-field, so a trend update reading acc.l sees the
+    ALREADY-UPDATED level (reproduced: l=17.0176 vs the correct
+    17.2422 on a 5-point series) — pinned in
+    tests/test_holt_forecast.py.  Init: level = x0, trend = x1 - x0,
+    fold runs from x1."""
+    series = _nation_month_series(spark, sf_dir, 2)
     a, b = HOLT_ALPHA, HOLT_BETA
     init = F.struct(
         F.element_at("xs", 1).alias("l"),
         (F.element_at("xs", 2) - F.element_at("xs", 1)).alias("t"),
     )
     new_l = lambda acc, x: F.lit(a) * x + F.lit(1 - a) * (acc["l"] + acc["t"])  # noqa: E731
-    folded = series.select(
-        "n_name", F.col("n_months").cast("long").alias("n_months"),
-        F.aggregate(
-            F.slice("xs", 2, F.size("xs") - 1),
-            init,
-            lambda acc, x: F.struct(
-                new_l(acc, x).alias("l"),
-                (
-                    F.lit(b) * (new_l(acc, x) - acc["l"])
-                    + F.lit(1 - b) * acc["t"]
-                ).alias("t"),
-            ),
-        ).alias("st"),
+    st = F.aggregate(
+        F.slice("xs", 2, F.size("xs") - 1),
+        init,
+        lambda acc, x: F.struct(
+            new_l(acc, x).alias("l"),
+            (
+                F.lit(b) * (new_l(acc, x) - acc["l"])
+                + F.lit(1 - b) * acc["t"]
+            ).alias("t"),
+        ),
     )
-    st = F.col("st")
-    return folded.select(
+    return series.select("n_name", "n_months", st.alias("st")).select(
         "n_name", "n_months",
-        F.round(st["l"], 6).alias("level"),
-        F.round(st["t"], 6).alias("trend"),
-        F.round(st["l"] + 1 * st["t"], 6).alias("forecast_1"),
-        F.round(st["l"] + 2 * st["t"], 6).alias("forecast_2"),
-        F.round(st["l"] + 3 * st["t"], 6).alias("forecast_3"),
+        F.round(F.col("st.l"), 6).alias("level"),
+        F.round(F.col("st.t"), 6).alias("trend"),
+        *[F.round(F.col("st.l") + h * F.col("st.t"), 6).alias(f"forecast_{h}")
+          for h in (1, 2, 3)],
     )
 
 
@@ -3505,21 +3423,7 @@ def _hw_fold_udf(xs_col: pd.Series) -> pd.Series:
 @register(
     "orders_forecast_holt_winters",
     oracle=f"""
-    WITH RECURSIVE monthly AS (
-      SELECT n.n_name,
-             CAST(date_part('year', o.o_orderdate) * 12
-                  + date_part('month', o.o_orderdate) AS BIGINT) AS m,
-             CAST(sum(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS x
-      FROM orders o
-      JOIN customer c ON o.o_custkey = c.c_custkey
-      JOIN nation n ON c.c_nationkey = n.n_nationkey
-      GROUP BY n.n_name, m
-    ), series AS (
-      SELECT n_name, CAST(count(*) AS BIGINT) AS n_months,
-             list(x ORDER BY m) AS xs
-      FROM monthly GROUP BY n_name
-      HAVING count(*) >= {HW_PERIOD + 1}
-    ), seeded AS (
+    WITH RECURSIVE {_nation_series_sql(HW_PERIOD + 1)}, seeded AS (
       SELECT n_name, n_months, xs,
              ({' + '.join(f'xs[{i}]' for i in range(1, HW_PERIOD + 1))})
                / {float(HW_PERIOD)} AS l0
@@ -3550,74 +3454,29 @@ def _hw_fold_udf(xs_col: pd.Series) -> pd.Series:
 )
 def orders_forecast_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holt-Winters ADDITIVE seasonal forecasting (Winters 1960) per
-    nation-month revenue — completes the forecasting pair: Holt tracks
-    level+trend, Holt-Winters adds a rotating {HW_PERIOD}-slot seasonal
-    index, so forecast_h = level + h*trend + season[h].  Seeds: level =
-    mean of the first year (explicit left-to-right sum so both engines
-    add in the identical order), trend = 0, season_i = x_i - level.
+    nation-month revenue (``_nation_month_series``, at least one
+    season plus one month) — completes the forecasting pair: Holt
+    tracks level+trend, Holt-Winters adds a rotating
+    ``HW_PERIOD``-slot seasonal index, so forecast_h = level + h*trend
+    + season[h].  Seeds: level = mean of the first year (explicit
+    left-to-right sum so both engines add in the identical order),
+    trend = 0, season_i = x_i - level.
 
-    The state is (level, trend, season[{HW_PERIOD}]): Spark folds a
-    struct carrying the ARRAY (slice + append rotates the window), the
-    oracle steps the same array through a WITH RECURSIVE list column —
-    the new-level expression is inlined verbatim everywhere it appears
-    (trend and seasonal updates) so every IEEE operation runs in the
-    same order with the same operands in both engines; smoothing
-    constants are binary-exact (1/2, 1/4, 1/4).  DuckDB's list_reduce
-    is avoided for the Holt reasons (mutating struct lambda, pinned in
-    tests/test_holt_forecast.py).
-
-    100 TB shape: identical to orders_demand_forecast_holt — the
-    corpus collapses to (nation, month) behind broadcast dims; each
-    fold walks its own ~84-entry list with a {HW_PERIOD}-double state."""
-    o = load_table(spark, "orders", sf_dir)
-    c = load_table(spark, "customer", sf_dir)
-    n = load_table(spark, "nation", sf_dir)
-    monthly = (
-        # customer is NOT a bounded dimension like nation — an
-        # unconditional F.broadcast would flip to a driver OOM at
-        # extreme SF instead of degrading (VERDICT r8 watch item).
-        # No hint: Catalyst broadcasts the 2-int projection while it
-        # fits autoBroadcastJoinThreshold (64 MB conf — every tested
-        # SF, plan-asserted in tests/test_plan_quality.py) and
-        # degrades to a shuffle join past it, same pattern SCALING.md
-        # documents for the vocab broadcasts.
-        o.join(c.select("c_custkey", "c_nationkey"),
-               o["o_custkey"] == F.col("c_custkey"))
-        .join(F.broadcast(n.select("n_nationkey", "n_name")),
-              F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy(
-            "n_name",
-            (F.year("o_orderdate") * 12 + F.month("o_orderdate"))
-            .cast("long").alias("m"),
-        )
-        .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double").alias("x")
-        )
-    )
-    series = (
-        monthly.groupBy("n_name")
-        .agg(
-            F.count(F.lit(1)).alias("n_months"),
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("m"), F.col("x")))
-                ),
-                lambda s: s["x"],
-            ).alias("xs"),
-        )
-        .filter(F.col("n_months") >= HW_PERIOD + 1)
-    )
-    folded = series.select(
-        "n_name", F.col("n_months").cast("long").alias("n_months"),
-        _hw_fold_udf("xs").alias("st"),
-    )
-    st = F.col("st")
-    return folded.select(
+    The state is (level, trend, season[``HW_PERIOD``]): Spark folds it
+    in ``_hw_fold_udf``, the oracle steps the same array through a
+    WITH RECURSIVE list column — the new-level expression is inlined
+    verbatim everywhere it appears (trend and seasonal updates) so
+    every IEEE operation runs in the same order with the same operands
+    in both engines; smoothing constants are binary-exact (1/2, 1/4,
+    1/4).  DuckDB's list_reduce is avoided for the Holt reasons
+    (mutating struct lambda, pinned in tests/test_holt_forecast.py)."""
+    st = _hw_fold_udf("xs")
+    return _nation_month_series(spark, sf_dir, HW_PERIOD + 1).select(
+        "n_name", "n_months", st.alias("st")
+    ).select(
         "n_name", "n_months",
-        F.round(st[0], 6).alias("level"),
-        F.round(st[1], 6).alias("trend"),
-        F.round(st[0] + 1 * st[1] + st[2], 6).alias("forecast_1"),
-        F.round(st[0] + 2 * st[1] + st[3], 6).alias("forecast_2"),
-        F.round(st[0] + 3 * st[1] + st[4], 6).alias("forecast_3"),
+        F.round(F.col("st")[0], 6).alias("level"),
+        F.round(F.col("st")[1], 6).alias("trend"),
+        *[F.round(F.col("st")[0] + h * F.col("st")[1] + F.col("st")[h + 1], 6)
+          .alias(f"forecast_{h}") for h in (1, 2, 3)],
     )

@@ -169,10 +169,11 @@ _MINHASH_STATS_SCHEMA = (
 
 def _doc_minhash_stats(d: DataFrame) -> DataFrame:
     """Per-document MinHash sufficient statistics — (doc_id, n, hs,
-    mh0..mh{15}) — computed NARROWLY, with no shuffle (r10, guide
-    §2.4): every shingle of a document comes from that document's own
-    row, so the explode → groupBy(doc_id) the minhash consumers used
-    through r9 re-aggregated data that never left its row.
+    and one ``mh<i>`` column for each of the ``H.N_MINHASH`` hashes) —
+    computed NARROWLY, with no shuffle (r10, guide §2.4): every
+    shingle of a document comes from that document's own row, so the
+    explode → groupBy(doc_id) the minhash consumers used through r9
+    re-aggregated data that never left its row.
 
     Two r10 steps, both measured:
 
@@ -421,7 +422,7 @@ INCR_NEW_MOD = 4   # doc_id % 5 == 4 plays the "newly arrived batch" (~20%)
 )
 def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental near-dup detection: an arriving batch (docs with
-    ``doc_id % 5 == {INCR_NEW_MOD}``, ~20% of the corpus) is deduped
+    ``doc_id % 5 == INCR_NEW_MOD``, ~20% of the corpus) is deduped
     against the already-indexed corpus AND within itself, while
     old-vs-old pairs — the quadratic bulk a nightly full dedup would
     redo — are excluded BEFORE verification, in the candidate join.

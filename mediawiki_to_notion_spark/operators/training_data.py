@@ -920,8 +920,8 @@ def decontaminate_fuzzy_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     `decontaminate_span_cut` excises them; paraphrased or
     lightly-edited eval leakage escapes both): corpus documents whose
     shingle-set Jaccard against ANY held-out eval document (doc_id <
-    {DECON_BENCHMARK_DOCS}, the family's convention) reaches
-    {DECON_FUZZY_JACCARD}, found via MinHash band blocking — the
+    ``DECON_BENCHMARK_DOCS``, the family's convention) reaches
+    ``DECON_FUZZY_JACCARD``, found via MinHash band blocking — the
     candidate join touches only (band, signature) collisions BETWEEN
     the eval side and the corpus side, never eval x corpus pairs — and
     verified with exact Jaccard on candidates only.

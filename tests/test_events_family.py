@@ -1,0 +1,87 @@
+"""The event-analytics pairs share one core each: the ordered funnel,
+the transition matrix, the weekly retention cells, the trailing-24h
+fan-out and the nation-month revenue series (with one DuckDB template
+per core), so a slip in a shared piece breaks two queries at once.
+Each oracled query built on them is checked against its DuckDB oracle
+here, in the default tier, at sf0.001; ``sliding_distinct_users_hll``
+is rows-only and stays covered by its accuracy-band plan test."""
+
+from __future__ import annotations
+
+import datetime as dt
+
+import pytest
+
+from mediawiki_to_notion_spark.operators import ORACLES, QUERIES, load_all
+from mediawiki_to_notion_spark.oracle import compare
+from tests.conftest import SF_SMOKE
+
+load_all()
+
+EVENTS_QUERIES = (
+    "event_funnel_conversion",
+    "events_conversion_funnel",
+    "event_transition_matrix",
+    "events_markov_transitions",
+    "user_retention_cohorts",
+    "retention_cohort_matrix",
+    "orders_demand_forecast_holt",
+    "orders_forecast_holt_winters",
+    "sliding_distinct_users",
+    "hll_distinct_within_band",
+)
+
+
+@pytest.mark.parametrize("name", EVENTS_QUERIES)
+def test_events_query_matches_oracle(spark, name):
+    result = compare(spark, QUERIES[name], ORACLES[name], SF_SMOKE)
+    assert result["match"], f"{name}: {result}"
+    assert result["spark_rows"] > 0, name
+
+
+def test_conversion_funnel_builds_without_a_job(spark):
+    """The funnel summary is one lazy aggregate over the shared stage
+    frame: building it runs no checkpoint and no driver collect."""
+    sc = spark.sparkContext
+    group = "conversion-funnel-build"
+    sc.setJobGroup(group, "build events_conversion_funnel")
+    try:
+        df = QUERIES["events_conversion_funnel"](spark, SF_SMOKE)
+        built = list(sc.statusTracker().getJobIdsForGroup(group))
+        # control: an action in the same group is seen by the tracker
+        df.collect()
+        control = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert built == []
+    assert control
+
+
+def test_conversion_rounds_half_away_from_zero(spark, tmp_path):
+    """128 viewers, one of whom clicks after viewing: the click-stage
+    conversion is 1/128 = 0.0078125, a tie at the 7th decimal.  DuckDB
+    rounds it half away from zero (0.007813); Spark must too."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t0 = dt.datetime(2024, 1, 3, 12)
+    users = list(range(128)) + [0]
+    types = ["view"] * 128 + ["click"]
+    ts = [t0] * 128 + [t0 + dt.timedelta(minutes=5)]
+    pq.write_table(pa.table({
+        "event_id": pa.array(range(len(users)), pa.int64()),
+        "ts": pa.array(ts, pa.timestamp("us")),
+        "user_id": pa.array(users, pa.int64()),
+        "event_type": pa.array(types),
+        "value": pa.array([1.0] * len(users)),
+        "props": pa.array(["{}"] * len(users)),
+    }), str(tmp_path / "events.parquet"))
+    query = QUERIES["events_conversion_funnel"]
+    result = compare(spark, query, ORACLES["events_conversion_funnel"],
+                     str(tmp_path))
+    assert result["match"], result
+    rows = {r.stage: r for r in query(spark, str(tmp_path)).collect()}
+    assert [rows[k].n_users for k in (1, 2, 3)] == [128, 1, 0]
+    assert rows[2].conversion_from_prev == 0.007813
+    assert rows[3].conversion_from_prev == 0.0

@@ -285,9 +285,11 @@ def test_pq_encode_windowgrouplimit_prunes_argmin(spark):
 
 def test_funnel_stages_share_user_partitioning(spark):
     """The three funnel stages all key by user_id; Spark must not insert
-    a rangepartitioning exchange anywhere."""
-    plan = plan_of(spark, "event_funnel_conversion")
-    assert "Exchange rangepartitioning" not in plan
+    a rangepartitioning exchange anywhere, in either query built on
+    the shared stages."""
+    for name in ("event_funnel_conversion", "events_conversion_funnel"):
+        plan = plan_of(spark, name)
+        assert "Exchange rangepartitioning" not in plan, name
 
 
 def test_containment_pairs_from_posting_join(spark):
@@ -511,11 +513,13 @@ def test_source_overlap_is_posting_equi_join(spark):
 
 def test_retention_cohort_reuses_user_partitioning(spark):
     """First-seen groupBy and the join back share the user_id key — no
-    range partitioning, no nested loop; everything partial-aggregated."""
-    plan = plan_of(spark, "user_retention_cohorts")
-    assert "CartesianProduct" not in plan
-    assert "Exchange rangepartitioning" not in plan
-    assert "partial_min" in plan
+    range partitioning, no nested loop; everything partial-aggregated
+    — in both projections of the shared retention cells."""
+    for name in ("user_retention_cohorts", "retention_cohort_matrix"):
+        plan = plan_of(spark, name)
+        assert "CartesianProduct" not in plan, name
+        assert "Exchange rangepartitioning" not in plan, name
+        assert "partial_min" in plan, name
 
 
 def test_market_basket_pairs_from_order_equi_join(spark):
@@ -536,11 +540,13 @@ def test_clustering_coef_equi_joins_only(spark):
 
 
 def test_transition_matrix_single_user_shuffle(spark):
-    """The lag window hash-partitions by user_id (no global sort); the
-    transition/marginal joins broadcast the tiny matrix."""
-    plan = plan_of(spark, "event_transition_matrix")
-    assert "Exchange rangepartitioning" not in plan
-    assert "BroadcastHashJoin" in plan
+    """The lead window hash-partitions by user_id (no global sort); the
+    row totals broadcast back onto the tiny matrix — in both queries
+    built on the shared transition core."""
+    for name in ("event_transition_matrix", "events_markov_transitions"):
+        plan = plan_of(spark, name)
+        assert "Exchange rangepartitioning" not in plan, name
+        assert "BroadcastHashJoin" in plan, name
 
 
 def test_triplet_mining_stays_on_bucket_probe(spark):
