@@ -28,10 +28,6 @@ import sys
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
-from mediawiki_to_notion_spark.functions.gfm_convert import (
-    CONVERT_DDL_SUFFIX,
-    convert_batches,
-)
 from mediawiki_to_notion_spark.plans import pipeline as P
 from mediawiki_to_notion_spark.session import get_spark
 from mediawiki_to_notion_spark.sources.xml_dump import read_dump, split_pages_files
@@ -68,62 +64,41 @@ def _report_side_output(df, outdir: str, name: str, fmt,
 
 
 def cmd_process_dump(args: argparse.Namespace) -> int:
+    """One pass over the dump: the parsed pages are cached (spilling to
+    disk past memory), and every output reads that one frame — the
+    reference's single streaming pass (process-mw-dump.py:35-89).  Each
+    side-output write is the one action that forces its stage, and the
+    Markdown and upload writers are Arrow stages that write their files
+    as that action runs."""
     spark = get_spark("process-dump")
-    raw = read_dump(spark, args.xmlfile)
-    pages, files = split_pages_files(raw)
-    routed = P.route_pages(pages)
-    outdir = args.outdir
+    raw = read_dump(spark, args.xmlfile).persist()
+    try:
+        pages, files = split_pages_files(raw)
+        routed = P.route_pages(pages)
+        outdir = args.outdir
 
-    _report_side_output(
-        P.skipped_warnings(routed), outdir, "skipped_pages",
-        lambda w: f"\tWARNING: {w.message}: {w.key}",
-    )
+        _report_side_output(
+            P.skipped_warnings(routed), outdir, "skipped_pages",
+            lambda w: f"\tWARNING: {w.message}: {w.key}",
+        )
 
-    prepared = P.prepare_pages(routed)
-    _report_side_output(
-        prepared.filter(F.col("unhandled_template") != "")
-        .select("filename", "unhandled_template"),
-        outdir, "unhandled_templates",
-        lambda w: f"\tWARNING: unhandled wiki template: {w.unhandled_template}",
-    )
-
-    converted = prepared.select("ns_name", "filename", "cleaned").mapInPandas(
-        convert_batches, f"ns_name string, filename string, cleaned string, {CONVERT_DDL_SUFFIX}"
-    )
-    converted = converted.persist()
-
-    def write_md(rows) -> None:
-        for r in rows:
-            if r.markdown is None:
-                continue
-            d = os.path.join(outdir, r.ns_name)
-            os.makedirs(d, exist_ok=True)
-            with open(os.path.join(d, r.filename + ".md"), "w") as f:
-                f.write(r.markdown)
-
-    converted.foreachPartition(write_md)
-    _report_side_output(
-        converted.filter(F.col("convert_error").isNotNull())
-        .select("ns_name", "filename", "convert_error"),
-        outdir, "convert_errors",
-        lambda r: f"\tERROR: could not convert {r.filename}: {r.convert_error}",
-    )
-    converted.unpersist()
-
-    decoded, bad = P.decode_files(files)
-
-    def write_files(rows) -> None:
-        d = os.path.join(outdir, "File")
-        for r in rows:
-            os.makedirs(d, exist_ok=True)
-            with open(os.path.join(d, r.filename), "wb") as f:
-                f.write(bytes(r.content))
-
-    decoded.foreachPartition(write_files)
-    _report_side_output(
-        bad, outdir, "file_decode_errors",
-        lambda w: f"\tERROR: {w.key}: {w.message}",
-    )
+        prepared = P.prepare_pages(routed)
+        _report_side_output(
+            prepared.filter(F.col("unhandled_template") != "")
+            .select("filename", "unhandled_template"),
+            outdir, "unhandled_templates",
+            lambda w: f"\tWARNING: unhandled wiki template: {w.unhandled_template}",
+        )
+        _report_side_output(
+            P.write_markdown(prepared, outdir), outdir, "convert_errors",
+            lambda r: f"\tERROR: could not convert {r.filename}: {r.convert_error}",
+        )
+        _report_side_output(
+            P.write_uploads(files, outdir), outdir, "file_decode_errors",
+            lambda w: f"\tERROR: {w.key}: {w.message}",
+        )
+    finally:
+        raw.unpersist()
     return 0
 
 

@@ -1183,12 +1183,13 @@ def market_basket_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TRANSITIONS_SQL = """
     WITH seq AS (
       SELECT user_id, event_type AS cur,
-             lead(event_type) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id) AS nxt
+             lead(event_type) OVER w AS nxt,
+             lead(event_id) OVER w AS nxt_id
       FROM events
+      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
     ), trans AS (
       SELECT cur, nxt, CAST(count(*) AS BIGINT) AS n
-      FROM seq WHERE nxt IS NOT NULL GROUP BY cur, nxt
+      FROM seq WHERE nxt_id IS NOT NULL GROUP BY cur, nxt
     )
     SELECT cur, nxt, n,
            round(n::DOUBLE / CAST(sum(n) OVER (PARTITION BY cur)
@@ -1201,21 +1202,23 @@ def _transitions(e: DataFrame) -> DataFrame:
     """First-order transition counts ``(cur, nxt, n, p)`` over per-user
     event sequences, ``p`` = P(nxt | cur) rounded to 6 dp.  Ties in ts
     break by event_id so the sequence — and therefore the matrix — is
-    unique at any parallelism and in both engines.
+    unique at any parallelism and in both engines.  A transition into
+    a NULL event type is kept: only the last event of a user's sequence
+    (no next ``event_id``) has no transition.
 
     Scale shape: ONE lead window partitioned by user_id — one
     hash-partitioned shuffle of the events, each user's timeline
     sorted within its partition (no global sort); the transition
     matrix is then a |types|² aggregate, and the row totals are a
     |types|-row aggregate of it, broadcast back onto the matrix."""
+    w = W.partitionBy("user_id").orderBy("ts", "event_id")
     seq = e.select(
         F.col("event_type").alias("cur"),
-        F.lead("event_type").over(
-            W.partitionBy("user_id").orderBy("ts", "event_id")
-        ).alias("nxt"),
+        F.lead("event_type").over(w).alias("nxt"),
+        F.lead("event_id").over(w).alias("nxt_id"),
     )
     trans = (
-        seq.filter(F.col("nxt").isNotNull())
+        seq.filter(F.col("nxt_id").isNotNull())
         .groupBy("cur", "nxt")
         .agg(F.count(F.lit(1)).alias("n"))
     )

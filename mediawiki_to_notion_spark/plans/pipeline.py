@@ -3,7 +3,10 @@
 
 1. `process_dump` — XML dump → cleaned, converted markdown pages +
    decoded binary files + warning side-outputs
-   (process-mw-dump.py:389-398 CLI equivalent).
+   (process-mw-dump.py:389-398 CLI equivalent).  The Markdown and
+   upload writers are Arrow stages (`write_markdown`, `write_uploads`)
+   that write their files from the executor and yield only their error
+   rows, so writing a file tree needs no Python-RDD pass.
 2. `store_blocks` — staged markdown → ordered block rows + page rows
    with status NEW (store_notion_blocks.py:75-165 equivalent).
 3. the upload stage lives in streaming/upload.py (its natural home —
@@ -18,10 +21,16 @@ predicate by construction.
 
 from __future__ import annotations
 
+import os
+from collections.abc import Iterator
+from functools import partial
+
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mediawiki_to_notion_spark.functions import wikitext as wt
+from mediawiki_to_notion_spark.functions.gfm_convert import convert_batches
 from mediawiki_to_notion_spark.functions.markdown_blocks import (
     BLOCK_ROWS_DDL,
     markdown_to_block_rows,
@@ -107,22 +116,87 @@ def prepare_pages(routed: DataFrame) -> DataFrame:
     )
 
 
-def decode_files(files: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """File route: base64 guard (process-mw-dump.py:160-163) → decoded
-    binary rows + error side-output."""
-    ok = files.filter(F.col("encoding") == "base64").select(
+def _write_markdown_batches(outdir: str,
+                            batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """mapInPandas writer over (ns_name, filename, cleaned): converts each
+    page (``convert_batches``), writes its ``<outdir>/<ns_name>/<filename>.md``
+    and yields only the pages that failed to convert."""
+    for pdf in convert_batches(batches):
+        for ns_name, filename, markdown in zip(
+            pdf["ns_name"], pdf["filename"], pdf["markdown"]
+        ):
+            if markdown is None:
+                continue
+            d = os.path.join(outdir, ns_name)
+            os.makedirs(d, exist_ok=True)
+            with open(os.path.join(d, filename + ".md"), "w") as f:
+                f.write(markdown)
+        yield pdf.loc[pdf["convert_error"].notna(),
+                      ["ns_name", "filename", "convert_error"]]
+
+
+def write_markdown(prepared: DataFrame, outdir: str) -> DataFrame:
+    """Markdown writer stage over ``prepare_pages`` output: a lazy frame of
+    the conversion errors ``(ns_name, filename, convert_error)``; the
+    action that forces it writes the ``.md`` files."""
+    return prepared.select("ns_name", "filename", "cleaned").mapInPandas(
+        partial(_write_markdown_batches, outdir),
+        "ns_name string, filename string, convert_error string",
+    )
+
+
+def decode_files(files: DataFrame) -> DataFrame:
+    """File route: base64 guard (process-mw-dump.py:160-163) → one row
+    per upload, ``(filename, content, message)``: the decoded bytes for a
+    base64 upload, else the decode-error message."""
+    b64 = F.col("encoding") == "base64"  # NULL for a missing encoding
+    return files.select(
         "filename",
-        F.unbase64(F.regexp_replace("contents_b64", r"\s+", "")).alias("content"),
+        F.when(b64, F.unbase64(F.regexp_replace("contents_b64", r"\s+", "")))
+         .alias("content"),
+        F.when(b64, F.lit(None)).otherwise(
+            F.concat(F.lit("expected base64 encoding, got "),
+                     F.coalesce(F.col("encoding"), F.lit("NULL")))
+        ).alias("message"),
     )
-    bad = files.filter(
-        F.col("encoding").isNull() | (F.col("encoding") != "base64")
-    ).select(
-        F.lit("file_decoder").alias("source"),
-        F.col("filename").alias("key"),
-        F.concat(F.lit("expected base64 encoding, got "),
-                 F.coalesce(F.col("encoding"), F.lit("NULL"))).alias("message"),
+
+
+def _write_upload_batches(outdir: str,
+                          batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """mapInPandas writer over ``decode_files`` rows: writes each decoded
+    upload to ``<outdir>/File/<filename>`` and yields the decode-error
+    side-output rows ``(source, key, message)``."""
+    d = os.path.join(outdir, "File")
+    for pdf in batches:
+        bad = pdf["message"].notna()
+        for filename, content in zip(pdf.loc[~bad, "filename"],
+                                     pdf.loc[~bad, "content"]):
+            os.makedirs(d, exist_ok=True)
+            with open(os.path.join(d, filename), "wb") as f:
+                f.write(content)
+        yield pd.DataFrame({"source": "file_decoder",
+                            "key": pdf.loc[bad, "filename"],
+                            "message": pdf.loc[bad, "message"]})
+
+
+def write_uploads(files: DataFrame, outdir: str) -> DataFrame:
+    """Upload writer stage: a lazy frame of the decode errors
+    ``(source, key, message)``; the action that forces it writes the
+    decoded files."""
+    return decode_files(files).mapInPandas(
+        partial(_write_upload_batches, outdir),
+        "source string not null, key string, message string not null",
     )
-    return ok, bad
+
+
+def _block_rows_with_bucket(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """``markdown_to_block_rows`` with each document's ``s3_bucket``
+    carried onto its block rows."""
+    for pdf in batches:
+        bucket = dict(zip(pdf["batch_id"], pdf["s3_bucket"]))
+        for rows in markdown_to_block_rows(iter([pdf])):
+            rows["s3_bucket"] = rows["batch_id"].map(bucket)
+            yield rows
 
 
 def store_blocks(staged: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -139,15 +213,12 @@ def store_blocks(staged: DataFrame) -> tuple[DataFrame, DataFrame]:
         staged = staged.withColumn("s3_bucket", F.lit("local"))
 
     blocks = (
-        ensure_parallelism(staged.select("batch_id", "s3_object_key", "markdown"))
-        .mapInPandas(markdown_to_block_rows, BLOCK_ROWS_DDL)
-    )
-    bucket = staged.select("batch_id", "s3_bucket").alias("m")
-    blocks = (
-        blocks.alias("b")
-        .join(F.broadcast(bucket), "batch_id")
-        .select("b.batch_id", "b.block_index", F.col("m.s3_bucket").alias("s3_bucket"),
-                "b.s3_object_key", "b.block_type", "b.block_json",
+        ensure_parallelism(
+            staged.select("batch_id", "s3_object_key", "markdown", "s3_bucket"))
+        .mapInPandas(_block_rows_with_bucket,
+                     f"{BLOCK_ROWS_DDL}, s3_bucket string")
+        .select("batch_id", "block_index", "s3_bucket", "s3_object_key",
+                "block_type", "block_json",
                 F.lit(None).cast("timestamp").alias("uploaded_at"))
     )
     pages = staged.select(

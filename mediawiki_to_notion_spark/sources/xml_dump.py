@@ -247,8 +247,9 @@ def read_dump(spark: SparkSession, path: str,
     When ``split_bytes`` is not given it auto-tunes: small enough that
     the dump spreads over ~2 tasks per core (a sub-64 MB dump must not
     collapse to one task and serialize every downstream stage), floored
-    at {MIN_SPLIT_BYTES} so tasks aren't seek-dominated, capped at
-    {DEFAULT_SPLIT_BYTES}.
+    at ``MIN_SPLIT_BYTES`` so tasks aren't seek-dominated, capped at
+    ``DEFAULT_SPLIT_BYTES``.  Each split is one partition of the
+    returned frame.
 
     page_id is content-addressed on (source file, byte offset of the
     page's ``<page>`` marker): unique, and stable across re-runs, task
@@ -262,10 +263,18 @@ def read_dump(spark: SparkSession, path: str,
             max(MIN_SPLIT_BYTES, total // max(target_tasks, 1) or 1),
         )
     splits = plan_splits(path, split_bytes)
-    sdf = spark.createDataFrame(
-        pd.DataFrame(splits, columns=["path", "start", "end", "ns_json"]),
-        schema="path string, start long, end long, ns_json string",
-    ).repartition(max(len(splits), 1), "path", "start")
+    # one split per partition, with no shuffle: each task picks its
+    # split out of a literal array by its row index
+    table = F.array(*[
+        F.struct(F.lit(sp["path"]).alias("path"),
+                 F.lit(sp["start"]).cast("long").alias("start"),
+                 F.lit(sp["end"]).cast("long").alias("end"),
+                 F.lit(sp["ns_json"]).alias("ns_json"))
+        for sp in splits
+    ])
+    sdf = spark.range(len(splits), numPartitions=len(splits)).select(
+        table[F.col("id").cast("int")].alias("split")
+    ).select("split.*")
     raw = sdf.mapInPandas(
         _parse_splits,
         "offset long, ns_id int, ns_name string, title string, "

@@ -79,6 +79,45 @@ def test_cli_ingest_descends_into_namespace_dirs(spark, tmp_path, capsys):
     assert n_whole == n_per_ns >= 2
 
 
+# Jobs the command starts on _dump_xml(): one forcing write per side
+# output, and a read-back of the first rows of each non-empty one.
+PROCESS_DUMP_JOBS = 7
+
+
+def test_process_dump_parses_once(spark, tmp_path, monkeypatch, capsys):
+    """Every output of process-dump reads one cached parse of the dump:
+    the parse kernel runs once per split, and the command's job group
+    starts no more jobs than its side-output writes and read-backs."""
+    from mediawiki_to_notion_spark.sources import xml_dump as XD
+
+    dump = tmp_path / "dump.xml"
+    dump.write_text(_dump_xml())
+    sc = spark.sparkContext
+    parse_runs = sc.accumulator(0)
+    parse = XD._parse_splits
+
+    def counting_parse(batches):
+        parse_runs.add(1)
+        yield from parse(batches)
+
+    monkeypatch.setattr(XD, "_parse_splits", counting_parse)
+    cached_before = sc._jsc.sc().getPersistentRDDs().size()
+    group = "process-dump-single-pass"
+    sc.setJobGroup(group, "process-dump on _dump_xml()")
+    try:
+        assert cli.main(["process-dump", "-outdir", str(tmp_path / "out"),
+                         str(dump)]) == 0
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    capsys.readouterr()
+    assert parse_runs.value == len(XD.plan_splits(str(dump))) == 1
+    assert 0 < len(jobs) <= PROCESS_DUMP_JOBS
+    # the cache is released when the command returns
+    assert sc._jsc.sc().getPersistentRDDs().size() == cached_before
+
+
 def _user_pages_dump(n: int) -> str:
     pages = "".join(
         f"<page><title>User:U{i}</title><ns>2</ns>"

@@ -85,3 +85,31 @@ def test_conversion_rounds_half_away_from_zero(spark, tmp_path):
     assert [rows[k].n_users for k in (1, 2, 3)] == [128, 1, 0]
     assert rows[2].conversion_from_prev == 0.007813
     assert rows[3].conversion_from_prev == 0.0
+
+
+def test_transition_into_null_event_type_is_kept(spark, tmp_path):
+    """A NULL next event type is a transition of its own; only the last
+    event of a user's sequence has none.  User 1 goes view → NULL →
+    click, user 2 view → click."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t0 = dt.datetime(2024, 1, 3, 12)
+    users = [1, 1, 1, 2, 2]
+    types = ["view", None, "click", "view", "click"]
+    pq.write_table(pa.table({
+        "event_id": pa.array(range(len(users)), pa.int64()),
+        "ts": pa.array([t0 + dt.timedelta(minutes=i) for i in range(5)],
+                       pa.timestamp("us")),
+        "user_id": pa.array(users, pa.int64()),
+        "event_type": pa.array(types, pa.string()),
+        "value": pa.array([1.0] * len(users)),
+        "props": pa.array(["{}"] * len(users)),
+    }), str(tmp_path / "events.parquet"))
+    for name in ("event_transition_matrix", "events_markov_transitions"):
+        result = compare(spark, QUERIES[name], ORACLES[name], str(tmp_path))
+        assert result["match"], f"{name}: {result}"
+    rows = {(r.cur, r.nxt): (r.n, r.p) for r in
+            QUERIES["events_markov_transitions"](spark, str(tmp_path)).collect()}
+    assert rows == {("view", None): (1, 0.5), ("view", "click"): (1, 0.5),
+                    (None, "click"): (1, 1.0)}

@@ -946,3 +946,41 @@ def test_upload_arrangement_is_one_shuffle(spark, staged_tables, shards):
     assert plan.count("BroadcastExchange ") == 1
     assert plan.count("Exchange ") == 2
     assert plan.count("Sort [") == 1
+
+
+# RDD methods that run Python functions in a Python-RDD worker pool of
+# their own, next to the one that serves the Arrow stages.
+PYTHON_RDD_METHODS = {
+    "foreach", "foreachPartition", "mapPartitions", "mapPartitionsWithIndex",
+    "parallelize", "javaToPython",
+}
+
+
+def test_package_runs_no_python_rdd_pass():
+    """Every Python stage of the package is an Arrow stage (mapInPandas,
+    pandas UDFs), so one Python worker pool serves the whole pipeline.
+    The one allowed use of ``.rdd`` is reading a partition count
+    (``ensure_parallelism``), which runs no Python."""
+    import ast
+    import pathlib
+
+    import mediawiki_to_notion_spark
+
+    root = pathlib.Path(mediawiki_to_notion_spark.__file__).parent
+    bad = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        allowed = {
+            id(node.func.value) for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "getNumPartitions"
+        }
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Attribute):
+                continue
+            if node.attr in PYTHON_RDD_METHODS or (
+                node.attr == "rdd" and id(node) not in allowed
+            ):
+                bad.append(f"{path.relative_to(root)}:{node.lineno} .{node.attr}")
+    assert not bad, bad

@@ -211,31 +211,60 @@ def test_prepare_and_convert(dump_frames, spark):
 
 def test_file_decode_and_error_paths(dump_frames):
     _, _, files = dump_frames
-    ok, bad = P.decode_files(files)
-    decoded = {r.filename: bytes(r.content) for r in ok.collect()}
-    assert decoded == {"diagram one.png": PNG_BYTES}
-    errs = bad.collect()
-    assert [e.key for e in errs] == ["bad.bin"]
-    assert "expected base64 encoding, got 7bit" in errs[0].message
+    rows = {r.filename: r for r in P.decode_files(files).collect()}
+    assert set(rows) == {"diagram one.png", "bad.bin"}
+    assert bytes(rows["diagram one.png"].content) == PNG_BYTES
+    assert rows["diagram one.png"].message is None
+    assert rows["bad.bin"].content is None
+    assert rows["bad.bin"].message == "expected base64 encoding, got 7bit"
 
 
-def test_file_sink_binary_roundtrip(dump_frames, spark, tmp_path):
-    """File sink (process-mw-dump.py:157-177): write decoded uploads to
-    <outdir>/<filename> from an executor partition."""
+def test_file_sink_binary_roundtrip(dump_frames, tmp_path):
+    """File sink (process-mw-dump.py:157-177): the package's upload writer
+    stage writes the decoded uploads to <outdir>/File/<filename> from the
+    executor and yields only the decode errors."""
     _, _, files = dump_frames
-    ok, _ = P.decode_files(files)
-    outdir = tmp_path / "uploads"
-    outdir.mkdir()
+    errors = P.write_uploads(files, str(tmp_path)).collect()
+    assert [(e.source, e.key, e.message) for e in errors] == [
+        ("file_decoder", "bad.bin", "expected base64 encoding, got 7bit")]
+    assert sorted(os.listdir(tmp_path / "File")) == ["diagram one.png"]
+    assert (tmp_path / "File" / "diagram one.png").read_bytes() == PNG_BYTES
 
-    out = str(outdir)
 
-    def write_partition(rows):
-        for r in rows:
-            with open(os.path.join(out, r.filename), "wb") as f:
-                f.write(bytes(r.content))
+def test_markdown_sink_roundtrip(dump_frames, tmp_path):
+    """Markdown sink (process-mw-dump.py:256-292): the package's Markdown
+    writer stage writes <outdir>/<ns_name>/<filename>.md with exactly the
+    converter's output, and yields only the pages that failed to
+    convert."""
+    from mediawiki_to_notion_spark.functions.gfm_convert import (
+        convert_document,
+    )
 
-    ok.foreachPartition(write_partition)
-    assert (outdir / "diagram one.png").read_bytes() == PNG_BYTES
+    _, pages, _ = dump_frames
+    prepared = P.prepare_pages(P.route_pages(pages))
+    errors = P.write_markdown(prepared, str(tmp_path)).collect()
+    assert errors == []
+    want = {
+        os.path.join(r.ns_name, r.filename + ".md"): convert_document(r.cleaned)[0]
+        for r in prepared.collect()
+    }
+    assert sorted(want) == [os.path.join("Category", "Net.md"),
+                            os.path.join("Main", "Router Notes.md")]
+    for rel, markdown in want.items():
+        assert (tmp_path / rel).read_text() == markdown
+
+
+def test_markdown_sink_yields_convert_errors(spark, tmp_path):
+    """A page the converter rejects is not written; its error row is what
+    the stage yields."""
+    prepared = spark.createDataFrame(
+        [("Main", "ok", "plain text"), ("Main", "none", None)],
+        "ns_name string, filename string, cleaned string",
+    )
+    errors = P.write_markdown(prepared, str(tmp_path)).collect()
+    assert [(e.ns_name, e.filename, e.convert_error) for e in errors] == [
+        ("Main", "none", "empty")]
+    assert sorted(os.listdir(tmp_path / "Main")) == ["ok.md"]
 
 
 def test_split_scan_medium_dump(spark, tmp_path):
