@@ -148,11 +148,14 @@ def write_markdown(prepared: DataFrame, outdir: str) -> DataFrame:
 def decode_files(files: DataFrame) -> DataFrame:
     """File route: base64 guard (process-mw-dump.py:160-163) → one row
     per upload, ``(filename, content, message)``: the decoded bytes for a
-    base64 upload, else the decode-error message."""
+    base64 upload (``b""`` for empty contents), else the decode-error
+    message."""
     b64 = F.col("encoding") == "base64"  # NULL for a missing encoding
+    # an empty <contents encoding="base64"/> parses as NULL: it is b""
+    contents = F.coalesce(F.col("contents_b64"), F.lit(""))
     return files.select(
         "filename",
-        F.when(b64, F.unbase64(F.regexp_replace("contents_b64", r"\s+", "")))
+        F.when(b64, F.unbase64(F.regexp_replace(contents, r"\s+", "")))
          .alias("content"),
         F.when(b64, F.lit(None)).otherwise(
             F.concat(F.lit("expected base64 encoding, got "),

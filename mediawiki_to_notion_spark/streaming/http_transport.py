@@ -1,25 +1,13 @@
 """Real HTTP transport for the Notion sink (urllib3).
 
-Carries the reference's literal retry policy
-(upload_notion_blocks.py:157-184):
-
-    Retry(total=None, status=5, backoff_factor=0.2,
-          status_forcelist=(429, 502, 503, 504),
-          allowed_methods=(POST, HEAD, TRACE, GET, PUT, OPTIONS, DELETE),
-          raise_on_status=True)
-
-with one deliberate tightening: the reference's comment declares
-"Don't retry for connection ... errors" but ``total=None`` with
-``connect=None`` leaves urllib3's connect counter unbounded; we pass
-``connect=0, read=0, redirect=0`` so the *declared* discipline (and the
-round-1-tested retry matrix: no connect retries) is actually enforced.
-
-The transport satisfies the same duck interface as
-:class:`ScriptedTransport` — ``request(op_key, payload) -> dict`` raising
-``HTTPStatusError`` / ``TransportError`` — and additionally sets
-``handles_retries = True`` so :class:`NotionClient` performs a single
-attempt and lets urllib3 own the backoff (otherwise the 5-retry loop
-would be applied twice, 36 attempts instead of 6).
+``request`` makes one HTTP attempt (``retries=False``): a 200 returns the
+decoded body, any other status raises ``HTTPStatusError`` carrying the
+reply's ``Retry-After`` in seconds (parsed by urllib3's own
+``Retry.parse_retry_after``), and any urllib3 error raises
+``TransportError``.  The reference's retry discipline
+(upload_notion_blocks.py:157-184) lives in one place,
+:meth:`NotionClient._call`, which drives this transport and
+:class:`ScriptedTransport` alike.
 
 Op-key → HTTP mapping (the Notion API surface the reference touches via
 notion-py / md2notion):
@@ -37,9 +25,6 @@ from __future__ import annotations
 import json
 
 from mediawiki_to_notion_spark.streaming.notion_client import (
-    BACKOFF_FACTOR,
-    MAX_STATUS_RETRIES,
-    RETRYABLE_STATUSES,
     HTTPStatusError,
     TransportError,
 )
@@ -47,84 +32,28 @@ from mediawiki_to_notion_spark.streaming.notion_client import (
 try:  # urllib3 ships with requests; guard anyway for minimal images
     import urllib3
     from urllib3.exceptions import HTTPError as _U3HTTPError
-    from urllib3.exceptions import MaxRetryError
     from urllib3.util import Retry
 
     HAVE_URLLIB3 = True
 except ImportError:  # pragma: no cover
     urllib3 = None
-    MaxRetryError = _U3HTTPError = None
+    _U3HTTPError = None
     Retry = None
     HAVE_URLLIB3 = False
 
 
-if HAVE_URLLIB3:
-
-    class _RecordingRetry(Retry):
-        """Retry that records the last retried-status into a shared cell,
-        so exhaustion surfaces the real final status instead of being
-        regex-scraped out of urllib3's (non-contractual) exception text."""
-
-        def __init__(self, *args, status_cell: list | None = None,
-                     throttle_cell: list | None = None, **kw) -> None:
-            super().__init__(*args, **kw)
-            self._status_cell = status_cell
-            self._throttle_cell = throttle_cell
-
-        def new(self, **kw):  # urllib3 clones Retry on every increment
-            clone = super().new(**kw)
-            clone._status_cell = self._status_cell
-            clone._throttle_cell = self._throttle_cell
-            return clone
-
-        def increment(self, *args, response=None, **kw):
-            if response is not None and self._status_cell is not None:
-                self._status_cell[0] = response.status
-            if (response is not None and response.status == 429
-                    and self._throttle_cell is not None):
-                # count every 429 the retry loop absorbs so the
-                # adaptive pacer sees throttle density even when
-                # urllib3 owns the retries — and carry the largest
-                # advertised Retry-After out with it (r10: the pacer
-                # adopts it as the interval floor; urllib3's own sleep
-                # semantics are untouched, we only READ the header)
-                self._throttle_cell[0] += 1
-                try:
-                    ra = self.get_retry_after(response)
-                except Exception:
-                    ra = None
-                if ra:
-                    prev = self._throttle_cell[1] or 0.0
-                    self._throttle_cell[1] = max(prev, float(ra))
-            return super().increment(*args, response=response, **kw)
-
-
-def reference_retry_policy(status_cell: list | None = None,
-                           throttle_cell: list | None = None) -> "Retry":
-    """The reference's Retry, verbatim where urllib3 v2 allows (v2 renamed
-    ``method_whitelist`` → ``allowed_methods``), plus the explicit
-    connect/read/redirect zeros discussed in the module docstring."""
-    return _RecordingRetry(
-        status_cell=status_cell,
-        throttle_cell=throttle_cell,
-        total=None,
-        status=MAX_STATUS_RETRIES,
-        connect=0,
-        read=0,
-        redirect=0,
-        backoff_factor=BACKOFF_FACTOR,
-        status_forcelist=RETRYABLE_STATUSES,
-        allowed_methods=("POST", "HEAD", "TRACE", "GET", "PUT", "OPTIONS",
-                         "DELETE", "PATCH"),
-        raise_on_status=True,
-        respect_retry_after_header=True,
-    )
+def _retry_after_s(resp) -> float | None:
+    header = resp.headers.get("Retry-After")
+    if header is None:
+        return None
+    try:
+        return Retry().parse_retry_after(header)
+    except _U3HTTPError:  # InvalidHeader: treat as not advertised
+        return None
 
 
 class HttpTransport:
     """urllib3-backed Notion API transport (see module docstring)."""
-
-    handles_retries = True
 
     def __init__(self, base_url: str, token: str = "",
                  timeout_s: float = 10.0) -> None:
@@ -134,38 +63,13 @@ class HttpTransport:
         self.token = token
         self.timeout_s = timeout_s
         self._pool = None
-        self._throttles = 0  # 429s absorbed by urllib3 since last pop
-        self._retry_after_hint: float | None = None  # largest advertised
 
     # -- pickling: pool is per-process, never shipped ------------------------
 
     def __getstate__(self) -> dict:
         state = self.__dict__.copy()
         state["_pool"] = None
-        state["_throttles"] = 0  # per-process counter, never shipped
-        state["_retry_after_hint"] = None
         return state
-
-    def pop_throttle_count(self) -> int:
-        """Drain the 429 counter (read by NotionClient so an adaptive
-        rate limiter can react to throttles urllib3 already retried)."""
-        n = self._throttles
-        self._throttles = 0
-        return n
-
-    def pop_retry_after_hint(self) -> float | None:
-        """Drain the largest Retry-After (seconds) advertised by the
-        429s counted since the last pop — the adaptive pacer adopts it
-        as the interval floor (VERDICT r9 #5)."""
-        h = self._retry_after_hint
-        self._retry_after_hint = None
-        return h
-
-    def _flush_throttles(self, throttles: list) -> None:
-        self._throttles += throttles[0]
-        if throttles[1]:
-            prev = self._retry_after_hint or 0.0
-            self._retry_after_hint = max(prev, throttles[1])
 
     def _http(self):
         if self._pool is None:
@@ -203,33 +107,14 @@ class HttpTransport:
         headers = {"Content-Type": "application/json"}
         if self.token:
             headers["Authorization"] = f"Bearer {self.token}"
-        last_status: list = [None]
-        throttles: list = [0, None]  # [count, largest Retry-After]
         try:
-            resp = self._http().request(
-                method, url, body=body, headers=headers,
-                retries=reference_retry_policy(last_status, throttles),
-            )
-        except MaxRetryError as exc:
-            # the recording Retry counts EVERY 429 (its increment runs
-            # before super()'s exhaustion raise, so the final 429 is
-            # already included)
-            self._flush_throttles(throttles)
-            # status=5 exhausted (raise_on_status) — the recording Retry
-            # carried the real final status out of the retry loop
-            if last_status[0] is not None:
-                raise HTTPStatusError(int(last_status[0])) from exc
-            raise TransportError(str(exc)) from exc
+            resp = self._http().request(method, url, body=body,
+                                        headers=headers, retries=False)
         except _U3HTTPError as exc:
-            # connect/read/protocol errors: never retried (connect=0) —
-            # but a 429 absorbed on an EARLIER attempt of this request
-            # must still reach the adaptive pacer (ADVICE r9)
-            self._flush_throttles(throttles)
             raise TransportError(str(exc)) from exc
-        self._flush_throttles(throttles)
         if resp.status != 200:
-            # non-forcelist status (e.g. 404): one attempt, no retry
-            raise HTTPStatusError(resp.status)
+            raise HTTPStatusError(resp.status,
+                                  retry_after_s=_retry_after_s(resp))
         try:
             data = json.loads(resp.data.decode() or "{}")
         except ValueError:

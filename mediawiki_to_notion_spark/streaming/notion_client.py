@@ -1,14 +1,25 @@
 """Rate-limited, retrying Notion-sink client (mockable).
 
-Mirrors the reference's HTTP discipline (upload_notion_blocks.py:157-184):
+:meth:`NotionClient._call` is the sink's one retry loop.  Transports make
+a single attempt each (``request(op_key, payload) -> dict``, raising
+``HTTPStatusError`` / ``TransportError``), and the loop applies the
+reference's HTTP discipline (upload_notion_blocks.py:157-184) on the
+schedule of the urllib3 ``Retry`` the reference configures:
 - retry only on HTTP status 429/502/503/504
-- at most 5 status-retries with exponential backoff (factor 0.2)
+- at most 5 status-retries (6 attempts); no wait before the first
+  retry, then backoff 0.2 * 2^(n-1) s (0.4, 0.8, 1.6, 3.2)
+- an advertised Retry-After replaces the backoff
 - connect/read errors are NOT retried
 - client memoized per executor (module global, :51,157-161)
 
+Every 429 also reaches the :class:`RateLimiter`, which widens its pacing
+interval until the offered load fits the server's budget.
+
 The transport is injected and must be picklable so the same object rides
 into Spark workers; tests use :class:`ScriptedTransport` to inject
-429/5xx/connect-error sequences (FIXTURES A7).
+429/5xx/connect-error sequences (FIXTURES A7), and
+:class:`~mediawiki_to_notion_spark.streaming.http_transport.HttpTransport`
+speaks real HTTP.
 """
 
 from __future__ import annotations
@@ -22,8 +33,8 @@ BACKOFF_FACTOR = 0.2
 
 
 class TransportError(Exception):
-    """Connect/read-level failure — never retried (Retry(total=None,
-    connect=0) in the reference)."""
+    """Connect/read-level failure — never retried (the reference's
+    declared "don't retry for connection errors")."""
 
 
 class WorkerCrash(BaseException):
@@ -40,9 +51,9 @@ class HTTPStatusError(Exception):
                  retry_after_s: float | None = None) -> None:
         super().__init__(f"HTTP {status}")
         self.status = status
-        # a 429's advertised Retry-After (seconds), when the server
-        # sent one — the adaptive pacer adopts it as the interval
-        # floor instead of multiplicative guessing (VERDICT r9 #5)
+        # the reply's advertised Retry-After (seconds), when the server
+        # sent one: it replaces the retry backoff, and on a 429 the
+        # pacer adopts it as the interval floor
         self.retry_after_s = retry_after_s
 
 
@@ -74,53 +85,25 @@ class ScriptedTransport:
 
 @dataclass
 class RateLimiter:
-    """Token-bucket pacer — the reference achieves API politeness with a
-    1-wide distributed semaphore (upload-state-machine.asl.json:5-68);
-    a single sink partition + this pacer gives the same guarantee.
+    """429-responsive token-bucket pacer.  The reference achieves API
+    politeness with a 1-wide distributed semaphore
+    (upload-state-machine.asl.json:5-68); a single sink partition + this
+    pacer gives the same guarantee.
 
-    ``clock`` is any object with ``monotonic()``/``sleep()`` (defaults
-    to the ``time`` module) — injected by tests to run pacing against a
-    virtual clock.  ``on_throttle``/``on_success`` are no-op feedback
-    hooks; :class:`AdaptiveRateLimiter` overrides them."""
+    The reference's Retry policy only survives throttling; its intent is
+    kindness to the API.  So every 429 the retry loop sees widens the
+    pacing interval (multiplicatively, or straight to an advertised
+    Retry-After), and successes decay it geometrically back to the
+    configured base.  Without 429s the interval stays at the base.
+
+    ``min_interval_s`` is the configured base and also holds the live
+    interval.  ``clock`` is any object with ``monotonic()``/``sleep()``
+    (defaults to the ``time`` module) — injected by tests to run pacing
+    against a virtual clock."""
 
     min_interval_s: float = 0.0
     _last: float = field(default=0.0, repr=False)
     clock: object = field(default=time, repr=False)
-
-    def wait(self) -> None:
-        if self.min_interval_s <= 0:
-            return
-        now = self.clock.monotonic()
-        delta = now - self._last
-        if delta < self.min_interval_s:
-            self.clock.sleep(self.min_interval_s - delta)
-        self._last = self.clock.monotonic()
-
-    def on_throttle(self, n: int = 1,
-                    retry_after_s: float | None = None) -> None:
-        """Feedback hook: the API said 429 (n times), optionally
-        advertising a Retry-After of ``retry_after_s``.  No-op here."""
-
-    def on_success(self) -> None:
-        """Feedback hook: a call completed without throttling."""
-
-
-@dataclass
-class AdaptiveRateLimiter(RateLimiter):
-    """429-responsive pacing (VERDICT r8 brief #6): the reference's
-    INTENT is kindness to the API — the Retry policy merely survives
-    throttling, it does not reduce offered load.  This limiter widens
-    the pacing interval multiplicatively on every observed 429, decaying
-    it geometrically back toward the configured base on successes, so
-    the aggregate request rate converges UNDER the server's actual
-    budget instead of hammering the retry path.  The verbatim Retry
-    semantics (statuses, counts, backoff) are untouched — this only
-    changes how long we wait BETWEEN calls.
-
-    ``min_interval_s`` is the configured base (the static politeness
-    budget, ``UploadConfig`` docs); the dynamic interval lives in the
-    same field so ``wait()`` is inherited unchanged."""
-
     max_interval_s: float = 0.0          # 0 -> 32x the base (or floor)
     widen_factor: float = 2.0
     decay_factor: float = 0.98           # surplus decay per success (gentle re-probe)
@@ -133,16 +116,22 @@ class AdaptiveRateLimiter(RateLimiter):
             self.max_interval_s = 32 * max(
                 self._base, self.min_throttle_interval_s)
 
-    def on_throttle(self, n: int = 1,
-                    retry_after_s: float | None = None) -> None:
-        # Retry-After adoption (VERDICT r9 #5): when the server
-        # advertises a precise recovery interval, jump the pacing
-        # interval straight to it — one 429 instead of several blind
-        # doublings, the kindness the reference intends
-        # (upload_notion_blocks.py:157-184).  A hint that does NOT
-        # raise the interval (server still throttling at/below the
-        # adopted floor) falls through to the multiplicative widen so
-        # adaptation can never stall on a stale advertisement.
+    def wait(self) -> None:
+        if self.min_interval_s <= 0:
+            return
+        now = self.clock.monotonic()
+        delta = now - self._last
+        if delta < self.min_interval_s:
+            self.clock.sleep(self.min_interval_s - delta)
+        self._last = self.clock.monotonic()
+
+    def on_throttle(self, *, retry_after_s: float | None = None) -> None:
+        """The API said 429, optionally advertising a Retry-After."""
+        # an advertised recovery interval replaces the multiplicative
+        # guess: one 429 instead of several blind doublings.  A hint
+        # that does NOT raise the interval (server still throttling
+        # at/below the adopted floor) falls through to the widen, so
+        # adaptation never stalls on a stale advertisement.
         if retry_after_s and retry_after_s > self.min_interval_s:
             self.min_interval_s = min(
                 self.max_interval_s,
@@ -150,12 +139,11 @@ class AdaptiveRateLimiter(RateLimiter):
                     self._base),
             )
             return
-        for _ in range(max(1, n)):
-            self.min_interval_s = min(
-                self.max_interval_s,
-                max(self.min_interval_s * self.widen_factor,
-                    self.min_throttle_interval_s, self._base),
-            )
+        self.min_interval_s = min(
+            self.max_interval_s,
+            max(self.min_interval_s * self.widen_factor,
+                self.min_throttle_interval_s, self._base),
+        )
 
     def on_success(self) -> None:
         surplus = (self.min_interval_s - self._base) * self.decay_factor
@@ -165,64 +153,37 @@ class AdaptiveRateLimiter(RateLimiter):
 
 
 class NotionClient:
-    """Retrying wrapper over a transport."""
+    """The one retry loop, over any transport."""
 
     def __init__(self, transport, rate_limiter: RateLimiter | None = None) -> None:
         self.transport = transport
         self.rate = rate_limiter or RateLimiter()
 
     def _call(self, op_key: str, payload: dict | None = None) -> dict:
-        # transports that embed the reference's urllib3 Retry do their own
-        # status retries — applying this loop on top would square the
-        # retry count (36 attempts instead of 6)
-        if getattr(self.transport, "handles_retries", False):
-            self.rate.wait()
-            try:
-                result = self.transport.request(op_key, payload)
-            finally:
-                # transports owning their retries can expose how many
-                # 429s the retry loop absorbed (HttpTransport does) so
-                # adaptive pacing still sees throttle density — plus
-                # the largest Retry-After those 429s advertised
-                pop = getattr(self.transport, "pop_throttle_count", None)
-                n429 = pop() if callable(pop) else 0
-                pop_h = getattr(self.transport, "pop_retry_after_hint",
-                                None)
-                hint = pop_h() if callable(pop_h) else None
-                if n429:
-                    self.rate.on_throttle(n429, retry_after_s=hint)
-            if not n429:
-                self.rate.on_success()
-            return result
-        attempts = 0
+        # urllib3's Retry schedule: no wait before the first retry, then
+        # factor * 2^(n-1); an advertised Retry-After replaces it.  Sleeps
+        # ride the limiter's clock so virtual-clock tests stay coherent;
+        # a transport with ``sleep = False`` (ScriptedTransport) skips them
+        sleeps = getattr(self.transport, "sleep", True)
+        retries = 0
         while True:
             self.rate.wait()
             try:
                 result = self.transport.request(op_key, payload)
-                self.rate.on_success()
-                return result
             except HTTPStatusError as exc:
                 if exc.status == 429:
-                    self.rate.on_throttle(
-                        retry_after_s=getattr(exc, "retry_after_s", None))
-                if exc.status not in RETRYABLE_STATUSES:
+                    self.rate.on_throttle(retry_after_s=exc.retry_after_s)
+                if (exc.status not in RETRYABLE_STATUSES
+                        or retries == MAX_STATUS_RETRIES):
                     raise
-                attempts += 1
-                if attempts > MAX_STATUS_RETRIES:
-                    raise
-                # urllib3 backoff: factor * 2^(retries-1); sleeps ride
-                # the limiter's clock so virtual-clock tests stay
-                # coherent (real clock by default — behavior unchanged)
-                delay = BACKOFF_FACTOR * (2 ** (attempts - 1))
-                ra = getattr(exc, "retry_after_s", None)
-                if ra:
-                    # mirror urllib3 respect_retry_after_header: the
-                    # advertised wait wins over the computed backoff
-                    delay = max(delay, ra)
-                if self.rate.min_interval_s > 0 or getattr(
-                    self.transport, "sleep", False
-                ):
+                retries += 1
+                delay = exc.retry_after_s or (
+                    BACKOFF_FACTOR * 2 ** (retries - 1) if retries > 1 else 0)
+                if sleeps:
                     self.rate.clock.sleep(delay)
+                continue
+            self.rate.on_success()
+            return result
 
     def get_or_create_page(self, batch_id: str, parent_url: str | None,
                            existing_url: str | None,

@@ -43,7 +43,6 @@ from pyspark.sql import functions as F
 from mediawiki_to_notion_spark.streaming import ingest as tables
 from mediawiki_to_notion_spark.streaming import metrics as M
 from mediawiki_to_notion_spark.streaming.notion_client import (
-    AdaptiveRateLimiter,
     RateLimiter,
     executor_client,
 )
@@ -62,7 +61,9 @@ class UploadConfig:
     # reference: ConcurrentAccessLimit=1.  NOTE: the rate limiter paces
     # each shard independently, so the AGGREGATE request rate is
     # upload_parallelism / min_interval_s — scale min_interval_s with
-    # parallelism to hold a global API budget.
+    # parallelism to hold a global API budget.  Each shard's limiter
+    # also widens on 429s, so the aggregate rate converges under the
+    # server's budget when that static estimate overshoots.
     #
     # Measured drain-parallelism curve (tools/drain_parallelism_soak.py,
     # 20 ms injected RTT, 20k blocks, idle-gated —
@@ -76,13 +77,6 @@ class UploadConfig:
     # not to this sink: per-shard overhead above the injected RTT is
     # ~2 ms/request once the server responds in one segment.
     upload_parallelism: int = 1
-    # r9 (VERDICT r8 brief #6): opt-in 429-feedback pacing — each
-    # shard's limiter widens its interval on observed 429s and decays
-    # back to min_interval_s on successes, so the aggregate rate
-    # CONVERGES under the server's real budget when the static
-    # parallelism/min_interval_s estimate overshoots.  Retry semantics
-    # (statuses, counts, backoff) are untouched.
-    adaptive_pacing: bool = False
 
 
 def _make_worker(cfg: UploadConfig):
@@ -91,11 +85,8 @@ def _make_worker(cfg: UploadConfig):
     breaks the page (upload_notion_blocks.py:282-297)."""
 
     def worker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        limiter = (
-            AdaptiveRateLimiter(cfg.min_interval_s)
-            if cfg.adaptive_pacing else RateLimiter(cfg.min_interval_s)
-        )
-        client = executor_client(cfg.transport, limiter)
+        client = executor_client(cfg.transport,
+                                 RateLimiter(cfg.min_interval_s))
         failed_batches: set[str] = set()
         page_urls: dict[str, str] = {}
         out_cols = ["batch_id", "block_index", "s3_object_key", "ok",

@@ -1,7 +1,7 @@
 """429-adaptive politeness pacing (VERDICT r8 brief #6).
 
 The reference's intent is kindness to the API; the verbatim Retry
-policy only survives throttling.  AdaptiveRateLimiter must make the
+policy only survives throttling.  RateLimiter must make the
 aggregate request rate CONVERGE under the server's advertised budget
 when the static pacing estimate overshoots — verified here against a
 scripted 429-burst server on a virtual clock (deterministic, no real
@@ -10,7 +10,6 @@ sleeps)."""
 from __future__ import annotations
 
 from mediawiki_to_notion_spark.streaming.notion_client import (
-    AdaptiveRateLimiter,
     NotionClient,
     RateLimiter,
 )
@@ -31,7 +30,6 @@ class BudgetTransport:
     """Token-bucket API server: refills ``budget_rps`` tokens/s against
     the shared virtual clock; a request without a token is a 429."""
 
-    handles_retries = False
     sleep = True  # let the client's backoff advance the virtual clock
 
     def __init__(self, budget_rps: float, clock: VirtualClock,
@@ -65,11 +63,12 @@ class BudgetTransport:
 
 
 def test_widen_and_decay_shape():
-    rl = AdaptiveRateLimiter(min_interval_s=0.01)
+    rl = RateLimiter(min_interval_s=0.01)
     assert rl.max_interval_s == 32 * 0.05  # floor-derived cap
     rl.on_throttle()
     assert rl.min_interval_s == 0.05  # jumps to the throttle floor
-    rl.on_throttle(2)
+    rl.on_throttle()
+    rl.on_throttle()
     assert rl.min_interval_s == 0.2  # 2 doublings
     for _ in range(600):
         rl.on_success()
@@ -77,7 +76,7 @@ def test_widen_and_decay_shape():
 
 
 def test_unpaced_base_still_widens():
-    rl = AdaptiveRateLimiter(min_interval_s=0.0)
+    rl = RateLimiter(min_interval_s=0.0)
     rl.on_throttle()
     assert rl.min_interval_s >= 0.05
     for _ in range(600):
@@ -85,20 +84,13 @@ def test_unpaced_base_still_widens():
     assert rl.min_interval_s == 0.0
 
 
-def test_plain_limiter_hooks_are_noops():
-    rl = RateLimiter(min_interval_s=0.01)
-    rl.on_throttle()
-    rl.on_success()
-    assert rl.min_interval_s == 0.01
-
-
 def test_aggregate_rate_converges_under_server_budget():
     clock = VirtualClock()
     budget = 20.0  # server advertises 20 req/s
     server = BudgetTransport(budget, clock)
     # static pacing says 200 req/s — a 10x overshoot of the budget
-    rl = AdaptiveRateLimiter(min_interval_s=0.005, clock=clock,
-                             min_throttle_interval_s=0.005)
+    rl = RateLimiter(min_interval_s=0.005, clock=clock,
+                     min_throttle_interval_s=0.005)
     client = NotionClient(server, rl)
     n = 400
     for i in range(n):
@@ -130,7 +122,7 @@ def test_retry_after_adoption_jumps_to_the_advertised_floor():
     interval jumps straight to the advertised value; a hint at/below
     the current interval falls through to the blind widen so
     adaptation never stalls on a stale advertisement (VERDICT r9 #5)."""
-    rl = AdaptiveRateLimiter(min_interval_s=0.01)
+    rl = RateLimiter(min_interval_s=0.01)
     rl.on_throttle(retry_after_s=0.75)
     assert rl.min_interval_s == 0.75  # one jump, not log2(0.75/0.05) widens
     before = rl.min_interval_s
@@ -146,8 +138,8 @@ def _run_converge(advertise: bool):
     clock = VirtualClock()
     budget = 20.0
     server = BudgetTransport(budget, clock, advertise=advertise)
-    rl = AdaptiveRateLimiter(min_interval_s=0.005, clock=clock,
-                             min_throttle_interval_s=0.005)
+    rl = RateLimiter(min_interval_s=0.005, clock=clock,
+                     min_throttle_interval_s=0.005)
     client = NotionClient(server, rl)
     for i in range(400):
         client.upload_block("b", i)
@@ -172,32 +164,10 @@ def test_advertised_retry_after_converges_faster_than_blind_widen():
     assert thr_hint < thr_blind, (thr_hint, thr_blind)
 
 
-def test_http_transport_throttle_counter_pops():
-    """The urllib3 transport's recorded-429 counter drains via
-    pop_throttle_count (unit-level: cells wired through the Retry)."""
-    from mediawiki_to_notion_spark.streaming.http_transport import (
-        HAVE_URLLIB3,
-        HttpTransport,
-    )
-    if not HAVE_URLLIB3:
-        import pytest
-        pytest.skip("urllib3 not available")
-    t = HttpTransport("http://localhost:1")
-    assert t.pop_throttle_count() == 0
-    t._throttles = 3
-    assert t.pop_throttle_count() == 3
-    assert t.pop_throttle_count() == 0
-    # pickling never ships the per-process counter
-    import pickle
-    t._throttles = 5
-    t2 = pickle.loads(pickle.dumps(t))
-    assert t2.pop_throttle_count() == 0
-
-
 def test_drain_e2e_with_adaptive_pacing(spark, tmp_path):
-    """End-to-end: the upload drain with adaptive_pacing=True survives
-    a 429 burst (retries absorb it, the limiter widens) and every page
-    lands SUCCESS — the opt-in flag changes pacing, never outcomes."""
+    """End-to-end: the upload drain survives a 429 burst (retries absorb
+    it, the limiter widens) and every page lands SUCCESS — pacing
+    changes timing, never outcomes."""
     import pyspark.sql.functions as F
 
     from mediawiki_to_notion_spark.streaming import ingest
@@ -218,8 +188,7 @@ def test_drain_e2e_with_adaptive_pacing(spark, tmp_path):
     ingest.ingest_batch(spark, staged, tables_dir)
     batch = ingest.blocks_table(spark, tables_dir).read().first().batch_id
     tr = ScriptedTransport(script={f"block:{batch}:1": [429, 429]})
-    cfg = UploadConfig(transport=tr, adaptive_pacing=True,
-                       min_interval_s=0.001)
+    cfg = UploadConfig(transport=tr, min_interval_s=0.001)
     assert drain(spark, tables_dir, cfg) >= 1
     pages = ingest.pages_table(spark, tables_dir).read().collect()
     assert {p.status for p in pages} == {"SUCCESS"}

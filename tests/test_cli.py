@@ -118,6 +118,27 @@ def test_process_dump_parses_once(spark, tmp_path, monkeypatch, capsys):
     assert sc._jsc.sc().getPersistentRDDs().size() == cached_before
 
 
+def test_process_dump_empty_base64_upload(spark, tmp_path, capsys):
+    """An upload whose base64 <contents> is empty is a 0-byte file, not a
+    decode error and not a failed run."""
+    dump = tmp_path / "dump.xml"
+    dump.write_text(
+        '<mediawiki xmlns="http://www.mediawiki.org/xml/export-0.11/">'
+        '<siteinfo><namespaces><namespace key="6">File</namespace>'
+        "</namespaces></siteinfo>"
+        "<page><title>File:empty.bin</title><ns>6</ns>"
+        "<revision><text>nothing here</text></revision>"
+        "<upload><filename>empty.bin</filename>"
+        '<contents encoding="base64"></contents></upload></page>'
+        "</mediawiki>")
+    outdir = tmp_path / "out"
+    assert cli.main(["process-dump", "-outdir", str(outdir), str(dump)]) == 0
+    capsys.readouterr()
+    assert (outdir / "File" / "empty.bin").read_bytes() == b""
+    errors = spark.read.parquet(str(outdir / "_warnings" / "file_decode_errors"))
+    assert errors.count() == 0
+
+
 def _user_pages_dump(n: int) -> str:
     pages = "".join(
         f"<page><title>User:U{i}</title><ns>2</ns>"

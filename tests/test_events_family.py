@@ -113,3 +113,42 @@ def test_transition_into_null_event_type_is_kept(spark, tmp_path):
             QUERIES["events_markov_transitions"](spark, str(tmp_path)).collect()}
     assert rows == {("view", None): (1, 0.5), ("view", "click"): (1, 0.5),
                     (None, "click"): (1, 1.0)}
+
+
+def test_retention_week_is_seven_days(spark, tmp_path):
+    """Retention cells over ten weeks of events: a week offset counts
+    whole 7-day weeks between Monday-truncated weeks, so users active
+    8 and 9 weeks after their first week land at offsets 8 and 9."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    day0 = dt.datetime(2024, 1, 3, 12)  # a Wednesday; its week is Jan 1
+    events = [  # (user, days after day0)
+        (1, 0), (1, 7), (1, 56), (1, 63),
+        (2, 2), (2, 64),
+        (3, 7), (3, 35), (3, 63),
+    ]
+    pq.write_table(pa.table({
+        "event_id": pa.array(range(len(events)), pa.int64()),
+        "ts": pa.array([day0 + dt.timedelta(days=d) for _, d in events],
+                       pa.timestamp("us")),
+        "user_id": pa.array([u for u, _ in events], pa.int64()),
+        "event_type": pa.array(["view"] * len(events), pa.string()),
+        "value": pa.array([1.0] * len(events)),
+        "props": pa.array(["{}"] * len(events)),
+    }), str(tmp_path / "events.parquet"))
+    for name in ("user_retention_cohorts", "retention_cohort_matrix"):
+        result = compare(spark, QUERIES[name], ORACLES[name], str(tmp_path))
+        assert result["match"], f"{name}: {result}"
+    jan1, jan8 = dt.date(2024, 1, 1), dt.date(2024, 1, 8)
+    cells = {(jan1, 0): 2, (jan1, 1): 1, (jan1, 8): 1, (jan1, 9): 2,
+             (jan8, 0): 1, (jan8, 4): 1, (jan8, 8): 1}
+    got = {(r.cohort_week, r.week_offset): r.n_active_users for r in
+           QUERIES["user_retention_cohorts"](spark, str(tmp_path)).collect()}
+    assert got == cells
+    ms = {d: int(dt.datetime(d.year, d.month, d.day,
+                             tzinfo=dt.timezone.utc).timestamp()) * 1000
+          for d in (jan1, jan8)}
+    got = {(r.cohort_week_ms, r.weeks_since): r.n_active_users for r in
+           QUERIES["retention_cohort_matrix"](spark, str(tmp_path)).collect()}
+    assert got == {(ms[d], k): n for (d, k), n in cells.items()}

@@ -1,8 +1,8 @@
 """Contract tests for the real urllib3 transport (FIXTURES A7 on real HTTP):
-the adapter must map live 429/5xx/404/connect-error behavior onto exactly
-the retry matrix the ScriptedTransport suite pins
-(upload_notion_blocks.py:157-184 — 5 status retries, backoff 0.2,
-no connect retries)."""
+the transport makes one attempt per call, and NotionClient's retry loop
+must map live 429/5xx/404/connect-error behavior onto exactly the retry
+matrix the ScriptedTransport suite pins (upload_notion_blocks.py:157-184
+— 5 status retries, backoff 0.2, no connect retries)."""
 
 from __future__ import annotations
 
@@ -84,8 +84,18 @@ def test_retry_429_then_success_over_http(fake_api):
     srv.script["block:b:0"] = [429, 429]
     client = NotionClient(HttpTransport(base), RateLimiter(0))
     client.upload_block("b", 0, block_json="{}", page_url="u")
-    # urllib3 owns the retries; NotionClient must not stack its own loop
     assert srv.calls["block:b:0"] == 3
+
+
+def test_transport_makes_a_single_attempt(fake_api):
+    """The transport never retries on its own: a direct 503 is one
+    server call, so the client's loop cannot stack on a second one."""
+    srv, base = fake_api
+    srv.script["block:b:0"] = [503] * 10
+    with pytest.raises(HTTPStatusError) as exc:
+        HttpTransport(base).request("block:b:0", {"block_json": "{}"})
+    assert exc.value.status == 503 and exc.value.retry_after_s is None
+    assert srv.calls["block:b:0"] == 1
 
 
 def test_status_retries_exhausted_over_http(fake_api):
@@ -126,33 +136,28 @@ def test_non_retryable_status_single_attempt(fake_api):
 
 
 def test_connect_error_not_retried():
-    # unbound port → connection refused; Retry(connect=0) maps it to a
-    # single TransportError, never a retry loop
+    # unbound port → connection refused: one TransportError, which the
+    # client's loop never retries
     tr = HttpTransport("http://127.0.0.1:1", timeout_s=2)
     with pytest.raises(TransportError):
         tr.request("page:x", {"parent_url": "p", "title": "t"})
+    with pytest.raises(TransportError):
+        NotionClient(tr, RateLimiter(0)).get_or_create_page(
+            "x", "http://parent", None)
 
 
-def test_retry_after_hint_pops_and_semantics_unchanged(fake_api):
-    """A 429 with Retry-After must (a) keep the verbatim retry matrix —
-    one absorbed 429, one retry, success — and (b) surface the
-    advertised seconds via pop_retry_after_hint for the adaptive pacer
-    (VERDICT r9 #5).  The hint drains on pop."""
+def test_retry_after_429_raises_the_pacing_interval(fake_api):
+    """A 429 advertising Retry-After: 1 reaches the client's limiter
+    through the one retry loop: the interval jumps to 1.0 s, and the
+    retry's success then decays it once."""
     srv, base = fake_api
     srv.script["block:rah:0"] = [429]
     srv.retry_after = 1
-    tr = HttpTransport(base)
-    client = NotionClient(tr, RateLimiter(0))
+    rate = RateLimiter(0)
+    client = NotionClient(HttpTransport(base), rate)
     client.upload_block("rah", 0, block_json="{}", page_url="u")
-    assert srv.calls["block:rah:0"] == 2  # retry count untouched
-    assert tr._retry_after_hint is None   # drained by the client...
-    # ...into the pacer: wire a fresh transport to check the pop itself
-    srv.script["block:rah:1"] = [429]
-    tr2 = HttpTransport(base)
-    tr2.request("block:rah:1", {"block_json": "{}", "page_url": "u"})
-    assert tr2.pop_throttle_count() == 1
-    assert tr2.pop_retry_after_hint() == 1.0
-    assert tr2.pop_retry_after_hint() is None
+    assert srv.calls["block:rah:0"] == 2
+    assert rate.min_interval_s == pytest.approx(1.0 * rate.decay_factor)
 
 
 def test_transport_pickles_without_pool(fake_api):

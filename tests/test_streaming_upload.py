@@ -53,6 +53,56 @@ def test_non_retryable_status_raises_immediately():
     assert tr.calls["block:b:0"] == 1
 
 
+class _RecordingClock:
+    def __init__(self) -> None:
+        self.t, self.sleeps = 0.0, []
+
+    def monotonic(self) -> float:
+        return self.t
+
+    def sleep(self, s: float) -> None:
+        self.sleeps.append(s)
+        self.t += s
+
+
+class _SleepingTransport:
+    """Raises the given errors in turn, then succeeds; ``sleep = True``
+    lets the client's backoff run on the limiter's clock."""
+
+    sleep = True
+
+    def __init__(self, *errors: HTTPStatusError) -> None:
+        self.errors = list(errors)
+        self.calls = 0
+
+    def request(self, op_key: str, payload: dict | None = None) -> dict:
+        self.calls += 1
+        if self.errors:
+            raise self.errors.pop(0)
+        return {"ok": True, "url": f"https://notion.example/{op_key}"}
+
+
+def test_backoff_schedule_is_urllib3s():
+    # urllib3 Retry(backoff_factor=0.2): no wait before the first retry,
+    # then 0.2 * 2^(n-1)
+    clock = _RecordingClock()
+    tr = _SleepingTransport(*[HTTPStatusError(502) for _ in range(6)])
+    c = NotionClient(tr, RateLimiter(0, clock=clock))
+    with pytest.raises(HTTPStatusError):
+        c.upload_block("b", 0)
+    assert tr.calls == 6
+    assert clock.sleeps == pytest.approx([0, 0.4, 0.8, 1.6, 3.2])
+
+
+def test_retry_after_replaces_backoff():
+    clock = _RecordingClock()
+    tr = _SleepingTransport(HTTPStatusError(503, retry_after_s=1.5))
+    c = NotionClient(tr, RateLimiter(0, clock=clock))
+    c.upload_block("b", 0)
+    assert tr.calls == 2
+    assert clock.sleeps == [1.5]
+
+
 # --- ingest ------------------------------------------------------------------
 
 def test_ingest_idempotent_replay(spark, staged_tables):

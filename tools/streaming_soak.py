@@ -116,8 +116,6 @@ class CrashOnceTransport:
     keyed, so Spark task retries and the streaming replay succeed —
     one injected kill, total)."""
 
-    handles_retries = True
-
     def __init__(self, base_url: str, crash_suffix: str,
                  flag_path: str) -> None:
         from mediawiki_to_notion_spark.streaming.http_transport import (
