@@ -164,6 +164,44 @@ def test_advertised_retry_after_converges_faster_than_blind_widen():
     assert thr_hint < thr_blind, (thr_hint, thr_blind)
 
 
+def test_http_transport_throttle_counter_pops():
+    """Every 429 the urllib3 transport meets is counted by the pacer
+    exactly once (unit-level: the transport's pool is stubbed, no
+    socket): two 429s widen the interval twice, the success decays it
+    once, and pickling never ships the per-process pool."""
+    import pickle
+    from types import SimpleNamespace
+
+    import pytest
+
+    from mediawiki_to_notion_spark.streaming.http_transport import (
+        HAVE_URLLIB3,
+        HttpTransport,
+    )
+    if not HAVE_URLLIB3:
+        pytest.skip("urllib3 not available")
+
+    class _Pool:
+        def __init__(self, statuses):
+            self.statuses, self.calls = list(statuses), 0
+
+        def request(self, method, url, body=None, headers=None,
+                    retries=None):
+            assert retries is False  # the transport never retries itself
+            self.calls += 1
+            status = self.statuses.pop(0) if self.statuses else 200
+            return SimpleNamespace(status=status, headers={}, data=b"{}")
+
+    t = HttpTransport("http://localhost:1")
+    t._pool = pool = _Pool([429, 429])
+    rl = RateLimiter(min_interval_s=0.0, clock=VirtualClock())
+    NotionClient(t, rl).upload_block("b", 0, block_json="{}", page_url="u")
+    assert pool.calls == 3
+    assert rl.min_interval_s == pytest.approx(0.1 * rl.decay_factor)
+    t2 = pickle.loads(pickle.dumps(t))
+    assert t2._pool is None
+
+
 def test_drain_e2e_with_adaptive_pacing(spark, tmp_path):
     """End-to-end: the upload drain survives a 429 burst (retries absorb
     it, the limiter widens) and every page lands SUCCESS — pacing

@@ -146,10 +146,11 @@ def test_connect_error_not_retried():
             "x", "http://parent", None)
 
 
-def test_retry_after_429_raises_the_pacing_interval(fake_api):
-    """A 429 advertising Retry-After: 1 reaches the client's limiter
-    through the one retry loop: the interval jumps to 1.0 s, and the
-    retry's success then decays it once."""
+def test_retry_after_hint_pops_and_semantics_unchanged(fake_api):
+    """A 429 with Retry-After must (a) keep the verbatim retry matrix —
+    one absorbed 429, one retry, success — and (b) hand the advertised
+    seconds to the client's limiter through the one retry loop: the
+    interval jumps to 1.0 s, and the retry's success decays it once."""
     srv, base = fake_api
     srv.script["block:rah:0"] = [429]
     srv.retry_after = 1
