@@ -109,7 +109,7 @@ def cmd_ingest(args: argparse.Namespace) -> int:
         checkpoint_dir=os.path.join(args.tables, "_checkpoints", "ingest"),
     )
     q.awaitTermination()
-    n = ING.pages_table(spark, args.tables).read().count()
+    n = ING.pages_table(spark, args.tables).num_rows()
     print(f"ingested; pages table now has {n} rows")
     return 0
 

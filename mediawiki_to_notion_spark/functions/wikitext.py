@@ -275,7 +275,8 @@ def title_without_namespace(title: Column, ns_id: Column) -> Column:
 def safe_filename(title: Column) -> Column:
     """Title → filesystem-safe name (process-mw-dump.py:123-128):
     path separators → '-', keep alnum + ' ._-', strip trailing space.
-    ``\\p{L}\\p{N}`` mirrors Python's Unicode-aware ``str.isalnum``."""
+    The regex's Unicode letter and number classes mirror Python's
+    Unicode-aware ``str.isalnum``."""
     cleaned = F.regexp_replace(title, "/", "-")
     cleaned = F.regexp_replace(cleaned, r"[^\p{L}\p{N} ._-]", "")
     return F.rtrim(cleaned)

@@ -29,6 +29,7 @@ from pyspark.sql.types import ArrayType, DoubleType
 
 from mediawiki_to_notion_spark.functions import vectors as V
 from mediawiki_to_notion_spark.operators.registry import register
+from mediawiki_to_notion_spark.plans.pipeline import local_frame
 from mediawiki_to_notion_spark.sources.tables import load_table
 
 BAND_US = 600_000_000           # 10-minute range-join band, microseconds
@@ -158,8 +159,8 @@ _IVF_ASSIGN_SQL = f"""
 def similarity_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF (inverted-file) approximate nearest neighbour: a coarse
     quantizer assigns every vector to its nearest centroid (here a
-    deterministic codebook: the first {N_CENTROIDS} vectors), queries
-    probe their nprobe={N_PROBE} nearest clusters, and only same-cluster
+    deterministic codebook: the first ``N_CENTROIDS`` vectors), queries
+    probe their nprobe=``N_PROBE`` nearest clusters, and only same-cluster
     candidates are scored.
 
     100 TB shape: the codebook is a broadcast table, so assignment is a
@@ -1914,10 +1915,10 @@ def _salted_bucket(salt_col, word_col, mod: int):
 )
 def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch built RELATIONALLY (Cormode & Muthukrishnan
-    2005) and probed for the exact top-{CMS_PROBE_K} words: counts
-    fold into a {CMS_DEPTH}x{CMS_WIDTH} cell grid via {CMS_DEPTH}
+    2005) and probed for the exact top-``CMS_PROBE_K`` words: counts
+    fold into a ``CMS_DEPTH``x``CMS_WIDTH`` cell grid via ``CMS_DEPTH``
     salted md5 hashes, a point query is min over the item's
-    {CMS_DEPTH} cells, and the output certifies the sketch's HARD
+    ``CMS_DEPTH`` cells, and the output certifies the sketch's HARD
     one-sided guarantee (estimate >= exact, always) plus the actual
     overcount per probe.  Both engines build bit-identical sketches
     (same salted hash), so the driver hash-checks the whole
@@ -1925,9 +1926,9 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     to a third sketch family (after HLL and the FFT certificate).
 
     100 TB shape: the sketch build is ONE map-side-combinable groupBy
-    to {CMS_DEPTH}x{CMS_WIDTH} cells regardless of corpus size (the
+    to ``CMS_DEPTH``x``CMS_WIDTH`` cells regardless of corpus size (the
     entire point of CMS); the vocabulary collapses first so the
-    {CMS_DEPTH}-way fan-out runs over distinct words; the probe joins
+    ``CMS_DEPTH``-way fan-out runs over distinct words; the probe joins
     the CELL GRID (a broadcast-sized table) to the top-K probe set."""
     d = load_table(spark, "documents", sf_dir)
     wc = (
@@ -1983,10 +1984,10 @@ PCTL_QS = (0.5, 0.9, 0.99)
 def approx_percentile_within_band(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
     """Rank-error certificate for Spark's ``percentile_approx``
-    (Greenwald-Khanna): for each event type and q in {PCTL_QS}, the
+    (Greenwald-Khanna): for each event type and q in ``PCTL_QS``, the
     approximate quantile's EXACT rank interval — ties make a value
     occupy [count(< v) + 1, count(<= v)], not a single rank — must
-    OVERLAP the algorithm's guaranteed band q*n ± n/{PCTL_ACCURACY}
+    OVERLAP the algorithm's guaranteed band q*n ± n/``PCTL_ACCURACY``
     (±1 for boundary rounding); probing only the max rank reports
     out-of-band on tied/discrete columns (a constant column has
     count(<= v) = n for every q).  The approximate VALUE itself is
@@ -2103,8 +2104,8 @@ def bloom_filter_prune_certificate(spark: SparkSession,
                                    sf_dir: str) -> DataFrame:
     """Bloom-filter pre-join pruning, certified (Bloom 1970 — the
     decontamination / runtime-row-filter shape): an "eval suite"
-    vocabulary (words of every {BLOOM_MEMBER_MOD}th document) is
-    indexed into an m={BLOOM_BITS}, k={BLOOM_K} filter built
+    vocabulary (words of every ``BLOOM_MEMBER_MOD``th document) is
+    indexed into an m=``BLOOM_BITS``, k=``BLOOM_K`` filter built
     RELATIONALLY (the set-bit table, salted-md5 positions); every
     corpus word then probes it.  Both engines build bit-identical
     filters, so the driver hash-checks the HARD guarantee — zero
@@ -2115,7 +2116,7 @@ def bloom_filter_prune_certificate(spark: SparkSession,
 
     100 TB shape: the filter is <= m rows regardless of corpus size
     and BROADCASTS to every probe task (the point of Bloom pruning);
-    the build is one distinct + a {BLOOM_K}-way fan-out over the
+    the build is one distinct + a ``BLOOM_K``-way fan-out over the
     MEMBER vocabulary only; the probe side stays a vocabulary-sized
     hash aggregation, never a corpus-sized join."""
     d = load_table(spark, "documents", sf_dir)
@@ -2204,8 +2205,8 @@ def weighted_sample_systematic(spark: SparkSession,
     """Exactly-K systematic PPS sampling (probability proportional to
     size) — the deterministic mixture-construction primitive: lay
     every document's weight (n_chars) end to end on [0, W), drop
-    {PPS_K} equally-spaced pins, and a document is drawn once per pin
-    inside its interval (sum of copies == {PPS_K} EXACTLY, large docs
+    ``PPS_K`` equally-spaced pins, and a document is drawn once per pin
+    inside its interval (sum of copies == ``PPS_K`` EXACTLY, large docs
     can be drawn multiple times — the epochs-per-source semantics of
     mixture training).  All selection arithmetic is exact integer
     (hi*K div W), so both engines pick the identical sample — no
@@ -2213,7 +2214,7 @@ def weighted_sample_systematic(spark: SparkSession,
 
     100 TB shape: the corpus-wide running position comes from the
     two-pass prefix sum (range partitions -> per-partition window ->
-    {N_PPS_PARTITIONS} broadcast offsets), never a single-task global
+    ``N_PPS_PARTITIONS`` broadcast offsets), never a single-task global
     window; the global weight total is one scalar broadcast."""
     d = load_table(spark, "documents", sf_dir)
     sized = d.select(
@@ -2279,14 +2280,14 @@ def events_decayed_heavy_hitters(spark: SparkSession,
     """Exponentially time-decayed heavy hitters (the "trending now"
     ranking): each event contributes 2^(-age_days) with a one-day
     half-life, so yesterday's burst outranks last week's flood.  The
-    decay weights are EXACT integers — 2^({DECAY_SHIFT} - age_days)
-    scaled by 2^{DECAY_SHIFT} — so both engines sum bit-identical
+    decay weights are EXACT integers — 2^(``DECAY_SHIFT`` - age_days)
+    scaled by 2^``DECAY_SHIFT`` — so both engines sum bit-identical
     BIGINTs; no float pow, no accumulation-order sensitivity.
 
     100 TB shape: the reference time is ONE broadcast scalar
     (max(ts)); the decayed sum is a single map-side-combinable groupBy
     to event-type cardinality; ranking is a TakeOrdered over that tiny
-    aggregate.  Ages beyond {DECAY_SHIFT} half-lives contribute
+    aggregate.  Ages beyond ``DECAY_SHIFT`` half-lives contribute
     exactly 0 (true exponential decay's floor at integer scale)."""
     e = load_table(spark, "events", sf_dir).select("event_type", "ts")
     mx = e.agg(F.max("ts").alias("m"))
@@ -2500,8 +2501,8 @@ def eval_bradley_terry_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer win/match counts plus a verdict that the fitted
     strengths satisfy the BT stationarity condition — at the MLE,
     every contender's EXPECTED wins sum(n_ij * w_i / (w_i + w_j))
-    equals its ACTUAL wins — to within {BT_BAND_PPM} ppm of its
-    matches played.  {BT_ITERS} Hunter-2004 MM iterations converge
+    equals its ACTUAL wins — to within ``BT_BAND_PPM`` ppm of its
+    matches played.  ``BT_ITERS`` Hunter-2004 MM iterations converge
     geometrically on any |types|-sized tournament, so the band is a
     real check of the fit, and the oracle asserts it TRUE.
 
@@ -2559,8 +2560,8 @@ def eval_bradley_terry_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         (c, int(n_matches[i]), int(total_wins[i]), bool(ok[i]))
         for i, c in enumerate(contenders)
     ]
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "contender string, n_matches long, n_wins long, "
         "stationary_within_band boolean",
     )
@@ -2600,10 +2601,10 @@ PASS_THRESHOLD = 50.0   # a "success" is an attempt with value > this
     """,
 )
 def eval_pass_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unbiased pass@{PASS_K} (Chen et al. 2021, Codex appendix): per
+    """Unbiased pass@``PASS_K`` (Chen et al. 2021, Codex appendix): per
     problem (here a (benchmark=event_type, attempt-group=user) cell
-    with n attempts, c successes = value > {PASS_THRESHOLD}), the
-    estimator 1 - C(n-c,{PASS_K})/C(n,{PASS_K}) computed as the
+    with n attempts, c successes = value > ``PASS_THRESHOLD``), the
+    estimator 1 - C(n-c,``PASS_K``)/C(n,``PASS_K``) computed as the
     left-to-right product fold prod_i (n-c-i)/(n-i) — the SAME fold
     order in both engines, so the doubles are bit-identical (verified)
     — then averaged per benchmark through exact integer micro-units
@@ -2611,7 +2612,7 @@ def eval_pass_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose accumulation order differs across engines).
 
     100 TB shape: one map-side-combinable (type, user) aggregate, the
-    fold is a JVM expression over a {PASS_K}-element sequence, and the
+    fold is a JVM expression over a ``PASS_K``-element sequence, and the
     benchmark rollup is |types| rows."""
     e = load_table(spark, "events", sf_dir)
     att = e.groupBy("event_type", "user_id").agg(
@@ -2719,8 +2720,8 @@ def eval_win_rate_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     question Copeland/Bradley-Terry rankings can't answer: is A>B
     SIGNIFICANT or a coin-flip at this sample size?  Matches are the
     same consecutive-event pairs as eval_pairwise_copeland; for each
-    contender pair, {BOOT_B} bootstrap replicas resample its n matches
-    with replacement and the CI is the [{BOOT_LO_IDX}th, {BOOT_HI_IDX}th]
+    contender pair, ``BOOT_B`` bootstrap replicas resample its n matches
+    with replacement and the CI is the [``BOOT_LO_IDX``th, ``BOOT_HI_IDX``th]
     order statistic of the replica win rates (percentile bootstrap,
     Efron 1979); `significant` = the CI excludes 0.5.
 
@@ -2739,16 +2740,16 @@ def eval_win_rate_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape — the m-out-of-n cap is load-bearing: the naive
     resample draws B x n times per pair, which is CORPUS-LINEAR in
     md5 calls (this op's own first soak measured exponent 0.97, 70 s
-    at sf1).  Instead each replica draws m = min(n, {BOOT_M}) samples
+    at sf1).  Instead each replica draws m = min(n, ``BOOT_M``) samples
     (the m-out-of-n bootstrap, Bickel/Goetze/van Zwet 1997) and the
     percentile interval contracts around the point estimate by
     sqrt(m/n) — the CLT rate exchange that makes the m-bootstrap
-    consistent.  Draw fan-out is then {BOOT_B} x {BOOT_M} rows PER
+    consistent.  Draw fan-out is then ``BOOT_B`` x ``BOOT_M`` rows PER
     CONTENDER PAIR (|types|^2-bounded, independent of corpus width) as
     a JVM sequence-explode aggregated map-side; the corpus-scale work
     is the same single user-window pass Copeland does, and the
-    order-statistic window runs over {BOOT_B} rows per pair.  At
-    n <= {BOOT_M} the factor is exactly 1 and this IS the plain
+    order-statistic window runs over ``BOOT_B`` rows per pair.  At
+    n <= ``BOOT_M`` the factor is exactly 1 and this IS the plain
     percentile bootstrap."""
     e = load_table(spark, "events", sf_dir)
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
@@ -2866,8 +2867,8 @@ def similarity_ivf_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: assignment is the broadcast-codebook map-side pass
     shared with the probe; the audit itself is one map-side-partial
-    groupBy to {N_CENTROIDS} rows, a broadcast total, and a ranking
-    window over the {N_CENTROIDS}-row result."""
+    groupBy to ``N_CENTROIDS`` rows, a broadcast total, and a ranking
+    window over the ``N_CENTROIDS``-row result."""
     e = V.hygiene(load_table(spark, "embeddings", sf_dir))
     cent = e.filter(F.col("vec_id") < N_CENTROIDS).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("c_emb")
@@ -2951,8 +2952,8 @@ def events_bot_regularity_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     high-variance gaps; schedulers and scripts tick.  Per user, the
     squared coefficient of variation of inter-arrival gaps
     cv^2 = n*var/mean^2 = (n*S2 - S1^2)/S1^2 in micro-units; a user
-    with >= {BOT_MIN_EVENTS} gaps and cv^2 below
-    {BOT_CV2_MICRO_MAX}/1e6 (cv < 0.1) flags as a bot.
+    with >= ``BOT_MIN_EVENTS`` gaps and cv^2 below
+    ``BOT_CV2_MICRO_MAX``/1e6 (cv < 0.1) flags as a bot.
 
     Exactness: gaps are integer epoch-millis; S1 and S2 accumulate as
     DECIMAL(38,0) (d^2 can pass 2^63 for day-scale gaps x thousand-event
@@ -3029,7 +3030,7 @@ def events_k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     generalization step; exact raw counts would make almost every user
     unique and the audit vacuous) as a quasi-identifier, and report
     each signature's population.  A signature shared by fewer than
-    {K_ANON} users is a re-identification risk: releasing "type
+    ``K_ANON`` users is a re-identification risk: releasing "type
     histograms per user" would single those users out.
 
     Exactness: the power-of-two bucket is the integer bitlength trick

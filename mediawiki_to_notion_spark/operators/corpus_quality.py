@@ -192,7 +192,7 @@ def doc_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     sanity check run before choosing packing window / truncation
     length.  Integer bucket arithmetic and integer sums keep it
     bit-exact across engines; one partial-agg shuffle over at most
-    max_chars/{HIST_BUCKET_CHARS} groups."""
+    max_chars/``HIST_BUCKET_CHARS`` groups."""
     d = load_table(spark, "documents", sf_dir)
     bucket = (F.floor(F.col("n_chars") / HIST_BUCKET_CHARS)
               * HIST_BUCKET_CHARS).cast("long")
@@ -240,7 +240,7 @@ CHUNK_STRIDE = 48      # window start spacing -> 16-token overlap
 )
 def context_window_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping context-window chunking: each document splits into
-    {CHUNK_TOKENS}-token windows every {CHUNK_STRIDE} tokens (16-token
+    ``CHUNK_TOKENS``-token windows every ``CHUNK_STRIDE`` tokens (16-token
     overlap) — the span decomposition behind RAG indexing and
     fixed-window pretraining tokenization.  Every document yields at
     least one (possibly short) chunk, and a trailing stride that would
@@ -322,7 +322,7 @@ def doc_length_equal_freq_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Spark `percentile` and DuckDB `quantile_cont` share the linear
     interpolation rule — the proven parity pair), broadcast back; bin
     assignment is a map-side CASE, and the final count is one
-    partial-agg shuffle over {N_LENGTH_BINS} keys.  A global-sort
+    partial-agg shuffle over ``N_LENGTH_BINS`` keys.  A global-sort
     `ntile` would pull the corpus through one partition; this never
     sorts."""
     d = load_table(spark, "documents", sf_dir)
@@ -838,7 +838,7 @@ QC_WEIGHT_MULT = 2654435761  # Knuth multiplicative constant (public)
 def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """fastText-style hashed-bigram linear quality classifier (the
     FineWeb-Edu / CCNet model-based-filter shape): adjacent token
-    bigrams feature-hash into {QC_BUCKETS} buckets, a linear weight
+    bigrams feature-hash into ``QC_BUCKETS`` buckets, a linear weight
     per bucket (here a deterministic public multiplicative-hash
     weight table standing in for trained parameters — the PLUMBING is
     the operator; swapping in real weights is a table swap), and the
@@ -848,7 +848,7 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     of exact integers — the cross-engine float-parity recipe.
 
     100 TB shape: one narrow pass explodes bigrams beside the scan,
-    the {QC_BUCKETS}-row weight table broadcast-joins onto the hashed
+    the ``QC_BUCKETS``-row weight table broadcast-joins onto the hashed
     stream (never a shuffle of the corpus against the model), and the
     per-doc aggregation is a single map-side-combinable groupBy.
     Documents with fewer than two tokens score no row (no features),
@@ -964,7 +964,7 @@ def mixture_anneal_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Annealed data-mixture schedule (the Llama-3 / MiniCPM two-stage
     recipe): phases 1-2 sample sources proportional to token count;
     the final anneal phase upweights ABOVE-AVERAGE-quality sources by
-    {ANNEAL_BOOST}x, with quality = the hashed-bigram classifier's
+    ``ANNEAL_BOOST``x, with quality = the hashed-bigram classifier's
     per-source mean micro score.  The above-average test is an exact
     cross-multiplied integer comparison (sum_micro * g_feats >=
     g_micro * n_feats) — no float threshold to disagree on.
@@ -1308,19 +1308,19 @@ def dsir_importance_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data Selection via Importance Resampling (DSIR, Xie et al. 2023,
     public): pick the raw-pool documents whose hashed-bigram feature
     distribution looks most like a curated target domain.  Both the
-    target sample (source = '{DSIR_TARGET_SOURCE}') and the raw pool
+    target sample (source = '``DSIR_TARGET_SOURCE``') and the raw pool
     (every other source) are summarized as Laplace-smoothed bag-of-
-    hashed-ngrams multinomials over {DSIR_BUCKETS} buckets; each pool
+    hashed-ngrams multinomials over ``DSIR_BUCKETS`` buckets; each pool
     document scores the sum over its bigram OCCURRENCES of
     ln(p_target(bucket) / p_raw(bucket)), i.e. the multinomial
-    log-likelihood ratio; the top {DSIR_TOP_K} by that importance
+    log-likelihood ratio; the top ``DSIR_TOP_K`` by that importance
     weight are selected (the deterministic top-k variant of the
     paper's Gumbel resample — for the stochastic version compose with
     weighted_sample_systematic).
 
     100 TB shape: ONE bigram explode beside the scan feeds both count
     aggregations and the scoring join; the log-ratio table is at most
-    {DSIR_BUCKETS} rows and broadcast-joins onto the hashed stream, so
+    ``DSIR_BUCKETS`` rows and broadcast-joins onto the hashed stream, so
     the corpus is never shuffled against the model; per-doc scoring is
     a map-side-combinable groupBy and the final selection a
     TakeOrdered.  Parity: per-bucket log-ratios round to 6 dp with an

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from mediawiki_to_notion_spark.operators.dedup import _SHINGLES_SQL, _hashed_shingles
 from mediawiki_to_notion_spark.operators.registry import register
+from mediawiki_to_notion_spark.plans.pipeline import local_frame
 from mediawiki_to_notion_spark.sources.tables import load_table
 
 CHUNK_WORDS = 16        # "paragraph" = 16-word window (synthetic docs have
@@ -63,7 +64,7 @@ CHUNK_WORDS = 16        # "paragraph" = 16-word window (synthetic docs have
 )
 def dedup_paragraph_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Paragraph-level exact dedup with reassembly (CCNet §3.1 / Dolma's
-    paragraph dedup): split every document into {CHUNK_WORDS}-word
+    paragraph dedup): split every document into ``CHUNK_WORDS``-word
     chunks, keep only the globally FIRST occurrence of each chunk
     (ordered by doc_id then position), and rebuild each document from
     its surviving chunks.
@@ -390,7 +391,7 @@ SKEW_HOT_FACTOR = 2  # a key is "hot" above this multiple of the mean
 def join_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shuffle-key skew diagnostic for a prospective join/groupBy key
     (orders.o_custkey): key cardinality, hottest-key row count, p99,
-    max/mean skew ratio, and how many keys exceed {SKEW_HOT_FACTOR}x
+    max/mean skew ratio, and how many keys exceed ``SKEW_HOT_FACTOR``x
     the mean.  This is the measurement that decides between a plain
     shuffle join, AQE skew splitting, and salted_join (operators/
     physical.py) — the reference's FAQ.md:68 hot page is exactly the
@@ -448,13 +449,13 @@ def dense_global_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
        running counter per partition — the one semantics DataFrame
        built-ins cannot express without re-shuffling by partition id);
     3. per-partition row counts (tiny: one row per partition) become
-       cumulative offsets via a window over {N_ID_PARTITIONS} rows,
+       cumulative offsets via a window over ``N_ID_PARTITIONS`` rows,
        broadcast back;  dense_id = offset + local_rank.
 
     A window `row_number() OVER (ORDER BY doc_id)` — the oracle's
     formulation — would funnel the corpus through ONE task at 100 TB;
     this plan's only wide ops are the range partitioning and a
-    broadcast of {N_ID_PARTITIONS} offset rows."""
+    broadcast of ``N_ID_PARTITIONS`` offset rows."""
     return _dense_ranks(
         load_table(spark, "documents", sf_dir).select("doc_id"),
         ["doc_id"],
@@ -469,7 +470,7 @@ def _dense_ranks(df: DataFrame, order_cols: list[str]) -> DataFrame:
     1. repartitionByRange(order_cols): ordered ranges;
     2. per-partition local ranks via one Arrow mapInPandas pass;
     3. per-partition counts (one row per partition) become cumulative
-       offsets via a window over {N_ID_PARTITIONS} rows, broadcast
+       offsets via a window over ``N_ID_PARTITIONS`` rows, broadcast
        back; rank = offset + local_rank.
 
     Emits ``df``'s columns plus ``rank``."""
@@ -619,7 +620,7 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = ("component int, dim int, mean double, loading double, "
               "eigenvalue double")
     if not partials:  # empty corpus: no dimensionality to decompose
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     d_dim = partials[0].d
     if any(r.d != d_dim for r in partials):
         raise ValueError("mixed embedding dimensionality")
@@ -639,7 +640,7 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             v = -v
         for dim in range(d_dim):
             out_rows.append((k, dim, float(mu[dim]), float(v[dim]), lam))
-    return spark.createDataFrame(out_rows, schema)
+    return local_frame(spark, out_rows, schema)
 
 
 # Eigenpair-residual tolerance for pca_power_certificate: float64
@@ -673,7 +674,7 @@ def pca_power_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the eigensolve): rebuilds the covariance from the SAME distributed
     Gram reduction, then certifies per reported component that
     (lambda, v) is a genuine eigenpair of that covariance —
-    ||C v - lambda v|| <= {PCA_RESIDUAL_TOL} * max(lambda, 1e-12),
+    ||C v - lambda v|| <= ``PCA_RESIDUAL_TOL`` * max(lambda, 1e-12),
     ||v|| = 1, lambda >= 0 (covariance PSD), eigenvalues
     non-increasing, and explained-variance ratio lambda/trace(C) in
     [0, 1] (zero allowed: degenerate spectra are legitimate).  The oracle predicts TRUE everywhere, so a hash-green
@@ -690,7 +691,7 @@ def pca_power_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
               "ordered_nonincreasing boolean, "
               "explained_ratio_in_unit boolean")
     if not partials:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     d_dim = partials[0].d
     n = sum(r.n for r in partials)
     mu = sum(np.frombuffer(r.colsum, dtype=np.float64) for r in partials) / n
@@ -720,7 +721,7 @@ def pca_power_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
             bool(-1e-12 <= ratio <= 1.0 + 1e-12),
         ))
         prev_lam = lam
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 EPOCH_SEEDS = (7, 13)  # two epochs: proves a seed change reorders

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from mediawiki_to_notion_spark.functions import hashing as H
 from mediawiki_to_notion_spark.functions import vectors as V
 from mediawiki_to_notion_spark.operators.registry import register
+from mediawiki_to_notion_spark.plans.pipeline import local_frame
 from mediawiki_to_notion_spark.sources.tables import load_table
 
 JACCARD_THRESHOLD = 0.8
@@ -533,8 +534,8 @@ def _simhash_pairs(spark: SparkSession, sf_dir: str,
 
 @register("dedup_simhash", oracle=_simhash_oracle(SIMHASH_WIDE_BITS))
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs at Hamming distance ≤ {HAMMING_MAX} with
-    pigeonhole band blocking, at the Manku-grade {SIMHASH_WIDE_BITS}-bit
+    """SimHash near-dup pairs at Hamming distance ≤ ``HAMMING_MAX`` with
+    pigeonhole band blocking, at the Manku-grade ``SIMHASH_WIDE_BITS``-bit
     fingerprint width (Manku et al., WWW'07 use 64) — the 100 TB shape.
 
     The fingerprint splits into HAMMING_MAX+1 = 3 disjoint 16-bit
@@ -550,7 +551,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     16-bit fingerprint through r6, which the r6 scaling soak measured
     at exponent 1.15 over a real 10x scale-up — 3 bands of 2^6/2^5/2^5
     values mean bucket occupancy grows linearly with the corpus and
-    candidate pairs quadratically.  At {SIMHASH_WIDE_BITS} bits each
+    candidate pairs quadratically.  At ``SIMHASH_WIDE_BITS`` bits each
     band holds 2^16 values: occupancy stays O(n/65536) and candidates
     near-linear (soak exponent ~0.2 as ``dedup_simhash_wide`` in
     SCALING_SOAK.json), while the fingerprint still fits the 60-bit
@@ -567,10 +568,10 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_simhash_fixedwidth_demo(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
-    """DEMO-ONLY {SIMHASH_DEMO_BITS}-bit SimHash — same pigeonhole band
+    """DEMO-ONLY ``SIMHASH_DEMO_BITS``-bit SimHash — same pigeonhole band
     blocking as ``dedup_simhash`` in a deliberately dense-bucket regime
     (3 bands of 2^6/2^5/2^5 values), kept because tiny bands exercise
-    the band-collision paths that a {SIMHASH_WIDE_BITS}-bit fingerprint
+    the band-collision paths that a ``SIMHASH_WIDE_BITS``-bit fingerprint
     near-never hits at test SFs.
 
     NOT a scale path: the r6 scaling soak measured this width at
@@ -688,8 +689,9 @@ def _cosine_pairs_blocked(spark: SparkSession, sf_dir: str,
 
     e = V.hygiene(load_table(spark, "embeddings", sf_dir)) \
         .select("vec_id", "embedding")
-    block_pairs = spark.createDataFrame(
-        [(i, j) for i in range(nb) for j in range(i, nb)], "bi INT, bj INT"
+    block_pairs = local_frame(
+        spark, [(i, j) for i in range(nb) for j in range(i, nb)],
+        "bi INT, bj INT",
     )
     v = e.withColumn("blk", F.pmod(F.col("vec_id"), F.lit(nb)).cast("int"))
     left = v.join(F.broadcast(block_pairs), F.col("blk") == F.col("bi")).select(
@@ -1142,7 +1144,7 @@ def dedup_fuzzy_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fuzzy (edit-distance) near-dup pairs over document title
     prefixes: prefix blocking + SORTED-NEIGHBORHOOD pairing (Hernández
     & Stolfo, SIGMOD 1995) — candidates share their first
-    {FUZZY_BLOCK_CHARS} characters AND sit within {FUZZY_SN_WINDOW}
+    ``FUZZY_BLOCK_CHARS`` characters AND sit within ``FUZZY_SN_WINDOW``
     rank positions of each other inside the block, so the O(len²)
     Levenshtein verify runs on O(n·W) pairs.  This is the 100 TB
     PRIMARY (the r8 re-point, same discipline as r7's dedup_simhash):
@@ -1160,7 +1162,7 @@ def dedup_fuzzy_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     enumerates m² in-block pairs (and runs m² Levenshteins; a single
     sf100 task burned 35 CPU-minutes) before the rank filter drops
     them.  The neighbor offset is therefore EXPLODED INTO THE JOIN
-    KEY: the right side emits {FUZZY_SN_WINDOW} (blk, rn - j) probe
+    KEY: the right side emits ``FUZZY_SN_WINDOW`` (blk, rn - j) probe
     keys per row and the join is a pure equi-join on (blk, rn), so
     exactly n·W candidate rows ever exist."""
     d = load_table(spark, "documents", sf_dir)
@@ -1273,14 +1275,15 @@ def _min_label_components(pairs: DataFrame) -> DataFrame:
     if erows is not None:
         labels = IL.cc_min_labels((r.src, r.dst) for r in erows)
         # broadcast-hinted (guide §3.1): the replay table is
-        # cap-bounded, but as an ExistingRDD scan it has no size
-        # statistics, so consumer joins (the connectivity certificate
-        # joins two of these on doc_id) would otherwise sort-merge
-        # with two Exchanges.  The hint is inert for aggregation-only
-        # consumers; the over-cap distributed return below stays
-        # unhinted.
-        return F.broadcast(pairs.sparkSession.createDataFrame(
-            sorted(labels.items()), "doc_id long, label long"
+        # cap-bounded, and the hint keeps consumer joins (the
+        # connectivity certificate joins two of these on doc_id) from
+        # sort-merging with two Exchanges at any cap-bounded size,
+        # whatever the auto-broadcast threshold.  The hint is inert for
+        # aggregation-only consumers; the over-cap distributed return
+        # below stays unhinted.
+        return F.broadcast(local_frame(
+            pairs.sparkSession, sorted(labels.items()),
+            "doc_id long, label long",
         ))
     labels = edges.select(F.col("src").alias("doc_id")).distinct() \
         .select("doc_id", F.col("doc_id").alias("label"))
@@ -1391,7 +1394,7 @@ def dedup_fuzzy_connectivity_certificate(spark: SparkSession,
     connectivity claim (VERDICT r8 brief #4): composing BOTH fuzzy
     pair sets through min-label connected components must yield the
     SAME cluster labels on every shared node — i.e. the
-    {FUZZY_SN_WINDOW}-neighbor window never SPLITS a duplicate
+    ``FUZZY_SN_WINDOW``-neighbor window never SPLITS a duplicate
     cluster that the exhaustive enumeration connects (flooded blocks
     stay cluster-connected because adjacent ranks are W-chained,
     ``dedup_fuzzy_levenshtein`` docstring).  What the window MAY lose
@@ -1503,15 +1506,15 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     erows = IL.collect_capped(edges)
     if erows is not None:
         local = IL.cc_min_labels((r.src, r.dst) for r in erows)
-        # explicit broadcast (guide §3.1): a createDataFrame local
-        # relation reaches the planner as an ExistingRDD scan with NO
-        # size statistics, so the corpus graft below otherwise runs as
-        # a SortMergeJoin with a full corpus Exchange (measured ~0.6 s
-        # of the query at sf0.1; at scale it is a corpus-wide shuffle
-        # keyed by doc_id).  The labels table is cap-bounded
+        # explicit broadcast (guide §3.1): at any cap-bounded size,
+        # whatever the auto-broadcast threshold, the corpus graft below
+        # must not run as a SortMergeJoin with a full corpus Exchange
+        # (measured ~0.6 s of the query at sf0.1 when the labels were
+        # an RDD scan without statistics; at scale it is a corpus-wide
+        # shuffle keyed by doc_id).  The labels table is cap-bounded
         # (≤ driver_cap() rows) by construction on this path.
-        labels = F.broadcast(spark.createDataFrame(
-            sorted(local.items()), "doc_id long, label long"
+        labels = F.broadcast(local_frame(
+            spark, sorted(local.items()), "doc_id long, label long"
         ))
         full = d.join(labels, "doc_id", "left").select(
             "doc_id", F.coalesce("label", "doc_id").alias("label")

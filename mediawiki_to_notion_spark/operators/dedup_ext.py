@@ -350,7 +350,7 @@ _REBUILD_SQL = """, stream AS (
 )
 def dedup_duplicate_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring dedup signal: for every document, how much of it
-    is covered by {SPAN_W}-token windows that also occur verbatim in
+    is covered by ``SPAN_W``-token windows that also occur verbatim in
     another document (suffix-array dedup's relational twin; reference
     corpus-prep parity: the hot duplicated wiki boilerplate of
     FAQ.md:68 is exactly what this flags for span removal)."""
@@ -434,8 +434,8 @@ _SEMDEDUP_ASSIGN_SQL = f"""
 def semantic_dedup_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al., 2023): assign every embedding to its
     nearest codebook centroid (deterministic codebook — the first
-    {SEMDEDUP_K} vectors — so the oracle shares it verbatim), then emit
-    near-duplicate pairs with cosine ≥ {SEMDEDUP_THRESHOLD} scored only
+    ``SEMDEDUP_K`` vectors — so the oracle shares it verbatim), then emit
+    near-duplicate pairs with cosine ≥ ``SEMDEDUP_THRESHOLD`` scored only
     *within* a cluster.
 
     Scale shape: the codebook is broadcast, so assignment is a map-side
@@ -534,7 +534,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: pairs come from the shared-shingle equi-join, so work
     is proportional to posting-list co-occurrence, not |corpus|²; the
-    posting-list cap (df > {MAX_SHINGLE_DF} shingles are dropped from
+    posting-list cap (df > ``MAX_SHINGLE_DF`` shingles are dropped from
     pairing — identically in both engines) bounds the hot-boilerplate
     blowup that would otherwise quadratically explode one shingle's
     postings.  Capped shingles still count toward |A|, so containment
@@ -671,7 +671,7 @@ def dedup_normalized_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_substring_spans_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal EXACT duplicated-substring spans (Lee et al. 2021 §4's
     deliverable, one step past ``dedup_duplicate_ngram_spans``'s
-    coverage ratios): overlapping-or-adjacent duplicated {SPAN_W}-token
+    coverage ratios): overlapping-or-adjacent duplicated ``SPAN_W``-token
     windows chain into maximal spans (the gap rule of
     ``_span_islands``), yielding exact span extents (start/end token,
     length) per document — the spans an exact-substring dedup pass
@@ -693,7 +693,7 @@ def dedup_substring_spans_token_exact(spark: SparkSession,
     window chain, a genuine single duplicated substring with
     token-exact start/end, not ``dedup_substring_spans_exact``'s
     window-granular union (which bridges runs separated by a gap of up
-    to {SPAN_W} and splices runs that merely abut)."""
+    to ``SPAN_W`` and splices runs that merely abut)."""
     _, win = _token_windows(spark, sf_dir, SPAN_W)
     return _span_extents(_span_islands(win, token_exact=True))
 
@@ -722,7 +722,7 @@ def dedup_substring_spans_token_exact(spark: SparkSession,
 def dedup_substring_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring dedup END TO END (the actual Lee et al. 2021
     rewrite, one step past span REPORTING): every duplicated
-    {SPAN_W}-token window is cut from every document EXCEPT the
+    ``SPAN_W``-token window is cut from every document EXCEPT the
     globally first occurrence (doc_id-then-position order — the same
     survivor rule as dedup_paragraph_chunks), and each document is
     rebuilt from its surviving tokens.
@@ -854,7 +854,7 @@ WINNOW_MIN_SHARED = 2    # single shared fingerprint = noise, not a match
 
 def winnow_fingerprints(d: DataFrame) -> DataFrame:
     """(doc_id, h) — the distinct winnowing-selected fingerprint set per
-    document (min hash per {WINNOW_W}-hash window, ties rightmost).
+    document (min hash per ``WINNOW_W``-hash window, ties rightmost).
     Exposed for the guarantee-property fixture (test_winnowing.py)."""
     from pyspark.sql import Window as W
 
@@ -922,14 +922,14 @@ def winnow_fingerprints(d: DataFrame) -> DataFrame:
 )
 def dedup_winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing document fingerprints (the MOSS algorithm): hash every
-    {WINNOW_K}-token k-gram, slide a window of {WINNOW_W} consecutive
+    ``WINNOW_K``-token k-gram, slide a window of ``WINNOW_W`` consecutive
     hashes, and in each window select the minimum hash (ties broken
     toward the RIGHTMOST position, per the paper) — the selected set is
     a position-robust sketch with a hard guarantee: any verbatim token
     run of >= K+W-1 = {WINNOW_K + WINNOW_W - 1} tokens shared by two
     documents shares at least one fingerprint.  Docs shorter than one
     full window keep their global-min gram so every doc has >= 1
-    fingerprint.  Output: candidate pairs sharing >= {WINNOW_MIN_SHARED}
+    fingerprint.  Output: candidate pairs sharing >= ``WINNOW_MIN_SHARED``
     fingerprints with the Jaccard over fingerprint sets.
 
     Complements the registry's other sketches: MinHash estimates
@@ -941,7 +941,7 @@ def dedup_winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     (window function over doc-partitioned, position-ordered rows — no
     cross-doc shuffle beyond the doc_id hash partition); selection
     keeps ~2/(W+1) of grams, so the pairing join runs on a winnowed
-    fraction of the corpus; the posting-list cap (df > {MAX_WINNOW_DF}
+    fraction of the corpus; the posting-list cap (df > ``MAX_WINNOW_DF``
     dropped from pairing, identically in both engines) bounds hot
     boilerplate exactly as in dedup_containment.  The tie-break is
     min(struct(h, -p)): smallest hash, then largest position — the

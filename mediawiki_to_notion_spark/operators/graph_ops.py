@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mediawiki_to_notion_spark.operators.registry import register
+from mediawiki_to_notion_spark.plans.pipeline import local_frame
 from mediawiki_to_notion_spark.sources.tables import load_table
 
 PR_SCALE = 1_000_000_000_000  # ranks are fractions of this (10^12)
@@ -68,7 +69,7 @@ def _pagerank_oracle() -> str:
 
 @register("pagerank_word_graph", oracle=_pagerank_oracle())
 def pagerank_word_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank({PR_ITERS} iterations, d=0.85) over the word-adjacency
+    """PageRank(``PR_ITERS`` iterations, d=0.85) over the word-adjacency
     graph: nodes are distinct tokens, an edge a→b with weight w means
     token b followed token a w times.  Dangling mass (tokens that only
     ever end a document) evaporates, identically in both engines.
@@ -115,8 +116,8 @@ def pagerank_word_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
                 [(r.a, r.b, int(r.w), int(r.out_w)) for r in erows],
                 PR_ITERS, PR_SCALE, PR_DAMP_NUM, PR_DAMP_DEN,
             )
-            return spark.createDataFrame(
-                sorted(local.items()), "token string, rank long"
+            return local_frame(
+                spark, sorted(local.items()), "token string, rank long"
             )
 
     # eager checkpoints: nodes and edges are re-referenced every round,

@@ -223,8 +223,7 @@ def lloyd_refine_local(
     ne = np.sqrt(np_fold_sq(E))  # np.sqrt is IEEE correctly rounded
 
     # initial centroids: raw doubles of vec_id < k, cluster_id = vec_id
-    # (plain Python floats — np.float64 objects are value-identical but
-    # rejected by createDataFrame's DoubleType acceptance check)
+    # (plain Python floats, value-identical to the np.float64 objects)
     cents = [
         (vid, [float(x) for x in E[i]])
         for i, vid in enumerate(ids)

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from mediawiki_to_notion_spark.functions import vectors as V
 from mediawiki_to_notion_spark.operators.registry import register
+from mediawiki_to_notion_spark.plans.pipeline import local_frame
 from mediawiki_to_notion_spark.sources.tables import load_table
 
 KM_K = 8
@@ -73,7 +74,7 @@ def _kmeans_oracle() -> str:
 
 @register("kmeans_lloyd_refine", oracle=V.hygiene_oracle(_kmeans_oracle()))
 def kmeans_lloyd_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """{KM_ITERS} Lloyd iterations refining the first-{KM_K} codebook
+    """``KM_ITERS`` Lloyd iterations refining the first-``KM_K`` codebook
     (cosine assignment, exact-decimal mean update, 6-dp centroids).
 
     Scale shape — the canonical distributed k-means plan: the K×dim
@@ -106,7 +107,8 @@ def kmeans_lloyd_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
             [(int(r.vec_id), list(r.embedding)) for r in vrows],
             KM_K, KM_ITERS, KM_DIM,
         )
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(cid, d, c) for cid, coords in cents
              for d, c in enumerate(coords)],
             "cluster_id long, dim int, coord double",

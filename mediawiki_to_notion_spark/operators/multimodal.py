@@ -363,7 +363,7 @@ def resize_media(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 
 def sample_frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: sample ≤{N_FRAMES} fixed-length frames at
+    """mapInPandas worker: sample ≤``N_FRAMES`` fixed-length frames at
     evenly-spaced offsets from each video payload — the 1→N
     row-expanding batch shape of a real frame sampler (ffmpeg keyframe
     extraction would replace the slicing, nothing else changes)."""
@@ -524,7 +524,7 @@ def window_energy(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 )
 def multimodal_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Windowed audio analysis over opaque binary payloads: per
-    {ENERGY_WINDOW}-byte window, the sample-value sum ("energy") — the
+    ``ENERGY_WINDOW``-byte window, the sample-value sum ("energy") — the
     RMS/VAD feature-extraction shape with the codec faked by reading
     the payload bytes directly (the SQL oracle reads the SAME bytes
     via hex pairs, so the value check is byte-true on any unicode).
@@ -555,7 +555,7 @@ def wav_window_energy(
     batches: Iterator[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:
     """mapInPandas worker over REAL WAV payloads: decode PCM samples
-    (functions.wav_codec) and emit per-{REAL_ENERGY_WINDOW}-sample
+    (functions.wav_codec) and emit per-``REAL_ENERGY_WINDOW``-sample
     absolute-amplitude sums — the genuine RMS/VAD windowing over
     decoded audio (the byte-fake twin, window_energy, stays for the
     oracled query).  Multi-channel audio folds channels into each
@@ -619,11 +619,11 @@ PHASH_BITS = 48  # production pHash width (r6; was a 16-bit demo width)
 )
 def multimodal_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual-hash near-duplicate detection for the image modality:
-    a {PHASH_BITS}-bit pHash per image (derived from the deterministic
+    a ``PHASH_BITS``-bit pHash per image (derived from the deterministic
     fake codec's content checksum — a real pipeline computes
     dHash/pHash from decoded pixels in the same mapInPandas stage),
     banded with the SAME pigeonhole scheme as dedup_simhash: Hamming <=
-    {PHASH_HAMMING_MAX} implies an exact match in one of
+    ``PHASH_HAMMING_MAX`` implies an exact match in one of
     {PHASH_HAMMING_MAX + 1} disjoint bit bands, so candidates come
     from a band equi-join — never the all-pairs nested loop the oracle
     uses.
@@ -761,9 +761,9 @@ FFT_MAX_BIN = 100    # peak bins cycle 1..FFT_MAX_BIN
 def multimodal_audio_peak_bin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Value-checked certificate for the AUDIO path (the codec-
     roundtrip trick on WAV + spectral features): every document
-    synthesizes a pure {FFT_N}-sample sine at exactly bin
-    k = 1 + doc_id % {FFT_MAX_BIN} of a {FFT_N}-point rfft at
-    {FFT_RATE} Hz, encodes it through the real WAV codec (16-bit PCM),
+    synthesizes a pure ``FFT_N``-sample sine at exactly bin
+    k = 1 + doc_id % ``FFT_MAX_BIN`` of a ``FFT_N``-point rfft at
+    ``FFT_RATE`` Hz, encodes it through the real WAV codec (16-bit PCM),
     decodes it back through ``decode_audio``'s wav path, and reports
     the argmax spectral bin.  The SQL oracle predicts the peak bin
     from doc_id arithmetic alone, so a hash-green driver row certifies
@@ -834,7 +834,7 @@ def multimodal_video_roundtrip(spark: SparkSession,
     synthesizes n = 2 + doc_id % 4 deterministic frames of
     (16 + id % 32) x (16 + id % 24), encodes them as a single-stream
     MJPEG AVI at fps = 5 + id % 10, then decodes through
-    ``decode_video`` with frame_step={VIDEO_FRAME_STEP} — sampling
+    ``decode_video`` with frame_step=``VIDEO_FRAME_STEP`` — sampling
     every other frame WITHOUT entropy-decoding the skipped ones.  The
     SQL oracle predicts width/height/fps/frame counts from doc_id
     arithmetic alone, so a hash-green driver row certifies
@@ -916,7 +916,7 @@ def multimodal_audio_g711_roundtrip(spark: SparkSession,
 
     100 TB shape: one narrow Arrow-batched mapInPandas pass, zero
     shuffles; per-row work is one tiny companding table application
-    plus a {FFT_N}-point rfft."""
+    plus a ``FFT_N``-point rfft."""
 
     def peak(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np

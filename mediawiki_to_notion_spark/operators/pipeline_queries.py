@@ -22,7 +22,7 @@ from mediawiki_to_notion_spark.functions.gfm_convert import (
     convert_document,
 )
 from mediawiki_to_notion_spark.operators.registry import register
-from mediawiki_to_notion_spark.plans.pipeline import store_blocks
+from mediawiki_to_notion_spark.plans.pipeline import local_frame, store_blocks
 from mediawiki_to_notion_spark.sources.tables import load_table
 
 
@@ -118,8 +118,8 @@ def gfm_convert_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
     table.  This upgrades the conversion stage from the rows-only
     check on ``pipeline_prepare_convert`` to an exact value check
     against pandoc-parity fixtures (process-mw-dump.py:276-292)."""
-    src = spark.createDataFrame(
-        [(cid, wikitext) for cid, wikitext, _ in GOLDEN_CASES],
+    src = local_frame(
+        spark, [(cid, wikitext) for cid, wikitext, _ in GOLDEN_CASES],
         "case_id string, cleaned string",
     )
     converted = src.mapInPandas(
@@ -146,8 +146,8 @@ def markdown_blocks_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
         markdown_to_block_rows,
     )
 
-    src = spark.createDataFrame(
-        [(cid, cid, md) for cid, md, _ in GOLDEN_BLOCK_CASES],
+    src = local_frame(
+        spark, [(cid, cid, md) for cid, md, _ in GOLDEN_BLOCK_CASES],
         "batch_id string, s3_object_key string, markdown string",
     )
     rows = src.mapInPandas(markdown_to_block_rows, BLOCK_ROWS_DDL)

@@ -884,7 +884,7 @@ RETURNED_TOP_K = 20
 )
 def returned_item_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Returned-item reporting (TPC-H Q10's shape, undated): the
-    top-{RETURNED_TOP_K} customers by revenue lost to returns, with
+    top-``RETURNED_TOP_K`` customers by revenue lost to returns, with
     nationality — the churn-risk report.
 
     100 TB shape: the returnflag filter pushes into the lineitem scan
@@ -957,7 +957,7 @@ def dashboard_status_widget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB shape: the recency cut is orderBy().limit() — TakeOrdered,
     never a corpus-wide sort or single-partition window; the rank and
-    row assembly run over the {WIDGET_TOP_N} surviving rows."""
+    row assembly run over the ``WIDGET_TOP_N`` surviving rows."""
     e = load_table(spark, "events", sf_dir)
     top = (
         e.select("event_id", "ts", "event_type")

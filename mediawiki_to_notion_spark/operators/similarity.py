@@ -176,7 +176,7 @@ def _subquery(name: str) -> str:
     oracle=None,  # assembled lazily below to avoid registration-order coupling
 )
 def similarity_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Index-quality measurement: recall@{TOP_K} of the SRP-LSH bucketed
+    """Index-quality measurement: recall@``TOP_K`` of the SRP-LSH bucketed
     search against the exact brute-force top-k, per query vector.  This
     is the evaluation loop an ANN deployment runs after every re-index —
     the approximate path is only trustworthy with its recall measured
@@ -238,7 +238,7 @@ PQ_K = 16       # centroids per subspace codebook (vec_id < 16)
 
 
 def _pq_subvectors() -> F.Column:
-    """Array of {PQ_M} double sub-vectors sliced from `embedding`."""
+    """Array of ``PQ_M`` double sub-vectors sliced from `embedding`."""
     emb_d = V.to_double_array(F.col("embedding"))
     return F.transform(
         F.sequence(F.lit(0), F.lit(PQ_M - 1)),
@@ -313,15 +313,15 @@ _PQ_CODES_SQL = f"""
 )
 def similarity_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product quantization (Jégou et al., IVF-PQ's compression half):
-    split every {PQ_M * PQ_DSUB}-dim embedding into {PQ_M} sub-vectors
+    split every ``PQ_M * PQ_DSUB``-dim embedding into ``PQ_M`` sub-vectors
     and replace each with the id of its nearest codebook centroid
-    (deterministic codebook: the first {PQ_K} vectors, cosine metric —
-    the inner-product quantizer), compressing each vector to {PQ_M}
+    (deterministic codebook: the first ``PQ_K`` vectors, cosine metric —
+    the inner-product quantizer), compressing each vector to ``PQ_M``
     byte-sized codes for ADC scanning.
 
-    Scale shape: the codebook ({PQ_K}×{PQ_M} sub-vectors) broadcasts, so
+    Scale shape: the codebook (``PQ_K``×``PQ_M`` sub-vectors) broadcasts, so
     scoring is a map-side equi-join on the subspace index — the big side
-    is exploded ×{PQ_M} but never shuffled until the argmin window keyed
+    is exploded ×``PQ_M`` but never shuffled until the argmin window keyed
     (vec_id, j), which WindowGroupLimit prunes to the top row before the
     exchange; the final pivot is one partial-agg groupBy.  No pair of
     data vectors is ever compared."""
@@ -369,13 +369,13 @@ PQ_TOP_K = 10
 )
 def similarity_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric distance computation over PQ codes (the query half of
-    IVF-PQ): each query builds a {PQ_M}×{PQ_K} lookup table of
+    IVF-PQ): each query builds a ``PQ_M``×``PQ_K`` lookup table of
     sub-vector similarities against the codebook, and every database
-    vector is scored by summing {PQ_M} table lookups addressed by its
+    vector is scored by summing ``PQ_M`` table lookups addressed by its
     codes — the compressed-domain scan that never touches the original
     vectors.
 
-    Scale shape: the LUT ({PQ_QUERIES}×{PQ_M}×{PQ_K} rows) broadcasts,
+    Scale shape: the LUT (``PQ_QUERIES``×``PQ_M``×``PQ_K`` rows) broadcasts,
     so scoring is a map-side equi-join on (j, code) over the codes
     table followed by one partial-agg shuffle keyed (query_id, vec_id);
     top-k is a per-query window.  Exact-sum parity: per-lookup sims are
@@ -421,7 +421,7 @@ RRF_TOP = 15
 def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval: fuse the BM25 lexical top-k and the dense
     cosine top-k (query vector 0) by reciprocal-rank fusion,
-    score = Σ 1/({RRF_K}+rank) — the standard RAG-stack retriever that
+    score = Σ 1/(``RRF_K``+rank) — the standard RAG-stack retriever that
     needs no score calibration between the two systems.
 
     Both operands are the already-registered queries, so the fusion
@@ -502,7 +502,7 @@ N_NEGATIVES = 3  # hard negatives per anchor (ranks 2..4 in-bucket)
 def contrastive_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hard-negative mining for contrastive training (DPR / SimCSE
     data prep): per anchor, the in-bucket nearest neighbour is the
-    positive and the next {N_NEGATIVES} ranks are the hard negatives —
+    positive and the next ``N_NEGATIVES`` ranks are the hard negatives —
     near the anchor in the ANN index, so they carry actual training
     signal, unlike random negatives.
 
@@ -593,7 +593,7 @@ def knn_label_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     SRP bucket probe.
 
     Scale shape: the candidate set IS similarity_lsh_bucketed's output
-    (top-{TOP_K} per query); voting adds a broadcast label join and
+    (top-``TOP_K`` per query); voting adds a broadcast label join and
     two tiny windows."""
     cand = similarity_lsh_bucketed(spark, sf_dir)
     e = load_table(spark, "embeddings", sf_dir)
@@ -700,8 +700,8 @@ def _mrl_scored_sql() -> str:
 )
 def embedding_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matryoshka (MRL) truncation eval: for each query vector, exact
-    cosine top-{MRL_K} under PREFIX dimensions {MRL_TIERS} versus the
-    full 64-dim ground truth, reported as recall@{MRL_K} per (query,
+    cosine top-``MRL_K`` under PREFIX dimensions ``MRL_TIERS`` versus the
+    full 64-dim ground truth, reported as recall@``MRL_K`` per (query,
     tier) — the measurement that decides how far stored embeddings can
     be truncated (for cheap first-stage retrieval or index shrink)
     before ranking quality collapses (Kusupati et al. 2022).
@@ -923,24 +923,24 @@ def similarity_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     between ANN candidate generation and the context window: greedily
     select argmax of lambda*relevance - (1-lambda)*max-similarity-to-
     already-selected, so near-duplicate passages don't crowd out
-    coverage.  Per query: top-{MMR_C} relevance candidates, {MMR_K}
+    coverage.  Per query: top-``MMR_C`` relevance candidates, ``MMR_K``
     MMR selections at lambda 0.7.
 
     Exact cross-engine arithmetic: cosines round to 6 dp then become
     integer MICRO-UNITS; the MMR objective is the pure-int64
-    score_u = {MMR_LAMBDA_NUM}*rel_u - {MMR_DIV_NUM}*maxsim_u
+    score_u = ``MMR_LAMBDA_NUM``*rel_u - ``MMR_DIV_NUM``*maxsim_u
     (lambda x10), ties to the smaller vec_id — no float comparison
     anywhere in the selection, so the greedy path is deterministic in
-    both engines.  The greedy recurrence is UNROLLED into {MMR_K}
+    both engines.  The greedy recurrence is UNROLLED into ``MMR_K``
     explicit levels in both engines (the unigram-LM materialized-DP
     discipline): each level is one anti-membership join + per-query
     max-sim aggregate + a rank-1 window.
 
     100 TB shape: candidate generation is the broadcast-query
     brute-force pass (swap in the SRP/IVF path for web-scale corpora —
-    MMR only ever sees the top-{MMR_C} pool); everything after is
-    bounded by queries x {MMR_C} rows ({MMR_C}^2 pair sims per query),
-    localCheckpointed once so the {MMR_K} level plans don't re-derive
+    MMR only ever sees the top-``MMR_C`` pool); everything after is
+    bounded by queries x ``MMR_C`` rows (``MMR_C``^2 pair sims per query),
+    localCheckpointed once so the ``MMR_K`` level plans don't re-derive
     the corpus scan."""
     e = V.hygiene(load_table(spark, "embeddings", sf_dir))
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
@@ -1052,18 +1052,18 @@ def _prf_oracle() -> str:
 def similarity_prf_rocchio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rocchio pseudo-relevance feedback (Rocchio 1971, the classic
     query-expansion loop every retrieval stack still runs): take the
-    round-1 top-{PRF_K} by cosine, fold their centroid into the query
+    round-1 top-``PRF_K`` by cosine, fold their centroid into the query
     (q' = q + 0.75 * centroid, i.e. alpha 1, beta 0.75), and re-rank
     the corpus against q' — documents sharing structure with the
     feedback set surface even when the ORIGINAL query missed them
     entirely (the vocabulary/modality-mismatch case pinned in
     tests/test_prf_rocchio.py: a doc orthogonal to q enters the
-    expanded top-{PRF_TOP}).
+    expanded top-``PRF_TOP``).
 
     Cross-engine exactness of q': embedding components quantize
     through round(x, 6) -> DECIMAL(18,6) (the proven two-step), the
     centroid sum is a DECIMAL aggregate (order-independent), and the
-    blend multiplies by DECIMAL {PRF_BETA_OVER_K} = 3/32 exactly — so
+    blend multiplies by DECIMAL ``PRF_BETA_OVER_K`` = 3/32 exactly — so
     both engines cast bit-identical expanded queries to double before
     the (already-pinned) 6-dp cosine fold.  Floats never accumulate
     in engine-dependent order.
@@ -1072,7 +1072,7 @@ def similarity_prf_rocchio(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-2 re-scoring) — the same slope as similarity_topk_bruteforce,
     with the SRP/IVF probe as the drop-in candidate path at web scale;
     everything between them (feedback set, centroid, q') is bounded by
-    queries x {PRF_K} x {V.EMB_DIM} rows."""
+    queries x ``PRF_K`` x ``V.EMB_DIM`` rows."""
     from decimal import Decimal
 
     e = V.hygiene(load_table(spark, "embeddings", sf_dir))

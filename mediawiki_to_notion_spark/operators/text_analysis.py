@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from mediawiki_to_notion_spark.functions import text as tx
 from mediawiki_to_notion_spark.operators.registry import register
+from mediawiki_to_notion_spark.plans.pipeline import local_frame
 from mediawiki_to_notion_spark.sources.tables import load_table
 
 
@@ -218,8 +219,8 @@ def _tfidf_token_weights(d, terms=None):
     """,
 )
 def keyword_search_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keyword retrieval: top-{SEARCH_TOP_K} documents by summed TF-IDF
-    over the query terms {SEARCH_TERMS}.
+    """Keyword retrieval: top-``SEARCH_TOP_K`` documents by summed TF-IDF
+    over the query terms ``SEARCH_TERMS``.
 
     Scale shape: tokens are filtered to the query terms *before* any
     shuffle (the inverted-index probe), document frequencies are a tiny
@@ -351,8 +352,8 @@ BM25_B = 0.75
     """,
 )
 def keyword_search_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 retrieval (Robertson/Spärck Jones; k1={BM25_K1}, b={BM25_B}):
-    top-{SEARCH_TOP_K} documents for the query terms {SEARCH_TERMS} under
+    """BM25 retrieval (Robertson/Spärck Jones; k1=``BM25_K1``, b=``BM25_B``):
+    top-``SEARCH_TOP_K`` documents for the query terms ``SEARCH_TERMS`` under
     the saturating-TF, length-normalized ranking function — the lexical
     retriever a training pipeline pairs with dense similarity search.
 
@@ -506,9 +507,9 @@ PMI_TOP_K = 50
     """,
 )
 def text_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Collocation mining: top-{PMI_TOP_K} adjacent-token bigrams by
+    """Collocation mining: top-``PMI_TOP_K`` adjacent-token bigrams by
     pointwise mutual information, ln(p(ab)/(p(a)p(b))), with a
-    min-count floor of {PMI_MIN_COUNT} — the statistic behind tokenizer
+    min-count floor of ``PMI_MIN_COUNT`` — the statistic behind tokenizer
     merge candidates and multi-word-expression detection.
 
     Scale shape: ONE partial-agg shuffle builds the bigram counts, the
@@ -582,7 +583,7 @@ BPE_TOP_K = 50
 def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One round of BPE merge-candidate counting (Sennrich et al. 2016,
     the statistic tokenizer training iterates): corpus-weighted counts
-    of adjacent symbol pairs inside words, top-{BPE_TOP_K} by count —
+    of adjacent symbol pairs inside words, top-``BPE_TOP_K`` by count —
     the highest pair is the next merge rule.  Complements text_bigram_pmi
     (word-level collocations) with the character-level tokenizer view.
 
@@ -772,8 +773,8 @@ KWIC_CTX = 3  # words of context each side
     """,
 )
 def text_kwic_concordance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keyword-in-context concordance for '{KWIC_TERM}': every
-    occurrence with {KWIC_CTX} words of context each side — the corpus
+    """Keyword-in-context concordance for '``KWIC_TERM``': every
+    occurrence with ``KWIC_CTX`` words of context each side — the corpus
     inspection tool linguists and data auditors reach for when a
     filter/dedup decision needs human eyes on actual usage.
 
@@ -830,7 +831,7 @@ KEYWORDS_PER_DOC = 3
     """,
 )
 def doc_keyword_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document keyword extraction: the top-{KEYWORDS_PER_DOC}
+    """Per-document keyword extraction: the top-``KEYWORDS_PER_DOC``
     tokens by TF-IDF weight (deterministic tie order) concatenated as
     the document's keyword label — the distinguishing-term summary
     behind faceted browsing, weak topic labels, and cluster naming.
@@ -894,7 +895,7 @@ VOCAB_COVERAGE_K = 200  # tokenizer vocabulary budget under evaluation
 )
 def tokenizer_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer vocabulary-coverage evaluation: freeze a
-    {VOCAB_COVERAGE_K}-entry vocabulary (top corpus frequencies,
+    ``VOCAB_COVERAGE_K``-entry vocabulary (top corpus frequencies,
     deterministic tie order — the budget a tokenizer trainer would
     allocate) and report each document's out-of-vocabulary token count
     and rate — the fertility/coverage metric that decides whether a
@@ -1125,7 +1126,7 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
     when it fits DRIVER_VOCAB_CAP the rounds replay driver-side in
     exact integer arithmetic (bit-identical by construction and by
     tests/test_tokenizer_driver_cutover.py), one bounded collect
-    instead of {BPE_TRAIN_ROUNDS}+ actions; past the cap the
+    instead of ``BPE_TRAIN_ROUNDS``+ actions; past the cap the
     distributed loop below runs unchanged (the 100 TB path)."""
     from mediawiki_to_notion_spark.operators import tokenizer_local as TL
     from mediawiki_to_notion_spark.plans.pipeline import ensure_parallelism
@@ -1147,13 +1148,13 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
     if wf is not None:
         words.unpersist()
         merges, seqs = TL.bpe_train_local(wf, BPE_TRAIN_ROUNDS)
-        # broadcast-hinted (guide §3.1): the cap-bounded word table is
-        # an ExistingRDD scan with no stats, so the fertility encode
-        # join downstream would otherwise sort-merge (full corpus-word
+        # broadcast-hinted (guide §3.1): the cap-bounded word table
+        # keeps the fertility encode join downstream a broadcast at any
+        # cap-bounded size, never a sort-merge (full corpus-word
         # Exchange); the hint survives the consumer's projection.  The
         # over-cap checkpointed vocab below stays unhinted.
-        vocab = F.broadcast(spark.createDataFrame(
-            [(w, seqs[w], f) for w, f in wf],
+        vocab = F.broadcast(local_frame(
+            spark, [(w, seqs[w], f) for w, f in wf],
             "word string, l array<string>, freq long",
         ))
         return merges, vocab
@@ -1212,7 +1213,7 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
 @register("bpe_train_merges", oracle=_bpe_train_oracle())
 def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE tokenizer TRAINING (Sennrich et al. 2016): iterate
-    {BPE_TRAIN_ROUNDS} merge rounds — count adjacent symbol pairs over
+    ``BPE_TRAIN_ROUNDS`` merge rounds — count adjacent symbol pairs over
     the word-frequency table, adopt the most frequent pair (ties:
     lexicographic) as the next merge rule, rewrite the vocabulary, and
     repeat with the merged vocab as loop state.  Output is the ordered
@@ -1229,15 +1230,15 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference algorithm's semantics — so no Python touches the data.
     """
     merges, _vocab = _bpe_train(spark, sf_dir)
-    return spark.createDataFrame(
-        merges, "round int, a string, b string, n_occurrences long"
+    return local_frame(
+        spark, merges, "round int, a string, b string, n_occurrences long"
     ).orderBy("round")
 
 
 @register("bpe_tokenize_fertility", oracle=_bpe_train_oracle(final="fertility"))
 def bpe_tokenize_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ENCODE side of the trained tokenizer: apply the
-    {BPE_TRAIN_ROUNDS} learned merges back to the corpus and report
+    ``BPE_TRAIN_ROUNDS`` learned merges back to the corpus and report
     per-document BPE token counts and fertility (BPE tokens per
     whitespace word) — the compression/efficiency eval every tokenizer
     train ends with (cf. tokenizer_vocab_coverage for the OOV view).
@@ -1308,9 +1309,9 @@ def ngram_lm_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interpolated Kneser-Ney bigram language model (Kneser & Ney
     1995; Chen & Goodman 1999's standard formulation) — the count-based
     LM behind CCNet-style perplexity filtering when no neural LM is in
-    the loop: absolute discount {KN_DISCOUNT} with the lower-order
+    the loop: absolute discount ``KN_DISCOUNT`` with the lower-order
     CONTINUATION distribution (distinct-predecessor counts, the
-    signature KN ingredient).  Reports the top-{KN_TOP_K} bigrams by
+    signature KN ingredient).  Reports the top-``KN_TOP_K`` bigrams by
     smoothed probability.
 
     Cross-engine parity: every input is an exact integer count and the
@@ -1528,7 +1529,7 @@ ZIPF_TOP_N = 256  # ranks entering the log-log least-squares fit
 )
 def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zipf's-law fit over the corpus unigram distribution: least-squares
-    slope of ln(frequency) vs ln(rank) over the top {ZIPF_TOP_N} ranks
+    slope of ln(frequency) vs ln(rank) over the top ``ZIPF_TOP_N`` ranks
     (natural text sits near slope -1; synthetic/templated or
     boilerplate-flooded corpora flatten or steepen it, which makes the
     slope a cheap corpus-health monitor next to the entropy and
@@ -1541,9 +1542,9 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles reappear only in the final five scalar divisions.
 
     100 TB shape: the frequency table is one map-side-partial groupBy;
-    the top-{ZIPF_TOP_N} cut is a TakeOrdered (distributed partial
+    the top-``ZIPF_TOP_N`` cut is a TakeOrdered (distributed partial
     top-k, never a global sort); the rank window then runs over
-    {ZIPF_TOP_N} rows — bounded, not corpus-sized — and the fit is one
+    ``ZIPF_TOP_N`` rows — bounded, not corpus-sized — and the fit is one
     single-row aggregate."""
     from pyspark.sql import Window as W
 

@@ -175,8 +175,8 @@ PACK_WINDOW_TOKENS = 512       # context-window size for sequence packing
 )
 def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: flag corpus documents sharing any
-    word-trigram with a held-out eval set (docs `doc_id <
-    {DECON_BENCHMARK_DOCS}` stand in for the benchmark suite).
+    word-trigram with a held-out eval set (docs with ``doc_id <
+    DECON_BENCHMARK_DOCS`` stand in for the benchmark suite).
 
     100 TB shape: the benchmark shingle set is small and broadcasts; the
     corpus side streams through a broadcast LEFT join on the 60-bit
@@ -237,7 +237,7 @@ N_PACK_PARTITIONS = 8  # fixed so the range partitioning is reproducible
 )
 def pack_sequences_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy sequence packing: documents are laid end-to-end in
-    deterministic (doc_id) order and cut into {PACK_WINDOW_TOKENS}-token
+    deterministic (doc_id) order and cut into ``PACK_WINDOW_TOKENS``-token
     context windows — `pack_id` is the window each document starts in,
     `pack_offset` its position inside it (the streaming concat-and-chunk
     packing used to build pretraining batches).
@@ -252,14 +252,14 @@ def pack_sequences_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
        per execution — divergent boundaries would double-count tokens);
     2. in-range running totals via a window partitioned by pid — each
        window partition is one range bucket, never the corpus;
-    3. per-range token totals ({N_PACK_PARTITIONS} rows) become
+    3. per-range token totals (``N_PACK_PARTITIONS`` rows) become
        cumulative offsets via a tiny window, broadcast back;
        cum_before = range offset + in-range running total.
 
     A bare `W.orderBy(doc_id)` window — the oracle's formulation — would
     funnel the corpus through ONE task at 100 TB; this plan's wide ops
     are the range exchange, a pid hash exchange, and a broadcast of
-    {N_PACK_PARTITIONS} offset rows."""
+    ``N_PACK_PARTITIONS`` offset rows."""
     d = load_table(spark, "documents", sf_dir)
     sized = d.select(
         "doc_id", "lang",
@@ -422,7 +422,7 @@ STRATUM_CAP = 20  # exact per-stratum sample size
     """,
 )
 def stratified_sample_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-count stratified sampling: precisely {STRATUM_CAP} documents
+    """Exact-count stratified sampling: precisely ``STRATUM_CAP`` documents
     per source, chosen by a salted content-addressed hash order — the
     "N examples per domain" selection step for eval-set construction
     and balanced fine-tuning mixes.  Unlike `sampleBy` (probabilistic,
@@ -430,7 +430,7 @@ def stratified_sample_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-partitionings, and needs no seed bookkeeping.
 
     Scale shape: one hash-partition shuffle keyed by the stratum;
-    WindowGroupLimit prunes each partition to the top {STRATUM_CAP}
+    WindowGroupLimit prunes each partition to the top ``STRATUM_CAP``
     rows *before* the exchange, so the shuffle moves O(strata x cap)
     rows, not the corpus."""
     d = load_table(spark, "documents", sf_dir)
@@ -616,8 +616,8 @@ SPAN_MOD = 5     # select span when (doc_id + span_idx) % SPAN_MOD == 0
 )
 def span_corruption_t5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T5/UL2 span-corruption preprocessing: deterministic spans of
-    {SPAN_LEN} tokens (candidate starts every {SPAN_EVERY} tokens,
-    selected when (doc_id + span_idx) % {SPAN_MOD} == 0 — the
+    ``SPAN_LEN`` tokens (candidate starts every ``SPAN_EVERY`` tokens,
+    selected when (doc_id + span_idx) % ``SPAN_MOD`` == 0 — the
     hash-free stand-in for the sampled mask) become sentinel targets
     '<extra_id_k> tokens...' per document, the denoising-objective
     label stream.  Real pipelines sample the mask; the selection rule
@@ -625,7 +625,7 @@ def span_corruption_t5(spark: SparkSession, sf_dir: str) -> DataFrame:
     spans and the whole transform is value-checked.
 
     100 TB shape: span generation is a bounded per-row explode (one
-    candidate per {SPAN_EVERY} tokens); target assembly is one doc_id
+    candidate per ``SPAN_EVERY`` tokens); target assembly is one doc_id
     aggregate with an in-group sort — no corpus-wide ordering."""
     d = load_table(spark, "documents", sf_dir)
     toks = d.select("doc_id", F.split("text", " ").alias("t")).filter(
@@ -708,7 +708,7 @@ def fim_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     sentinel tokens, so the model learns to generate the middle given
     both sides.  Cut points are exact integer arithmetic (a = 1 +
     id % (n-2); b = a + 1 + 7·id % (n-a-1)), identical in both
-    engines; documents under {FIM_MIN_TOKENS} tokens pass through
+    engines; documents under ``FIM_MIN_TOKENS`` tokens pass through
     untransformed (no row here — the pipeline unions them unchanged).
 
     100 TB shape: one narrow codegen pass — array slices and concats
@@ -783,8 +783,8 @@ def _decon_cut_oracle() -> str:
 def decontaminate_span_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPAN-level benchmark decontamination — one step past
     decontaminate_ngram_overlap's document FLAGGING: every corpus
-    occurrence of a {DECON_CUT_W}-token window that also appears in
-    the held-out eval suite (docs doc_id < {DECON_BENCHMARK_DOCS}) is
+    occurrence of a ``DECON_CUT_W``-token window that also appears in
+    the held-out eval suite (docs doc_id < ``DECON_BENCHMARK_DOCS``) is
     cut, and each document is rebuilt from its surviving tokens.
     Cutting the contaminated spans instead of dropping whole documents
     preserves the rest of an otherwise-clean page — the surgical
@@ -851,18 +851,18 @@ CHUNK_STRIDE = 48  # tokens between chunk starts (64-48 = 16 overlap)
 def chunk_documents_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping token-window chunking — the retrieval/RAG indexing
     and long-document pre-processing primitive: each document explodes
-    into {CHUNK_W}-token chunks whose starts advance by {CHUNK_STRIDE}
+    into ``CHUNK_W``-token chunks whose starts advance by ``CHUNK_STRIDE``
     tokens ({CHUNK_W - CHUNK_STRIDE}-token overlap so no phrase is
     split across a hard boundary), with exact token-span coordinates
     per chunk for provenance joins back to the source.
 
     Chunk-count rule (both engines, exact integer arithmetic): a doc of
-    n tokens yields max(1, ceil((n - {CHUNK_W}) / {CHUNK_STRIDE}) + 1)
+    n tokens yields max(1, ceil((n - ``CHUNK_W``) / ``CHUNK_STRIDE``) + 1)
     chunks — every token is covered, the last chunk may be short, and a
     doc shorter than one window is exactly one chunk.
 
     100 TB shape: one narrow codegen pass — split, a bounded
-    per-document sequence explode (fan-out n/{CHUNK_STRIDE}, data
+    per-document sequence explode (fan-out n/``CHUNK_STRIDE``, data
     volume ~1.33x the corpus at this W/S), slices of the SAME token
     array; no shuffle at all, so it composes with whatever
     partitioning the downstream (embedding, shard write) needs."""
@@ -975,8 +975,8 @@ MIN_BUCKET_LEN = 16         # shortest padded length a batch is built at
 def training_length_bucket_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length-bucketed dynamic batching plan — the padding-efficiency
     step between tokenization and batch assembly: documents group into
-    power-of-two token-length buckets (floor {MIN_BUCKET_LEN}), each
-    bucket is batched at capacity floor({BATCH_TOKEN_BUDGET}/bucket_len)
+    power-of-two token-length buckets (floor ``MIN_BUCKET_LEN``), each
+    bucket is batched at capacity floor(``BATCH_TOKEN_BUDGET``/bucket_len)
     docs so every batch pads to the BUCKET ceiling instead of the
     corpus maximum, and the query reports per-bucket doc/token counts,
     batch capacity/count, and the realized pad-waste ratio.
@@ -1151,7 +1151,7 @@ BUDGET_NUM, BUDGET_DEN = 6, 10
 def source_token_budget_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Water-filling token-budget allocation across sources — the
     data-constrained mixture decision (Muennighoff et al. 2023's
-    regime): given a token budget of {BUDGET_NUM}/{BUDGET_DEN} of the
+    regime): given a token budget of ``BUDGET_NUM``/``BUDGET_DEN`` of the
     corpus, small sources contribute everything they have and large
     sources are capped at a common water level, so no source is
     over-weighted just because it is big.  Exact-integer water level:

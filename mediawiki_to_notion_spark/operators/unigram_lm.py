@@ -57,6 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mediawiki_to_notion_spark.operators.registry import register
+from mediawiki_to_notion_spark.plans.pipeline import local_frame
 from mediawiki_to_notion_spark.sources.tables import load_table
 
 UNI_MAX_PIECE = 4      # max piece length admitted to the seed vocabulary
@@ -187,7 +188,7 @@ def _unigram_train(spark: SparkSession, sf_dir: str):
         words_raw.unpersist()
         vocab = TL.unigram_train_local(
             wf, UNI_ROUNDS, UNI_SEED_K, UNI_MAX_PIECE, _micro_nat_cost)
-        words = spark.createDataFrame(wf, "word string, freq long")
+        words = local_frame(spark, wf, "word string, freq long")
         return vocab, words, wf
     words = words_raw.localCheckpoint()
     words_raw.unpersist()
@@ -209,7 +210,8 @@ def _unigram_train(spark: SparkSession, sf_dir: str):
 
     for _rnd in range(UNI_ROUNDS):
         total = float(sum(vocab.values()))
-        costs = spark.createDataFrame(
+        costs = local_frame(
+            spark,
             [(p, _micro_nat_cost(total, c)) for p, c in sorted(vocab.items())],
             "piece string, cost long",
         )
@@ -228,7 +230,8 @@ def _unigram_train(spark: SparkSession, sf_dir: str):
 
 def _final_costs(spark: SparkSession, vocab: dict[str, int]) -> DataFrame:
     total = float(sum(vocab.values()))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(p, c, _micro_nat_cost(total, c)) for p, c in sorted(vocab.items())],
         "piece string, n_uses long, cost_micro_nats long",
     )
@@ -363,9 +366,9 @@ def _unigram_oracle(final: str = "vocab") -> str:
 def unigram_lm_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram-LM tokenizer TRAINING (Kudo 2018, hard-EM/Viterbi
     variant): seed the vocabulary with all corpus substrings up to
-    {UNI_MAX_PIECE} chars (top-{UNI_SEED_K} multi-char by frequency,
+    ``UNI_MAX_PIECE`` chars (top-``UNI_SEED_K`` multi-char by frequency,
     plus every single character for full coverage), then iterate
-    {UNI_ROUNDS} rounds of Viterbi segmentation under integer
+    ``UNI_ROUNDS`` rounds of Viterbi segmentation under integer
     micro-nat piece costs, usage re-counting, and zero-usage pruning.
     Output: the final (piece, n_uses, cost_micro_nats) vocabulary —
     the artifact a SentencePiece-style tokenizer ships.
@@ -406,10 +409,11 @@ def unigram_lm_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         costs_local = {
             p: _micro_nat_cost(total, c) for p, c in vocab.items()
         }
-        # broadcast (guide §3.1): cap-bounded word table as an
-        # ExistingRDD scan has no stats — without the hint the corpus
-        # encode join below sort-merges with a full corpus Exchange.
-        wl = F.broadcast(spark.createDataFrame(
+        # broadcast (guide §3.1): the cap-bounded word table; the hint
+        # keeps the corpus encode join below from sort-merging with a
+        # full corpus Exchange at any cap-bounded size.
+        wl = F.broadcast(local_frame(
+            spark,
             sorted(
                 (w, len(TL.unigram_viterbi_local(
                     w, costs_local, UNI_MAX_PIECE)[1]))

@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mediawiki_to_notion_spark.operators.registry import register
+from mediawiki_to_notion_spark.plans.pipeline import local_frame
 from mediawiki_to_notion_spark.sources.tables import load_table
 
 WP_TRAIN_ROUNDS = 8
@@ -97,8 +98,8 @@ def _wordpiece_train(spark: SparkSession, sf_dir: str):
         words.unpersist()
         merges, seqs = TL.wordpiece_train_local(
             wf, WP_TRAIN_ROUNDS, WP_SCALE)
-        vocab = spark.createDataFrame(
-            [(w, seqs[w], f) for w, f in wf],
+        vocab = local_frame(
+            spark, [(w, seqs[w], f) for w, f in wf],
             "word string, l array<string>, freq long",
         )
         return merges, vocab, wf
@@ -314,7 +315,7 @@ def _wp_fertility_oracle(rounds: int = WP_TRAIN_ROUNDS,
 def wordpiece_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WordPiece tokenizer TRAINING (Schuster & Nakajima 2012): from
     the BERT-style initial split (first char plain, continuations
-    '##'-marked), iterate {WP_TRAIN_ROUNDS} rounds merging the
+    '##'-marked), iterate ``WP_TRAIN_ROUNDS`` rounds merging the
     adjacent symbol pair with the highest likelihood score
     count(ab)/(count(a)*count(b)) — ranked by the exact integer
     ``score_scaled`` (ties: (a, b) ascending) — and rewriting the
@@ -324,8 +325,8 @@ def wordpiece_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: see module docstring — vocabulary-sized rounds, one
     driver row per round, JVM-side merge fold."""
     merges, _vocab, _wf = _wordpiece_train(spark, sf_dir)
-    return spark.createDataFrame(
-        merges,
+    return local_frame(
+        spark, merges,
         "round int, a string, b string, merged string, n_pair long, "
         "score_scaled long",
     ).orderBy("round")
@@ -335,7 +336,7 @@ def wordpiece_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 def wordpiece_tokenize_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ENCODE side of WordPiece: greedy longest-match-first
     ("maximum munch") tokenization against the shipped vocabulary
-    (initial symbols + the {WP_TRAIN_ROUNDS} merged symbols, '##'
+    (initial symbols + the ``WP_TRAIN_ROUNDS`` merged symbols, '##'
     continuation convention — the BERT tokenizer's algorithm, NOT a
     replay of the merge chain), reporting per-document piece counts
     and fertility.  Single chars are always in the vocabulary, so no
@@ -372,11 +373,11 @@ def wordpiece_tokenize_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         vocab_set.update(m[3] for m in merges)
         wp = TL.wordpiece_max_munch_local([w for w, _ in wf], vocab_set)
         # broadcast (guide §3.1): wl_local is the cap-bounded distinct
-        # word table; without the hint the ExistingRDD scan has no
-        # stats and the corpus encode join sort-merges — a full
-        # corpus-word Exchange instead of a map-side hash probe.
-        wl_local = F.broadcast(spark.createDataFrame(
-            sorted(wp.items()), "word string, n_pieces long"))
+        # word table; the hint keeps the corpus encode join a map-side
+        # hash probe at any cap-bounded size, never a sort-merge with a
+        # full corpus-word Exchange.
+        wl_local = F.broadcast(local_frame(
+            spark, sorted(wp.items()), "word string, n_pieces long"))
         return (
             dw_corpus.join(wl_local, "word")
             .groupBy("doc_id")
@@ -395,9 +396,7 @@ def wordpiece_tokenize_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(_initial_symbols()).alias("piece")
     ).distinct()
     vocab = alphabet.union(
-        spark.createDataFrame(
-            [(m[3],) for m in merges], "piece string"
-        )
+        local_frame(spark, [(m[3],) for m in merges], "piece string")
     ).distinct()
 
     # candidate matches: effective piece at non-initial starts carries ##

@@ -26,8 +26,11 @@ from collections.abc import Iterator
 from functools import partial
 
 import pandas as pd
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from mediawiki_to_notion_spark.functions import wikitext as wt
 from mediawiki_to_notion_spark.functions.gfm_convert import convert_batches
@@ -76,6 +79,28 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """Driver-built rows (tuples in ``schema``'s column order) as a
+    DataFrame whose plan leaf is a ``LocalTableScan``.
+
+    The rows go to the JVM as one Arrow table typed from ``schema``, so
+    the frame carries real size statistics and executing it runs no
+    Python worker.  ``createDataFrame`` over a Python list instead plans
+    a ``parallelize`` + Python-RDD scan (an ``ExistingRDD`` leaf with no
+    statistics), which starts a second Python worker pool next to the
+    Arrow stages'.  Every package frame built from driver rows goes
+    through here."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def route_pages(pages: DataFrame) -> DataFrame:

@@ -504,8 +504,15 @@ def read_warc(spark: SparkSession, path: str,
             start += split_bytes
             if start >= size:
                 break
-    sdf = spark.createDataFrame(
-        pd.DataFrame(splits, columns=["path", "start", "end"]),
-        schema="path string, start long, end long",
-    ).repartition(max(len(splits), 1), "path", "start")
+    # one split per partition, with no shuffle: each task picks its
+    # split out of a literal array by its row index (as read_dump does)
+    table = F.array(*[
+        F.struct(F.lit(sp["path"]).alias("path"),
+                 F.lit(sp["start"]).cast("long").alias("start"),
+                 F.lit(sp["end"]).cast("long").alias("end"))
+        for sp in splits
+    ])
+    sdf = spark.range(len(splits), numPartitions=len(splits)).select(
+        table[F.col("id").cast("int")].alias("split")
+    ).select("split.*")
     return sdf.mapInPandas(_parse_warc_splits, WARC_SCHEMA_DDL)

@@ -25,12 +25,17 @@ anti-join, avoiding the delete-heavy pattern (SURVEY §1.1 row 7).
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from mediawiki_to_notion_spark.plans.pipeline import local_frame
 
 
 class ParquetTable:
@@ -42,7 +47,9 @@ class ParquetTable:
         self.spark = spark
         self.path = path
         self.key_cols = key_cols
-        self.schema = schema
+        self.schema = (
+            StructType.fromDDL(schema) if isinstance(schema, str) else schema
+        )
         self.n_buckets = n_buckets
         os.makedirs(path, exist_ok=True)
 
@@ -164,7 +171,17 @@ class ParquetTable:
     def _empty(self) -> DataFrame:
         if self.schema is None:
             raise FileNotFoundError(f"empty table {self.path} and no schema")
-        return self.spark.createDataFrame([], self.schema)
+        return local_frame(self.spark, [], self.schema)
+
+    def num_rows(self) -> int:
+        """Row count of the current state, summed from the parquet
+        footers of the live segments: no Spark job runs."""
+        _, mapping = self._latest()
+        return sum(
+            pq.ParquetFile(f).metadata.num_rows
+            for seg in self._segments(mapping)
+            for f in glob.glob(os.path.join(seg, "*.parquet"))
+        )
 
     def read(self, at: int | None = None) -> DataFrame:
         """Current table state, or — Delta-style time travel — the state
@@ -207,15 +224,14 @@ class ParquetTable:
     # -- mutations ------------------------------------------------------------
 
     def _align_to_schema(self, source: DataFrame) -> DataFrame:
-        base = self.spark.createDataFrame([], self.schema) if self.schema else None
-        if base is None:
+        if self.schema is None:
             return source
-        for c in base.columns:
-            if c not in source.columns:
+        for f in self.schema.fields:
+            if f.name not in source.columns:
                 source = source.withColumn(
-                    c, F.lit(None).cast(base.schema[c].dataType)
+                    f.name, F.lit(None).cast(f.dataType)
                 )
-        return source.select(base.columns)
+        return source.select(self.schema.fieldNames())
 
     def overwrite(self, df: DataFrame) -> None:
         n = self._latest()[0] + 1
@@ -229,7 +245,7 @@ class ParquetTable:
         compacted back to one segment when an upsert next touches them."""
         n, mapping = self._latest()
         if not mapping:
-            self.overwrite(self._align_to_schema(df) if self.schema else df)
+            self.overwrite(self._align_to_schema(df))
             return
         table_cols = self.read().columns
         written = self._write_segments(df.select(table_cols), n + 1)
@@ -271,8 +287,8 @@ class ParquetTable:
             # live segments — schema inference only, no scan), never by
             # overwriting the whole table with just the source
             target = (
-                self.spark.createDataFrame([], self.schema)
-                if self.schema else self.read().limit(0)
+                self._empty() if self.schema is not None
+                else self.read().limit(0)
             )
         cols = target.columns
         t = target.alias("t")

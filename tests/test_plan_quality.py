@@ -277,6 +277,16 @@ def test_kmeans_broadcasts_centroids_and_partial_aggregates(spark):
     assert "partial_" in plan                   # map-side combine on update
 
 
+def test_kmeans_driver_result_is_a_local_relation(spark):
+    """Under the driver cap the refined codebook is built on the driver;
+    it must reach the plan as a LocalRelation (Arrow-built, with size
+    statistics), not as a Python-RDD scan."""
+    plan = QUERIES["kmeans_lloyd_refine"](spark, SF) \
+        ._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan
+    assert "ExistingRDD" not in plan and "LogicalRDD" not in plan
+
+
 def test_pq_encode_windowgrouplimit_prunes_argmin(spark):
     plan = plan_of(spark, "similarity_pq_encode")
     assert "WindowGroupLimit" in plan
@@ -960,7 +970,9 @@ def test_package_runs_no_python_rdd_pass():
     """Every Python stage of the package is an Arrow stage (mapInPandas,
     pandas UDFs), so one Python worker pool serves the whole pipeline.
     The one allowed use of ``.rdd`` is reading a partition count
-    (``ensure_parallelism``), which runs no Python."""
+    (``ensure_parallelism``), which runs no Python.  ``createDataFrame``
+    over a Python list is a ``parallelize`` in disguise, so it may only
+    appear inside ``local_frame``, which hands it an Arrow table."""
     import ast
     import pathlib
 
@@ -976,11 +988,46 @@ def test_package_runs_no_python_rdd_pass():
             and isinstance(node.func, ast.Attribute)
             and node.func.attr == "getNumPartitions"
         }
+        if path.relative_to(root).as_posix() == "plans/pipeline.py":
+            allowed |= {
+                id(node)
+                for fn in tree.body
+                if isinstance(fn, ast.FunctionDef) and fn.name == "local_frame"
+                for node in ast.walk(fn)
+                if isinstance(node, ast.Attribute)
+                and node.attr == "createDataFrame"
+            }
         for node in ast.walk(tree):
             if not isinstance(node, ast.Attribute):
                 continue
             if node.attr in PYTHON_RDD_METHODS or (
-                node.attr == "rdd" and id(node) not in allowed
+                node.attr in ("rdd", "createDataFrame")
+                and id(node) not in allowed
             ):
                 bad.append(f"{path.relative_to(root)}:{node.lineno} .{node.attr}")
+    assert not bad, bad
+
+
+def test_package_docstrings_show_no_format_placeholders():
+    """Docstrings are plain strings, so a ``{CONSTANT}`` in one reaches
+    the reader verbatim instead of the constant's value; name the
+    constant in double backticks instead."""
+    import ast
+    import pathlib
+    import re
+
+    import mediawiki_to_notion_spark
+
+    placeholder = re.compile(r"\{[A-Z][A-Z0-9_]*\}")
+    root = pathlib.Path(mediawiki_to_notion_spark.__file__).parent
+    bad = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        for node in ast.walk(tree):
+            if not isinstance(node, (ast.Module, ast.ClassDef,
+                                     ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            doc = ast.get_docstring(node, clean=False) or ""
+            bad += [f"{path.relative_to(root)}:{getattr(node, 'name', '')} {m}"
+                    for m in placeholder.findall(doc)]
     assert not bad, bad

@@ -110,6 +110,26 @@ def test_append_adds_segments_without_rewrite(spark, tmp_path):
     assert t.read().count() == 2
 
 
+def test_num_rows_reads_the_footers_without_a_job(spark, tmp_path):
+    """The row count of the live segments comes from their parquet
+    footers: no Spark job runs, appended segments count too."""
+    t = _t(spark, tmp_path)
+    assert t.num_rows() == 0
+    t.upsert(spark.createDataFrame([("a", 1, "x"), ("b", 2, "y")], t.schema))
+    t.append(spark.createDataFrame([("c", 3, "z")], t.schema))
+    sc = spark.sparkContext
+    group = "storage-num-rows"
+    sc.setJobGroup(group, "ParquetTable.num_rows")
+    try:
+        n = t.num_rows()
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == []
+    assert n == t.read().count() == 3
+
+
 def test_compact_merges_append_segments(spark, tmp_path):
     """compact() folds a bucket's append segments into one and leaves
     single-segment buckets alone."""
@@ -166,6 +186,7 @@ def test_random_mutation_sequences_match_dict_model(spark, tmp_path):
             t.compact()
         got = {r.k: (r.v, r.extra) for r in t.read().collect()}
         assert got == model, f"divergence after step {step} ({op})"
+        assert t.num_rows() == len(model), f"footer count at step {step}"
 
 
 def test_changes_since_feeds_inserts_and_updates(spark, tmp_path):

@@ -89,3 +89,28 @@ def test_bench_stdout_lines_fit_the_tail_window():
     assert dict(zip(names, pq["ms"])) == {n: round(v * 1000)
                                           for n, v in mins.items()}
     assert json.loads(headline)["per_query_line"] == pq["metric"]
+
+
+def test_bench_ab_summary_medians_and_controls():
+    """tools/bench_ab.py pools every timing of a side, reports the
+    median, and divides each HEAD/PIN ratio by the geometric mean of
+    the first two unchanged queries' ratios."""
+    from tools import bench_ab
+
+    def capture(side, scale):
+        return {"side": side, "timings": {
+            "ctl_a": [1.0 * scale] * 4 + [9.0],   # one straggler
+            "ctl_b": [2.0 * scale] * 5,
+            "changed": [4.0] * 5,
+        }}
+
+    names = ["changed", "ctl_a", "ctl_b"]
+    flags = {"changed": False, "ctl_a": True, "ctl_b": True}
+    out = bench_ab.summarize(
+        [capture("head", 1.1), capture("pin", 1.0)] * 3, names, flags)
+    assert out["controls"] == ["ctl_a", "ctl_b"]
+    assert out["control_ratio_head_over_pin"] == 1.1
+    q = out["queries"]
+    assert q["ctl_a"]["head_q1_median_q3_s"][1] == 1.1  # straggler ignored
+    assert q["changed"]["ratio_head_over_pin"] == 1.0
+    assert q["changed"]["ratio_over_controls"] == round(1 / 1.1, 3)

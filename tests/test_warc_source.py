@@ -295,17 +295,37 @@ def test_read_warc_fans_out_across_tasks(spark, tmp_path):
     assert sorted(ids) == sorted(h["WARC-Record-ID"] for h, _ in recs)
 
 
+def test_read_warc_part_i_holds_split_i(spark, tmp_path):
+    """The split table is one split per partition with no shuffle:
+    partition i parses split i, so each record lands in the partition
+    of the split its first byte falls in."""
+    import pyspark.sql.functions as F
+
+    recs = [({"WARC-Type": "resource", "WARC-Record-ID": f"<urn:big:{k}>"},
+             bytes([65 + (k % 26)]) * 50_000) for k in range(64)]
+    f = tmp_path / "big.warc"
+    f.write_bytes(_plain_bytes(recs))
+    n_splits = -(-f.stat().st_size // (1 << 20))
+    df = read_warc(spark, str(f), split_bytes=1 << 20)
+    assert df.rdd.getNumPartitions() == n_splits
+    assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
+    rows = df.select(F.spark_partition_id().alias("part"), "offset").collect()
+    assert len(rows) == len(recs)
+    assert {r.part for r in rows} == set(range(n_splits))
+    assert all(r.part == r.offset >> 20 for r in rows)
+
+
 def test_warc_bridge_plan_is_narrow(spark, tmp_path):
-    """warc_to_documents must add ZERO exchanges beyond the split-frame
-    repartition: the whole crawl→documents conversion runs beside the
-    record scan."""
+    """warc_to_documents must add ZERO exchanges: the split table is
+    built without a shuffle, and the whole crawl→documents conversion
+    runs beside the record scan."""
     from mediawiki_to_notion_spark.sources.warc import warc_to_documents
 
     recs = _corpus(3)
     (tmp_path / "c.warc").write_bytes(_plain_bytes(recs))
     docs = warc_to_documents(read_warc(spark, str(tmp_path)))
     plan = docs._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") <= 1  # only the tiny split-frame spread
+    assert plan.count("Exchange") == 0
     assert "BatchEvalPython" not in plan  # conversion is all codegen
 
 

@@ -7,12 +7,17 @@ the box cannot be rewound.  This tool rewinds the CODE instead: it
 checks out a frozen earlier-round ref into a git worktree
 (`.bench_ab/pin`) and interleaves its captures with HEAD's in the same
 idle window — capture k runs HEAD then PIN back-to-back, so both sides
-see the same box state to within minutes.  Per-query HEAD/PIN min-of-N
-ratios then separate code effects from box effects: a query whose
-function source is unchanged between the refs (checked automatically
-via AST extraction from both trees, recorded per query) must ratio ≈ 1
-on an idle box; a ratio far from 1 on unchanged code is *measured* box
-drift, not inference.
+see the same box state to within minutes.  Inside each capture every
+query is timed ``REPEATS`` times, so each side pools
+``captures x REPEATS`` timings per query; the report is their median
+(with quartiles), which resolves a 10 % difference where one timing
+per capture could not.  A query whose function source is unchanged
+between the refs (checked automatically via AST extraction from both
+trees, recorded per query) must ratio ≈ 1 on an idle box; a ratio far
+from 1 on unchanged code is *measured* box drift, not inference.  The
+first two unchanged queries in the name list are the controls: every
+query's HEAD/PIN ratio is also reported divided by the geometric mean
+of the controls' ratios.
 
 Each side runs in its OWN subprocess (separate Spark session, separate
 import tree) with the side's repo root on sys.path — the two code
@@ -32,7 +37,9 @@ from __future__ import annotations
 
 import ast
 import json
+import math
 import os
+import statistics
 import subprocess
 import sys
 
@@ -45,6 +52,8 @@ PIN_REF = os.environ.get("BENCH_AB_REF", "4c041cd")
 N_CAPTURES = int(os.environ.get("BENCH_AB_CAPTURES", "3"))
 SF_DIR = os.environ.get("BENCH_AB_SF_DIR", "/root/testdata/sf0.1")
 WARM_DIR = "/root/testdata/sf0.001"
+# timings of each query per capture; 3 captures x 5 = 15 per side
+REPEATS = 5
 
 # r9 drift-watch cluster (VERDICT r9 "What's wrong" #1) + anchors from
 # families whose modules are quiet across rounds.  Names missing from
@@ -78,7 +87,7 @@ DEFAULT_NAMES = [
 
 _RUNNER = r'''
 import json, os, sys, time
-root, sf_dir, warm_dir, names_json = sys.argv[1:5]
+root, sf_dir, warm_dir, names_json, repeats = sys.argv[1:6]
 sys.path.insert(0, root)
 os.chdir(root)
 os.environ.setdefault("SPARK_GRAFT_SF_DIR", sf_dir)
@@ -92,10 +101,12 @@ for n in names:  # warmup: footers, codegen, Arrow workers
     spark.catalog.clearCache()
 timings = {}
 for n in names:
-    t0 = time.time()
-    QUERIES[n](spark, sf_dir).write.mode("overwrite").format("noop").save()
-    timings[n] = round(time.time() - t0, 3)
-    spark.catalog.clearCache()
+    timings[n] = []
+    for _ in range(int(repeats)):
+        t0 = time.time()
+        QUERIES[n](spark, sf_dir).write.mode("overwrite").format("noop").save()
+        timings[n].append(round(time.time() - t0, 3))
+        spark.catalog.clearCache()
 print("BENCH_AB_RESULT " + json.dumps(timings), flush=True)
 spark.stop()
 '''
@@ -171,7 +182,7 @@ def _run_side(side_root: str, names: list[str]) -> dict | None:
     env["PYTHONPATH"] = side_root
     p = subprocess.run(
         [sys.executable, runner, side_root, SF_DIR, WARM_DIR,
-         json.dumps(names)],
+         json.dumps(names), str(REPEATS)],
         capture_output=True, text=True, env=env, timeout=3600)
     for line in p.stdout.splitlines():
         if line.startswith("BENCH_AB_RESULT "):
@@ -179,6 +190,49 @@ def _run_side(side_root: str, names: list[str]) -> dict | None:
     print(p.stdout[-2000:], file=sys.stderr)
     print(p.stderr[-4000:], file=sys.stderr)
     return None
+
+
+def summarize(captures: list[dict], names: list[str],
+              flags: dict) -> dict:
+    """Per query: each side's pooled (q1, median, q3) seconds, the
+    HEAD/PIN ratio of the medians, and that ratio divided by the
+    geometric mean of the controls' ratios (the first two queries of
+    ``names`` whose source is unchanged and that ran on both sides)."""
+    pooled: dict[str, dict[str, list[float]]] = {"head": {}, "pin": {}}
+    for c in captures:
+        for n, ts in c["timings"].items():
+            pooled[c["side"]].setdefault(n, []).extend(ts)
+    quart = {side: {n: statistics.quantiles(ts, n=4, method="inclusive")
+                    for n, ts in by_name.items()}
+             for side, by_name in pooled.items()}
+    ratios = {n: quart["head"][n][1] / quart["pin"][n][1]
+              for n in names if n in quart["head"] and n in quart["pin"]}
+    controls = [n for n in names if flags.get(n) and n in ratios][:2]
+    control = (math.exp(statistics.fmean(math.log(ratios[n])
+                                         for n in controls))
+               if controls else None)
+    queries = {}
+    for n in names:
+        r = ratios.get(n)
+        queries[n] = {
+            "head_q1_median_q3_s": [round(q, 3) for q in
+                                    quart["head"].get(n, [])] or None,
+            "pin_q1_median_q3_s": [round(q, 3) for q in
+                                   quart["pin"].get(n, [])] or None,
+            "ratio_head_over_pin": round(r, 3) if r else None,
+            "ratio_over_controls": (round(r / control, 3)
+                                    if r and control else None),
+            "fn_source_unchanged_vs_pin": flags.get(n),
+        }
+    return {
+        "controls": controls,
+        "control_ratio_head_over_pin": round(control, 3) if control else None,
+        "queries": queries,
+        "total_head_median_s": round(
+            sum(q[1] for q in quart["head"].values()), 2),
+        "total_pin_median_s": round(
+            sum(q[1] for q in quart["pin"].values()), 2),
+    }
 
 
 def main() -> None:
@@ -203,35 +257,18 @@ def main() -> None:
             captures.append({"capture": k, "side": side,
                              "loadavg_1m_at_start": la, "timings": t})
             print(f"capture {k} {side}: total "
-                  f"{sum(t.values()):.1f}s over {len(t)} queries "
-                  f"(load {la})", file=sys.stderr, flush=True)
+                  f"{sum(map(sum, t.values())):.1f}s over {len(t)} "
+                  f"queries (load {la})", file=sys.stderr, flush=True)
 
-    mins: dict[str, dict[str, float]] = {"head": {}, "pin": {}}
-    for c in captures:
-        side = c["side"]
-        for n, v in c["timings"].items():
-            cur = mins[side].get(n)
-            mins[side][n] = v if cur is None else min(cur, v)
-    queries = {}
-    for n in names:
-        h, p = mins["head"].get(n), mins["pin"].get(n)
-        queries[n] = {
-            "head_min_s": h,
-            "pin_min_s": p,
-            "ratio_head_over_pin": (round(h / p, 3)
-                                    if h is not None and p else None),
-            "fn_source_unchanged_vs_pin": flags.get(n),
-        }
     out = {
         "metric": "bench_ab_pinned_snapshot",
         "pin_ref": _git("rev-parse", PIN_REF),
         "head_ref": _git("rev-parse", "HEAD"),
         "sf_dir": SF_DIR,
         "n_captures_per_side": N_CAPTURES,
+        "repeats_per_capture": REPEATS,
         **gate,
-        "queries": queries,
-        "total_head_min_s": round(sum(v for v in mins["head"].values()), 2),
-        "total_pin_min_s": round(sum(v for v in mins["pin"].values()), 2),
+        **summarize(captures, names, flags),
         "captures": captures,
     }
     with open(os.path.join(ROOT, "BENCH_AB.json"), "w") as f:
