@@ -258,14 +258,17 @@ def cmd_tokenizer_train(args: argparse.Namespace) -> int:
     (BPE / WordPiece) or the scored piece vocabulary (unigram LM) —
     plus the corpus fertility summary (subword pieces per whitespace
     word), as JSON to --out and a human table to stdout.  All three
-    trainers are the registered, oracle-gated operators; this command
-    is just their user-facing surface."""
+    trainers and encoders are the registered, oracle-gated operators'
+    own; this command is just their user-facing surface."""
     import json as _json
+
+    from mediawiki_to_notion_spark.operators import tokenizer_local as TL
 
     spark = get_spark("tokenizer-train")
     fam = args.family
     if fam == "bpe":
         from mediawiki_to_notion_spark.operators.text_analysis import (
+            _bpe_pieces,
             _bpe_train,
         )
 
@@ -277,18 +280,16 @@ def cmd_tokenizer_train(args: argparse.Namespace) -> int:
                 for r, a, b, n in merges
             ],
         }
-        fert = vocab.select(
-            F.sum(F.col("freq") * F.size("l")).alias("pieces"),
-            F.sum("freq").alias("words"),
-        ).collect()[0]  # bounded: one summary row
+        pieces = _bpe_pieces(vocab)
         for r, a, b, n in merges:
             print(f"round {r:2d}  {a!r} + {b!r}  (count {n})")
     elif fam == "wordpiece":
         from mediawiki_to_notion_spark.operators.wordpiece import (
+            _wordpiece_pieces,
             _wordpiece_train,
         )
 
-        merges, vocab, _wf = _wordpiece_train(spark, args.data)
+        merges, vocab, wf = _wordpiece_train(spark, args.data)
         artifact = {
             "family": "wordpiece",
             "merges": [
@@ -297,39 +298,34 @@ def cmd_tokenizer_train(args: argparse.Namespace) -> int:
                 for r, a, b, m, n, s in merges
             ],
         }
-        fert = vocab.select(
-            F.sum(F.col("freq") * F.size("l")).alias("pieces"),
-            F.sum("freq").alias("words"),
-        ).collect()[0]
+        pieces = _wordpiece_pieces(spark, merges, vocab, wf)
         for r, a, b, m, n, s in merges:
             print(f"round {r:2d}  {a!r} + {b!r} -> {m!r}  (count {n})")
     else:  # unigram
         from mediawiki_to_notion_spark.operators.unigram_lm import (
             _final_costs,
+            _unigram_pieces,
             _unigram_train,
-            _viterbi_segment,
         )
 
-        vocab_counts, words, _wf = _unigram_train(spark, args.data)
-        costs = _final_costs(spark, vocab_counts)
+        vocab_counts, words, wf = _unigram_train(spark, args.data)
         artifact = {
             "family": "unigram",
             "pieces": [
                 {"piece": r.piece, "n_uses": int(r.n_uses),
                  "cost_micro_nats": int(r.cost_micro_nats)}
-                for r in costs.orderBy(
+                for r in _final_costs(spark, vocab_counts).orderBy(
                     F.desc("n_uses"), F.asc("piece")).collect()
             ],  # bounded: the vocab IS the artifact
         }
-        seg = _viterbi_segment(
-            words, costs.selectExpr("piece", "cost_micro_nats AS cost"))
-        fert = seg.select(
-            F.sum(F.col("freq") * F.size("pieces")).alias("pieces"),
-            F.sum("freq").alias("words"),
-        ).collect()[0]
+        pieces = _unigram_pieces(spark, vocab_counts, words, wf)
         for row in artifact["pieces"][:20]:
             print(f"{row['piece']!r:12s} uses={row['n_uses']:<8d} "
                   f"cost={row['cost_micro_nats']}")
+    fert = TL._fertility(spark, args.data, pieces).select(
+        F.sum("n_pieces").alias("pieces"),
+        F.sum("n_words").alias("words"),
+    ).collect()[0]  # bounded: one summary row
     fertility = fert.pieces / fert.words if fert.words else 0.0
     artifact["fertility"] = round(fertility, 6)
     print(f"corpus fertility: {fertility:.4f} pieces/word "

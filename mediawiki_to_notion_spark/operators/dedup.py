@@ -1512,7 +1512,7 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (measured ~0.6 s of the query at sf0.1 when the labels were
         # an RDD scan without statistics; at scale it is a corpus-wide
         # shuffle keyed by doc_id).  The labels table is cap-bounded
-        # (≤ driver_cap() rows) by construction on this path.
+        # (≤ iter_local._DRIVER_CAP rows) by construction on this path.
         labels = F.broadcast(local_frame(
             spark, sorted(local.items()), "doc_id long, label long"
         ))

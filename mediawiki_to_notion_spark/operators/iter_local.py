@@ -1,7 +1,8 @@
 """Driver-side EXACT replays of the iterative graph / clustering loops
-(VERDICT r9 brief #1) — the same scale-cutover discipline as
-``tokenizer_local.py``, applied to the remaining round-based headline
-operators:
+(VERDICT r9 brief #1), and the one cutover probe every driver replay
+shares (``collect_capped`` against ``_DRIVER_CAP``; the tokenizers of
+``tokenizer_local.py`` use it too).  The path is chosen by the size of
+the loop input alone; no setting moves the cap.  The families:
 
 * **Connected components** (``dedup_connected_components``,
   ``_min_label_components``): the loop state is the duplicate-subgraph
@@ -44,34 +45,27 @@ Unicode corpus for PageRank) and asserts exact equality.
 from __future__ import annotations
 
 import math
-import os
 from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import DataFrame
 
-# One cap for all three families (edges for CC, nodes+edges for
-# PageRank, vectors for k-means).  65536 rows of loop input is ~MBs of
-# driver state and sub-second replay work for each family; 0 disables
-# the driver path entirely (used by the parity tests to force the
-# distributed branch).  Read at call time so tests can monkeypatch.
-_DEFAULT_CAP = 1 << 16
+# The one cap of every driver replay: CC edges, PageRank nodes and
+# edges, k-means vectors, and the tokenizers' distinct-word table.
+# 65536 rows of loop input is ~MBs of driver state and sub-second
+# replay work for each family.  Read at call time, so the parity tests
+# force the distributed branch by patching it to 0.
+_DRIVER_CAP = 1 << 16
 
 
-def driver_cap() -> int:
-    return int(os.environ.get("SPARK_GRAFT_ITER_DRIVER_CAP",
-                              str(_DEFAULT_CAP)))
-
-
-def collect_capped(df: DataFrame, cap: int | None = None) -> list | None:
-    """The cutover probe: all rows if there are at most ``cap`` of
-    them, else None (caller falls back to the distributed loop).
+def collect_capped(df: DataFrame) -> list | None:
+    """The cutover probe: all rows if there are at most ``_DRIVER_CAP``
+    of them, else None (caller falls back to the distributed loop).
     ``limit(cap+1)`` returns EVERY row when the frame is under the
     cap, so the probe is exact and costs one bounded action."""
-    cap = driver_cap() if cap is None else cap
-    if cap <= 0:
+    if _DRIVER_CAP <= 0:
         return None
-    rows = df.limit(cap + 1).collect()
-    if len(rows) > cap:
+    rows = df.limit(_DRIVER_CAP + 1).collect()
+    if len(rows) > _DRIVER_CAP:
         return None
     return rows
 

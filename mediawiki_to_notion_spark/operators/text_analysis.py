@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mediawiki_to_notion_spark.functions import text as tx
+from mediawiki_to_notion_spark.operators import tokenizer_local as TL
 from mediawiki_to_notion_spark.operators.registry import register
 from mediawiki_to_notion_spark.plans.pipeline import local_frame
 from mediawiki_to_notion_spark.sources.tables import load_table
@@ -1054,65 +1055,20 @@ BPE_TRAIN_ROUNDS = 8
 
 def _bpe_train_oracle(rounds: int = BPE_TRAIN_ROUNDS,
                       final: str = "merges") -> str:
-    """Unrolled per-round DuckDB twin of the Sennrich training loop.
-    Words are carried as '<'-delimited symbol strings ('<h><e><y>');
-    the merge step is a plain string replace, whose left-to-right
-    non-overlapping scan matches the Spark fold's greedy semantics.
-    The documents corpus is pure [A-Za-z0-9 ] (asserted in the test
-    suite), so the delimiters can never collide with symbol text.
-    ``final='merges'`` selects the rule table; ``final='fertility'``
-    applies the final vocabulary back to the corpus and selects
-    per-document BPE token counts."""
-    ctes = ["""w0 AS (
-      SELECT word,
-             '<' || array_to_string(regexp_extract_all(word, '.'), '><')
-             || '>' AS s,
-             count(*) AS freq
-      FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-      WHERE word != '' GROUP BY word
-    )"""]
-    selects = []
-    for k in range(1, rounds + 1):
-        ctes.append(f"""l{k} AS (
-      SELECT string_split(substr(s, 2, len(s) - 2), '><') AS l, freq
-      FROM w{k - 1}
-    ),
-    m{k} AS (
-      SELECT l[u.i] AS a, l[u.i + 1] AS b,
-             CAST(sum(freq) AS BIGINT) AS n_occurrences
-      FROM l{k}, LATERAL (SELECT unnest(range(1, len(l))) AS i) u
-      GROUP BY a, b
-      ORDER BY n_occurrences DESC, a ASC, b ASC LIMIT 1
-    ),
-    w{k} AS (
-      SELECT word,
-             replace(s, '<' || m.a || '><' || m.b || '>',
-                     '<' || m.a || m.b || '>') AS s, freq
-      FROM w{k - 1}, m{k} m
-    )""")
-        selects.append(
-            f"SELECT {k} AS round, a, b, n_occurrences FROM m{k}"
-        )
+    """Unrolled per-round DuckDB twin of the Sennrich training loop
+    (``tokenizer_local._merge_ctes`` with no continuation marker,
+    ranked by pair count).  ``final='merges'`` selects the rule table;
+    ``final='fertility'`` applies the final vocabulary back to the
+    corpus and selects per-document BPE token counts."""
     if final == "fertility":
-        return ("WITH " + ",\n    ".join(ctes) + f""",
-    vocab AS (
-      SELECT word,
-             len(string_split(substr(s, 2, len(s) - 2), '><')) AS n_sym
-      FROM w{rounds}
-    ),
-    dw AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS word
-      FROM documents
-    )
-    SELECT doc_id,
-           CAST(count(*) AS BIGINT) AS n_words,
-           CAST(sum(n_sym) AS BIGINT) AS n_bpe_tokens,
-           round(CAST(sum(n_sym) AS BIGINT)::DOUBLE / count(*), 6)
-             AS fertility
-    FROM dw JOIN vocab USING (word)
-    GROUP BY doc_id""")
-    return ("WITH " + ",\n    ".join(ctes) + "\n    "
-            + "\n    UNION ALL ".join(selects) + "\n    ORDER BY round")
+        return TL._fertility_sql(
+            TL._merge_ctes("", rounds),
+            "SELECT word, len(string_split(substr(s, 2, len(s) - 2), '><'))"
+            f" AS n_pieces FROM w{rounds}",
+            "n_bpe_tokens",
+        )
+    return TL._merge_rules_sql("", rounds, None,
+                               "a, b, n_pair AS n_occurrences")
 
 
 def _bpe_train(spark: SparkSession, sf_dir: str):
@@ -1120,94 +1076,17 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
     merge_rules is [(round, a, b, count)] and vocab is the final
     (word, l, freq) frame with each word rewritten into its
     post-merge symbol sequence.  Shared by ``bpe_train_merges`` (rule
-    table) and ``bpe_tokenize_fertility`` (apply/encode side).
+    table), ``bpe_tokenize_fertility`` (apply/encode side) and
+    ``cli tokenizer-train``.  The loop is the shared merge trainer
+    (``tokenizer_local._merge_train``: driver replay under the cap, the
+    distributed round loop past it) ranked by pair count."""
+    merges, vocab, _wf = TL._merge_train(spark, sf_dir, "", BPE_TRAIN_ROUNDS)
+    return [(r, a, b, n) for r, a, b, _m, n, _s in merges], vocab
 
-    Scale cutover (r9): the loop state is the distinct-word table —
-    when it fits DRIVER_VOCAB_CAP the rounds replay driver-side in
-    exact integer arithmetic (bit-identical by construction and by
-    tests/test_tokenizer_driver_cutover.py), one bounded collect
-    instead of ``BPE_TRAIN_ROUNDS``+ actions; past the cap the
-    distributed loop below runs unchanged (the 100 TB path)."""
-    from mediawiki_to_notion_spark.operators import tokenizer_local as TL
-    from mediawiki_to_notion_spark.plans.pipeline import ensure_parallelism
 
-    # r10: spread the single-file scan before the corpus explode/agg
-    # (same hazard as unigram_lm._word_freq; no-op at real scale)
-    d = ensure_parallelism(load_table(spark, "documents", sf_dir))
-    words = (
-        d.select(F.explode(F.split("text", " ")).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
-    # persist across the probe: collect_word_freqs runs the corpus
-    # aggregation; without the cache the over-cap fallback would pay
-    # that dominant scan a second time building `cur`
-    words = words.persist()
-    wf = TL.collect_word_freqs(words)
-    if wf is not None:
-        words.unpersist()
-        merges, seqs = TL.bpe_train_local(wf, BPE_TRAIN_ROUNDS)
-        # broadcast-hinted (guide §3.1): the cap-bounded word table
-        # keeps the fertility encode join downstream a broadcast at any
-        # cap-bounded size, never a sort-merge (full corpus-word
-        # Exchange); the hint survives the consumer's projection.  The
-        # over-cap checkpointed vocab below stays unhinted.
-        vocab = F.broadcast(local_frame(
-            spark, [(w, seqs[w], f) for w, f in wf],
-            "word string, l array<string>, freq long",
-        ))
-        return merges, vocab
-    cur = words.select("word", F.split("word", "").alias("l"), "freq") \
-        .localCheckpoint()
-    words.unpersist()
-    merges: list[tuple[int, str, str, int]] = []
-    for rnd in range(1, BPE_TRAIN_ROUNDS + 1):
-        pairs = (
-            cur.filter(F.size("l") >= 2)
-            .select(
-                F.explode(
-                    F.transform(
-                        F.sequence(F.lit(1), F.size("l") - 1),
-                        lambda i: F.struct(
-                            F.element_at("l", i).alias("a"),
-                            F.element_at("l", i + 1).alias("b"),
-                        ),
-                    )
-                ).alias("p"),
-                "freq",
-            )
-        )
-        top = (
-            pairs.groupBy("p.a", "p.b")
-            .agg(F.sum("freq").alias("n"))
-            .orderBy(F.desc("n"), F.asc("a"), F.asc("b"))
-            .limit(1)
-            .collect()  # bounded: ONE row per round
-        )
-        if not top:
-            break
-        a, b, n = top[0].a, top[0].b, int(top[0].n)
-        merges.append((rnd, a, b, n))
-        merged = a + b
-        cur = cur.select(
-            "word",
-            F.aggregate(
-                "l",
-                F.array().cast("array<string>"),
-                lambda acc, x: F.when(
-                    (F.size(acc) > 0)
-                    & (F.element_at(acc, F.lit(-1)) == F.lit(a))
-                    & (x == F.lit(b)),
-                    F.concat(
-                        F.slice(acc, F.lit(1), F.size(acc) - 1),
-                        F.array(F.lit(merged)),
-                    ),
-                ).otherwise(F.concat(acc, F.array(x))),
-            ).alias("l"),
-            "freq",
-        ).localCheckpoint()
-    return merges, cur
+def _bpe_pieces(vocab: DataFrame) -> DataFrame:
+    """(word, n_pieces): the symbol count of each trained word."""
+    return vocab.select("word", F.size("l").alias("n_pieces"))
 
 
 @register("bpe_train_merges", oracle=_bpe_train_oracle())
@@ -1250,25 +1129,7 @@ def bpe_tokenize_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     followed by a map-side-combinable per-doc sum.  No per-document
     re-derivation of the merge chain."""
     _merges, vocab = _bpe_train(spark, sf_dir)
-    from mediawiki_to_notion_spark.plans.pipeline import ensure_parallelism
-
-    wl = vocab.select("word", F.size("l").alias("n_sym"))
-    # r10: spread the encode pass (single-split hazard)
-    d = ensure_parallelism(load_table(spark, "documents", sf_dir))
-    words = d.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("word")
-    ).filter(F.col("word") != "")
-    return (
-        words.join(wl, "word")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_words"),
-            F.sum("n_sym").alias("n_bpe_tokens"),
-            F.round(
-                F.sum("n_sym").cast("double") / F.count(F.lit(1)), 6
-            ).alias("fertility"),
-        )
-    )
+    return TL._fertility(spark, sf_dir, _bpe_pieces(vocab), "n_bpe_tokens")
 
 
 KN_DISCOUNT = 0.75   # the standard absolute-discount value

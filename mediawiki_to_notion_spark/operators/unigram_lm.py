@@ -29,15 +29,15 @@ Exact cross-engine parity strategy
 100 TB shape
 ------------
 The corpus collapses to the distinct-word frequency table FIRST (one
-groupBy — vocabulary-, not corpus-, sized; the BPE trainer's
-discipline, text_analysis.py:1115).  Every EM round then touches only
-that table: candidate edges come from a broadcast join against the
-piece-cost table (bounded by UNI_SEED_K + alphabet), the Viterbi DP is
-a JVM-side ``aggregate`` fold over each word's sorted edge list (no
-Python in the loop), and the driver collects only the per-round usage
-table (bounded: <= |vocab| <= UNI_SEED_K + alphabet rows — the vocab
-IS the driver-sized artifact being trained, exactly like the BPE merge
-table).  Nothing in the loop scales with corpus size.
+groupBy — vocabulary-, not corpus-, sized; the word table all three
+trainers share, tokenizer_local._word_table).  Every EM round then
+touches only that table: candidate edges come from a broadcast join
+against the piece-cost table (bounded by UNI_SEED_K + alphabet), the
+Viterbi DP is a JVM-side ``aggregate`` fold over each word's sorted
+edge list (no Python in the loop), and the driver collects only the
+per-round usage table (bounded: <= |vocab| <= UNI_SEED_K + alphabet
+rows — the vocab IS the driver-sized artifact being trained, exactly
+like the BPE merge table).  Nothing in the loop scales with corpus size.
 
 The DuckDB oracle unrolls the DP levels to UNI_MAX_WORD_LEN (the
 synthetic corpus' words are <= 8 chars — asserted in tests); the Spark
@@ -46,7 +46,7 @@ fold is fully general in word length.
 Reference scope: the reference repo (process-mw-dump.py) has no
 tokenizer surface; this is part of the training-data-pipeline
 extension mandated by the build brief alongside BPE
-(text_analysis.py:1179).
+(text_analysis.py).
 """
 
 from __future__ import annotations
@@ -56,9 +56,9 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mediawiki_to_notion_spark.operators import tokenizer_local as TL
 from mediawiki_to_notion_spark.operators.registry import register
 from mediawiki_to_notion_spark.plans.pipeline import local_frame
-from mediawiki_to_notion_spark.sources.tables import load_table
 
 UNI_MAX_PIECE = 4      # max piece length admitted to the seed vocabulary
 UNI_SEED_K = 48        # top-K multi-char seed pieces (by count desc, piece asc)
@@ -69,21 +69,6 @@ UNI_MAX_WORD_LEN = 8   # oracle DP unroll depth (asserted over the corpus)
 def _micro_nat_cost(total: float, cnt: int) -> int:
     """floor(1e6*ln(T/c)+0.5) — DuckDB round() (half-away) semantics."""
     return int(math.floor(1e6 * math.log(total / cnt) + 0.5))
-
-
-def _word_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mediawiki_to_notion_spark.plans.pipeline import ensure_parallelism
-
-    # r10 (guide §2.2/§2.6): a single-file parquet corpus arrives as ONE
-    # scan split, serializing the explode + map-side partial aggregation
-    # through one task; spread it first (no-op at real scale)
-    d = ensure_parallelism(load_table(spark, "documents", sf_dir))
-    return (
-        d.select(F.explode(F.split("text", " ")).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
 
 
 def _position_pieces(words: DataFrame) -> DataFrame:
@@ -174,24 +159,15 @@ def _unigram_train(spark: SparkSession, sf_dir: str):
     distributed path) — returned so the fertility apply side reuses it
     instead of re-collecting the identical table (the ADVICE-r9
     wordpiece discipline; r10 applies it here)."""
-    from mediawiki_to_notion_spark.operators import tokenizer_local as TL
-
-    words_raw = _word_freq(spark, sf_dir)
-    # Scale cutover (r9, see tokenizer_local.py): when the distinct-word
-    # table fits the cap, the seed + EM rounds replay driver-side (same
-    # libm ln via _micro_nat_cost, same integer usage counts, same
-    # tie-breaks); the words frame is rebuilt from the collected rows so
-    # the apply side needs no extra corpus pass.
-    words_raw = words_raw.persist()  # probe + fallback share one agg
-    wf = TL.collect_word_freqs(words_raw)
+    wf, words = TL._word_table(spark, sf_dir)
     if wf is not None:
-        words_raw.unpersist()
+        # driver replay of the seed + EM rounds (same libm ln via
+        # _micro_nat_cost, same integer usage counts, same tie-breaks);
+        # the words frame is rebuilt from the collected rows for callers
+        # that segment it with _viterbi_segment
         vocab = TL.unigram_train_local(
             wf, UNI_ROUNDS, UNI_SEED_K, UNI_MAX_PIECE, _micro_nat_cost)
-        words = local_frame(spark, wf, "word string, freq long")
-        return vocab, words, wf
-    words = words_raw.localCheckpoint()
-    words_raw.unpersist()
+        return vocab, local_frame(spark, wf, "word string, freq long"), wf
     cand = (
         _position_pieces(words)
         .groupBy("piece")
@@ -235,6 +211,26 @@ def _final_costs(spark: SparkSession, vocab: dict[str, int]) -> DataFrame:
         [(p, c, _micro_nat_cost(total, c)) for p, c in sorted(vocab.items())],
         "piece string, n_uses long, cost_micro_nats long",
     )
+
+
+def _unigram_pieces(spark: SparkSession, vocab: dict[str, int],
+                    words: DataFrame, wf):
+    """Viterbi segmentation of every distinct word under the FINAL
+    piece costs: a {word: n_pieces} dict from a driver replay when the
+    trainer's cutover fired (same float(total)/libm-ln cost table as
+    _final_costs, same (cost, pieces) tie-break as _viterbi_segment),
+    else the distributed (word, n_pieces) frame."""
+    if wf is not None:
+        total = float(sum(vocab.values()))
+        costs = {p: _micro_nat_cost(total, c) for p, c in vocab.items()}
+        return {
+            w: len(TL.unigram_viterbi_local(w, costs, UNI_MAX_PIECE)[1])
+            for w, _f in wf
+        }
+    costs = _final_costs(spark, vocab).select(
+        "piece", F.col("cost_micro_nats").alias("cost"))
+    return _viterbi_segment(words, costs).select(
+        "word", F.size("pieces").alias("n_pieces"))
 
 
 def _dp_cte(r: int, cost_cte: str) -> str:
@@ -309,12 +305,7 @@ def _unigram_oracle(final: str = "vocab") -> str:
     selects the trained piece table; ``final='fertility'`` runs one
     extra segment-only round with the final costs and reports
     per-document piece counts."""
-    ctes = [f"""w0 AS MATERIALIZED (
-      SELECT word, CAST(count(*) AS BIGINT) AS freq
-      FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-      WHERE word != '' GROUP BY word
-    ),
-    sub AS MATERIALIZED (
+    ctes = [TL._words_sql(), f"""sub AS MATERIALIZED (
       SELECT substr(w.word, u.s, v.ln) AS piece,
              CAST(sum(w.freq) AS BIGINT) AS cnt
       FROM w0 w,
@@ -343,19 +334,8 @@ def _unigram_oracle(final: str = "vocab") -> str:
     if final == "fertility":
         rf = UNI_ROUNDS + 1
         ctes.append(_dp_cte(rf, f"c{UNI_ROUNDS}"))
-        return ("WITH " + ",\n    ".join(ctes) + f""",
-    wl AS MATERIALIZED (SELECT word, len(pieces) AS n_pieces FROM seg{rf}),
-    dw AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS word
-      FROM documents
-    )
-    SELECT doc_id,
-           CAST(count(*) AS BIGINT) AS n_words,
-           CAST(sum(n_pieces) AS BIGINT) AS n_pieces,
-           round(CAST(sum(n_pieces) AS BIGINT)::DOUBLE / count(*), 6)
-             AS fertility
-    FROM dw JOIN wl USING (word)
-    GROUP BY doc_id""")
+        return TL._fertility_sql(
+            ctes, f"SELECT word, len(pieces) AS n_pieces FROM seg{rf}")
     return ("WITH " + ",\n    ".join(ctes) + f"""
     SELECT piece, cnt AS n_uses, cost AS cost_micro_nats
     FROM c{UNI_ROUNDS}
@@ -389,61 +369,13 @@ def unigram_lm_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     segment the corpus under the FINAL piece costs and report
     per-document piece counts and fertility (pieces per whitespace
     word) — the unigram twin of ``bpe_tokenize_fertility``
-    (text_analysis.py:1204).
+    (text_analysis.py).
 
     100 TB shape: encoding is vocabulary-sized — the final costs
     segment the distinct-word table once, and the corpus pass is ONE
     word-keyed equi-join of the exploded token stream against the
     (word -> n_pieces) dim followed by a map-side-combinable per-doc
     sum."""
-    from mediawiki_to_notion_spark.operators import tokenizer_local as TL
-
     vocab, words, wf = _unigram_train(spark, sf_dir)
-    if wf is None:
-        wf = TL.collect_word_freqs(words)
-    if wf is not None:
-        # driver replay of the final segmentation (r9 cutover): same
-        # float(total)/libm-ln cost table as _final_costs, same
-        # (cost, pieces) tie-break as _viterbi_segment
-        total = float(sum(vocab.values()))
-        costs_local = {
-            p: _micro_nat_cost(total, c) for p, c in vocab.items()
-        }
-        # broadcast (guide §3.1): the cap-bounded word table; the hint
-        # keeps the corpus encode join below from sort-merging with a
-        # full corpus Exchange at any cap-bounded size.
-        wl = F.broadcast(local_frame(
-            spark,
-            sorted(
-                (w, len(TL.unigram_viterbi_local(
-                    w, costs_local, UNI_MAX_PIECE)[1]))
-                for w, _f in wf
-            ),
-            "word string, n_pieces long",
-        ))
-    else:
-        costs = _final_costs(spark, vocab).select(
-            "piece", F.col("cost_micro_nats").alias("cost")
-        )
-        wl = _viterbi_segment(words, costs).select(
-            "word", F.size("pieces").alias("n_pieces")
-        )
-    from mediawiki_to_notion_spark.plans.pipeline import ensure_parallelism
-
-    # r10: the corpus encode pass has the same single-split hazard as
-    # _word_freq — spread before the explode
-    d = ensure_parallelism(load_table(spark, "documents", sf_dir))
-    dw = d.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("word")
-    ).filter(F.col("word") != "")
-    return (
-        dw.join(wl, "word")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_words"),
-            F.sum("n_pieces").alias("n_pieces"),
-            F.round(
-                F.sum("n_pieces").cast("double") / F.count(F.lit(1)), 6
-            ).alias("fertility"),
-        )
-    )
+    return TL._fertility(
+        spark, sf_dir, _unigram_pieces(spark, vocab, words, wf))

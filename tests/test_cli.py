@@ -307,3 +307,33 @@ def test_cli_tokenizer_train(spark, tmp_path, capsys, family):
         assert len(artifact["pieces"]) > 10
     else:
         assert len(artifact["merges"]) == 8
+
+    # the artifact is the registered queries' output: the same rules
+    # (or pieces), and the corpus fertility of the *_fertility query
+    from mediawiki_to_notion_spark.operators import QUERIES, load_all
+    from tests.conftest import SF_SMOKE
+
+    load_all()
+    train, fert, pieces_col = {
+        "bpe": ("bpe_train_merges", "bpe_tokenize_fertility",
+                "n_bpe_tokens"),
+        "wordpiece": ("wordpiece_train_merges",
+                      "wordpiece_tokenize_fertility", "n_pieces"),
+        "unigram": ("unigram_lm_train", "unigram_lm_fertility", "n_pieces"),
+    }[family]
+    rows = QUERIES[train](spark, SF_SMOKE).collect()
+    if family == "unigram":
+        got = [(p["piece"], p["n_uses"], p["cost_micro_nats"])
+               for p in artifact["pieces"]]
+        assert got == [tuple(r) for r in rows]
+    elif family == "bpe":
+        got = [(m["round"], *m["pair"], m["count"])
+               for m in artifact["merges"]]
+        assert got == sorted(tuple(r) for r in rows)
+    else:
+        got = [(m["round"], *m["pair"], m["merged"], m["count"],
+                m["score_scaled"]) for m in artifact["merges"]]
+        assert got == sorted(tuple(r) for r in rows)
+    docs = QUERIES[fert](spark, SF_SMOKE).collect()
+    assert artifact["fertility"] == round(
+        sum(r[pieces_col] for r in docs) / sum(r.n_words for r in docs), 6)

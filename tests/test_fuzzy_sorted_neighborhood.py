@@ -12,6 +12,7 @@ import pytest
 import pyarrow.parquet as pq
 
 from mediawiki_to_notion_spark.operators import QUERIES, load_all
+from mediawiki_to_notion_spark.operators import iter_local as IL
 from mediawiki_to_notion_spark.operators.dedup import (
     FUZZY_SN_WINDOW,
 )
@@ -101,7 +102,7 @@ def test_connectivity_certificate_on_deep_chain(spark, tmp_path,
     cap="0" forces the DISTRIBUTED pointer-jumping loop (r10 cutover);
     cap=None exercises the union-find driver replay."""
     if cap is not None:
-        monkeypatch.setenv("SPARK_GRAFT_ITER_DRIVER_CAP", cap)
+        monkeypatch.setattr(IL, "_DRIVER_CAP", int(cap))
     _write_docs(tmp_path, [f"aaaaaaaa doc {'x' * (i % 3)}"
                            for i in range(200)])
     row = QUERIES["dedup_fuzzy_connectivity_certificate"](

@@ -1,7 +1,7 @@
 """The r10 iterative-loop scale cutovers (connected components,
 PageRank, Lloyd k-means — operators/iter_local.py) must be pure
 PHYSICAL choices: the driver-side replay (loop input under
-SPARK_GRAFT_ITER_DRIVER_CAP) and the distributed round loops must
+``iter_local._DRIVER_CAP``) and the distributed round loops must
 produce bit-identical results on the same input.  Same discipline as
 tests/test_tokenizer_driver_cutover.py: run BOTH paths, assert exact
 equality — including the float-heavy k-means, whose replay reproduces
@@ -29,9 +29,8 @@ NAMES = [
 
 
 def _both_paths(spark, name, sf, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_ITER_DRIVER_CAP", raising=False)
     driver = sorted(map(tuple, QUERIES[name](spark, sf).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_ITER_DRIVER_CAP", "0")
+    monkeypatch.setattr(IL, "_DRIVER_CAP", 0)
     dist = sorted(map(tuple, QUERIES[name](spark, sf).collect()))
     return driver, dist
 
@@ -56,12 +55,12 @@ def test_cap_probe_is_exact(spark, monkeypatch):
     """limit(cap+1) returns EVERY row when under the cap, and None
     exactly when over it; cap 0 disables the driver path."""
     df = spark.range(10).selectExpr("id AS src", "id + 1 AS dst")
-    monkeypatch.setenv("SPARK_GRAFT_ITER_DRIVER_CAP", "10")
+    monkeypatch.setattr(IL, "_DRIVER_CAP", 10)
     rows = IL.collect_capped(df)
     assert rows is not None and len(rows) == 10
-    monkeypatch.setenv("SPARK_GRAFT_ITER_DRIVER_CAP", "9")
+    monkeypatch.setattr(IL, "_DRIVER_CAP", 9)
     assert IL.collect_capped(df) is None
-    monkeypatch.setenv("SPARK_GRAFT_ITER_DRIVER_CAP", "0")
+    monkeypatch.setattr(IL, "_DRIVER_CAP", 0)
     assert IL.collect_capped(df) is None
 
 
@@ -75,9 +74,8 @@ def test_min_label_components_deep_chain_both_paths(spark, monkeypatch):
 
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(500)], "doc_a long, doc_b long")
-    monkeypatch.delenv("SPARK_GRAFT_ITER_DRIVER_CAP", raising=False)
     driver = sorted(map(tuple, _min_label_components(pairs).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_ITER_DRIVER_CAP", "0")
+    monkeypatch.setattr(IL, "_DRIVER_CAP", 0)
     dist = sorted(map(tuple, _min_label_components(pairs).collect()))
     assert driver == dist == [(i, 0) for i in range(501)]
 

@@ -246,7 +246,9 @@ def test_pagerank_iteration_is_equi_join(spark, monkeypatch):
     with a partial phase — no nested loops anywhere in the loop.
     (Cap forced to 0 so the DISTRIBUTED loop's plan is inspected, not
     the r10 driver-replay LocalTableScan.)"""
-    monkeypatch.setenv("SPARK_GRAFT_ITER_DRIVER_CAP", "0")
+    from mediawiki_to_notion_spark.operators import iter_local as IL
+
+    monkeypatch.setattr(IL, "_DRIVER_CAP", 0)
     plan = plan_of(spark, "pagerank_word_graph")
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan

@@ -1,5 +1,5 @@
 """The r9 tokenizer scale cutover must be a pure PHYSICAL choice: the
-driver-side replay (word table under DRIVER_VOCAB_CAP) and the
+driver-side replay (word table under ``iter_local._DRIVER_CAP``) and the
 distributed round loop must produce bit-identical results on the same
 input, for all six tokenizer queries.  This is the pin that makes the
 cutover semantics-free — the 100 TB path and the bench path are the
@@ -10,7 +10,7 @@ from __future__ import annotations
 import pytest
 
 from mediawiki_to_notion_spark.operators import QUERIES, load_all
-from mediawiki_to_notion_spark.operators import tokenizer_local as TL
+from mediawiki_to_notion_spark.operators import iter_local as IL
 
 load_all()
 SF = "/root/testdata/sf0.001"
@@ -29,28 +29,23 @@ NAMES = [
 def test_driver_and_distributed_paths_agree(spark, name, monkeypatch):
     driver = sorted(map(tuple, QUERIES[name](spark, SF).collect()))
     assert driver, name  # non-empty on the smoke corpus
-    monkeypatch.setattr(TL, "DRIVER_VOCAB_CAP", 0)  # force distributed
+    monkeypatch.setattr(IL, "_DRIVER_CAP", 0)  # force distributed
     dist = sorted(map(tuple, QUERIES[name](spark, SF).collect()))
     assert driver == dist
 
 
-def test_cap_probe_is_exact(spark):
+def test_cap_probe_is_exact(spark, monkeypatch):
     """limit(cap+1) returns EVERY row when under the cap, and None
     exactly when over it."""
     df = spark.createDataFrame(
         [(f"w{i}", i + 1) for i in range(10)], "word string, freq long")
-    rows = TL.collect_word_freqs(df)
+    rows = IL.collect_capped(df)
     assert rows is not None and sorted(rows) == [
         (f"w{i}", i + 1) for i in range(10)]
-    import mediawiki_to_notion_spark.operators.tokenizer_local as tl
-    old = tl.DRIVER_VOCAB_CAP
-    try:
-        tl.DRIVER_VOCAB_CAP = 9
-        assert tl.collect_word_freqs(df) is None
-        tl.DRIVER_VOCAB_CAP = 10
-        assert len(tl.collect_word_freqs(df)) == 10
-    finally:
-        tl.DRIVER_VOCAB_CAP = old
+    monkeypatch.setattr(IL, "_DRIVER_CAP", 9)
+    assert IL.collect_capped(df) is None
+    monkeypatch.setattr(IL, "_DRIVER_CAP", 10)
+    assert len(IL.collect_capped(df)) == 10
 
 
 @pytest.mark.parametrize("name", NAMES)
@@ -72,6 +67,6 @@ def test_paths_agree_on_unicode_corpus(spark, name, monkeypatch, tmp_path):
         str(tmp_path / "documents.parquet"))
     driver = sorted(map(tuple, QUERIES[name](spark, str(tmp_path)).collect()))
     assert driver, name
-    monkeypatch.setattr(TL, "DRIVER_VOCAB_CAP", 0)
+    monkeypatch.setattr(IL, "_DRIVER_CAP", 0)
     dist = sorted(map(tuple, QUERIES[name](spark, str(tmp_path)).collect()))
     assert driver == dist

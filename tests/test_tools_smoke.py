@@ -91,6 +91,35 @@ def test_bench_stdout_lines_fit_the_tail_window():
     assert json.loads(headline)["per_query_line"] == pq["metric"]
 
 
+def test_bench_ab_gates_every_side_and_alternates_order(monkeypatch):
+    """tools/bench_ab.py waits for an idle box before EVERY side of
+    every capture (not once per run), and alternates which side goes
+    first: HEAD on even captures, PIN on odd ones."""
+    from tools import bench_ab
+
+    events = []
+
+    def gate():
+        events.append("gate")
+        return {"idle_gate_waited_s": 0.0, "idle_gate_load_threshold": 1.0,
+                "idle_gate_timed_out": False}
+
+    def run_side(root, names):
+        events.append(root)
+        return {n: [1.0] for n in names}
+
+    monkeypatch.setattr(bench_ab, "idle_gate", gate)
+    monkeypatch.setattr(bench_ab, "_run_side", run_side)
+    caps = bench_ab._run_captures(["q"], "PIN", n_captures=3)
+    assert [c["side"] for c in caps] == [
+        "head", "pin", "pin", "head", "head", "pin"]
+    assert [c["capture"] for c in caps] == [0, 0, 1, 1, 2, 2]
+    root = bench_ab.ROOT
+    assert events == ["gate", root, "gate", "PIN", "gate", "PIN",
+                      "gate", root, "gate", root, "gate", "PIN"]
+    assert all(c["idle_gate_timed_out"] is False for c in caps)
+
+
 def test_bench_ab_summary_medians_and_controls():
     """tools/bench_ab.py pools every timing of a side, reports the
     median, and divides each HEAD/PIN ratio by the geometric mean of

@@ -13,10 +13,10 @@ import tempfile
 
 import pytest
 
+from mediawiki_to_notion_spark.operators.tokenizer_local import _strip_cont
 from mediawiki_to_notion_spark.operators.wordpiece import (
     WP_SCALE,
     WP_TRAIN_ROUNDS,
-    _strip_cont,
 )
 
 

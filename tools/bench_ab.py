@@ -6,8 +6,11 @@ box drift (r2 VM variance, r6→r9 1.3-1.5x re-time forensics) because
 the box cannot be rewound.  This tool rewinds the CODE instead: it
 checks out a frozen earlier-round ref into a git worktree
 (`.bench_ab/pin`) and interleaves its captures with HEAD's in the same
-idle window — capture k runs HEAD then PIN back-to-back, so both sides
-see the same box state to within minutes.  Inside each capture every
+idle window — capture k runs both sides back-to-back, HEAD first on
+even k and PIN first on odd k, and every side starts only after the
+idle gate has seen the box settle (the previous side's Spark process
+leaves a 1-min load of ~4 behind it on 4 cores), so both sides start
+from the same box state.  Inside each capture every
 query is timed ``REPEATS`` times, so each side pools
 ``captures x REPEATS`` timings per query; the report is their median
 (with quartiles), which resolves a 10 % difference where one timing
@@ -192,6 +195,30 @@ def _run_side(side_root: str, names: list[str]) -> dict | None:
     return None
 
 
+def _run_captures(names: list[str], pin_root: str,
+                  n_captures: int = N_CAPTURES) -> list[dict]:
+    """``n_captures`` rounds of both sides.  The side that goes first
+    alternates (HEAD on even rounds, PIN on odd), so neither side always
+    inherits the other's warm page cache or decaying load, and each
+    side waits for its own idle gate."""
+    sides = [("head", ROOT), ("pin", pin_root)]
+    captures: list[dict] = []
+    for k in range(n_captures):
+        for side, root in sides if k % 2 == 0 else sides[::-1]:
+            gate = idle_gate()
+            la = loadavg()[0]
+            t = _run_side(root, names)
+            if t is None:
+                raise SystemExit(f"capture {k} side {side} failed")
+            captures.append({"capture": k, "side": side,
+                             "loadavg_1m_at_start": la, **gate,
+                             "timings": t})
+            print(f"capture {k} {side}: total "
+                  f"{sum(map(sum, t.values())):.1f}s over {len(t)} "
+                  f"queries (load {la})", file=sys.stderr, flush=True)
+    return captures
+
+
 def summarize(captures: list[dict], names: list[str],
               flags: dict) -> dict:
     """Per query: each side's pooled (q1, median, q3) seconds, the
@@ -239,26 +266,13 @@ def main() -> None:
     names = [n for n in os.environ.get(
         "BENCH_AB_NAMES", ",".join(DEFAULT_NAMES)).split(",") if n]
 
-    gate = idle_gate()
-
     pin_root = _ensure_worktree(PIN_REF)
     os.makedirs(os.path.join(ROOT, ".bench_ab"), exist_ok=True)
     with open(os.path.join(ROOT, ".bench_ab", "runner.py"), "w") as f:
         f.write(_RUNNER)
     flags = _source_flags(names, pin_root)
 
-    captures: list[dict] = []
-    for k in range(N_CAPTURES):
-        for side, root in (("head", ROOT), ("pin", pin_root)):
-            la = loadavg()[0]
-            t = _run_side(root, names)
-            if t is None:
-                raise SystemExit(f"capture {k} side {side} failed")
-            captures.append({"capture": k, "side": side,
-                             "loadavg_1m_at_start": la, "timings": t})
-            print(f"capture {k} {side}: total "
-                  f"{sum(map(sum, t.values())):.1f}s over {len(t)} "
-                  f"queries (load {la})", file=sys.stderr, flush=True)
+    captures = _run_captures(names, pin_root)
 
     out = {
         "metric": "bench_ab_pinned_snapshot",
@@ -267,7 +281,10 @@ def main() -> None:
         "sf_dir": SF_DIR,
         "n_captures_per_side": N_CAPTURES,
         "repeats_per_capture": REPEATS,
-        **gate,
+        "idle_gate_waited_s": sum(c["idle_gate_waited_s"]
+                                  for c in captures),
+        "idle_gate_timed_out": any(c["idle_gate_timed_out"]
+                                   for c in captures),
         **summarize(captures, names, flags),
         "captures": captures,
     }

@@ -141,7 +141,7 @@ SHOWCASE: list[tuple[str, str]] = [
      "anti-membership left join as dedup_substring_cut."),
     ("wordpiece_tokenize_fertility",
      "The tokenizer-apply shape after the r9 scale cutover: under "
-     "DRIVER_VOCAB_CAP distinct words the trained (word → n_pieces) "
+     "the driver cap of distinct words the trained (word → n_pieces) "
      "dim is a `LocalTableScan` (driver replay, bit-identical — "
      "tests/test_tokenizer_driver_cutover.py) broadcast onto the ONE "
      "corpus pass: a word-keyed `BroadcastHashJoin` + "

@@ -18,11 +18,11 @@ counted and flagged — see _harness.stage_totals).
 
 Note on dedup_connected_components: the r10 driver cutover collects
 the duplicate-pair edge list when it is under
-SPARK_GRAFT_ITER_DRIVER_CAP (65,536 edges) — at these corpora the edge
+``iter_local._DRIVER_CAP`` (65,536 edges) — at these corpora the edge
 list stays far under the cap, so its row measures the corpus-scale LSH
 pipeline plus the union-find replay, exactly what a 100 TB-but-sparse
-duplicate graph would run.  Set the env to 0 to soak the distributed
-propagation loop instead; the artifact records which path ran.
+duplicate graph would run.  Patch the constant to 0 to soak the
+distributed propagation loop instead; the artifact records the cap.
 
 Usage:  python tools/multiop_cluster_soak.py
 Env:    MT_SOAK_EXECUTORS (4) / MT_SOAK_CORES (8) / MT_SOAK_MEM_MB
@@ -66,6 +66,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from mediawiki_to_notion_spark.operators import QUERIES, load_all
+    from mediawiki_to_notion_spark.operators import iter_local as IL
 
     names = [n for n in os.environ.get(
         "MO_SOAK_QUERIES", DEFAULT_QUERIES).split(",") if n]
@@ -139,8 +140,7 @@ def main() -> None:
         "metric": "multiop_local_cluster_soak",
         "master": f"local-cluster[{N_EXEC},{N_CORES},{MEM_MB}]",
         "data_dirs": {LBL_A: SF10, LBL_B: SF100},
-        "iter_driver_cap": int(os.environ.get(
-            "SPARK_GRAFT_ITER_DRIVER_CAP", str(1 << 16))),
+        "iter_driver_cap": IL._DRIVER_CAP,
         "loadavg_start": loadavg_start,
         **gate,
         "queries": results,
