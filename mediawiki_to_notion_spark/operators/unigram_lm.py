@@ -153,21 +153,19 @@ def _viterbi_segment(words: DataFrame, costs: DataFrame) -> DataFrame:
 
 def _unigram_train(spark: SparkSession, sf_dir: str):
     """Run the hard-EM loop; returns (vocab, words, wf) where vocab is
-    the final {piece: count} dict (driver-sized artifact), words the
-    distinct-word frame for the apply side, and wf the collected
-    (word, freq) list when the driver cutover fired (None on the
-    distributed path) — returned so the fertility apply side reuses it
-    instead of re-collecting the identical table (the ADVICE-r9
-    wordpiece discipline; r10 applies it here)."""
+    the final {piece: count} dict (driver-sized artifact).  When the
+    driver cutover fired, wf is the collected (word, freq) list and
+    words is None: the apply side encodes from wf instead of
+    re-collecting the identical table (the ADVICE-r9 wordpiece
+    discipline; r10 applies it here).  On the distributed path words is
+    the distinct-word frame and wf is None."""
     wf, words = TL._word_table(spark, sf_dir)
     if wf is not None:
         # driver replay of the seed + EM rounds (same libm ln via
-        # _micro_nat_cost, same integer usage counts, same tie-breaks);
-        # the words frame is rebuilt from the collected rows for callers
-        # that segment it with _viterbi_segment
+        # _micro_nat_cost, same integer usage counts, same tie-breaks)
         vocab = TL.unigram_train_local(
             wf, UNI_ROUNDS, UNI_SEED_K, UNI_MAX_PIECE, _micro_nat_cost)
-        return vocab, local_frame(spark, wf, "word string, freq long"), wf
+        return vocab, None, wf
     cand = (
         _position_pieces(words)
         .groupBy("piece")
@@ -214,7 +212,7 @@ def _final_costs(spark: SparkSession, vocab: dict[str, int]) -> DataFrame:
 
 
 def _unigram_pieces(spark: SparkSession, vocab: dict[str, int],
-                    words: DataFrame, wf):
+                    words: DataFrame | None, wf):
     """Viterbi segmentation of every distinct word under the FINAL
     piece costs: a {word: n_pieces} dict from a driver replay when the
     trainer's cutover fired (same float(total)/libm-ln cost table as

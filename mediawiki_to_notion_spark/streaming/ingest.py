@@ -46,8 +46,8 @@ def ingest_batch(spark: SparkSession, staged: DataFrame, tables_dir: str) -> Non
     the conditional-put exactly-once of store_notion_blocks.py:128-150)
     + page rows at status NEW."""
     blocks, pages = store_blocks(staged)
-    blocks_table(spark, tables_dir).upsert(blocks, insert_only=True)
-    pages_table(spark, tables_dir).upsert(pages, insert_only=True)
+    blocks_table(spark, tables_dir).upsert(blocks, update_cols=[])
+    pages_table(spark, tables_dir).upsert(pages, update_cols=[])
 
 
 def _md_source(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -67,34 +67,29 @@ def _md_source(spark: SparkSession, input_dir: str) -> DataFrame:
     )
 
 
-def _start(stream: DataFrame, sink, checkpoint_dir: str,
-           available_now: bool) -> StreamingQuery:
-    writer = (
+def _start(stream: DataFrame, sink, checkpoint_dir: str) -> StreamingQuery:
+    """``availableNow``: drain everything currently staged, then stop."""
+    return (
         stream.writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_md_stream(spark: SparkSession, input_dir: str, tables_dir: str,
-                    checkpoint_dir: str, available_now: bool = True) -> StreamingQuery:
-    """Ingest-only stream: staged markdown → blocks/pages tables.
-    ``availableNow`` drains everything currently staged then stops —
-    the batch-drain trigger; drop it for continuous tailing."""
+                    checkpoint_dir: str) -> StreamingQuery:
+    """Ingest-only stream: staged markdown → blocks/pages tables."""
 
     def _sink(batch_df: DataFrame, _batch_id: int) -> None:
         ingest_batch(spark, batch_df, tables_dir)
 
-    return _start(_md_source(spark, input_dir), _sink, checkpoint_dir,
-                  available_now)
+    return _start(_md_source(spark, input_dir), _sink, checkpoint_dir)
 
 
 def start_pipeline_stream(spark: SparkSession, input_dir: str, tables_dir: str,
                           checkpoint_dir: str, upload_cfg,
-                          parent_urls: DataFrame | None = None,
-                          available_now: bool = True) -> StreamingQuery:
+                          parent_urls: DataFrame | None = None) -> StreamingQuery:
     """The WHOLE event-driven pipeline as one checkpointed streaming
     query: each micro-batch ingests the newly staged markdown, then
     drains the upload sink — the reference's S3-event →
@@ -117,5 +112,4 @@ def start_pipeline_stream(spark: SparkSession, input_dir: str, tables_dir: str,
         recover_aborted(spark, tables_dir)
         drain(spark, tables_dir, upload_cfg, parent_urls)
 
-    return _start(_md_source(spark, input_dir), _sink, checkpoint_dir,
-                  available_now)
+    return _start(_md_source(spark, input_dir), _sink, checkpoint_dir)

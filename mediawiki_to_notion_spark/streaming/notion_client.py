@@ -28,6 +28,16 @@ import time
 from dataclasses import dataclass, field
 
 RETRYABLE_STATUSES = (429, 502, 503, 504)
+
+# RateLimiter's adaptive pacing: each 429 widens the interval
+# _WIDEN_FACTOR-fold, to at least _MIN_THROTTLE_INTERVAL_S (the first
+# widen of an unpaced limiter) and at most _MAX_INTERVAL_FACTOR times
+# the base or that floor; each success decays the surplus over the base
+# by _DECAY_FACTOR (a gentle re-probe)
+_WIDEN_FACTOR = 2.0
+_DECAY_FACTOR = 0.98
+_MIN_THROTTLE_INTERVAL_S = 0.05
+_MAX_INTERVAL_FACTOR = 32
 MAX_STATUS_RETRIES = 5
 BACKOFF_FACTOR = 0.2
 
@@ -104,17 +114,14 @@ class RateLimiter:
     min_interval_s: float = 0.0
     _last: float = field(default=0.0, repr=False)
     clock: object = field(default=time, repr=False)
-    max_interval_s: float = 0.0          # 0 -> 32x the base (or floor)
-    widen_factor: float = 2.0
-    decay_factor: float = 0.98           # surplus decay per success (gentle re-probe)
-    min_throttle_interval_s: float = 0.05  # first widen when base == 0
-    _base: float = field(default=0.0, repr=False)
+    _base: float = field(default=0.0, init=False, repr=False)
+    _floor: float = field(default=0.0, init=False, repr=False)
+    _cap: float = field(default=0.0, init=False, repr=False)
 
     def __post_init__(self) -> None:
         self._base = self.min_interval_s
-        if self.max_interval_s <= 0:
-            self.max_interval_s = 32 * max(
-                self._base, self.min_throttle_interval_s)
+        self._floor = _MIN_THROTTLE_INTERVAL_S
+        self._cap = _MAX_INTERVAL_FACTOR * max(self._base, self._floor)
 
     def wait(self) -> None:
         if self.min_interval_s <= 0:
@@ -134,19 +141,15 @@ class RateLimiter:
         # adaptation never stalls on a stale advertisement.
         if retry_after_s and retry_after_s > self.min_interval_s:
             self.min_interval_s = min(
-                self.max_interval_s,
-                max(retry_after_s, self.min_throttle_interval_s,
-                    self._base),
-            )
+                self._cap, max(retry_after_s, self._floor, self._base))
             return
         self.min_interval_s = min(
-            self.max_interval_s,
-            max(self.min_interval_s * self.widen_factor,
-                self.min_throttle_interval_s, self._base),
+            self._cap,
+            max(self.min_interval_s * _WIDEN_FACTOR, self._floor, self._base),
         )
 
     def on_success(self) -> None:
-        surplus = (self.min_interval_s - self._base) * self.decay_factor
+        surplus = (self.min_interval_s - self._base) * _DECAY_FACTOR
         self.min_interval_s = (
             self._base if surplus < 1e-4 else self._base + surplus
         )

@@ -58,24 +58,8 @@ class UploadConfig:
     transport: object
     max_blocks: int = 50          # per-invocation chunk (SSM MaxBlocks analogue)
     min_interval_s: float = 0.0   # rate-limit pacing between API calls
-    # reference: ConcurrentAccessLimit=1.  NOTE: the rate limiter paces
-    # each shard independently, so the AGGREGATE request rate is
-    # upload_parallelism / min_interval_s — scale min_interval_s with
-    # parallelism to hold a global API budget.  Each shard's limiter
-    # also widens on 429s, so the aggregate rate converges under the
-    # server's budget when that static estimate overshoots.
-    #
-    # Measured drain-parallelism curve (tools/drain_parallelism_soak.py,
-    # 20 ms injected RTT, 20k blocks, idle-gated —
-    # DRAIN_PARALLELISM_SOAK.json): p8 → p16 → p32 =
-    # 91.2 → 173.4 → 314.2 blocks/s, near-linear (1.90x / 1.81x per
-    # doubling) with NO saturation knee by p32; exactly-once equality
-    # re-verified at p32.  Parallel efficiency vs the pure RTT bound
-    # was 0.25–0.29 flat across p in that r10 capture — later
-    # attributed to a Nagle/delayed-ACK stall in the MOCK server's
-    # two-write response (fixed in tools/pipeline_bench.py for r11),
-    # not to this sink: per-shard overhead above the injected RTT is
-    # ~2 ms/request once the server responds in one segment.
+    # reference: ConcurrentAccessLimit=1.  Each shard paces on its own,
+    # so the aggregate request rate is upload_parallelism / min_interval_s.
     upload_parallelism: int = 1
 
 

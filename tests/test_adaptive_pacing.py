@@ -9,6 +9,7 @@ sleeps)."""
 
 from __future__ import annotations
 
+from mediawiki_to_notion_spark.streaming import notion_client
 from mediawiki_to_notion_spark.streaming.notion_client import (
     NotionClient,
     RateLimiter,
@@ -64,7 +65,7 @@ class BudgetTransport:
 
 def test_widen_and_decay_shape():
     rl = RateLimiter(min_interval_s=0.01)
-    assert rl.max_interval_s == 32 * 0.05  # floor-derived cap
+    assert rl._cap == 32 * 0.05  # floor-derived cap
     rl.on_throttle()
     assert rl.min_interval_s == 0.05  # jumps to the throttle floor
     rl.on_throttle()
@@ -84,13 +85,13 @@ def test_unpaced_base_still_widens():
     assert rl.min_interval_s == 0.0
 
 
-def test_aggregate_rate_converges_under_server_budget():
+def test_aggregate_rate_converges_under_server_budget(monkeypatch):
+    monkeypatch.setattr(notion_client, "_MIN_THROTTLE_INTERVAL_S", 0.005)
     clock = VirtualClock()
     budget = 20.0  # server advertises 20 req/s
     server = BudgetTransport(budget, clock)
     # static pacing says 200 req/s — a 10x overshoot of the budget
-    rl = RateLimiter(min_interval_s=0.005, clock=clock,
-                     min_throttle_interval_s=0.005)
+    rl = RateLimiter(min_interval_s=0.005, clock=clock)
     client = NotionClient(server, rl)
     n = 400
     for i in range(n):
@@ -114,7 +115,7 @@ def test_aggregate_rate_converges_under_server_budget():
     frac = sum(thr for _, thr in late_q) / len(late_q)
     assert frac <= 0.05, frac
     # the interval settled near the budget's implied spacing, not the cap
-    assert rl.min_interval_s < rl.max_interval_s
+    assert rl.min_interval_s < rl._cap
 
 
 def test_retry_after_adoption_jumps_to_the_advertised_floor():
@@ -127,7 +128,7 @@ def test_retry_after_adoption_jumps_to_the_advertised_floor():
     assert rl.min_interval_s == 0.75  # one jump, not log2(0.75/0.05) widens
     before = rl.min_interval_s
     rl.on_throttle(retry_after_s=0.5)  # stale hint below current
-    assert rl.min_interval_s == before * rl.widen_factor  # blind widen
+    assert rl.min_interval_s == before * notion_client._WIDEN_FACTOR  # blind widen
     # decay probes back toward the base as usual
     for _ in range(2000):
         rl.on_success()
@@ -138,8 +139,7 @@ def _run_converge(advertise: bool):
     clock = VirtualClock()
     budget = 20.0
     server = BudgetTransport(budget, clock, advertise=advertise)
-    rl = RateLimiter(min_interval_s=0.005, clock=clock,
-                     min_throttle_interval_s=0.005)
+    rl = RateLimiter(min_interval_s=0.005, clock=clock)
     client = NotionClient(server, rl)
     for i in range(400):
         client.upload_block("b", i)
@@ -151,11 +151,12 @@ def _run_converge(advertise: bool):
     return attempt_rate, n_throttles
 
 
-def test_advertised_retry_after_converges_faster_than_blind_widen():
+def test_advertised_retry_after_converges_faster_than_blind_widen(monkeypatch):
     """Same server budget, same base overshoot: with Retry-After
     advertised the pacer reaches a compliant rate with FEWER total
     429s than blind multiplicative widening, and still converges under
     the budget (VERDICT r9 #5 'Done' criterion)."""
+    monkeypatch.setattr(notion_client, "_MIN_THROTTLE_INTERVAL_S", 0.005)
     budget = 20.0
     rate_hint, thr_hint = _run_converge(advertise=True)
     rate_blind, thr_blind = _run_converge(advertise=False)
@@ -197,7 +198,8 @@ def test_http_transport_throttle_counter_pops():
     rl = RateLimiter(min_interval_s=0.0, clock=VirtualClock())
     NotionClient(t, rl).upload_block("b", 0, block_json="{}", page_url="u")
     assert pool.calls == 3
-    assert rl.min_interval_s == pytest.approx(0.1 * rl.decay_factor)
+    assert rl.min_interval_s == pytest.approx(
+        0.1 * notion_client._DECAY_FACTOR)
     t2 = pickle.loads(pickle.dumps(t))
     assert t2._pool is None
 

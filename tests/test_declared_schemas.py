@@ -75,7 +75,8 @@ def test_declared_reads_start_no_spark_job(spark, staged_tables):
     try:
         before = list(sc.statusTracker().getJobIdsForGroup(group))
         frames = [load_table(spark, name, SF_SMOKE) for name in TABLE_NAMES]
-        frames += [blocks.read(), blocks._read_buckets(mapping, list(mapping))]
+        frames += [blocks.read(),
+                   blocks._scan(blocks._segments(mapping, list(mapping)))]
         after = list(sc.statusTracker().getJobIdsForGroup(group))
         # control: an action in the same group is seen by the tracker
         frames[-1].count()

@@ -17,6 +17,7 @@ from mediawiki_to_notion_spark.streaming.http_transport import (
     HAVE_URLLIB3,
     HttpTransport,
 )
+from mediawiki_to_notion_spark.streaming import notion_client
 from mediawiki_to_notion_spark.streaming.notion_client import (
     HTTPStatusError,
     NotionClient,
@@ -158,7 +159,8 @@ def test_retry_after_hint_pops_and_semantics_unchanged(fake_api):
     client = NotionClient(HttpTransport(base), rate)
     client.upload_block("rah", 0, block_json="{}", page_url="u")
     assert srv.calls["block:rah:0"] == 2
-    assert rate.min_interval_s == pytest.approx(1.0 * rate.decay_factor)
+    assert rate.min_interval_s == pytest.approx(
+        1.0 * notion_client._DECAY_FACTOR)
 
 
 def test_transport_pickles_without_pool(fake_api):

@@ -143,3 +143,29 @@ def test_bench_ab_summary_medians_and_controls():
     assert q["ctl_a"]["head_q1_median_q3_s"][1] == 1.1  # straggler ignored
     assert q["changed"]["ratio_head_over_pin"] == 1.0
     assert q["changed"]["ratio_over_controls"] == round(1 / 1.1, 3)
+
+
+def test_bench_ab_report_leaves_the_tracked_file_alone(monkeypatch, tmp_path):
+    """A run writes its report under the gitignored .bench_ab/, never
+    over the tracked BENCH_AB.json of an earlier A/B."""
+    import json
+
+    from tools import bench_ab
+
+    tracked = tmp_path / "BENCH_AB.json"
+    tracked.write_text('{"kept": true}')
+    monkeypatch.setattr(bench_ab, "ROOT", str(tmp_path))
+    monkeypatch.setenv("BENCH_AB_NAMES", "ctl_a,ctl_b")
+    monkeypatch.setattr(bench_ab, "_ensure_worktree", lambda ref: "PIN")
+    monkeypatch.setattr(bench_ab, "_git", lambda *a: "0" * 40)
+    monkeypatch.setattr(bench_ab, "_source_flags",
+                        lambda names, pin: {n: True for n in names})
+    monkeypatch.setattr(bench_ab, "_run_captures", lambda names, pin: [
+        {"side": side, "capture": 0, "idle_gate_waited_s": 0.0,
+         "idle_gate_timed_out": False,
+         "timings": {n: [1.0, 1.0] for n in names}}
+        for side in ("head", "pin")])
+    bench_ab.main()
+    assert tracked.read_text() == '{"kept": true}'
+    report = json.loads((tmp_path / ".bench_ab" / "BENCH_AB.json").read_text())
+    assert report["metric"] == "bench_ab_pinned_snapshot"

@@ -103,7 +103,8 @@ def test_unigram_train_matches_enumeration_reference(spark, seed):
         spark.createDataFrame(
             [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
         ).write.parquet(os.path.join(tmp, "documents.parquet"))
-        vocab, wframe, _wf = _unigram_train(spark, tmp)
+        vocab, _words, wf = _unigram_train(spark, tmp)
+        wframe = spark.createDataFrame(wf, "word string, freq long")
         # the apply-side segmentation under the final costs
         costs = _final_costs(spark, vocab).selectExpr(
             "piece", "cost_micro_nats AS cost"

@@ -33,7 +33,8 @@ Env:    BENCH_AB_REF   pin ref (default 4c041cd = the r7 end-of-session
                        + unchanged anchors across operator families)
         BENCH_AB_CAPTURES (3) / BENCH_AB_SF_DIR (/root/testdata/sf0.1)
         SOAK_IDLE_LOAD / SOAK_IDLE_WAIT as in the soak tools
-Output: BENCH_AB.json + one JSON line.
+Output: .bench_ab/BENCH_AB.json (gitignored; copy it to a named file to
+        keep it) + one JSON line.
 """
 
 from __future__ import annotations
@@ -288,7 +289,7 @@ def main() -> None:
         **summarize(captures, names, flags),
         "captures": captures,
     }
-    with open(os.path.join(ROOT, "BENCH_AB.json"), "w") as f:
+    with open(os.path.join(ROOT, ".bench_ab", "BENCH_AB.json"), "w") as f:
         json.dump(out, f, indent=1)
     slim = {k: v for k, v in out.items() if k != "captures"}
     print(json.dumps(slim))
